@@ -171,70 +171,7 @@ object Compiler {
         node.filters.collect { case ColFilter(c, _, _, _) => c } ++
         node.watermark.map(_.col) ++
         node.dedup.toSeq.flatMap(d => d.keys ++ d.idCol ++ d.orderCol) ++
-        // chunk is NOT here: its ids_col is usually bpe_apply-created in
-        // the same node (bpe_ids) — the analyzer tier checks it
-        node.chunk.toSeq.map(_.idCol) ++
-        node.nearDup.toSeq.flatMap(d => Seq(d.idCol, d.vecCol) ++ d.retention.map(_.orderCol)) ++
-        node.semanticDedup.toSeq.flatMap(d => Seq(d.idCol, d.vecCol)) ++
-        node.editDedup.toSeq.flatMap(e => Seq(e.idCol, e.textCol)) ++
-        node.imageDedup.toSeq.flatMap(i => Seq(i.idCol, i.payloadCol) ++ i.retention.map(_.orderCol)) ++
-        node.simhashDedup.toSeq.flatMap(sh => Seq(sh.idCol, sh.textCol) ++ sh.retention.map(_.orderCol)) ++
-        node.audioDedup.toSeq.flatMap(a => Seq(a.idCol, a.payloadCol) ++ a.retention.map(_.orderCol)) ++
-        node.passageDedup.toSeq.flatMap(p => Seq(p.idCol, p.textCol)) ++
-        node.lmPerplexity.toSeq.flatMap(l => Seq(l.idCol, l.textCol)) ++
-        node.qualityClassifier.toSeq.flatMap(q => Seq(q.idCol, q.textCol, q.labelCol)) ++
-        node.multiclassClassifier.toSeq.flatMap(m => Seq(m.idCol, m.textCol, m.labelCol)) ++
-        node.predictModel.toSeq.map(_.textCol) ++
-        node.bpe.toSeq.map(_.textCol) ++
-        node.cmsProbe.toSeq.map(_.keyCol) ++
-        node.seenProbe.toSeq.map(_.keyCol) ++
-        node.seenFilter.toSeq.map(_.keyCol) ++
-        node.dsir.toSeq.flatMap(d =>
-          Seq(d.textCol) ++ (if (d.idCol.nonEmpty) Seq(d.idCol) else Nil)) ++
-        node.dsirScore.toSeq.map(_.textCol) ++
-        node.pageRank.toSeq.flatMap(p => Seq(p.srcCol, p.dstCol)) ++
-        node.tarPack.toSeq.flatMap(t => Seq(t.nameCol, t.payloadCol)) ++
-        node.tarCompact.toSeq.flatMap(t => t.tarCol +: t.batchCol.toSeq) ++
-        // stats/compact modes read only the artifact — no frame columns
-        node.annIndex.toSeq
-          .filterNot(a => a.mode == "stats" || a.mode == "compact")
-          .flatMap(a => Seq(a.idCol, a.vecCol)) ++
-        node.applyDiff.toSeq.flatMap(_.on) ++
-        node.annSearch.toSeq.flatMap(a => Seq(a.idCol, a.vecCol)) ++
-        node.annProbe.toSeq.map(_.vecCol) ++
-        node.quantileFilter.toSeq.map(_.col) ++
-        node.bm25.toSeq.flatMap(bq => Seq(bq.idCol, bq.textCol)) ++
-        node.bm25Index.toSeq
-          .filterNot(bi => bi.mode == "compact" || bi.mode == "stats")
-          .flatMap(bi => Seq(bi.idCol, bi.textCol)) ++
-        node.bm25Search.toSeq.flatMap(bs => Seq(bs.qidCol, bs.qtextCol)) ++
-        node.rrfFuse.toSeq.flatMap(rf =>
-          Seq(rf.queryCol, rf.docCol, rf.rankCol) ++ rf.weightCol) ++
-        node.rankingEval.toSeq.flatMap(re => Seq(re.queryCol, re.docCol, re.rankCol)) ++
-        node.upsample.toSeq.map(_.factorCol) ++
-        node.funnel.toSeq.flatMap(fu => Seq(fu.keyCol, fu.tsCol, fu.eventCol)) ++
-        node.rangeJoin.toSeq.flatMap(rj => rj.pointCol +: rj.on) ++
-        node.overlapJoin.toSeq.flatMap(oj => Seq(oj.loCol, oj.hiCol) ++ oj.on) ++
-        node.collocations.toSeq.flatMap(cs => cs.textCol +: cs.groupCols) ++
-        node.connectedComponents.toSeq.flatMap(cc => Seq(cc.srcCol, cc.dstCol)) ++
-        node.unpivot.toSeq.flatMap(u => u.ids ++ u.values) ++
-        node.approxTopK.toSeq.map(_.keyCol) ++
-        node.resample.toSeq.flatMap(rs =>
-          rs.keyCols ++ Seq(rs.tsCol) ++
-            rs.aggs.filterNot(_.col == "*").map(_.col)) ++
-        node.wdsSamples.toSeq.flatMap(ws => Seq(ws.nameCol, ws.dataCol)) ++
-        node.winnow.toSeq.flatMap(wn => Seq(wn.idCol, wn.textCol)) ++
-        node.winnowProbe.toSeq.map(_.textCol) ++
-        node.split.toSeq.map(_.idCol) ++
-        node.temperatureSample.toSeq.flatMap(t => Seq(t.groupCol, t.idCol)) ++
-        node.tokenBudgetSample.toSeq.flatMap(t =>
-          Seq(t.groupCol, t.idCol, t.tokensCol) ++ t.orderCol) ++
-        node.globalShuffle.toSeq.map(_.idCol) ++
-        node.htmlExtract.toSeq.flatMap(h => Seq(h.idCol, h.htmlCol)) ++
-        node.pdfExtract.toSeq.flatMap(p => Seq(p.idCol, p.pdfCol)) ++
-        node.profile.toSeq.flatMap(_.columns) ++
-        node.boilerplate.toSeq.flatMap(b => Seq(b.idCol, b.textCol)) ++
-        node.featurize.toSeq.flatMap(f => Seq(f.idCol, f.payloadCol))
+        Operators.reads(node)
     // compact/running_totals/top_k run AFTER children (joins may add or
     // prefix columns), so their references are checked by the analyzer
     // tier, not here — a source-schema check would false-positive on
@@ -356,46 +293,11 @@ object Compiler {
     if (node.combine.isDefined && node.source.isDefined)
       throw new IllegalArgumentException(
         s"node ${node.id}: source and combine are mutually exclusive")
-    // compileStream handles the ingest sink at the root and strips it
-    // before the node walk — any spec reaching here with it set is a batch
-    // compile or a non-root stream node, both invalid by construction
-    if (node.nearDupIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: near_dup_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use the dedup/near-dup pipeline operators)")
-    if (node.passageIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: passage_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use passage_dedup / stripPassagesAgainstCorpus)")
-    if (node.tarPackIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: tar_pack_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use tar_pack)")
-    if (node.exactIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: exact_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use derive + dedup, or seen_filter " +
-          "against the persisted index)")
-    if (node.sketchIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: sketch_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, aggregate approx_top_k_accumulate / " +
-          "hll_sketch_agg and save — the q237/q238 pattern)")
-    if (node.bm25Ingest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: bm25_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use bm25_index mode: \"append\")")
-    if (node.annIngest.isDefined)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: ann_ingest is a STREAMING ROOT sink — " +
-          "compile with compileStreamJson and declare it on the root node " +
-          "(for the batch shape, use ann_index mode: \"append\")")
+    // compileStream starts a root sink itself and strips it before the
+    // node walk — one reaching here is a batch compile or a non-root
+    // stream node, both invalid by construction
+    Operators.rejectRootSinks(node)
+    val opCtx = new Operators.Ctx(spark, node.id, streaming, refs)
     var df = input.getOrElse(node.combine match {
       case Some(c) =>
         val parts = c.nodes.map(n => compileNode(spark, n, None, executeSinks, streaming, refs))
@@ -457,11 +359,11 @@ object Compiler {
       // else min id (id_col set), else plain dropDuplicates; count_col
       // rides the winner aggregate with the duplicate-class size
       if (d.countCol.nonEmpty)
-        requireBatch("dedup (count_col)", "a class-size aggregate",
+        opCtx.requireBatch("dedup (count_col)", "a class-size aggregate",
           "drop count_col (streaming state dedup cannot count a class)")
       def winner(): DataFrame = (d.idCol, d.orderCol) match {
         case (Some(id), Some(oc)) =>
-          requireBatch("dedup (order_col)", "a score-ranked aggregate",
+          opCtx.requireBatch("dedup (order_col)", "a score-ranked aggregate",
             "drop order_col (streams keep the first arrival per key)")
           graft.ops.Dedup.exactDedupBest(df, d.keys, id, oc, d.descending,
             d.countCol)
@@ -493,774 +395,8 @@ object Compiler {
     if (node.keepColumns.nonEmpty)
       df = df.select(node.keepColumns.map(col): _*)
 
-    // Near-dup pair detection: the frame becomes (idA, idB, score). Pure
-    // plan composition (banded signatures + equi-join — no actions), so it
-    // is config-admissible; downstream keys run over the pair frame.
-    // Cluster-output dedup tiers run ITERATIVE connected components
-    // (bounded per-round actions) — batch-only semantics. Refusing by
-    // name beats the confusing analysis error a streaming frame would
-    // throw mid-CC.
-    def requireBatch(key: String,
-        reason: String = "iterative connected components",
-        hint: String = "streaming ingestion dedups via near_dup_ingest " +
-          "(the persisted-index path) instead"): Unit =
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: $key runs $reason — batch-only; $hint")
-
-    // Best-copy retention over a cluster tier's (id, cluster) labels:
-    // join the labels back onto the FULL input frame (left — a row no
-    // near-dup touched heads its own singleton class) and keep each
-    // class's best row via the exactDedupBest aggregate. One label join
-    // + one partial+final aggregate over the cluster op's own cost; the
-    // corpus row data never widens beyond (row + cluster).
-    def retainBest(input: DataFrame, labels: DataFrame, idCol: String,
-        r: graft.spec.RetentionSpec): DataFrame = {
-      require(!input.columns.contains("cluster"),
-        s"node ${node.id}: retention adds a 'cluster' column but the " +
-          "input already has one — rename it first")
-      val lab = labels.select(col("id").as("__rcid"), col("cluster"))
-      val joined = input.join(lab, input(idCol) === col("__rcid"), "left")
-        .drop("__rcid")
-        .withColumn("cluster", coalesce(col("cluster"), col(idCol)))
-      graft.ops.Dedup.exactDedupBest(
-        joined, Seq("cluster"), idCol, r.orderCol, r.descending)
-    }
-
-    node.nearDup.foreach { d =>
-      val input = df
-      df = graft.ops.Similarity.cosineNearDupPairsBanded(
-        df, d.idCol, d.vecCol, d.threshold, d.dim, d.numBits, d.bands)
-      // "clusters": connected components over the verified pairs — the
-      // frame becomes (id, cluster) labels, matching the perceptual
-      // tiers' cluster output shape.
-      if (d.output == "clusters") {
-        requireBatch("near_dup (clusters)")
-        df = graft.ops.Dedup.dedupClusters(df)
-        d.retention.foreach { r => df = retainBest(input, df, d.idCol, r) }
-      }
-    }
-
-    // Semantic dedup: centroid training collects bounded metadata at
-    // compile and the within-cluster join needs the whole corpus —
-    // batch-only by name.
-    node.semanticDedup.foreach { d =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: semantic_dedup trains centroids over the whole " +
-          "corpus — batch-only; dedup a stream against a batch-built " +
-          "index via near_dup_ingest/near_dup_probe instead")
-      df = graft.ops.Similarity.semanticDedup(
-        df, d.idCol, d.vecCol, d.threshold, d.dim, d.nlist, d.refineRounds,
-        d.exact, d.numBits, d.bands, d.output)
-    }
-
-    // Edit-distance near-dup: the frame becomes (idA, idB, dist, sim) —
-    // blocking-key candidates verified by normalized Levenshtein. Pure
-    // plan composition (one block-key shuffle + candidate-shaped verify),
-    // so config-admissible; downstream keys run over the pair frame.
-    node.editDedup.foreach { e =>
-      val cands = graft.ops.Dedup.blockedCandidatePairs(
-        df, e.idCol, expr(e.blockExpr), e.bucketCap)
-      df = graft.ops.Dedup.verifyEditDistancePairs(
-        df, e.idCol, e.textCol, cands, e.threshold, e.maxDistance)
-    }
-
-    // Perceptual image dedup: the frame becomes (idA, idB, dist) pairs,
-    // or (id, cluster) labels when output="clusters" — both plan-only
-    // (partition-batched dHash + identical-signature-collapsed banding).
-    node.imageDedup.foreach { im =>
-      val input = df
-      df =
-        if (im.output == "clusters") {
-          requireBatch("image_dedup (clusters)")
-          val labels = graft.ops.Multimodal.imageNearDupClusters(
-            df, im.idCol, im.payloadCol, im.maxDist)
-          im.retention.fold(labels)(r => retainBest(input, labels, im.idCol, r))
-        } else
-          graft.ops.Multimodal.imageNearDupPairs(
-            df, im.idCol, im.payloadCol, im.maxDist)
-    }
-
-    // Text SimHash near-dup: same shapes over the token-hash SimHash.
-    node.simhashDedup.foreach { sh =>
-      val input = df
-      df =
-        if (sh.output == "clusters") {
-          requireBatch("simhash_dedup (clusters)")
-          val labels =
-            graft.ops.Dedup.simhashClusters(df, sh.idCol, sh.textCol, sh.maxDist)
-          sh.retention.fold(labels)(r => retainBest(input, labels, sh.idCol, r))
-        } else
-          graft.ops.Dedup.simhashPairs(df, sh.idCol, sh.textCol, sh.maxDist)
-    }
-
-    // Perceptual audio dedup: same shapes over the envelope hash.
-    node.audioDedup.foreach { au =>
-      val input = df
-      df =
-        if (au.output == "clusters") {
-          requireBatch("audio_dedup (clusters)")
-          val labels = graft.ops.Multimodal.audioNearDupClusters(
-            df, au.idCol, au.payloadCol, au.maxDist)
-          au.retention.fold(labels)(r => retainBest(input, labels, au.idCol, r))
-        } else
-          graft.ops.Multimodal.audioNearDupPairs(
-            df, au.idCol, au.payloadCol, au.maxDist)
-    }
-
-    // Exact substring-level dedup: "spans" rewrites the frame to
-    // duplicate-passage token spans; "strip" keeps it and adds
-    // clean_text + dropped_tokens. Plan-only composition.
-    node.passageDedup.foreach { pd =>
-      // Occurrence ranking needs a global order over the whole corpus —
-      // illegal on streams; name the refusal instead of leaking Spark's
-      // analysis error.
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: passage_dedup ranks occurrences against the " +
-          "whole corpus — batch-only (streaming corpora use the " +
-          "passage_ingest root sink)")
-      df =
-        if (pd.output == "strip")
-          graft.ops.Dedup.stripDuplicatePassages(
-            df, pd.idCol, pd.textCol, pd.windowTokens)
-        else
-          graft.ops.Dedup.duplicatePassageSpans(
-            df, pd.idCol, pd.textCol, pd.windowTokens)
-    }
-
-    // LM-perplexity quality scoring: the frame becomes (id, n_bigrams,
-    // nll). Plan-only (vocabulary aggregates + equi-joins), so
-    // config-admissible; downstream keys filter/sort on the score.
-    node.lmPerplexity.foreach { l =>
-      df = graft.ops.Corpus.lmPerplexity(df, l.idCol, l.textCol, l.k,
-        l.keepUnscored, l.smoothing, l.discount)
-    }
-
-    // Artifact-inference keys — the STREAMING-admissible halves of the
-    // batch-only trainers: each loads a persisted artifact ONCE at
-    // compile time (bounded driver metadata — weights / merge list /
-    // Bloom bit array) and applies a scan-stage kernel. A config can
-    // batch-train + save in one pipeline, then score/tokenize/probe a
-    // stream with another — identical decisions by construction.
-    node.nearDupProbe.foreach { p =>
-      val index = spark.read.parquet(p.indexDir)
-      df = graft.ops.Dedup.nearDupProbeBloom(df, p.textCol, index,
-        p.shingleSize, p.numHashes, p.bands, p.flagCol, p.expectedKeys, p.fpp)
-    }
-    // Scan-stage seen probe: the Bloom over the persisted key index
-    // (an exact_ingest index dir, or any parquet with the key column)
-    // builds ONCE at compile — zero joins/shuffles on the probed frame,
-    // streaming-admissible (the crawl-frontier gate).
-    node.seenProbe.foreach { sp =>
-      val index = spark.read.parquet(sp.indexDir)
-      df = graft.ops.Dedup.seenProbeBloom(df, sp.keyCol, index,
-        sp.flagCol, sp.expectedKeys, sp.fpp)
-    }
-    // Exact seen filter: drop (left-anti) or flag (left join + marker)
-    // against the persisted key index's distinct keys. Stream-static
-    // join under compileStream — NOTE the index is read at stream
-    // START; a growing index needs the exact_ingest sink (re-reads per
-    // batch) or a stream restart.
-    node.seenFilter.foreach { sf =>
-      val index = spark.read.parquet(sf.indexDir)
-      df = graft.ops.Dedup.seenFilter(df, sf.keyCol, index, sf.mode, sf.flagCol)
-    }
-    node.scoreModel.foreach { m =>
-      val model = graft.ops.Corpus.loadTextClassifier(spark, m.modelDir)
-      df = graft.ops.Corpus.scoreWithModel(df, m.textCol, model,
-        m.scoreCol, m.predCol, m.threshold)
-    }
-    node.bpeApply.foreach { b =>
-      val merges = graft.ops.Bpe.loadMerges(spark, b.mergesDir)
-      b.textCol.foreach { tc =>
-        df = graft.ops.Bpe.addTokens(df, tc, merges)
-        if (b.withIds) df = graft.ops.Bpe.addIds(df, tc, merges)
-      }
-      // decode side: ids → subword strings under the SAME artifact (the
-      // shard-inspection path: tar source → binary_ints → decode)
-      b.decodeCol.foreach { dc =>
-        df = graft.ops.Bpe.addDecoded(df, dc, merges)
-      }
-    }
-
-    // Sliding-window chunking: the frame becomes one row per chunk —
-    // (id, chunk_id, chunk_text | chunk_ids, n_tokens). Scan-stage
-    // generator (no shuffle, no state) — streaming-admissible. Sits
-    // after bpe_apply so the ids tier composes bpe → chunk →
-    // sequence_pack (whole-doc packing without truncation).
-    node.chunk.foreach { c =>
-      df = (c.textCol, c.sep) match {
-        case (Some(t), Some(sp)) =>
-          graft.ops.Corpus.chunkBySegments(df, c.idCol, t, c.size, sp)
-        case (Some(t), None) =>
-          graft.ops.Corpus.chunkByTokens(df, c.idCol, t, c.size, c.overlap)
-        case _ =>
-          graft.ops.Corpus.chunkIds(df, c.idCol, c.idsCol.get, c.size, c.overlap)
-      }
-    }
-
-    // BPE: train merges on the frame (iterative global aggregates —
-    // batch-only by name); output=merges replaces the frame with the
-    // merge table, output=tokens adds the trained tokenizer's columns.
-    node.bpe.foreach { b =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: bpe training is an iterative global aggregate " +
-          "— batch-only; train in batch and tokenize the stream with the " +
-          "trained merges (BpeKernels.bpeTokenize)")
-      if (b.output == "merges")
-        df = graft.ops.Bpe.trainDF(spark, df, b.textCol, b.numMerges)
-      else {
-        val merges = graft.ops.Bpe.train(df, b.textCol, b.numMerges)
-          .map(t => (t._1, t._2))
-        df = df
-          .withColumn("bpe_tokens",
-            graft.functions.BpeKernels.bpeTokenize(col(b.textCol), merges))
-          .withColumn("n_bpe", size(col("bpe_tokens")))
-      }
-    }
-
-    // Count–Min watchlist probe: the frame becomes (key, est). The
-    // sketch aggregate collects to the driver — batch-only by name.
-    node.cmsProbe.foreach { c =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: cms_probe collects a sketch (an action) — " +
-          "batch-only; monitor a stream by probing per batch in " +
-          "foreachBatch instead")
-      df = graft.ops.Relational.cmsProbeCounts(
-        df, c.keyCol, c.probes, c.eps, c.confidence, c.seed)
-    }
-
-    // Trainable quality classifier: fit on labeled rows (global
-    // aggregates — batch-only by name), score every row scan-stage.
-    node.qualityClassifier.foreach { q =>
-      requireBatch("quality_classifier", "training-pass global aggregates",
-        "train in batch, persist the artifact, and score the stream with " +
-          "score_model instead")
-      df = graft.ops.Corpus.qualityClassifier(
-        df, q.idCol, q.textCol, q.labelCol, q.dim, q.epochs, q.lr, q.threshold)
-    }
-
-    // Multiclass classifier: one-vs-rest training (batch-only by name —
-    // k sets of global aggregates) + scan-stage argmax prediction; the
-    // frame gains pred_col (and per-class scores with keep_scores).
-    node.multiclassClassifier.foreach { m =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: multiclass_classifier trains one-vs-rest " +
-          "models over the whole corpus — batch-only; train in batch, " +
-          "persist per-class artifacts, and score the stream with " +
-          "score_model columns instead")
-      val models = graft.ops.Corpus.trainMulticlassClassifier(
-        df, m.idCol, m.textCol, m.labelCol, m.dim, m.epochs, m.lr)
-      df = graft.ops.Corpus.predictMulticlass(
-        df, m.textCol, models, m.predCol, m.keepScores)
-    }
-
-    // Predict with a persisted multiclass artifact: models load ONCE at
-    // compile (bounded metadata), prediction is scan-stage — the
-    // streaming-admissible inference half of multiclass_classifier.
-    node.predictModel.foreach { pmSpec =>
-      val models = graft.ops.Corpus.loadMulticlassClassifier(spark, pmSpec.modelDir)
-      df = graft.ops.Corpus.predictMulticlass(
-        df, pmSpec.textCol, models, pmSpec.predCol, pmSpec.keepScores)
-    }
-
-    // DSIR importance weighting/resampling: the fit joins this frame
-    // against the exemplar corpus named by target_ref (two count
-    // aggregates — batch-only by name); scoring is scan-stage kernel
-    // arithmetic over the fitted log-ratio table.
-    node.dsir.foreach { d =>
-      requireBatch("dsir", "exemplar-corpus count aggregates (the fit)",
-        "fit in batch, persist via save_model, and score the stream with " +
-          "dsir_score instead")
-      val target = refs.getOrElse(d.targetRef, throw new IllegalArgumentException(
-        s"node ${node.id}: dsir.target_ref '${d.targetRef}' is not a def — " +
-          "declare the exemplar corpus under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      val model = graft.ops.Corpus.dsirFit(df, target, d.textCol, d.buckets)
-      if (d.saveModel.nonEmpty)
-        graft.ops.Corpus.saveDsirModel(spark, model, d.saveModel)
-      val scored = graft.ops.Corpus.dsirScore(df, d.textCol, model)
-      df = d.mode match {
-        case "select" =>
-          graft.ops.Corpus.dsirResample(scored, d.idCol, d.n, d.seed, d.gumbel)
-        case "select_threshold" =>
-          // the scan-stage selection path: explicit key cut, or derived
-          // once from the quantile sketch when only n is given
-          val t = d.threshold.getOrElse(
-            graft.ops.Corpus.dsirThresholdForN(scored, d.idCol, d.n.toLong,
-              d.seed, d.gumbel, relativeError = d.relativeError))
-          graft.ops.Corpus.dsirResampleThreshold(
-            scored, d.idCol, t, d.seed, d.gumbel)
-        case _ => scored
-      }
-    }
-
-    // PageRank over the frame as an edge list: the frame becomes
-    // (node, rank) — iterative actions, batch-only by name.
-    node.pageRank.foreach { pr =>
-      requireBatch("page_rank", "iterative rank-update actions",
-        "compute host ranks in batch and join them onto the stream instead")
-      df = graft.ops.Graph.pageRank(df, pr.srcCol, pr.dstCol, pr.iters,
-        pr.damping, pr.tol)
-    }
-
-    // Generic connected components: the frame is an edge table and
-    // becomes (id, cluster) min-reachable-id labels — the dedup tiers'
-    // CC engine exposed for entity resolution / graph communities.
-    node.connectedComponents.foreach { cc =>
-      requireBatch("connected_components",
-        "iterative label-propagation actions",
-        "label the landed graph in batch and join the labels onto the " +
-          "stream instead")
-      df = graft.ops.Dedup.dedupClusters(
-        df.select(col(cc.srcCol).as("idA"), col(cc.dstCol).as("idB")),
-        maxIter = cc.maxIter, smallGraphEdges = cc.smallGraphEdges,
-        checkpointDir = cc.checkpointDir)
-    }
-
-    // Collocation mining: the frame becomes its top-k PMI bigram table.
-    // Batch-only (global corpus counts have no streaming plan).
-    node.collocations.foreach { cs =>
-      requireBatch("collocations", "global corpus token/pair counts",
-        "mine collocations in batch over the landed corpus instead")
-      df = graft.ops.TextAnalysis.collocations(df, cs.textCol, cs.minCount,
-        cs.topK, cs.groupCols)
-    }
-
-    // BM25 retrieval: rank the frame (the corpus) against the query
-    // def; the frame becomes (qid, id, score, rn). Batch-only (corpus
-    // stats action).
-    node.bm25.foreach { bq =>
-      requireBatch("bm25", "corpus-statistics actions (N, avgdl)",
-        "run retrieval in batch over the materialized corpus instead")
-      val queries = refs.getOrElse(bq.queriesRef, throw new IllegalArgumentException(
-        s"node ${node.id}: bm25.queries_ref '${bq.queriesRef}' is not a def — " +
-          "declare the query table under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      df = graft.ops.Retrieval.bm25TopK(df, bq.idCol, bq.textCol,
-        queries, bq.qidCol, bq.qtextCol, bq.k1, bq.b, bq.topK, bq.proxWeight)
-    }
-
-    // At-rest BM25 index build/append: the frame (the corpus) persists
-    // bucket-partitioned postings + lengths + stats, then becomes the
-    // (bucket, n_postings) balance histogram. Batch-only (writes).
-    node.bm25Index.foreach { bi =>
-      requireBatch("bm25_index", "a postings build and an index write",
-        "build the index in batch; search query streams in batch against it")
-      if (bi.mode == "stats") {
-        // health view only — no write, the frame is discarded
-        df = graft.ops.Retrieval.bm25IndexStats(df.sparkSession, bi.dir)
-      } else {
-        if (bi.mode == "compact")
-          // checkpoint (when given) scopes the fold to the ingest
-          // stream's COMMITTED batches — live-stream-safe compaction
-          graft.ops.Retrieval.compactBm25Index(df.sparkSession, bi.dir,
-            graft.ops.Artifacts.committedFoldCeiling(
-              df.sparkSession, bi.checkpoint))
-        else if (bi.mode == "append")
-          graft.ops.Retrieval.appendBm25Index(
-            df.sparkSession, df, bi.idCol, bi.textCol, bi.dir)
-        else
-          graft.ops.Retrieval.saveBm25Index(
-            df.sparkSession, df, bi.idCol, bi.textCol, bi.dir, bi.prox, bi.buckets)
-        df = df.sparkSession.read.parquet(s"${bi.dir}/postings")
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n_postings"))
-      }
-    }
-
-    // Ingest-area compaction: fold each area's committed batch= dirs
-    // into one compacted dir (the exact/near_dup/passage/semantic
-    // small-files defense — the operator-issued half beside the
-    // ingests' compact_every). The frame becomes one row per area:
-    // (area_ix, n_dirs). Batch-only (filesystem rewrite).
-    node.ingestCompact.foreach { ic =>
-      requireBatch("ingest_compact", "a filesystem rewrite",
-        "run compaction as a periodic batch job; the ingest stream's " +
-          "compact_every key is the in-stream half")
-      val s = df.sparkSession
-      // checkpoint (when given) scopes the fold to the ingest stream's
-      // COMMITTED batches — live-stream-safe compaction
-      val ceiling = graft.ops.Artifacts.committedFoldCeiling(s, ic.checkpoint)
-      val rows = ic.dirs.zipWithIndex.map { case (dir, i) =>
-        graft.ops.Artifacts.foldBatchArea(s, dir, ceiling)
-        (i, graft.ops.Artifacts.areaBatchDirCount(s, dir))
-      }
-      import s.implicits._
-      df = rows.toDF("area_ix", "n_dirs")
-    }
-
-    // BM25 search against a saved index: the frame (the QUERY set)
-    // becomes (qid, <index id_col>, score, rn) without re-tokenizing
-    // the corpus. Batch-only by name (stats read + rank window).
-    node.bm25Search.foreach { bs =>
-      requireBatch("bm25_search", "a per-query top-k rank window",
-        "search in batch; the index itself is the at-rest artifact")
-      df = graft.ops.Retrieval.bm25SearchIndex(df, bs.qidCol, bs.qtextCol,
-        bs.indexDir, bs.k1, bs.b, bs.topK, bs.proxWeight)
-    }
-
-    // Funnel analysis: the frame (an event log) becomes one row per
-    // step — chained key-shaped min aggregates, batch-only by name.
-    node.funnel.foreach { fu =>
-      requireBatch("funnel", "chained per-step global counts",
-        "run the funnel as a periodic batch job over the landed events")
-      df = graft.ops.Relational.funnel(df, fu.keyCol, fu.tsCol,
-        fu.eventCol, fu.steps, fu.window, fu.anchor)
-    }
-
-    // Range (point-in-interval) join against an intervals def: bucketed
-    // equi-join, never a nested loop. Streaming-admissible on the point
-    // side (stream-static join; the def is a batch frame by contract).
-    node.rangeJoin.foreach { rj =>
-      val iv = refs.getOrElse(rj.intervalsRef, throw new IllegalArgumentException(
-        s"node ${node.id}: range_join.intervals_ref '${rj.intervalsRef}' is " +
-          "not a def — declare the interval table under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      df = graft.ops.Relational.rangeJoinKeyed(df, iv, rj.pointCol, rj.loCol,
-        rj.hiCol, rj.bucket, rj.on, rj.payload, rj.how, rj.inclusiveHi,
-        rj.broadcast, rj.maxBucketsPerInterval)
-    }
-
-    // Interval-overlap join against a def: both sides explode to covering
-    // cells, plain equi-join, exactly-once pair emission (later-start-cell
-    // rule). Streaming-admissible on the frame side (stream-static join).
-    node.overlapJoin.foreach { oj =>
-      val other = refs.getOrElse(oj.otherRef, throw new IllegalArgumentException(
-        s"node ${node.id}: overlap_join.other_ref '${oj.otherRef}' is " +
-          "not a def — declare the other interval table under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      if (oj.how == "left")
-        requireBatch("overlap_join how:\"left\"",
-          "the NULL-payload pad side anti-joins over the matched output",
-          "run the inner overlap over the stream and anti-screen the " +
-            "landed batch instead")
-      df = graft.ops.Relational.overlapJoin(df, other, oj.loCol, oj.hiCol,
-        oj.bucket, oj.otherLoCol.orNull, oj.otherHiCol.orNull, oj.on,
-        oj.payload, oj.inclusive, oj.broadcast, oj.maxBucketsPerInterval,
-        oj.how)
-    }
-
-    // Snapshot diff against an OLD-corpus def: one full-outer equi-join
-    // on the keys. Batch-only by name — a full-outer join (and the notion
-    // of a complete "previous snapshot") has no streaming plan; diff the
-    // landed batch instead.
-    node.diff.foreach { ds =>
-      requireBatch("diff", "a full-outer join of two complete snapshots",
-        "diff landed batches instead (the old snapshot is a def — " +
-          "batch by contract)")
-      val old = refs.getOrElse(ds.otherRef, throw new IllegalArgumentException(
-        s"node ${node.id}: diff.other_ref '${ds.otherRef}' is not a def — " +
-          "declare the old snapshot under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      df = graft.ops.Relational.snapshotDiff(df, old, ds.on, ds.compare,
-        ds.statusCol, ds.changedCol, ds.includeUnchanged,
-        carryNew = ds.carry == "new")
-    }
-
-    // Apply a snapshot diff: the frame (the BASE snapshot) patches with a
-    // delta def and becomes the NEW snapshot — ship the delta, never
-    // re-copy the corpus. Batch-only by name (a complete delta).
-    node.applyDiff.foreach { ad =>
-      requireBatch("apply_diff", "a key-shaped anti-join against a complete delta",
-        "apply deltas to the landed snapshot in batch")
-      val delta = refs.getOrElse(ad.deltaRef, throw new IllegalArgumentException(
-        s"node ${node.id}: apply_diff.delta_ref '${ad.deltaRef}' is not a " +
-          "def — declare the delta under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      df = graft.ops.Relational.applyDiff(df, delta, ad.on,
-        ad.statusCol, ad.changedCol)
-    }
-
-    // Resample / gap-fill: per key, re-grid the event series onto a
-    // regular step grid; empty buckets fill per policy. Batch-only by
-    // name (per-key global bounds).
-    node.resample.foreach { rs =>
-      requireBatch("resample", "per-key global [min, max] bounds",
-        "on streams, use a windowed aggregate with watermark instead " +
-          "and gap-fill the landed batch")
-      val aggPairs = rs.aggs.map { a =>
-        (aggColumn(a): Column,
-          a.newName.getOrElse(
-            s"${a.func}_${if (a.col == "*") "all" else a.col}"))
-      }
-      df = graft.ops.Relational.resample(df, rs.keyCols, rs.tsCol, rs.step,
-        aggPairs, rs.fill, rs.maxBucketsPerKey)
-    }
-
-    // Heavy hitters: the frame becomes its top-k most frequent keys
-    // from one shuffle-free mergeable-sketch aggregate.
-    node.approxTopK.foreach { tk =>
-      requireBatch("approx_top_k", "a global sketch aggregate",
-        "sketch per window on streams, or run over the landed batch")
-      df = graft.ops.Relational.approxTopK(df, tk.keyCol, tk.k,
-        tk.maxItemsTracked)
-    }
-
-    // Unpivot (melt): wide → long via one Expand over the scan — zero
-    // shuffles, streaming-admissible; the inverse of aggregate.pivot.
-    node.unpivot.foreach { u =>
-      df = graft.ops.Relational.unpivot(df, u.ids, u.values, u.varCol, u.valCol)
-    }
-
-    // Per-row upsampling: scan-stage sequence explode — zero shuffles,
-    // streaming-admissible (the repeat-k-epochs mixing half).
-    node.upsample.foreach { up =>
-      df = graft.ops.Corpus.upsample(df, up.factorCol, up.copyCol)
-    }
-
-    // Ranking evaluation: the frame (a ranked result table) joins the
-    // qrels def and becomes per-query quality metrics at cutoff k.
-    node.rankingEval.foreach { re =>
-      requireBatch("ranking_eval", "metric joins + aggregates",
-        "evaluate in batch over the materialized result table")
-      val qrels = refs.getOrElse(re.qrelsRef, throw new IllegalArgumentException(
-        s"node ${node.id}: ranking_eval.qrels_ref '${re.qrelsRef}' is not " +
-          "a def — declare the judgment table under top-level defs" +
-          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
-      df = graft.ops.Retrieval.rankingEval(df, re.queryCol, re.docCol,
-        re.rankCol, qrels, re.k)
-    }
-
-    // Reciprocal-rank fusion: the frame (a combine union of ranked
-    // lists) becomes each query's fused top-k. One (query, doc)
-    // aggregate + one rank window over top-k-shaped input.
-    node.rrfFuse.foreach { rf =>
-      requireBatch("rrf_fuse", "a per-query top-k rank window",
-        "fuse in batch over the materialized ranked lists")
-      df = graft.ops.Retrieval.rrfFuse(df, rf.queryCol, rf.docCol,
-        rf.rankCol, rf.topK, rf.rrfK, rf.weightCol)
-    }
-
-    // At-rest ANN index build: writes dir/centroids + dir/index
-    // (partitioned by list) and the frame becomes the (list, n_vectors)
-    // balance histogram — the tuning view for nlist/refine_rounds.
-    node.annIndex.foreach { ai =>
-      requireBatch("ann_index", "centroid-fit actions and an index write",
-        "build the index in batch; search streams of queries instead")
-      if (ai.mode == "stats") {
-        // health view only — no write, the frame is discarded: the one-row
-        // (n_lists, n_empty_lists, n_vectors, max_list_n, mean_list_n,
-        // skew) gauge that decides rebuild-vs-append without reading the
-        // index parquet by hand
-        df = graft.ops.Similarity.annIndexStats(df.sparkSession, ai.dir)
-      } else if (ai.mode == "compact") {
-        // defragment the appended artifact (one file per list); the
-        // frame is discarded and becomes the post-compact histogram
-        graft.ops.Similarity.compactAnnIndex(df.sparkSession, ai.dir,
-          graft.ops.Artifacts.committedFoldCeiling(
-            df.sparkSession, ai.checkpoint))
-        df = df.sparkSession.read.parquet(s"${ai.dir}/index")
-          .groupBy(col("list")).agg(count(lit(1)).as("n_vectors"))
-      } else {
-        if (ai.mode == "append")
-          graft.ops.Similarity.appendAnnIndex(
-            df.sparkSession, df, ai.idCol, ai.vecCol, ai.dir)
-        else
-          graft.ops.Similarity.saveAnnIndex(
-            df.sparkSession, df, ai.idCol, ai.vecCol, ai.dir, ai.nlist,
-            ai.refineRounds, ai.pqM.map(m => (m, ai.pqK)), ai.pqIters)
-        df = df.sparkSession.read.parquet(s"${ai.dir}/index")
-          .groupBy(col("list")).agg(count(lit(1)).as("n_vectors"))
-      }
-    }
-
-    // Generic quantile-threshold selection: keep the ~keep_n best rows
-    // by any numeric column — one sketch pass derives the cut, the keep
-    // is a pushed-down predicate. Batch-only by name (the sketch pass is
-    // an action over the frame).
-    node.quantileFilter.foreach { qf =>
-      requireBatch("quantile_filter", "a quantile-sketch pass over the frame",
-        "derive the cut in batch and apply it as a plain filter on the stream")
-      df = graft.ops.Corpus.quantileFilter(
-        df, qf.col, qf.keepN, qf.descending, qf.relativeError)
-    }
-
-    // Scan-stage semantic probe against a saved index: each row gains
-    // (score_col, flag_col) from one codegen kernel call — zero joins,
-    // zero shuffles, so it compiles under streams too (the
-    // semantic-decontamination gate on a live ingest).
-    node.annProbe.foreach { ap =>
-      df = graft.ops.Similarity.annProbeIndex(
-        df, ap.vecCol, ap.indexDir, ap.threshold, ap.scoreCol, ap.flagCol)
-    }
-
-    // ANN search against a saved index: the frame (the query set)
-    // becomes (id_col, match_id, score, rank). Batch-only by name —
-    // per-query top-k is a rank window.
-    node.annSearch.foreach { as =>
-      requireBatch("ann_search", "a per-query top-k rank window",
-        "search in batch; the index itself is the at-rest artifact")
-      val allowed = as.allowRef.map(r => refs.getOrElse(r,
-        throw new IllegalArgumentException(
-          s"node ${node.id}: ann_search.allow_ref '$r' is not a def — " +
-            "declare the allow-list under top-level defs" +
-            (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})"))))
-      df = graft.ops.Similarity.annSearchIndex(
-        df, as.idCol, as.vecCol, as.indexDir, as.k, as.nprobe,
-        allowed, as.allowIdCol)
-    }
-
-    // Tar sharding: the frame becomes (shard, tar, n_members,
-    // tar_bytes). One grouped aggregate — batch or stream (a streaming
-    // compile needs an aggregate-admitting output mode downstream).
-    node.tarPack.foreach { tp =>
-      df = graft.ops.Tar.tarShards(df, tp.nameCol, tp.payloadCol, tp.shards)
-    }
-
-    // Shard-set compaction: the frame (one row per landed archive, e.g.
-    // a tar_pack_ingest output dir) becomes the re-packed (shard, tar,
-    // n_members, tar_bytes). Batch-only: a maintenance pass over landed
-    // data, not a per-batch stream transform.
-    node.tarCompact.foreach { tc =>
-      requireBatch("tar_compact", "a whole-history member re-pack",
-        "run it as a batch maintenance pass over the landed ingest dir")
-      df = graft.ops.Tar.tarCompact(df, tc.tarCol, tc.shards, tc.batchCol)
-    }
-
-    // Training-sequence packing: the frame becomes (shard, seq, ids,
-    // n_tokens) — per-shard EOS-separated concatenation sliced every
-    // seq_len tokens. Batch-only (per-shard running-offset window).
-    node.sequencePack.foreach { sp =>
-      requireBatch("sequence_pack", "a per-shard running-offset window",
-        "pack in batch over landed micro-batch output instead")
-      df = graft.ops.Pack.sequencePack(df, sp.idCol, sp.idsCol,
-        sp.seqLen, sp.eosId, sp.shards, sp.dropLast, sp.mode,
-        sp.withBounds, sp.padId)
-    }
-
-    // Winnowed fingerprinting: the frame becomes the compacted index
-    // (scan-stage selection) or the shared-fingerprint pair list.
-    node.winnow.foreach { wn =>
-      df = wn.output match {
-        case "pairs" =>
-          // self-join + aggregate: not streaming-admissible — reject by
-          // name rather than letting Spark fail the plan later
-          requireBatch("winnow (pairs)", "a self-join + aggregate",
-            "use output=index in batch and probe the stream with " +
-              "winnow_probe instead")
-          graft.ops.Dedup.winnowCandidatePairs(
-            df, wn.idCol, wn.textCol, wn.windowTokens, wn.winnowWindow, wn.minShared)
-        case _ => graft.ops.Dedup.winnowIndex(
-          df, wn.idCol, wn.textCol, wn.windowTokens, wn.winnowWindow)
-      }
-    }
-
-    // Scan-stage winnow probe: the Bloom over the persisted compacted
-    // index builds ONCE at compile (batch read) — the probed frame
-    // never shuffles, so the key is streaming-admissible.
-    node.winnowProbe.foreach { wp =>
-      val idx = spark.read.parquet(wp.indexDir)
-      df = graft.ops.Dedup.winnowProbeBloom(df, wp.textCol, idx,
-        wp.windowTokens, wp.winnowWindow, wp.minShared,
-        wp.matchedCol, wp.flagCol, wp.expectedKeys, wp.fpp)
-    }
-
-    // WebDataset sample grouping: the frame becomes (sample_key,
-    // n_files, exts, payload_bytes). One grouped aggregate.
-    node.wdsSamples.foreach { ws =>
-      df = graft.ops.Tar.wdsSamples(df, ws.nameCol, ws.dataCol)
-    }
-
-    // Artifact-loaded DSIR scoring: the log-ratio table loads ONCE at
-    // compile (bounded metadata) — scan-stage, streaming-admissible.
-    node.dsirScore.foreach { m =>
-      val model = graft.ops.Corpus.loadDsirModel(spark, m.modelDir)
-      df = graft.ops.Corpus.dsirScore(df, m.textCol, model)
-    }
-
-    // Deterministic split: adds the bucket-name column (scan-stage
-    // arithmetic, no shuffle); downstream keys filter/aggregate on it.
-    node.split.foreach { sp =>
-      df = graft.ops.Corpus.hashSplit(df, sp.idCol, sp.buckets, sp.splitCol)
-    }
-
-    // HTML extraction: the frame becomes (id, title, body_text, links).
-    // Pure per-row kernel — scan-stage, streaming-admissible.
-    node.htmlExtract.foreach { he =>
-      df = graft.ops.TextAnalysis.htmlExtract(df, he.idCol, he.htmlCol)
-    }
-
-    // PDF extraction: the frame becomes (id, version, n_pages, text).
-    // Pure per-row kernel — scan-stage, streaming-admissible.
-    node.pdfExtract.foreach { pe =>
-      df = graft.ops.TextAnalysis.pdfExtract(df, pe.idCol, pe.pdfCol)
-    }
-
-    // Per-column profile: the frame becomes the stats rows. A global
-    // aggregate (and count_distinct) in batch; under compileStream the
-    // ROOT node's profile becomes the per-batch drift monitor instead
-    // (stripped before this walk — see compileStream), so any profile
-    // REACHING here on a streaming compile is mid-pipeline → named error.
-    node.profile.foreach { pr =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: profile under a streaming compile must sit on " +
-          "the ROOT node, where foreachBatch appends one stats row set " +
-          "per micro-batch (the ingest drift monitor); a mid-pipeline " +
-          "streaming profile would need a global aggregate")
-      df = graft.ops.Relational.profile(df, pr.columns, pr.approx,
-        pr.groupCols)
-    }
-
-    // Temperature resampling: the frame becomes the sampled subset
-    // (schema unchanged). The per-group rates need a count action, so
-    // batch-only by name.
-    node.temperatureSample.foreach { ts =>
-      requireBatch("temperature_sample")
-      df = graft.ops.Corpus.temperatureSample(
-        df, ts.groupCol, ts.idCol, ts.targetFraction, ts.alpha)
-    }
-
-    // Token-budget mixture sampling: the frame becomes the budget-prefix
-    // subset (schema unchanged). The per-(group, bucket) sums need an
-    // action, so batch-only by name.
-    node.tokenBudgetSample.foreach { tb =>
-      requireBatch("token_budget_sample", "a bucket-sum action per group",
-        "land the stream and budget-sample in batch instead")
-      val budgets =
-        if (tb.budgets.nonEmpty) tb.budgets
-        else graft.ops.Corpus.budgetsFromWeights(tb.weights, tb.totalBudget)
-      df = graft.ops.Corpus.tokenBudgetSample(
-        df, tb.groupCol, tb.idCol, tb.tokensCol, budgets, tb.overshoot,
-        tb.orderCol, tb.descending)
-    }
-
-    // Global shuffle: the frame gains (shard, shuffle_pos). The
-    // per-shard rank window has no streaming semantics — batch-only by
-    // name (a stream's training order is its arrival order).
-    node.globalShuffle.foreach { g =>
-      if (streaming) throw new IllegalArgumentException(
-        s"node ${node.id}: global_shuffle ranks the whole corpus per " +
-          "shard — batch-only; a stream has no global permutation")
-      df = graft.ops.Corpus.globalShuffle(df, g.idCol, g.shards, g.seed)
-    }
-
-    // Boilerplate line removal: the frame becomes (id, clean_text,
-    // kept_lines, dropped_lines). Plan-only composition (two bounded
-    // aggregates + a broadcast hot-set join), so config-admissible.
-    node.boilerplate.foreach { b =>
-      df = graft.ops.Corpus.removeBoilerplateLines(
-        df, b.idCol, b.textCol, b.maxDocs, b.sep, b.byHash)
-    }
-
-    // Multimodal featurize: the frame becomes (media_id, format, width,
-    // height, n_bytes, features). Decoders are NAMED (a JSON config can't
-    // carry a closure); the registry below is the config-side injection
-    // seam — the Scala API takes arbitrary functions.
-    node.featurize.foreach { f =>
-      val decoder: Array[Byte] => Array[Float] = f.decoder match {
-        case "media" => graft.ops.Codecs.mediaFeatures
-        case "stub"  => graft.ops.Multimodal.decodeStub
-        case other => throw new IllegalArgumentException(
-          s"node ${node.id}: unknown featurize decoder '$other' " +
-            "(one of: media, stub)")
-      }
-      // one sweep: header parse + decode from the same bytes — no
-      // self-join (which would execute the payload subtree twice and
-      // shuffle both sides for row-aligned outputs)
-      df = graft.ops.Multimodal.parseAndFeaturize(df, f.idCol, f.payloadCol, decoder)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"),
-          col("meta.n_bytes").as("n_bytes"), col("features"))
-    }
+    // the registry operators (near_dup … featurize), in registry order
+    df = Operators.transform(node, opCtx, df)
 
     node.aggregate.foreach(a => df = applyAggregate(df, a))
 
@@ -1310,7 +446,7 @@ object Compiler {
         s"node ${node.id}: expect_report has group_cols but no rules — " +
           "declare at least one rule_name: \"expr\" entry")
     if (node.expectReport.nonEmpty) {
-      requireBatch("expect_report", "a global violation-count aggregate",
+      opCtx.requireBatch("expect_report", "a global violation-count aggregate",
         "declare expect_report on the streaming ROOT instead — it becomes " +
           "the per-batch contract monitor (batch_id-stamped scorecard " +
           "rows appended to the path sink)")
@@ -1617,20 +753,15 @@ object Compiler {
             .foreach(warnIgnored(_, isRoot = false))
         }
         warnIgnored(root, isRoot = true)
-        val ingestCount = Seq(root.nearDupIngest.isDefined,
-          root.passageIngest.isDefined, root.tarPackIngest.isDefined,
-          root.exactIngest.isDefined, root.sketchIngest.isDefined,
-          root.bm25Ingest.isDefined, root.annIngest.isDefined)
-          .count(identity)
-        if (ingestCount > 1) throw new IllegalArgumentException(
-          "near_dup_ingest, passage_ingest, tar_pack_ingest, " +
-            "exact_ingest, sketch_ingest, bm25_ingest, and ann_ingest " +
-            "are each a root sink — a stream has ONE; declare one per stream")
+        val sinks = Operators.rootSinks(root)
+        if (sinks.size > 1) throw new IllegalArgumentException(
+          s"${Operators.rootSinkKeys} are each a root sink — a stream has " +
+            "ONE; declare one per stream")
+        // the root profile is the per-batch drift monitor, not a transform
+        val profile = root.op[ProfileSpec]
         val out = compileNode(spark,
-          root.copy(nearDupIngest = None, passageIngest = None,
-            tarPackIngest = None, exactIngest = None, sketchIngest = None,
-            bm25Ingest = None, annIngest = None,
-            profile = None, expectReport = Nil, expectReportGroups = Nil),
+          root.copy(ops = root.ops.filterNot(o => sinks.contains(o) || profile.contains(o)),
+            expectReport = Nil, expectReportGroups = Nil),
           Some(readStreamSource(spark, src)),
           executeSinks = false, streaming = true, refs = refs)
         // The two per-batch MONITOR sinks (profile = drift stats,
@@ -1639,13 +770,9 @@ object Compiler {
         // ONE sink, so either beside an ingest — or both together —
         // rejects by name.
         def monitorSink(kind: String): graft.spec.SinkSpec = {
-          if (root.nearDupIngest.isDefined || root.passageIngest.isDefined ||
-              root.tarPackIngest.isDefined || root.exactIngest.isDefined ||
-              root.sketchIngest.isDefined || root.bm25Ingest.isDefined ||
-              root.annIngest.isDefined)
-            throw new IllegalArgumentException(
-              s"$kind beside an ingest sink: a stream has ONE sink — " +
-                "monitor the ingest's corpus directory with a second stream")
+          if (sinks.nonEmpty) throw new IllegalArgumentException(
+            s"$kind beside an ingest sink: a stream has ONE sink — " +
+              "monitor the ingest's corpus directory with a second stream")
           val sink = root.save.getOrElse(throw new IllegalArgumentException(
             s"streaming $kind needs a root save sink (a parquet/csv " +
               "path the per-batch rows append to)"))
@@ -1655,7 +782,7 @@ object Compiler {
                 "parquet/csv path sink, not memory/console")
           sink
         }
-        if (root.profile.isDefined && root.expectReport.nonEmpty)
+        if (profile.isDefined && root.expectReport.nonEmpty)
           throw new IllegalArgumentException(
             "profile and expect_report are both per-batch monitor sinks — " +
               "a stream has ONE; run two streams over the same source")
@@ -1675,8 +802,8 @@ object Compiler {
         }
         // Root profile: the per-batch drift monitor — each micro-batch's
         // q149 aggregate appends (batch_id-stamped) to the save sink.
-        if (root.profile.isDefined) {
-          val pr = root.profile.get
+        if (profile.isDefined) {
+          val pr = profile.get
           // same posture as expect_report above: a typo'd column must
           // fail HERE by name, not inside the first micro-batch
           (pr.columns ++ pr.groupCols).filterNot(out.columns.contains) match {
@@ -1693,48 +820,16 @@ object Compiler {
             out, root.expectReport, root.expectReportGroups,
             monitorSink("expect_report"))
         } else {
-          // The ingest ROOT SINKS, name → builder. At most one is
-          // present (the ingestCount guard above rejects pairs by
-          // name); each one's foreachBatch IS the sink, so a root
-          // `save` beside it would silently lose one of the two —
-          // reject loudly.
-          val ingestSinks = Seq(
-            root.nearDupIngest.map(ing => "near_dup_ingest" -> (() =>
-              graft.streaming.Streaming.nearDupIngest(
-                out, ing.idCol, ing.textCol, ing.corpusDir, ing.indexDir,
-                ing.checkpointDir, ing.shingleSize, ing.numHashes,
-                ing.bands, ing.threshold, ing.compactEvery))),
-            root.passageIngest.map(ing => "passage_ingest" -> (() =>
-              graft.streaming.Streaming.passageIngest(
-                out, ing.idCol, ing.textCol, ing.corpusDir, ing.indexDir,
-                ing.checkpointDir, ing.windowTokens, ing.compactEvery))),
-            root.tarPackIngest.map(tp => "tar_pack_ingest" -> (() =>
-              graft.streaming.Streaming.shardPackStream(
-                out, tp.nameCol, tp.payloadCol, tp.shards, tp.outDir,
-                tp.checkpointDir, tp.trigger))),
-            root.exactIngest.map(ei => "exact_ingest" -> (() =>
-              graft.streaming.Streaming.exactIngest(
-                out, ei.idCol, ei.keyCols, ei.corpusDir, ei.indexDir,
-                ei.checkpointDir, ei.compactEvery))),
-            root.sketchIngest.map(sk => "sketch_ingest" -> (() =>
-              graft.streaming.Streaming.sketchIngest(
-                out, sk.keyCol, sk.outDir, sk.checkpointDir,
-                sk.maxItemsTracked, sk.lgK, sk.groupCols))),
-            root.bm25Ingest.map(bi => "bm25_ingest" -> (() =>
-              graft.streaming.Streaming.bm25Ingest(
-                out, bi.idCol, bi.textCol, bi.indexDir, bi.checkpointDir,
-                bi.compactEvery))),
-            root.annIngest.map(ai => "ann_ingest" -> (() =>
-              graft.streaming.Streaming.annIngest(
-                out, ai.idCol, ai.vecCol, ai.indexDir, ai.checkpointDir,
-                ai.compactEvery)))
-          ).flatten
-          ingestSinks match {
-            case Seq((name, start)) =>
+          // The ingest ROOT SINKS: at most one is present (rejected in
+          // pairs above); its foreachBatch IS the sink, so a root `save`
+          // beside it would silently lose one of the two — reject loudly.
+          sinks match {
+            case Seq(ingest) =>
               if (root.save.isDefined)
                 throw new IllegalArgumentException(
-                  s"$name replaces the root save sink — declare one or the other")
-              start()
+                  s"${Operators.of(ingest).key} replaces the root save sink — " +
+                    "declare one or the other")
+              Operators.start(ingest, out)
             case _ =>
               val sink = root.save.getOrElse(
                 throw new IllegalArgumentException(

@@ -1,0 +1,1676 @@
+package graft.compile
+
+import graft.ops._
+import graft.spec._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import scala.reflect.ClassTag
+
+/** The node-operator registry: ONE entry per operator key, owning its
+  * JSON key and aliases, its decoder, its mode (batch + stream,
+  * batch-only, or streaming root sink), the frame columns it reads (the
+  * friendly tier of [[Compiler.validate]]) and its compile step — or
+  * sink starter. `JsonCodec` decodes, and `Compiler` validates, applies
+  * and starts, by walking this table; neither names an operator.
+  *
+  * Entry order IS the application order: a node's operators run in
+  * registry order whatever their JSON order (transforms between
+  * keep_columns and aggregate; root sinks last).
+  */
+object Operators {
+
+  /** How an operator runs. */
+  sealed trait Mode
+  /** A frame transform. `batchOnly` is the text after the key in the
+    * named rejection a streaming compile raises (None: streamable). */
+  final case class Transform(batchOnly: Option[String],
+      step: (OpSpec, Ctx, DataFrame) => DataFrame) extends Mode
+  /** A streaming root sink: its foreachBatch replaces the root `save`;
+    * batch compiles reject it by name, pointing at `batchShape`. */
+  final case class RootSink(batchShape: String,
+      start: (OpSpec, DataFrame) => StreamingQuery) extends Mode
+
+  /** One registry entry: the JSON `key` (+ `aliases`), the spec class
+    * it decodes to, its mode, and the frame columns it reads. */
+  final case class Op(key: String, aliases: Seq[String], cls: Class[_],
+      mode: Mode, decode: OpJson => OpSpec, reads: OpSpec => Seq[String]) {
+    def keys: Seq[String] = key +: aliases
+  }
+
+  /** What a step sees besides its spec and input frame. */
+  final class Ctx(val spark: SparkSession, val nodeId: String,
+      val streaming: Boolean, val refs: Map[String, DataFrame]) {
+    private[compile] def batchOnly(key: String, detail: String): Unit =
+      if (streaming) throw new IllegalArgumentException(s"node $nodeId: $key $detail")
+    def requireBatch(key: String, reason: String = DefaultReason,
+        hint: String = DefaultHint): Unit = batchOnly(key, runs(reason, hint))
+    /** The compiled def a `field` names. */
+    def ref(field: String, name: String, what: String): DataFrame =
+      refs.getOrElse(name, throw new IllegalArgumentException(
+        s"node $nodeId: $field '$name' is not a def — declare $what under " +
+          "top-level defs" +
+          (if (refs.isEmpty) "" else s" (defined: ${refs.keys.mkString(", ")})")))
+  }
+
+  // Cluster-output dedup tiers run ITERATIVE connected components
+  // (bounded per-round actions) — batch-only semantics. Refusing by
+  // name beats the confusing analysis error a streaming frame would
+  // throw mid-CC.
+  private val DefaultReason = "iterative connected components"
+  private val DefaultHint = "streaming ingestion dedups via near_dup_ingest " +
+    "(the persisted-index path) instead"
+  private def runs(reason: String = DefaultReason, hint: String = DefaultHint): String =
+    s"runs $reason — batch-only; $hint"
+
+  private def op[S <: OpSpec](key: String, aliases: String*)(
+      decode: OpJson => S, reads: S => Seq[String] = (_: S) => Nil,
+      batchOnly: Option[String] = None)(step: (S, Ctx, DataFrame) => DataFrame)(
+      implicit t: ClassTag[S]): Op =
+    Op(key, aliases, t.runtimeClass,
+      Transform(batchOnly, (s, c, df) => step(s.asInstanceOf[S], c, df)),
+      decode, s => reads(s.asInstanceOf[S]))
+
+  private def sink[S <: OpSpec](key: String, alias: String, batchShape: String)(
+      decode: OpJson => S)(start: (S, DataFrame) => StreamingQuery)(
+      implicit t: ClassTag[S]): Op =
+    Op(key, Seq(alias), t.runtimeClass,
+      RootSink(batchShape, (s, df) => start(s.asInstanceOf[S], df)), decode, _ => Nil)
+
+  // ---- decode helpers ----------------------------------------------------
+
+  /** Best-copy retention for cluster-output tiers — validated at decode
+    * time: the key only makes sense over clusters, and a silent no-op on
+    * pairs output is the config-language failure mode the codec exists
+    * to prevent. */
+  private def retention(j: OpJson, output: String): Option[RetentionSpec] =
+    j.opt("retention").map { r =>
+      require(output == "clusters",
+        s"""${j.ctx}.retention needs output: "clusters" — """ +
+          s"""best-copy retention has no meaning over "$output" output""")
+      RetentionSpec(
+        orderCol = JsonCodec.req(r, s"${j.ctx}.retention", "order_col", "orderCol").asText,
+        descending = JsonCodec.opt(r, "descending").forall(_.asBoolean(true)))
+    }
+
+  private def clusterOutput(j: OpJson): String =
+    j.choice("output", "pairs", "pairs", "clusters")
+
+  /** `checkpoint` scopes a delta fold to the ingest stream's COMMITTED
+    * batches — it only means something under mode "compact". */
+  private def requireCompactOnlyCheckpoint(
+      ctx: String, mode: String, checkpoint: Option[String]): Unit =
+    require(checkpoint.isEmpty || mode == "compact",
+      s"""$ctx: "checkpoint" is a compact-only key (it scopes the """ +
+        "delta fold to the ingest stream's committed batches) — " +
+        s"""remove it, or use mode "compact"""")
+
+  /** `compact_every: N` on an ingest sink — fold the ingest's grown areas
+    * every N batches inside foreachBatch. */
+  private def ingestCompactEvery(j: OpJson): Option[Int] = {
+    val ce = j.opt("compact_every", "compactEvery").map(_.asInt)
+    ce.foreach(n => require(n >= 1, s"${j.ctx}: compact_every must be >= 1, got $n"))
+    ce
+  }
+
+  // ---- step helpers ------------------------------------------------------
+
+  /** Best-copy retention over a cluster tier's (id, cluster) labels: join
+    * the labels back onto the FULL input frame (left — a row no near-dup
+    * touched heads its own singleton class) and keep each class's best
+    * row via the exactDedupBest aggregate. One label join + one
+    * partial+final aggregate over the cluster op's own cost. */
+  private def retainBest(c: Ctx, input: DataFrame, labels: DataFrame,
+      idCol: String, r: RetentionSpec): DataFrame = {
+    require(!input.columns.contains("cluster"),
+      s"node ${c.nodeId}: retention adds a 'cluster' column but the " +
+        "input already has one — rename it first")
+    val lab = labels.select(col("id").as("__rcid"), col("cluster"))
+    val joined = input.join(lab, input(idCol) === col("__rcid"), "left")
+      .drop("__rcid")
+      .withColumn("cluster", coalesce(col("cluster"), col(idCol)))
+    Dedup.exactDedupBest(joined, Seq("cluster"), idCol, r.orderCol, r.descending)
+  }
+
+  /** The perceptual/SimHash tiers: (idA, idB, dist) pairs, or (id,
+    * cluster) labels when output = "clusters" (batch-only), optionally
+    * reduced to each class's best full row. */
+  private def pairsOrClusters(c: Ctx, key: String, input: DataFrame,
+      idCol: String, output: String, keep: Option[RetentionSpec])(
+      pairs: => DataFrame)(clusters: => DataFrame): DataFrame =
+    if (output == "clusters") {
+      c.requireBatch(s"$key (clusters)")
+      val labels = clusters
+      keep.fold(labels)(r => retainBest(c, input, labels, idCol, r))
+    } else pairs
+
+  // ---- the registry ------------------------------------------------------
+
+  val all: Seq[Op] = Seq(
+    // Embedding near-dup pairs: the frame becomes (idA, idB, score).
+    // Pure plan composition (banded signatures + equi-join — no
+    // actions); "clusters" runs connected components over the verified
+    // pairs — (id, cluster) labels, the perceptual tiers' shape.
+    op[NearDupSpec]("near_dup", "nearDup")(
+      decode = j => {
+        val out = clusterOutput(j)
+        NearDupSpec(
+          idCol = j.str("id_col", "idCol"),
+          vecCol = j.str("vec_col", "vecCol"),
+          threshold = j.double("threshold"),
+          dim = j.int("dim"),
+          numBits = j.intOr(64, "num_bits", "numBits"),
+          bands = j.intOr(8, "bands"),
+          output = out,
+          retention = retention(j, out))
+      },
+      reads = d => Seq(d.idCol, d.vecCol) ++ d.retention.map(_.orderCol)) {
+      (d, c, df) =>
+        val pairs = Similarity.cosineNearDupPairsBanded(
+          df, d.idCol, d.vecCol, d.threshold, d.dim, d.numBits, d.bands)
+        if (d.output != "clusters") pairs
+        else {
+          c.requireBatch("near_dup (clusters)")
+          val labels = Dedup.dedupClusters(pairs)
+          d.retention.fold(labels)(r => retainBest(c, df, labels, d.idCol, r))
+        }
+    },
+
+    // Semantic dedup: centroid training collects bounded metadata at
+    // compile and the within-cluster join needs the whole corpus.
+    op[SemanticDedupSpec]("semantic_dedup", "semanticDedup")(
+      decode = j => SemanticDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        vecCol = j.str("vec_col", "vecCol"),
+        threshold = j.double("threshold"),
+        dim = j.int("dim"),
+        nlist = j.intOr(16, "nlist"),
+        refineRounds = j.intOr(0, "refine_rounds", "refineRounds"),
+        exact = j.flag(false, "exact"),
+        // HIGH-threshold production regime (τ ≥ 0.9): wide bands prune;
+        // the low-τ near_dup default (2-bit keys) would go quadratic here
+        numBits = j.intOr(64, "num_bits", "numBits"),
+        bands = j.intOr(8, "bands"),
+        output = j.choice("output", "keep", "keep", "labels", "pairs")),
+      reads = d => Seq(d.idCol, d.vecCol),
+      batchOnly = Some("trains centroids over the whole corpus — batch-only; " +
+        "dedup a stream against a batch-built index via " +
+        "near_dup_ingest/near_dup_probe instead")) { (d, _, df) =>
+      Similarity.semanticDedup(df, d.idCol, d.vecCol, d.threshold, d.dim,
+        d.nlist, d.refineRounds, d.exact, d.numBits, d.bands, d.output)
+    },
+
+    // Edit-distance near-dup: the frame becomes (idA, idB, dist, sim) —
+    // blocking-key candidates verified by normalized Levenshtein (one
+    // block-key shuffle + candidate-shaped verify).
+    op[EditDedupSpec]("edit_dedup", "editDedup")(
+      decode = j => EditDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        blockExpr = j.str("block_expr", "blockExpr"),
+        threshold = j.doubleOr(0.8, "threshold"),
+        maxDistance = j.opt("max_distance", "maxDistance").map(_.asInt),
+        // default-on skew guard; an int pins a user cap, "off" opts out
+        bucketCap = j.opt("max_bucket_size", "maxBucketSize").map { v =>
+          if (v.isNumber) BucketCap.Max(v.asInt)
+          else v.asText match {
+            case "auto" => BucketCap.Auto
+            case "off"  => BucketCap.Off
+            case other => throw new IllegalArgumentException(
+              s"${j.ctx}.max_bucket_size must be an int, " +
+                s""""auto" or "off" — got "$other"""")
+          }
+        }.getOrElse(BucketCap.Auto)),
+      reads = e => Seq(e.idCol, e.textCol)) { (e, _, df) =>
+      val cands = Dedup.blockedCandidatePairs(df, e.idCol, expr(e.blockExpr), e.bucketCap)
+      Dedup.verifyEditDistancePairs(df, e.idCol, e.textCol, cands, e.threshold, e.maxDistance)
+    },
+
+    // Perceptual image dedup: (idA, idB, dist) pairs or (id, cluster)
+    // labels — both plan-only (partition-batched dHash +
+    // identical-signature-collapsed banding).
+    op[ImageDedupSpec]("image_dedup", "imageDedup")(
+      decode = j => ImageDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        payloadCol = j.str("payload_col", "payloadCol"),
+        maxDist = j.intOr(6, "max_dist", "maxDist"),
+        output = clusterOutput(j),
+        retention = retention(j, clusterOutput(j))),
+      reads = i => Seq(i.idCol, i.payloadCol) ++ i.retention.map(_.orderCol)) {
+      (i, c, df) =>
+        pairsOrClusters(c, "image_dedup", df, i.idCol, i.output, i.retention)(
+          Multimodal.imageNearDupPairs(df, i.idCol, i.payloadCol, i.maxDist))(
+          Multimodal.imageNearDupClusters(df, i.idCol, i.payloadCol, i.maxDist))
+    },
+
+    // Text SimHash near-dup: the same shapes over the token-hash SimHash.
+    op[SimhashDedupSpec]("simhash_dedup", "simhashDedup")(
+      decode = j => SimhashDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        maxDist = j.intOr(3, "max_dist", "maxDist"),
+        output = clusterOutput(j),
+        retention = retention(j, clusterOutput(j))),
+      reads = s => Seq(s.idCol, s.textCol) ++ s.retention.map(_.orderCol)) {
+      (s, c, df) =>
+        pairsOrClusters(c, "simhash_dedup", df, s.idCol, s.output, s.retention)(
+          Dedup.simhashPairs(df, s.idCol, s.textCol, s.maxDist))(
+          Dedup.simhashClusters(df, s.idCol, s.textCol, s.maxDist))
+    },
+
+    // Perceptual audio dedup: the same shapes over the envelope hash.
+    op[AudioDedupSpec]("audio_dedup", "audioDedup")(
+      decode = j => AudioDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        payloadCol = j.str("payload_col", "payloadCol"),
+        maxDist = j.intOr(6, "max_dist", "maxDist"),
+        output = clusterOutput(j),
+        retention = retention(j, clusterOutput(j))),
+      reads = a => Seq(a.idCol, a.payloadCol) ++ a.retention.map(_.orderCol)) {
+      (a, c, df) =>
+        pairsOrClusters(c, "audio_dedup", df, a.idCol, a.output, a.retention)(
+          Multimodal.audioNearDupPairs(df, a.idCol, a.payloadCol, a.maxDist))(
+          Multimodal.audioNearDupClusters(df, a.idCol, a.payloadCol, a.maxDist))
+    },
+
+    // Exact substring-level dedup: "spans" rewrites the frame to
+    // duplicate-passage token spans; "strip" keeps it and adds
+    // clean_text + dropped_tokens. Occurrence ranking needs a global
+    // order over the whole corpus — illegal on streams.
+    op[PassageDedupSpec]("passage_dedup", "passageDedup")(
+      decode = j => PassageDedupSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        windowTokens = j.intOr(50, "window_tokens", "windowTokens"),
+        output = j.choice("output", "spans", "spans", "strip")),
+      reads = p => Seq(p.idCol, p.textCol),
+      batchOnly = Some("ranks occurrences against the whole corpus — " +
+        "batch-only (streaming corpora use the passage_ingest root sink)")) {
+      (p, _, df) =>
+        if (p.output == "strip")
+          Dedup.stripDuplicatePassages(df, p.idCol, p.textCol, p.windowTokens)
+        else Dedup.duplicatePassageSpans(df, p.idCol, p.textCol, p.windowTokens)
+    },
+
+    // LM-perplexity quality scoring: the frame becomes (id, n_bigrams,
+    // nll). Plan-only (vocabulary aggregates + equi-joins).
+    op[LmPerplexitySpec]("lm_perplexity", "lmPerplexity")(
+      decode = j => LmPerplexitySpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        k = j.doubleOr(0.5, "k"),
+        keepUnscored = j.flag(false, "keep_unscored", "keepUnscored"),
+        smoothing = j.choice("smoothing", "addk", "addk", "kn"),
+        discount = j.doubleOr(0.75, "discount")),
+      reads = l => Seq(l.idCol, l.textCol)) { (l, _, df) =>
+      Corpus.lmPerplexity(df, l.idCol, l.textCol, l.k, l.keepUnscored,
+        l.smoothing, l.discount)
+    },
+
+    // Artifact-inference keys — the STREAMING-admissible halves of the
+    // batch-only trainers: each loads a persisted artifact ONCE at
+    // compile time (bounded driver metadata — weights / merge list /
+    // Bloom bit array) and applies a scan-stage kernel.
+    op[NearDupProbeSpec]("near_dup_probe", "nearDupProbe")(
+      decode = j => NearDupProbeSpec(
+        textCol = j.str("text_col", "textCol"),
+        indexDir = j.str("index_dir", "indexDir"),
+        shingleSize = j.intOr(3, "shingle_size", "shingleSize"),
+        numHashes = j.intOr(64, "num_hashes", "numHashes"),
+        bands = j.intOr(16, "bands"),
+        flagCol = j.strOr("near_dup", "flag_col", "flagCol"),
+        expectedKeys = j.longOr(1L << 22, "expected_keys", "expectedKeys"),
+        fpp = j.doubleOr(0.01, "fpp"))) { (p, c, df) =>
+      Dedup.nearDupProbeBloom(df, p.textCol, c.spark.read.parquet(p.indexDir),
+        p.shingleSize, p.numHashes, p.bands, p.flagCol, p.expectedKeys, p.fpp)
+    },
+
+    // Scan-stage seen probe: the Bloom over the persisted key index
+    // builds ONCE at compile — the crawl-frontier gate.
+    op[SeenProbeSpec]("seen_probe", "seenProbe")(
+      decode = j => {
+        val s = SeenProbeSpec(
+          keyCol = j.str("key_col", "keyCol"),
+          indexDir = j.str("index_dir", "indexDir"),
+          flagCol = j.strOr("seen", "flag_col", "flagCol"),
+          expectedKeys = j.longOr(1L << 22, "expected_keys", "expectedKeys"),
+          fpp = j.doubleOr(0.01, "fpp"))
+        require(s.expectedKeys > 0, s"${j.ctx}: expected_keys must be > 0")
+        require(s.fpp > 0 && s.fpp < 1, s"${j.ctx}: fpp must be in (0, 1), got ${s.fpp}")
+        s
+      },
+      reads = s => Seq(s.keyCol)) { (s, c, df) =>
+      Dedup.seenProbeBloom(df, s.keyCol, c.spark.read.parquet(s.indexDir),
+        s.flagCol, s.expectedKeys, s.fpp)
+    },
+
+    // Exact seen filter: drop (left-anti) or flag against the persisted
+    // key index's distinct keys. Stream-static join under compileStream
+    // — the index is read at stream START.
+    op[SeenFilterSpec]("seen_filter", "seenFilter")(
+      decode = j => {
+        val s = SeenFilterSpec(
+          keyCol = j.str("key_col", "keyCol"),
+          indexDir = j.str("index_dir", "indexDir"),
+          mode = j.strOr("drop", "mode"),
+          flagCol = j.strOr("seen", "flag_col", "flagCol"))
+        require(s.mode == "drop" || s.mode == "flag",
+          s"""${j.ctx}: mode must be "drop" or "flag", got "${s.mode}"""")
+        s
+      },
+      reads = s => Seq(s.keyCol)) { (s, c, df) =>
+      Dedup.seenFilter(df, s.keyCol, c.spark.read.parquet(s.indexDir), s.mode, s.flagCol)
+    },
+
+    op[ScoreModelSpec]("score_model", "scoreModel")(
+      decode = j => ScoreModelSpec(
+        textCol = j.str("text_col", "textCol"),
+        modelDir = j.str("model_dir", "modelDir"),
+        scoreCol = j.strOr("score", "score_col", "scoreCol"),
+        predCol = j.strOr("pred", "pred_col", "predCol"),
+        threshold = j.doubleOr(0.5, "threshold"))) { (m, c, df) =>
+      val model = Corpus.loadTextClassifier(c.spark, m.modelDir)
+      Corpus.scoreWithModel(df, m.textCol, model, m.scoreCol, m.predCol, m.threshold)
+    },
+
+    op[BpeApplySpec]("bpe_apply", "bpeApply")(
+      decode = j => {
+        val s = BpeApplySpec(
+          textCol = j.optStr("text_col", "textCol"),
+          mergesDir = j.str("merges_dir", "mergesDir"),
+          withIds = j.flag(false, "with_ids", "withIds"),
+          decodeCol = j.optStr("decode_col", "decodeCol"))
+        require(s.textCol.nonEmpty || s.decodeCol.nonEmpty,
+          s"${j.ctx}: need text_col (encode: bpe_tokens/bpe_ids) and/or " +
+            "decode_col (an ids column to decode into bpe_decoded)")
+        require(!(s.withIds && s.textCol.isEmpty),
+          s"${j.ctx}: with_ids encodes text_col — declare text_col, or drop with_ids")
+        s
+      }) { (b, c, df) =>
+      val merges = Bpe.loadMerges(c.spark, b.mergesDir)
+      var out = df
+      b.textCol.foreach { tc =>
+        out = Bpe.addTokens(out, tc, merges)
+        if (b.withIds) out = Bpe.addIds(out, tc, merges)
+      }
+      // decode side: ids → subword strings under the SAME artifact (the
+      // shard-inspection path: tar source → binary_ints → decode)
+      b.decodeCol.foreach(dc => out = Bpe.addDecoded(out, dc, merges))
+      out
+    },
+
+    // Sliding-window chunking: the frame becomes one row per chunk —
+    // (id, chunk_id, chunk_text | chunk_ids, n_tokens). Scan-stage
+    // generator. Sits after bpe_apply so the ids tier composes bpe →
+    // chunk → sequence_pack (whole-doc packing without truncation).
+    op[ChunkSpec]("chunk")(
+      decode = j => {
+        val cs = ChunkSpec(
+          idCol = j.str("id_col", "idCol"),
+          size = j.int("size"),
+          overlap = j.intOr(0, "overlap"),
+          textCol = j.optStr("text_col", "textCol"),
+          idsCol = j.optStr("ids_col", "idsCol"),
+          sep = j.optStr("sep"))
+        val ctx = j.ctx
+        require(cs.size >= 1, s"$ctx: size must be >= 1, got ${cs.size}")
+        require(cs.overlap >= 0 && cs.overlap < cs.size,
+          s"$ctx: need 0 <= overlap < size, got overlap=${cs.overlap} size=${cs.size}")
+        require(cs.textCol.isDefined != cs.idsCol.isDefined,
+          s"$ctx: exactly one of text_col (whitespace-token tier) or " +
+            "ids_col (token-id tier) must be set")
+        cs.sep.foreach { s =>
+          require(s.nonEmpty, s"$ctx: sep must be non-empty")
+          require(cs.textCol.isDefined,
+            s"$ctx: sep (structure-aware segment chunking) needs text_col " +
+              "— token-id arrays carry no separators")
+          require(cs.overlap == 0,
+            s"$ctx: sep excludes overlap — segments pack whole, " +
+              "they never overlap")
+        }
+        cs
+      },
+      // ids_col is NOT read here: it is usually bpe_apply-created in the
+      // same node (bpe_ids) — the analyzer tier checks it
+      reads = c => Seq(c.idCol)) { (ch, _, df) =>
+      (ch.textCol, ch.sep) match {
+        case (Some(t), Some(sp)) => Corpus.chunkBySegments(df, ch.idCol, t, ch.size, sp)
+        case (Some(t), None) => Corpus.chunkByTokens(df, ch.idCol, t, ch.size, ch.overlap)
+        case _ => Corpus.chunkIds(df, ch.idCol, ch.idsCol.get, ch.size, ch.overlap)
+      }
+    },
+
+    // BPE: train merges on the frame (iterative global aggregates);
+    // output=merges replaces the frame with the merge table,
+    // output=tokens adds the trained tokenizer's columns.
+    op[BpeSpec]("bpe")(
+      decode = j => BpeSpec(
+        textCol = j.str("text_col", "textCol"),
+        numMerges = j.intOr(16, "num_merges", "numMerges"),
+        output = j.choice("output", "merges", "merges", "tokens")),
+      reads = b => Seq(b.textCol),
+      batchOnly = Some("training is an iterative global aggregate " +
+        "— batch-only; train in batch and tokenize the stream with the " +
+        "trained merges (BpeKernels.bpeTokenize)")) { (b, c, df) =>
+      if (b.output == "merges") Bpe.trainDF(c.spark, df, b.textCol, b.numMerges)
+      else {
+        val merges = Bpe.train(df, b.textCol, b.numMerges).map(t => (t._1, t._2))
+        df.withColumn("bpe_tokens",
+            graft.functions.BpeKernels.bpeTokenize(col(b.textCol), merges))
+          .withColumn("n_bpe", size(col("bpe_tokens")))
+      }
+    },
+
+    // Count–Min watchlist probe: the frame becomes (key, est). The
+    // sketch aggregate collects to the driver.
+    op[CmsProbeSpec]("cms_probe", "cmsProbe")(
+      decode = j => {
+        val probes = j.req("probes")
+        require(probes.isArray && probes.size() > 0,
+          s"${j.ctx}.probes must be a non-empty ARRAY of keys")
+        CmsProbeSpec(
+          keyCol = j.str("key_col", "keyCol"),
+          probes = (0 until probes.size()).map(i => probes.get(i).asText),
+          eps = j.doubleOr(1e-4, "eps"),
+          confidence = j.doubleOr(0.99, "confidence"),
+          seed = j.intOr(42, "seed"))
+      },
+      reads = p => Seq(p.keyCol),
+      batchOnly = Some("collects a sketch (an action) — batch-only; monitor " +
+        "a stream by probing per batch in foreachBatch instead")) { (p, _, df) =>
+      Relational.cmsProbeCounts(df, p.keyCol, p.probes, p.eps, p.confidence, p.seed)
+    },
+
+    // Trainable quality classifier: fit on labeled rows (global
+    // aggregates), score every row scan-stage.
+    op[QualityClassifierSpec]("quality_classifier", "qualityClassifier")(
+      decode = j => QualityClassifierSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        labelCol = j.str("label_col", "labelCol"),
+        dim = j.intOr(1024, "dim"),
+        epochs = j.intOr(8, "epochs"),
+        lr = j.doubleOr(0.8, "lr"),
+        threshold = j.doubleOr(0.5, "threshold")),
+      reads = q => Seq(q.idCol, q.textCol, q.labelCol),
+      batchOnly = Some(runs("training-pass global aggregates",
+        "train in batch, persist the artifact, and score the stream with " +
+          "score_model instead"))) { (q, _, df) =>
+      Corpus.qualityClassifier(df, q.idCol, q.textCol, q.labelCol, q.dim,
+        q.epochs, q.lr, q.threshold)
+    },
+
+    // Multiclass classifier: one-vs-rest training (k sets of global
+    // aggregates) + scan-stage argmax prediction; the frame gains
+    // pred_col (and per-class scores with keep_scores).
+    op[MulticlassClassifierSpec]("multiclass_classifier", "multiclassClassifier")(
+      decode = j => MulticlassClassifierSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        labelCol = j.str("label_col", "labelCol"),
+        dim = j.intOr(1024, "dim"),
+        epochs = j.intOr(8, "epochs"),
+        lr = j.doubleOr(0.8, "lr"),
+        predCol = j.strOr("pred_label", "pred_col", "predCol"),
+        keepScores = j.flag(false, "keep_scores", "keepScores")),
+      reads = m => Seq(m.idCol, m.textCol, m.labelCol),
+      batchOnly = Some("trains one-vs-rest models over the whole corpus — " +
+        "batch-only; train in batch, persist per-class artifacts, and score " +
+        "the stream with score_model columns instead")) { (m, _, df) =>
+      val models = Corpus.trainMulticlassClassifier(
+        df, m.idCol, m.textCol, m.labelCol, m.dim, m.epochs, m.lr)
+      Corpus.predictMulticlass(df, m.textCol, models, m.predCol, m.keepScores)
+    },
+
+    // Predict with a persisted multiclass artifact: models load ONCE at
+    // compile (bounded metadata), prediction is scan-stage — the
+    // streaming-admissible inference half of multiclass_classifier.
+    op[PredictModelSpec]("predict_model", "predictModel")(
+      decode = j => PredictModelSpec(
+        textCol = j.str("text_col", "textCol"),
+        modelDir = j.str("model_dir", "modelDir"),
+        predCol = j.strOr("pred_label", "pred_col", "predCol"),
+        keepScores = j.flag(false, "keep_scores", "keepScores")),
+      reads = p => Seq(p.textCol)) { (p, c, df) =>
+      val models = Corpus.loadMulticlassClassifier(c.spark, p.modelDir)
+      Corpus.predictMulticlass(df, p.textCol, models, p.predCol, p.keepScores)
+    },
+
+    // DSIR importance weighting/resampling: the fit joins this frame
+    // against the exemplar corpus named by target_ref (two count
+    // aggregates); scoring is scan-stage kernel arithmetic over the
+    // fitted log-ratio table.
+    op[DsirSpec]("dsir")(
+      decode = j => {
+        val ctx = j.ctx
+        val mode = j.optStr("mode").map {
+          case m @ ("weights" | "select" | "select_threshold") => m
+          case other => throw new IllegalArgumentException(
+            s"""$ctx: mode must be "weights", "select", or """ +
+              s""""select_threshold" — got "$other"""")
+        }.getOrElse("weights")
+        val spec = DsirSpec(
+          targetRef = j.str("target_ref", "targetRef"),
+          textCol = j.str("text_col", "textCol"),
+          idCol = j.strOr("", "id_col", "idCol"),
+          buckets = j.intOr(8192, "buckets"),
+          mode = mode,
+          n = j.intOr(0, "n"),
+          seed = j.longOr(0L, "seed"),
+          gumbel = j.flag(true, "gumbel"),
+          saveModel = j.strOr("", "save_model", "saveModel"),
+          threshold = j.opt("threshold").map(_.asDouble),
+          relativeError = j.doubleOr(1e-4, "relative_error", "relativeError"))
+        if (spec.mode == "select") {
+          require(spec.n >= 1, s"$ctx: select mode needs n >= 1")
+          require(spec.idCol.nonEmpty, s"$ctx: select mode needs id_col")
+        }
+        if (spec.mode == "select_threshold") {
+          require(spec.threshold.nonEmpty || spec.n >= 1,
+            s"$ctx: select_threshold mode needs an explicit threshold or n >= 1")
+          require(!spec.gumbel || spec.idCol.nonEmpty,
+            s"$ctx: select_threshold with gumbel noise needs id_col")
+        }
+        spec
+      },
+      reads = d => Seq(d.textCol) ++ (if (d.idCol.nonEmpty) Seq(d.idCol) else Nil),
+      batchOnly = Some(runs("exemplar-corpus count aggregates (the fit)",
+        "fit in batch, persist via save_model, and score the stream with " +
+          "dsir_score instead"))) { (d, c, df) =>
+      val target = c.ref("dsir.target_ref", d.targetRef, "the exemplar corpus")
+      val model = Corpus.dsirFit(df, target, d.textCol, d.buckets)
+      if (d.saveModel.nonEmpty) Corpus.saveDsirModel(c.spark, model, d.saveModel)
+      val scored = Corpus.dsirScore(df, d.textCol, model)
+      d.mode match {
+        case "select" => Corpus.dsirResample(scored, d.idCol, d.n, d.seed, d.gumbel)
+        case "select_threshold" =>
+          // the scan-stage selection path: explicit key cut, or derived
+          // once from the quantile sketch when only n is given
+          val t = d.threshold.getOrElse(
+            Corpus.dsirThresholdForN(scored, d.idCol, d.n.toLong,
+              d.seed, d.gumbel, relativeError = d.relativeError))
+          Corpus.dsirResampleThreshold(scored, d.idCol, t, d.seed, d.gumbel)
+        case _ => scored
+      }
+    },
+
+    // PageRank over the frame as an edge list: the frame becomes
+    // (node, rank).
+    op[PageRankSpec]("page_rank", "pageRank")(
+      decode = j => PageRankSpec(
+        srcCol = j.str("src_col", "srcCol"),
+        dstCol = j.str("dst_col", "dstCol"),
+        iters = j.intOr(3, "iters"),
+        damping = j.doubleOr(0.85, "damping"),
+        tol = j.doubleOr(0.0, "tol")),
+      reads = p => Seq(p.srcCol, p.dstCol),
+      batchOnly = Some(runs("iterative rank-update actions",
+        "compute host ranks in batch and join them onto the stream instead"))) {
+      (p, _, df) => Graph.pageRank(df, p.srcCol, p.dstCol, p.iters, p.damping, p.tol)
+    },
+
+    // Generic connected components: the frame is an edge table and
+    // becomes (id, cluster) min-reachable-id labels — the dedup tiers'
+    // CC engine exposed for entity resolution / graph communities.
+    op[ConnectedComponentsSpec]("connected_components", "connectedComponents")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = ConnectedComponentsSpec(
+          srcCol = j.str("src_col", "srcCol"),
+          dstCol = j.str("dst_col", "dstCol"),
+          maxIter = j.intOr(20, "max_iter", "maxIter"),
+          smallGraphEdges = j.longOr(1L << 20, "small_graph_edges", "smallGraphEdges"),
+          checkpointDir = j.optStr("checkpoint_dir", "checkpointDir"))
+        require(s.srcCol != s.dstCol,
+          s"$ctx: src_col and dst_col must differ (self-loops are rows " +
+            "with equal VALUES, not equal columns)")
+        require(s.maxIter >= 1, s"$ctx: max_iter must be >= 1, got ${s.maxIter}")
+        require(s.smallGraphEdges >= 0 && s.smallGraphEdges <= (1L << 24),
+          s"$ctx: small_graph_edges must be in [0, 2^24], got " +
+            s"${s.smallGraphEdges} (the driver-collect safety cap)")
+        s
+      },
+      reads = cc => Seq(cc.srcCol, cc.dstCol),
+      batchOnly = Some(runs("iterative label-propagation actions",
+        "label the landed graph in batch and join the labels onto the " +
+          "stream instead"))) { (cc, _, df) =>
+      Dedup.dedupClusters(
+        df.select(col(cc.srcCol).as("idA"), col(cc.dstCol).as("idB")),
+        maxIter = cc.maxIter, smallGraphEdges = cc.smallGraphEdges,
+        checkpointDir = cc.checkpointDir)
+    },
+
+    // Collocation mining: the frame becomes its top-k PMI bigram table.
+    op[CollocationsSpec]("collocations")(
+      decode = j => {
+        val s = CollocationsSpec(
+          textCol = j.str("text_col", "textCol"),
+          minCount = j.intOr(5, "min_count", "minCount"),
+          topK = j.intOr(100, "top_k", "topK"),
+          groupCols = j.strs("group_cols", "groupCols"))
+        require(s.minCount >= 1, s"${j.ctx}: min_count must be >= 1, got ${s.minCount}")
+        require(s.topK >= 1, s"${j.ctx}: top_k must be >= 1, got ${s.topK}")
+        s
+      },
+      reads = cs => cs.textCol +: cs.groupCols,
+      batchOnly = Some(runs("global corpus token/pair counts",
+        "mine collocations in batch over the landed corpus instead"))) { (cs, _, df) =>
+      TextAnalysis.collocations(df, cs.textCol, cs.minCount, cs.topK, cs.groupCols)
+    },
+
+    // BM25 retrieval: rank the frame (the corpus) against the query def;
+    // the frame becomes (qid, id, score, rn).
+    op[Bm25Spec]("bm25")(
+      decode = j => Bm25Spec(
+        queriesRef = j.str("queries_ref", "queriesRef"),
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        qidCol = j.strOr("qid", "qid_col", "qidCol"),
+        qtextCol = j.strOr("qtext", "qtext_col", "qtextCol"),
+        k1 = j.doubleOr(1.2, "k1"),
+        b = j.doubleOr(0.75, "b"),
+        topK = j.intOr(10, "top_k", "topK"),
+        proxWeight = j.doubleOr(0.0, "prox_weight", "proxWeight")),
+      reads = b => Seq(b.idCol, b.textCol),
+      batchOnly = Some(runs("corpus-statistics actions (N, avgdl)",
+        "run retrieval in batch over the materialized corpus instead"))) { (b, c, df) =>
+      val queries = c.ref("bm25.queries_ref", b.queriesRef, "the query table")
+      Retrieval.bm25TopK(df, b.idCol, b.textCol, queries, b.qidCol, b.qtextCol,
+        b.k1, b.b, b.topK, b.proxWeight)
+    },
+
+    // At-rest BM25 index build/append/compact/stats: the frame (the
+    // corpus) persists bucket-partitioned postings + lengths + stats,
+    // then becomes the (bucket, n_postings) balance histogram.
+    op[Bm25IndexSpec]("bm25_index", "bm25Index")(
+      decode = j => {
+        val ctx = j.ctx
+        val mode = j.strOr("build", "mode")
+        require(mode == "build" || mode == "append" || mode == "compact" ||
+            mode == "stats",
+          s"""$ctx: mode must be "build", "append", "compact" or "stats", got "$mode"""")
+        // compact/stats only touch the artifact — frame columns never enter
+        val artifactOnly = mode == "compact" || mode == "stats"
+        if (artifactOnly)
+          Seq("id_col", "idCol", "text_col", "textCol").foreach { k =>
+            require(j.opt(k).isEmpty,
+              s"""$ctx: "$k" has no effect under mode "$mode" (it """ +
+                "touches only the saved artifact) — remove it")
+          }
+        val s = Bm25IndexSpec(
+          idCol = if (artifactOnly) "" else j.str("id_col", "idCol"),
+          textCol = if (artifactOnly) "" else j.str("text_col", "textCol"),
+          dir = j.str("dir"),
+          prox = j.flag(false, "prox"),
+          buckets = j.intOr(64, "buckets"),
+          mode = mode,
+          checkpoint = j.optStr("checkpoint"))
+        requireCompactOnlyCheckpoint(ctx, s.mode, s.checkpoint)
+        // append/compact work against the SAVED layout — stated layout
+        // params would silently not re-shard/re-shape; reject by name
+        require(s.mode == "build" || (j.opt("prox").isEmpty && j.opt("buckets").isEmpty),
+          s"""$ctx: prox/buckets have no effect under mode "${s.mode}" """ +
+            "(the saved layout is reused) — remove them, or rebuild with " +
+            """mode "build"""")
+        require(s.buckets >= 1 && s.buckets <= 65536,
+          s"$ctx: buckets must be in [1, 65536], got ${s.buckets}")
+        s
+      },
+      reads = b =>
+        if (b.mode == "compact" || b.mode == "stats") Nil else Seq(b.idCol, b.textCol),
+      batchOnly = Some(runs("a postings build and an index write",
+        "build the index in batch; search query streams in batch against it"))) {
+      (b, _, df) =>
+        val s = df.sparkSession
+        if (b.mode == "stats") Retrieval.bm25IndexStats(s, b.dir) // no write
+        else {
+          if (b.mode == "compact")
+            // checkpoint (when given) scopes the fold to the ingest
+            // stream's COMMITTED batches — live-stream-safe compaction
+            Retrieval.compactBm25Index(s, b.dir,
+              Artifacts.committedFoldCeiling(s, b.checkpoint))
+          else if (b.mode == "append")
+            Retrieval.appendBm25Index(s, df, b.idCol, b.textCol, b.dir)
+          else
+            Retrieval.saveBm25Index(s, df, b.idCol, b.textCol, b.dir, b.prox, b.buckets)
+          s.read.parquet(s"${b.dir}/postings")
+            .groupBy(col("bucket")).agg(count(lit(1)).as("n_postings"))
+        }
+    },
+
+    // Ingest-area compaction: fold each area's committed batch= dirs
+    // into one compacted dir (the operator-issued half beside the
+    // ingests' compact_every). The frame becomes (area_ix, n_dirs).
+    op[IngestCompactSpec]("ingest_compact", "ingestCompact")(
+      decode = j => {
+        val s = IngestCompactSpec(
+          dirs = JsonCodec.strSeq(j.req("dirs")),
+          checkpoint = j.optStr("checkpoint"))
+        require(s.dirs.nonEmpty, s"${j.ctx}: dirs must be non-empty")
+        s
+      },
+      batchOnly = Some(runs("a filesystem rewrite",
+        "run compaction as a periodic batch job; the ingest stream's " +
+          "compact_every key is the in-stream half"))) { (ic, _, df) =>
+      val s = df.sparkSession
+      // checkpoint (when given) scopes the fold to the ingest stream's
+      // COMMITTED batches — live-stream-safe compaction
+      val ceiling = Artifacts.committedFoldCeiling(s, ic.checkpoint)
+      val rows = ic.dirs.zipWithIndex.map { case (dir, i) =>
+        Artifacts.foldBatchArea(s, dir, ceiling)
+        (i, Artifacts.areaBatchDirCount(s, dir))
+      }
+      import s.implicits._
+      rows.toDF("area_ix", "n_dirs")
+    },
+
+    // BM25 search against a saved index: the frame (the QUERY set)
+    // becomes (qid, <index id_col>, score, rn) without re-tokenizing
+    // the corpus.
+    op[Bm25SearchSpec]("bm25_search", "bm25Search")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = Bm25SearchSpec(
+          qidCol = j.str("qid_col", "qidCol"),
+          qtextCol = j.str("qtext_col", "qtextCol"),
+          indexDir = j.str("index_dir", "indexDir"),
+          k1 = j.doubleOr(1.2, "k1"),
+          b = j.doubleOr(0.75, "b"),
+          topK = j.intOr(10, "top_k", "topK"),
+          proxWeight = j.doubleOr(0.0, "prox_weight", "proxWeight"))
+        require(s.topK >= 1, s"$ctx: top_k must be >= 1, got ${s.topK}")
+        require(s.k1 >= 0 && s.b >= 0 && s.b <= 1,
+          s"$ctx: need k1 >= 0 and b in [0, 1], got k1=${s.k1} b=${s.b}")
+        require(s.proxWeight >= 0, s"$ctx: prox_weight must be >= 0, got ${s.proxWeight}")
+        s
+      },
+      reads = b => Seq(b.qidCol, b.qtextCol),
+      batchOnly = Some(runs("a per-query top-k rank window",
+        "search in batch; the index itself is the at-rest artifact"))) { (b, _, df) =>
+      Retrieval.bm25SearchIndex(df, b.qidCol, b.qtextCol, b.indexDir, b.k1, b.b,
+        b.topK, b.proxWeight)
+    },
+
+    // Funnel analysis: the frame (an event log) becomes one row per
+    // step — chained key-shaped min aggregates.
+    op[FunnelSpec]("funnel")(
+      decode = j => {
+        val ctx = j.ctx
+        val steps = j.req("steps")
+        require(steps.isArray && steps.size() > 0,
+          s"$ctx: steps must be a non-empty ARRAY of event names")
+        val s = FunnelSpec(
+          keyCol = j.str("key_col", "keyCol"),
+          tsCol = j.str("ts_col", "tsCol"),
+          eventCol = j.str("event_col", "eventCol"),
+          steps = JsonCodec.strSeq(steps),
+          window = j.optStr("window"),
+          anchor = j.strOr("first", "anchor"))
+        require(s.steps.distinct.size == s.steps.size,
+          s"$ctx: steps must be distinct, got ${s.steps.mkString(", ")}")
+        require(s.anchor == "first" || s.anchor == "every",
+          s"$ctx: anchor must be 'first' or 'every', got '${s.anchor}'")
+        s
+      },
+      reads = f => Seq(f.keyCol, f.tsCol, f.eventCol),
+      batchOnly = Some(runs("chained per-step global counts",
+        "run the funnel as a periodic batch job over the landed events"))) { (f, _, df) =>
+      Relational.funnel(df, f.keyCol, f.tsCol, f.eventCol, f.steps, f.window, f.anchor)
+    },
+
+    // Range (point-in-interval) join against an intervals def: bucketed
+    // equi-join, never a nested loop. Streaming-admissible on the point
+    // side (stream-static join; the def is a batch frame by contract).
+    op[RangeJoinSpec]("range_join", "rangeJoin")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = RangeJoinSpec(
+          intervalsRef = j.str("intervals_ref", "intervalsRef"),
+          pointCol = j.str("point_col", "pointCol"),
+          loCol = j.str("lo_col", "loCol"),
+          hiCol = j.str("hi_col", "hiCol"),
+          bucket = j.double("bucket"),
+          on = j.strs("on"),
+          payload = j.strs("payload"),
+          how = j.strOr("inner", "how"),
+          inclusiveHi = j.flag(false, "inclusive_hi", "inclusiveHi"),
+          broadcast = j.flag(false, "broadcast"),
+          maxBucketsPerInterval =
+            j.intOr(1 << 16, "max_buckets_per_interval", "maxBucketsPerInterval"))
+        require(s.bucket > 0, s"$ctx: bucket must be > 0, got ${s.bucket}")
+        require(s.how == "inner" || s.how == "left",
+          s"$ctx: how must be 'inner' or 'left', got '${s.how}'")
+        require(s.maxBucketsPerInterval >= 1,
+          s"$ctx: max_buckets_per_interval must be >= 1, got ${s.maxBucketsPerInterval}")
+        s
+      },
+      reads = r => r.pointCol +: r.on) { (r, c, df) =>
+      val iv = c.ref("range_join.intervals_ref", r.intervalsRef, "the interval table")
+      Relational.rangeJoinKeyed(df, iv, r.pointCol, r.loCol, r.hiCol, r.bucket,
+        r.on, r.payload, r.how, r.inclusiveHi, r.broadcast, r.maxBucketsPerInterval)
+    },
+
+    // Interval-overlap join against a def: both sides explode to covering
+    // cells, plain equi-join, exactly-once pair emission (later-start-cell
+    // rule). Streaming-admissible on the frame side (stream-static join).
+    op[OverlapJoinSpec]("overlap_join", "overlapJoin")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = OverlapJoinSpec(
+          otherRef = j.str("other_ref", "otherRef", "ref"),
+          loCol = j.str("lo_col", "loCol"),
+          hiCol = j.str("hi_col", "hiCol"),
+          bucket = j.double("bucket"),
+          otherLoCol = j.optStr("other_lo_col", "otherLoCol"),
+          otherHiCol = j.optStr("other_hi_col", "otherHiCol"),
+          on = j.strs("on"),
+          payload = j.strs("payload"),
+          inclusive = j.flag(false, "inclusive"),
+          broadcast = j.flag(false, "broadcast"),
+          maxBucketsPerInterval =
+            j.intOr(1 << 16, "max_buckets_per_interval", "maxBucketsPerInterval"),
+          how = j.strOr("inner", "how"))
+        require(s.bucket > 0, s"$ctx: bucket must be > 0, got ${s.bucket}")
+        require(s.maxBucketsPerInterval >= 1,
+          s"$ctx: max_buckets_per_interval must be >= 1, got ${s.maxBucketsPerInterval}")
+        require(s.how == "inner" || s.how == "left",
+          s"""$ctx: how must be "inner" or "left", got '${s.how}'""")
+        s
+      },
+      reads = o => Seq(o.loCol, o.hiCol) ++ o.on) { (o, c, df) =>
+      val other = c.ref("overlap_join.other_ref", o.otherRef, "the other interval table")
+      if (o.how == "left")
+        c.requireBatch("overlap_join how:\"left\"",
+          "the NULL-payload pad side anti-joins over the matched output",
+          "run the inner overlap over the stream and anti-screen the " +
+            "landed batch instead")
+      Relational.overlapJoin(df, other, o.loCol, o.hiCol, o.bucket,
+        o.otherLoCol.orNull, o.otherHiCol.orNull, o.on, o.payload, o.inclusive,
+        o.broadcast, o.maxBucketsPerInterval, o.how)
+    },
+
+    // Snapshot diff against an OLD-corpus def: one full-outer equi-join
+    // on the keys — a full-outer join (and the notion of a complete
+    // "previous snapshot") has no streaming plan.
+    op[DiffSpec]("diff")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = DiffSpec(
+          on = JsonCodec.strSeq(j.req("on")),
+          otherRef = j.str("other_ref", "otherRef", "ref"),
+          compare = j.strs("compare"),
+          statusCol = j.strOr("diff_status", "status_col", "statusCol"),
+          changedCol = j.strOr("changed_cols", "changed_col", "changedCol"),
+          includeUnchanged = j.flag(false, "include_unchanged", "includeUnchanged"),
+          carry = j.strOr("none", "carry"))
+        require(s.on.nonEmpty, s"$ctx: 'on' needs at least one key column")
+        require(s.carry == "none" || s.carry == "new",
+          s"""$ctx: carry must be "none" or "new", got '${s.carry}' — the """ +
+            "old side's values are reachable by diffing in the other " +
+            "direction")
+        require(s.statusCol != s.changedCol, s"$ctx: status_col and changed_col must differ")
+        s
+      },
+      batchOnly = Some(runs("a full-outer join of two complete snapshots",
+        "diff landed batches instead (the old snapshot is a def — " +
+          "batch by contract)"))) { (d, c, df) =>
+      val old = c.ref("diff.other_ref", d.otherRef, "the old snapshot")
+      Relational.snapshotDiff(df, old, d.on, d.compare, d.statusCol, d.changedCol,
+        d.includeUnchanged, carryNew = d.carry == "new")
+    },
+
+    // Apply a snapshot diff: the frame (the BASE snapshot) patches with a
+    // delta def and becomes the NEW snapshot — ship the delta, never
+    // re-copy the corpus.
+    op[ApplyDiffSpec]("apply_diff", "applyDiff")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = ApplyDiffSpec(
+          on = JsonCodec.strSeq(j.req("on")),
+          deltaRef = j.str("delta_ref", "deltaRef", "ref"),
+          statusCol = j.strOr("diff_status", "status_col", "statusCol"),
+          changedCol = j.strOr("changed_cols", "changed_col", "changedCol"))
+        require(s.on.nonEmpty, s"$ctx: 'on' needs at least one key column")
+        require(s.statusCol != s.changedCol, s"$ctx: status_col and changed_col must differ")
+        s
+      },
+      reads = a => a.on,
+      batchOnly = Some(runs("a key-shaped anti-join against a complete delta",
+        "apply deltas to the landed snapshot in batch"))) { (a, c, df) =>
+      val delta = c.ref("apply_diff.delta_ref", a.deltaRef, "the delta")
+      Relational.applyDiff(df, delta, a.on, a.statusCol, a.changedCol)
+    },
+
+    // Resample / gap-fill: per key, re-grid the event series onto a
+    // regular step grid; empty buckets fill per policy.
+    op[ResampleSpec]("resample")(
+      decode = j => {
+        val ctx = j.ctx
+        val keys = j.req("key_cols", "keyCols", "keys")
+        require(keys.isArray && keys.size() > 0,
+          s"$ctx: key_cols must be a non-empty ARRAY of key columns")
+        val s = ResampleSpec(
+          keyCols = JsonCodec.strSeq(keys),
+          tsCol = j.str("ts_col", "tsCol"),
+          step = j.str("step"),
+          aggs = JsonCodec.aggList(j.req("aggregations", "aggs")),
+          fill = j.strOr("none", "fill"),
+          maxBucketsPerKey = j.longOr(1L << 20, "max_buckets_per_key", "maxBucketsPerKey"))
+        require(s.aggs.nonEmpty, s"$ctx: aggregations must be a non-empty list")
+        require(Seq("none", "zero", "ffill").contains(s.fill),
+          s"$ctx: fill must be none/zero/ffill, got '${s.fill}'")
+        require(s.maxBucketsPerKey >= 1,
+          s"$ctx: max_buckets_per_key must be >= 1, got ${s.maxBucketsPerKey}")
+        s
+      },
+      reads = r => r.keyCols ++ Seq(r.tsCol) ++ r.aggs.filterNot(_.col == "*").map(_.col),
+      batchOnly = Some(runs("per-key global [min, max] bounds",
+        "on streams, use a windowed aggregate with watermark instead " +
+          "and gap-fill the landed batch"))) { (r, _, df) =>
+      val aggPairs = r.aggs.map { a =>
+        (Compiler.aggColumn(a): Column,
+          a.newName.getOrElse(s"${a.func}_${if (a.col == "*") "all" else a.col}"))
+      }
+      Relational.resample(df, r.keyCols, r.tsCol, r.step, aggPairs, r.fill,
+        r.maxBucketsPerKey)
+    },
+
+    // Heavy hitters: the frame becomes its top-k most frequent keys from
+    // one shuffle-free mergeable-sketch aggregate.
+    op[ApproxTopKSpec]("approx_top_k", "approxTopK")(
+      decode = j => {
+        val s = ApproxTopKSpec(
+          keyCol = j.str("key_col", "keyCol"),
+          k = j.intOr(10, "k"),
+          maxItemsTracked = j.intOr(10000, "max_items_tracked", "maxItemsTracked"))
+        require(s.k >= 1, s"${j.ctx}: k must be >= 1, got ${s.k}")
+        require(s.maxItemsTracked >= s.k,
+          s"${j.ctx}: max_items_tracked (${s.maxItemsTracked}) must be >= k (${s.k})")
+        s
+      },
+      reads = t => Seq(t.keyCol),
+      batchOnly = Some(runs("a global sketch aggregate",
+        "sketch per window on streams, or run over the landed batch"))) { (t, _, df) =>
+      Relational.approxTopK(df, t.keyCol, t.k, t.maxItemsTracked)
+    },
+
+    // Unpivot (melt): wide → long via one Expand over the scan — zero
+    // shuffles; the inverse of aggregate.pivot.
+    op[UnpivotSpec]("unpivot")(
+      decode = j => {
+        val ids = j.req("ids", "id_cols")
+        require(ids.isArray && ids.size() > 0,
+          s"${j.ctx}: ids must be a non-empty ARRAY of id columns")
+        val s = UnpivotSpec(
+          ids = JsonCodec.strSeq(ids),
+          values = j.strs("values", "value_cols"),
+          varCol = j.strOr("variable", "var_col", "varCol"),
+          valCol = j.strOr("value", "value_col", "valueCol"))
+        require(s.varCol != s.valCol, s"${j.ctx}: var_col and value_col are both '${s.varCol}'")
+        s
+      },
+      reads = u => u.ids ++ u.values) { (u, _, df) =>
+      Relational.unpivot(df, u.ids, u.values, u.varCol, u.valCol)
+    },
+
+    // Per-row upsampling: scan-stage sequence explode — zero shuffles
+    // (the repeat-k-epochs mixing half).
+    op[UpsampleSpec]("upsample")(
+      decode = j => UpsampleSpec(
+        factorCol = j.str("factor_col", "factorCol"),
+        copyCol = j.strOr("copy", "copy_col", "copyCol")),
+      reads = u => Seq(u.factorCol)) { (u, _, df) =>
+      Corpus.upsample(df, u.factorCol, u.copyCol)
+    },
+
+    // Ranking evaluation: the frame (a ranked result table) joins the
+    // qrels def and becomes per-query quality metrics at cutoff k.
+    op[RankingEvalSpec]("ranking_eval", "rankingEval")(
+      decode = j => {
+        val s = RankingEvalSpec(
+          queryCol = j.str("query_col", "queryCol"),
+          docCol = j.str("doc_col", "docCol"),
+          rankCol = j.str("rank_col", "rankCol"),
+          qrelsRef = j.str("qrels_ref", "qrelsRef"),
+          k = j.intOr(10, "k"))
+        require(s.k >= 1, s"${j.ctx}: k must be >= 1, got ${s.k}")
+        s
+      },
+      reads = r => Seq(r.queryCol, r.docCol, r.rankCol),
+      batchOnly = Some(runs("metric joins + aggregates",
+        "evaluate in batch over the materialized result table"))) { (r, c, df) =>
+      val qrels = c.ref("ranking_eval.qrels_ref", r.qrelsRef, "the judgment table")
+      Retrieval.rankingEval(df, r.queryCol, r.docCol, r.rankCol, qrels, r.k)
+    },
+
+    // Reciprocal-rank fusion: the frame (a combine union of ranked
+    // lists) becomes each query's fused top-k. One (query, doc)
+    // aggregate + one rank window over top-k-shaped input.
+    op[RrfFuseSpec]("rrf_fuse", "rrfFuse")(
+      decode = j => {
+        val s = RrfFuseSpec(
+          queryCol = j.str("query_col", "queryCol"),
+          docCol = j.str("doc_col", "docCol"),
+          rankCol = j.str("rank_col", "rankCol"),
+          topK = j.intOr(10, "top_k", "topK"),
+          rrfK = j.intOr(60, "rrf_k", "rrfK"),
+          weightCol = j.optStr("weight_col", "weightCol"))
+        require(s.topK >= 1, s"${j.ctx}: top_k must be >= 1, got ${s.topK}")
+        require(s.rrfK >= 0, s"${j.ctx}: rrf_k must be >= 0, got ${s.rrfK}")
+        s
+      },
+      reads = r => Seq(r.queryCol, r.docCol, r.rankCol) ++ r.weightCol,
+      batchOnly = Some(runs("a per-query top-k rank window",
+        "fuse in batch over the materialized ranked lists"))) { (r, _, df) =>
+      Retrieval.rrfFuse(df, r.queryCol, r.docCol, r.rankCol, r.topK, r.rrfK, r.weightCol)
+    },
+
+    // At-rest ANN index build: writes dir/centroids + dir/index
+    // (partitioned by list) and the frame becomes the (list, n_vectors)
+    // balance histogram — the tuning view for nlist/refine_rounds.
+    op[AnnIndexSpec]("ann_index", "annIndex")(
+      decode = j => {
+        val ctx = j.ctx
+        val mode = j.strOr("build", "mode")
+        require(mode == "build" || mode == "append" || mode == "stats" ||
+            mode == "compact",
+          s"""$ctx: mode must be "build", "append", "stats" or "compact", got "$mode"""")
+        // stats/compact only touch the artifact — the frame's columns never
+        // enter, so a stated id_col/vec_col is a misunderstanding; reject
+        val artifactOnly = mode == "stats" || mode == "compact"
+        if (artifactOnly)
+          Seq("id_col", "idCol", "vec_col", "vecCol").foreach { k =>
+            require(j.opt(k).isEmpty,
+              s"""$ctx: "$k" has no effect under mode "$mode" (it reads """ +
+                "only the saved artifact) — remove it")
+          }
+        val pq = j.opt("pq")
+        val s = AnnIndexSpec(
+          idCol = if (artifactOnly) "" else j.str("id_col", "idCol"),
+          vecCol = if (artifactOnly) "" else j.str("vec_col", "vecCol"),
+          dir = j.str("dir"),
+          nlist = j.intOr(16, "nlist"),
+          refineRounds = j.intOr(0, "refine_rounds", "refineRounds"),
+          mode = mode,
+          pqM = pq.map(p => JsonCodec.req(p, s"$ctx.pq", "m").asInt),
+          pqK = pq.flatMap(p => JsonCodec.opt(p, "k")).map(_.asInt).getOrElse(256),
+          pqIters = pq.flatMap(p => JsonCodec.opt(p, "iters")).map(_.asInt).getOrElse(5),
+          checkpoint = j.optStr("checkpoint"))
+        requireCompactOnlyCheckpoint(ctx, s.mode, s.checkpoint)
+        // append assigns to the SAVED centroids — a stated fit parameter
+        // would silently not refit; reject the contradiction by name. The
+        // same applies to pq: appends encode with the SAVED codebooks.
+        require(s.mode == "build" || (j.opt("nlist").isEmpty &&
+            j.opt("refine_rounds", "refineRounds").isEmpty && pq.isEmpty),
+          s"""$ctx: nlist/refine_rounds/pq have no effect under mode "${s.mode}" """ +
+            "(the saved centroids and codebooks are not refit) — remove " +
+            """them, or rebuild with mode "build"""")
+        require(s.nlist >= 1 && s.nlist <= 65536,
+          s"$ctx: nlist must be in [1, 65536], got ${s.nlist}")
+        require(s.refineRounds >= 0 && s.refineRounds <= 64,
+          s"$ctx: refine_rounds must be in [0, 64], got ${s.refineRounds}")
+        s.pqM.foreach { m =>
+          require(m >= 1 && m <= 256, s"$ctx.pq: m must be in [1, 256], got $m")
+          require(s.pqK >= 1 && s.pqK <= 256, s"$ctx.pq: k must be in [1, 256], got ${s.pqK}")
+          require(s.pqIters >= 0 && s.pqIters <= 64,
+            s"$ctx.pq: iters must be in [0, 64], got ${s.pqIters}")
+        }
+        s
+      },
+      // stats/compact modes read only the artifact — no frame columns
+      reads = a => if (a.mode == "stats" || a.mode == "compact") Nil else Seq(a.idCol, a.vecCol),
+      batchOnly = Some(runs("centroid-fit actions and an index write",
+        "build the index in batch; search streams of queries instead"))) { (a, _, df) =>
+      val s = df.sparkSession
+      if (a.mode == "stats")
+        // health view only — no write, the frame is discarded: the one-row
+        // (n_lists, n_empty_lists, n_vectors, max_list_n, mean_list_n,
+        // skew) gauge that decides rebuild-vs-append
+        Similarity.annIndexStats(s, a.dir)
+      else {
+        if (a.mode == "compact")
+          // defragment the appended artifact (one file per list); the
+          // frame is discarded and becomes the post-compact histogram
+          Similarity.compactAnnIndex(s, a.dir, Artifacts.committedFoldCeiling(s, a.checkpoint))
+        else if (a.mode == "append")
+          Similarity.appendAnnIndex(s, df, a.idCol, a.vecCol, a.dir)
+        else
+          Similarity.saveAnnIndex(s, df, a.idCol, a.vecCol, a.dir, a.nlist,
+            a.refineRounds, a.pqM.map(m => (m, a.pqK)), a.pqIters)
+        s.read.parquet(s"${a.dir}/index")
+          .groupBy(col("list")).agg(count(lit(1)).as("n_vectors"))
+      }
+    },
+
+    // Generic quantile-threshold selection: keep the ~keep_n best rows
+    // by any numeric column — one sketch pass derives the cut, the keep
+    // is a pushed-down predicate.
+    op[QuantileFilterSpec]("quantile_filter", "quantileFilter")(
+      decode = j => {
+        val s = QuantileFilterSpec(
+          col = j.str("col"),
+          keepN = j.long("keep_n", "keepN"),
+          descending = j.flag(true, "descending"),
+          relativeError = j.doubleOr(1e-4, "relative_error", "relativeError"))
+        require(s.keepN >= 1, s"${j.ctx}: keep_n must be >= 1, got ${s.keepN}")
+        require(s.relativeError >= 0 && s.relativeError < 1,
+          s"${j.ctx}: relative_error must be in [0, 1), got ${s.relativeError}")
+        s
+      },
+      reads = q => Seq(q.col),
+      batchOnly = Some(runs("a quantile-sketch pass over the frame",
+        "derive the cut in batch and apply it as a plain filter on the stream"))) {
+      (q, _, df) => Corpus.quantileFilter(df, q.col, q.keepN, q.descending, q.relativeError)
+    },
+
+    // Scan-stage semantic probe against a saved index: each row gains
+    // (score_col, flag_col) from one codegen kernel call — zero joins,
+    // zero shuffles (the semantic-decontamination gate on a live ingest).
+    op[AnnProbeSpec]("ann_probe", "annProbe")(
+      decode = j => {
+        val s = AnnProbeSpec(
+          vecCol = j.str("vec_col", "vecCol"),
+          indexDir = j.str("index_dir", "indexDir"),
+          threshold = j.double("threshold"),
+          scoreCol = j.strOr("ann_score", "score_col", "scoreCol"),
+          flagCol = j.strOr("ann_match", "flag_col", "flagCol"))
+        require(s.threshold >= -1.0 && s.threshold <= 1.0,
+          s"${j.ctx}: threshold must be in [-1, 1], got ${s.threshold}")
+        require(s.scoreCol != s.flagCol,
+          s"${j.ctx}: score_col and flag_col must differ, both are '${s.scoreCol}'")
+        s
+      },
+      reads = a => Seq(a.vecCol)) { (a, _, df) =>
+      Similarity.annProbeIndex(df, a.vecCol, a.indexDir, a.threshold, a.scoreCol, a.flagCol)
+    },
+
+    // ANN search against a saved index: the frame (the query set)
+    // becomes (id_col, match_id, score, rank).
+    op[AnnSearchSpec]("ann_search", "annSearch")(
+      decode = j => {
+        val ctx = j.ctx
+        val s = AnnSearchSpec(
+          idCol = j.str("id_col", "idCol"),
+          vecCol = j.str("vec_col", "vecCol"),
+          indexDir = j.str("index_dir", "indexDir"),
+          k = j.intOr(10, "k"),
+          nprobe = j.intOr(4, "nprobe"),
+          allowRef = j.optStr("allow_ref", "allowRef"),
+          allowIdCol = j.strOr("id", "allow_id_col", "allowIdCol"))
+        require(s.k >= 1, s"$ctx: k must be >= 1, got ${s.k}")
+        require(s.nprobe >= 1, s"$ctx: nprobe must be >= 1, got ${s.nprobe}")
+        require(s.idCol != "match_id",
+          s"$ctx: rename the query id column — 'match_id' names the index side")
+        require(s.allowRef.nonEmpty || j.opt("allow_id_col", "allowIdCol").isEmpty,
+          s"$ctx: allow_id_col has no effect without allow_ref — remove it " +
+            "or name the allow-list def")
+        s
+      },
+      reads = a => Seq(a.idCol, a.vecCol),
+      batchOnly = Some(runs("a per-query top-k rank window",
+        "search in batch; the index itself is the at-rest artifact"))) { (a, c, df) =>
+      val allowed = a.allowRef.map(r => c.ref("ann_search.allow_ref", r, "the allow-list"))
+      Similarity.annSearchIndex(df, a.idCol, a.vecCol, a.indexDir, a.k, a.nprobe,
+        allowed, a.allowIdCol)
+    },
+
+    // Tar sharding: the frame becomes (shard, tar, n_members, tar_bytes).
+    // One grouped aggregate — batch or stream (a streaming compile needs
+    // an aggregate-admitting output mode downstream).
+    op[TarPackSpec]("tar_pack", "tarPack")(
+      decode = j => TarPackSpec(
+        nameCol = j.str("name_col", "nameCol"),
+        payloadCol = j.str("payload_col", "payloadCol"),
+        shards = j.int("shards")),
+      reads = t => Seq(t.nameCol, t.payloadCol)) { (t, _, df) =>
+      Tar.tarShards(df, t.nameCol, t.payloadCol, t.shards)
+    },
+
+    // Shard-set compaction: the frame (one row per landed archive, e.g.
+    // a tar_pack_ingest output dir) becomes the re-packed shards — a
+    // maintenance pass over landed data, not a per-batch transform.
+    op[TarCompactSpec]("tar_compact", "tarCompact")(
+      decode = j => TarCompactSpec(
+        tarCol = j.strOr("tar", "tar_col", "tarCol"),
+        shards = j.int("shards"),
+        batchCol = j.optStr("batch_col", "batchCol")),
+      reads = t => t.tarCol +: t.batchCol.toSeq,
+      batchOnly = Some(runs("a whole-history member re-pack",
+        "run it as a batch maintenance pass over the landed ingest dir"))) { (t, _, df) =>
+      Tar.tarCompact(df, t.tarCol, t.shards, t.batchCol)
+    },
+
+    // Training-sequence packing: the frame becomes (shard, seq, ids,
+    // n_tokens) — per-shard EOS-separated concatenation sliced every
+    // seq_len tokens.
+    op[SequencePackSpec]("sequence_pack", "sequencePack")(
+      decode = j => {
+        val ctx = j.ctx
+        val sp = SequencePackSpec(
+          idCol = j.str("id_col", "idCol"),
+          idsCol = j.str("ids_col", "idsCol"),
+          seqLen = j.int("seq_len", "seqLen"),
+          eosId = j.intOr(0, "eos_id", "eosId"),
+          shards = j.intOr(1, "shards"),
+          dropLast = j.flag(true, "drop_last", "dropLast"),
+          mode = j.strOr("split", "mode"),
+          withBounds = j.flag(false, "with_bounds", "withBounds"),
+          padId = j.intOr(-1, "pad_id", "padId"))
+        require(sp.seqLen >= 2, s"$ctx: seq_len must be >= 2")
+        require(sp.mode == "split" || sp.mode == "whole" || sp.mode == "best_fit",
+          s"""$ctx: mode must be "split", "whole" or "best_fit", """ +
+            s"""got "${sp.mode}"""")
+        // best_fit always keeps every (short) window — an explicit
+        // drop_last: false is the only detectable reliance on the key,
+        // and silently honoring the DEFAULT true would be worse: reject
+        // the stated contradiction by name instead of no-opping it.
+        require(!(sp.mode == "best_fit" &&
+            j.opt("drop_last", "dropLast").exists(!_.asBoolean(true))),
+          s"""$ctx: drop_last has no effect under mode "best_fit" """ +
+            "(best-fit-decreasing keeps every window and pads instead) — " +
+            "remove the key, or use mode \"split\"/\"whole\" to drop tails")
+        sp
+      },
+      batchOnly = Some(runs("a per-shard running-offset window",
+        "pack in batch over landed micro-batch output instead"))) { (p, _, df) =>
+      Pack.sequencePack(df, p.idCol, p.idsCol, p.seqLen, p.eosId, p.shards,
+        p.dropLast, p.mode, p.withBounds, p.padId)
+    },
+
+    // Winnowed fingerprinting: the frame becomes the compacted index
+    // (scan-stage selection) or the shared-fingerprint pair list.
+    op[WinnowSpec]("winnow")(
+      decode = j => WinnowSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        windowTokens = j.intOr(50, "window_tokens", "windowTokens"),
+        winnowWindow = j.intOr(8, "winnow_window", "winnowWindow"),
+        output = j.optStr("output").map {
+          case o @ ("index" | "pairs") => o
+          case other => throw new IllegalArgumentException(
+            s"""${j.ctx}: output must be "index" or "pairs" — got "$other"""")
+        }.getOrElse("index"),
+        minShared = j.intOr(1, "min_shared", "minShared")),
+      reads = w => Seq(w.idCol, w.textCol)) { (w, c, df) =>
+      if (w.output == "pairs") {
+        // self-join + aggregate: not streaming-admissible
+        c.requireBatch("winnow (pairs)", "a self-join + aggregate",
+          "use output=index in batch and probe the stream with " +
+            "winnow_probe instead")
+        Dedup.winnowCandidatePairs(df, w.idCol, w.textCol, w.windowTokens,
+          w.winnowWindow, w.minShared)
+      } else Dedup.winnowIndex(df, w.idCol, w.textCol, w.windowTokens, w.winnowWindow)
+    },
+
+    // Scan-stage winnow probe: the Bloom over the persisted compacted
+    // index builds ONCE at compile (batch read) — the probed frame
+    // never shuffles.
+    op[WinnowProbeSpec]("winnow_probe", "winnowProbe")(
+      decode = j => WinnowProbeSpec(
+        textCol = j.str("text_col", "textCol"),
+        indexDir = j.str("index_dir", "indexDir"),
+        windowTokens = j.intOr(50, "window_tokens", "windowTokens"),
+        winnowWindow = j.intOr(8, "winnow_window", "winnowWindow"),
+        minShared = j.intOr(2, "min_shared", "minShared"),
+        matchedCol = j.strOr("matched_fps", "matched_col", "matchedCol"),
+        flagCol = j.strOr("near_dup", "flag_col", "flagCol"),
+        expectedKeys = j.longOr(1L << 22, "expected_keys", "expectedKeys"),
+        fpp = j.doubleOr(0.01, "fpp")),
+      reads = w => Seq(w.textCol)) { (w, c, df) =>
+      Dedup.winnowProbeBloom(df, w.textCol, c.spark.read.parquet(w.indexDir),
+        w.windowTokens, w.winnowWindow, w.minShared, w.matchedCol, w.flagCol,
+        w.expectedKeys, w.fpp)
+    },
+
+    // WebDataset sample grouping: the frame becomes (sample_key,
+    // n_files, exts, payload_bytes). One grouped aggregate.
+    op[WdsSamplesSpec]("wds_samples", "wdsSamples")(
+      decode = j => WdsSamplesSpec(
+        nameCol = j.str("name_col", "nameCol"),
+        dataCol = j.str("data_col", "dataCol")),
+      reads = w => Seq(w.nameCol, w.dataCol)) { (w, _, df) =>
+      Tar.wdsSamples(df, w.nameCol, w.dataCol)
+    },
+
+    // Artifact-loaded DSIR scoring: the log-ratio table loads ONCE at
+    // compile (bounded metadata) — scan-stage.
+    op[DsirScoreSpec]("dsir_score", "dsirScore")(
+      decode = j => DsirScoreSpec(
+        modelDir = j.str("model_dir", "modelDir"),
+        textCol = j.str("text_col", "textCol")),
+      reads = d => Seq(d.textCol)) { (d, c, df) =>
+      Corpus.dsirScore(df, d.textCol, Corpus.loadDsirModel(c.spark, d.modelDir))
+    },
+
+    // Deterministic split: adds the bucket-name column (scan-stage
+    // arithmetic, no shuffle); downstream keys filter/aggregate on it.
+    op[SplitSpec]("split")(
+      decode = j => {
+        val buckets = j.req("buckets")
+        require(buckets.isArray && buckets.size() > 0,
+          s"${j.ctx}.buckets must be a non-empty ARRAY of " +
+            """{"name": ..., "weight": ...} (order defines the boundaries)""")
+        val named = (0 until buckets.size()).map { i =>
+          val b = buckets.get(i)
+          (JsonCodec.req(b, s"${j.ctx}.buckets[$i]", "name").asText,
+            JsonCodec.req(b, s"${j.ctx}.buckets[$i]", "weight").asDouble)
+        }
+        SplitSpec(
+          idCol = j.str("id_col", "idCol"),
+          buckets = named,
+          splitCol = j.strOr("split", "split_col", "splitCol"))
+      },
+      reads = s => Seq(s.idCol)) { (s, _, df) =>
+      Corpus.hashSplit(df, s.idCol, s.buckets, s.splitCol)
+    },
+
+    // HTML extraction: the frame becomes (id, title, body_text, links).
+    op[HtmlExtractSpec]("html_extract", "htmlExtract")(
+      decode = j => HtmlExtractSpec(
+        idCol = j.str("id_col", "idCol"),
+        htmlCol = j.str("html_col", "htmlCol")),
+      reads = h => Seq(h.idCol, h.htmlCol)) { (h, _, df) =>
+      TextAnalysis.htmlExtract(df, h.idCol, h.htmlCol)
+    },
+
+    // PDF extraction: the frame becomes (id, version, n_pages, text).
+    op[PdfExtractSpec]("pdf_extract", "pdfExtract")(
+      decode = j => PdfExtractSpec(
+        idCol = j.str("id_col", "idCol"),
+        pdfCol = j.str("pdf_col", "pdfCol")),
+      reads = p => Seq(p.idCol, p.pdfCol)) { (p, _, df) =>
+      TextAnalysis.pdfExtract(df, p.idCol, p.pdfCol)
+    },
+
+    // Per-column profile: the frame becomes the stats rows. Under
+    // compileStream the ROOT node's profile becomes the per-batch drift
+    // monitor instead (stripped before the node walk), so a profile
+    // reaching a streaming walk is mid-pipeline → named error.
+    op[ProfileSpec]("profile")(
+      decode = j => {
+        val cols = j.req("columns")
+        require(cols.isArray && cols.size() > 0,
+          s"${j.ctx}.columns must be a non-empty ARRAY of column names")
+        ProfileSpec(
+          columns = (0 until cols.size()).map(i => cols.get(i).asText),
+          approx = j.flag(false, "approx"),
+          groupCols = j.strs("group_cols", "groupCols"))
+      },
+      reads = p => p.columns,
+      batchOnly = Some("under a streaming compile must sit on " +
+        "the ROOT node, where foreachBatch appends one stats row set " +
+        "per micro-batch (the ingest drift monitor); a mid-pipeline " +
+        "streaming profile would need a global aggregate")) { (p, _, df) =>
+      Relational.profile(df, p.columns, p.approx, p.groupCols)
+    },
+
+    // Temperature resampling: the frame becomes the sampled subset
+    // (schema unchanged). The per-group rates need a count action.
+    op[TemperatureSampleSpec]("temperature_sample", "temperatureSample")(
+      decode = j => TemperatureSampleSpec(
+        groupCol = j.str("group_col", "groupCol"),
+        idCol = j.str("id_col", "idCol"),
+        targetFraction = j.double("target_fraction", "targetFraction"),
+        alpha = j.doubleOr(0.5, "alpha")),
+      reads = t => Seq(t.groupCol, t.idCol),
+      batchOnly = Some(runs())) { (t, _, df) =>
+      Corpus.temperatureSample(df, t.groupCol, t.idCol, t.targetFraction, t.alpha)
+    },
+
+    // Token-budget mixture sampling: the frame becomes the budget-prefix
+    // subset (schema unchanged). The per-(group, bucket) sums need an
+    // action.
+    op[TokenBudgetSampleSpec]("token_budget_sample", "tokenBudgetSample")(
+      decode = j => {
+        val ctx = j.ctx
+        val budgets = j.opt("budgets")
+        val weights = j.opt("weights")
+        require(budgets.isDefined != weights.isDefined,
+          s"$ctx: exactly one of budgets (group -> tokens) or weights " +
+            "(+ total_budget) must be given")
+        budgets.foreach(b => require(b.isObject && b.size() > 0,
+          s"$ctx: budgets must be a non-empty OBJECT of group -> token count"))
+        weights.foreach(w => require(w.isObject && w.size() > 0,
+          s"$ctx: weights must be a non-empty OBJECT of group -> weight"))
+        val spec = TokenBudgetSampleSpec(
+          groupCol = j.str("group_col", "groupCol"),
+          idCol = j.str("id_col", "idCol"),
+          tokensCol = j.str("tokens_col", "tokensCol"),
+          budgets = budgets.map(b =>
+            JsonCodec.fields(b).map { case (k, v) => (k, v.asLong) }).getOrElse(Seq.empty),
+          weights = weights.map(w =>
+            JsonCodec.fields(w).map { case (k, v) => (k, v.asDouble) }).getOrElse(Seq.empty),
+          totalBudget = j.longOr(0L, "total_budget", "totalBudget"),
+          overshoot = j.flag(true, "overshoot"),
+          orderCol = j.optStr("order_col", "orderCol"),
+          descending = j.flag(true, "descending"))
+        if (spec.weights.nonEmpty) require(spec.totalBudget >= 1,
+          s"$ctx: weights need a total_budget >= 1 (tokens to split across " +
+            "the mixture)")
+        spec
+      },
+      reads = t => Seq(t.groupCol, t.idCol, t.tokensCol) ++ t.orderCol,
+      batchOnly = Some(runs("a bucket-sum action per group",
+        "land the stream and budget-sample in batch instead"))) { (t, _, df) =>
+      val budgets =
+        if (t.budgets.nonEmpty) t.budgets
+        else Corpus.budgetsFromWeights(t.weights, t.totalBudget)
+      Corpus.tokenBudgetSample(df, t.groupCol, t.idCol, t.tokensCol, budgets,
+        t.overshoot, t.orderCol, t.descending)
+    },
+
+    // Global shuffle: the frame gains (shard, shuffle_pos); the per-shard
+    // rank window has no streaming semantics (a stream's training order
+    // is its arrival order).
+    op[GlobalShuffleSpec]("global_shuffle", "globalShuffle")(
+      decode = j => GlobalShuffleSpec(
+        idCol = j.str("id_col", "idCol"),
+        shards = j.int("shards"),
+        seed = j.longOr(0L, "seed")),
+      reads = g => Seq(g.idCol),
+      batchOnly = Some("ranks the whole corpus per shard — batch-only; a " +
+        "stream has no global permutation")) { (g, _, df) =>
+      Corpus.globalShuffle(df, g.idCol, g.shards, g.seed)
+    },
+
+    // Boilerplate line removal: the frame becomes (id, clean_text,
+    // kept_lines, dropped_lines). Plan-only composition (two bounded
+    // aggregates + a broadcast hot-set join).
+    op[BoilerplateSpec]("boilerplate")(
+      decode = j => BoilerplateSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        maxDocs = j.long("max_docs", "maxDocs"),
+        sep = j.strOr("\n", "sep"),
+        byHash = j.flag(true, "by_hash", "byHash")),
+      reads = b => Seq(b.idCol, b.textCol)) { (b, _, df) =>
+      Corpus.removeBoilerplateLines(df, b.idCol, b.textCol, b.maxDocs, b.sep, b.byHash)
+    },
+
+    // Multimodal featurize: the frame becomes (media_id, format, width,
+    // height, n_bytes, features). Decoders are NAMED (a JSON config can't
+    // carry a closure) — the Scala API takes arbitrary functions.
+    op[FeaturizeSpec]("featurize")(
+      decode = j => FeaturizeSpec(
+        idCol = j.str("id_col", "idCol"),
+        payloadCol = j.str("payload_col", "payloadCol"),
+        decoder = j.strOr("media", "decoder")),
+      reads = f => Seq(f.idCol, f.payloadCol)) { (f, c, df) =>
+      val decoder: Array[Byte] => Array[Float] = f.decoder match {
+        case "media" => Codecs.mediaFeatures
+        case "stub"  => Multimodal.decodeStub
+        case other => throw new IllegalArgumentException(
+          s"node ${c.nodeId}: unknown featurize decoder '$other' (one of: media, stub)")
+      }
+      // one sweep: header parse + decode from the same bytes — no
+      // self-join (which would execute the payload subtree twice)
+      Multimodal.parseAndFeaturize(df, f.idCol, f.payloadCol, decoder)
+        .select(col("media_id"), col("meta.format").as("format"),
+          col("meta.width").as("width"), col("meta.height").as("height"),
+          col("meta.n_bytes").as("n_bytes"), col("features"))
+    },
+
+    // ---- streaming root sinks (continuous ingestion; each foreachBatch
+    // IS the sink, replacing the root save) ----
+
+    sink[NearDupIngestSpec]("near_dup_ingest", "nearDupIngest",
+        "use the dedup/near-dup pipeline operators")(j =>
+      NearDupIngestSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        corpusDir = j.str("corpus_dir", "corpusDir"),
+        indexDir = j.str("index_dir", "indexDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        shingleSize = j.intOr(3, "shingle_size", "shingleSize"),
+        numHashes = j.intOr(64, "num_hashes", "numHashes"),
+        bands = j.intOr(16, "bands"),
+        threshold = j.doubleOr(0.5, "threshold"),
+        compactEvery = ingestCompactEvery(j))) { (i, out) =>
+      graft.streaming.Streaming.nearDupIngest(out, i.idCol, i.textCol, i.corpusDir,
+        i.indexDir, i.checkpointDir, i.shingleSize, i.numHashes, i.bands,
+        i.threshold, i.compactEvery)
+    },
+
+    sink[PassageIngestSpec]("passage_ingest", "passageIngest",
+        "use passage_dedup / stripPassagesAgainstCorpus")(j =>
+      PassageIngestSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        corpusDir = j.str("corpus_dir", "corpusDir"),
+        indexDir = j.str("index_dir", "indexDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        windowTokens = j.intOr(50, "window_tokens", "windowTokens"),
+        compactEvery = ingestCompactEvery(j))) { (i, out) =>
+      graft.streaming.Streaming.passageIngest(out, i.idCol, i.textCol, i.corpusDir,
+        i.indexDir, i.checkpointDir, i.windowTokens, i.compactEvery)
+    },
+
+    sink[TarPackIngestSpec]("tar_pack_ingest", "tarPackIngest", "use tar_pack")(j =>
+      TarPackIngestSpec(
+        nameCol = j.str("name_col", "nameCol"),
+        payloadCol = j.str("payload_col", "payloadCol"),
+        shards = j.int("shards"),
+        outDir = j.str("out_dir", "outDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        trigger = j.optStr("trigger"))) { (t, out) =>
+      graft.streaming.Streaming.shardPackStream(out, t.nameCol, t.payloadCol,
+        t.shards, t.outDir, t.checkpointDir, t.trigger)
+    },
+
+    sink[ExactIngestSpec]("exact_ingest", "exactIngest",
+        "use derive + dedup, or seen_filter against the persisted index")(j => {
+      val s = ExactIngestSpec(
+        idCol = j.str("id_col", "idCol"),
+        keyCols = JsonCodec.strSeq(j.req("key_cols", "keyCols")),
+        corpusDir = j.str("corpus_dir", "corpusDir"),
+        indexDir = j.str("index_dir", "indexDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        compactEvery = ingestCompactEvery(j))
+      require(s.keyCols.nonEmpty, s"${j.ctx}: key_cols must be non-empty")
+      s
+    }) { (e, out) =>
+      graft.streaming.Streaming.exactIngest(out, e.idCol, e.keyCols, e.corpusDir,
+        e.indexDir, e.checkpointDir, e.compactEvery)
+    },
+
+    sink[SketchIngestSpec]("sketch_ingest", "sketchIngest",
+        "aggregate approx_top_k_accumulate / hll_sketch_agg and save — " +
+          "the q237/q238 pattern")(j => {
+      val s = SketchIngestSpec(
+        keyCol = j.str("key_col", "keyCol"),
+        outDir = j.str("out_dir", "outDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        maxItemsTracked = j.intOr(10000, "max_items_tracked", "maxItemsTracked"),
+        lgK = j.intOr(12, "lg_k", "lgK"),
+        groupCols = j.strs("group_cols", "groupCols"))
+      require(s.maxItemsTracked >= 1,
+        s"${j.ctx}: max_items_tracked must be >= 1, got ${s.maxItemsTracked}")
+      require(s.lgK >= 4 && s.lgK <= 21, s"${j.ctx}: lg_k must be in [4, 21], got ${s.lgK}")
+      require(!s.groupCols.contains(s.keyCol),
+        s"${j.ctx}: key_col '${s.keyCol}' cannot also be a group column")
+      s
+    }) { (s, out) =>
+      graft.streaming.Streaming.sketchIngest(out, s.keyCol, s.outDir,
+        s.checkpointDir, s.maxItemsTracked, s.lgK, s.groupCols)
+    },
+
+    sink[Bm25IngestSpec]("bm25_ingest", "bm25Ingest",
+        "use bm25_index mode: \"append\"")(j =>
+      Bm25IngestSpec(
+        idCol = j.str("id_col", "idCol"),
+        textCol = j.str("text_col", "textCol"),
+        indexDir = j.str("index_dir", "indexDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        compactEvery = ingestCompactEvery(j))) { (b, out) =>
+      graft.streaming.Streaming.bm25Ingest(out, b.idCol, b.textCol, b.indexDir,
+        b.checkpointDir, b.compactEvery)
+    },
+
+    sink[AnnIngestSpec]("ann_ingest", "annIngest",
+        "use ann_index mode: \"append\"")(j =>
+      AnnIngestSpec(
+        idCol = j.str("id_col", "idCol"),
+        vecCol = j.str("vec_col", "vecCol"),
+        indexDir = j.str("index_dir", "indexDir"),
+        checkpointDir = j.str("checkpoint_dir", "checkpointDir"),
+        compactEvery = ingestCompactEvery(j))) { (a, out) =>
+      graft.streaming.Streaming.annIngest(out, a.idCol, a.vecCol, a.indexDir,
+        a.checkpointDir, a.compactEvery)
+    }
+  )
+
+  private val byClass: Map[Class[_], Op] = all.map(o => o.cls -> o).toMap
+  private val index: Map[Class[_], Int] = all.map(_.cls).zipWithIndex.toMap
+
+  def of(s: OpSpec): Op = byClass(s.getClass)
+
+  def inOrder(ops: Seq[OpSpec]): Seq[OpSpec] = ops.sortBy(s => index(s.getClass))
+
+  /** The frame columns a node's operators read (the friendly tier). */
+  def reads(node: NodeSpec): Seq[String] =
+    inOrder(node.ops).flatMap(s => of(s).reads(s))
+
+  /** The node's root sinks, in registry order. */
+  def rootSinks(node: NodeSpec): Seq[OpSpec] =
+    inOrder(node.ops).filter(s => of(s).mode.isInstanceOf[RootSink])
+
+  /** "a, b, …, and z" over every root-sink key. */
+  def rootSinkKeys: String = {
+    val keys = all.collect { case o if o.mode.isInstanceOf[RootSink] => o.key }
+    keys.init.mkString(", ") + ", and " + keys.last
+  }
+
+  /** compileStream starts the root sink itself and strips it before the
+    * node walk — a sink reaching a node compile is a batch compile or a
+    * non-root stream node: reject it by name. */
+  def rejectRootSinks(node: NodeSpec): Unit = inOrder(node.ops).map(of).foreach { o =>
+    o.mode match {
+      case RootSink(shape, _) => throw rootSinkError(o.key, shape, node.id)
+      case _ =>
+    }
+  }
+
+  private def rootSinkError(key: String, batchShape: String, nodeId: String) =
+    new IllegalArgumentException(
+      s"node $nodeId: $key is a STREAMING ROOT sink — " +
+        "compile with compileStreamJson and declare it on the root node " +
+        s"(for the batch shape, $batchShape)")
+
+  /** Applies the node's transforms to `df` in registry order. */
+  def transform(node: NodeSpec, c: Ctx, df: DataFrame): DataFrame =
+    inOrder(node.ops).foldLeft(df) { (in, s) =>
+      val o = of(s)
+      o.mode match {
+        case Transform(batchOnly, step) =>
+          batchOnly.foreach(c.batchOnly(o.key, _))
+          step(s, c, in)
+        case RootSink(shape, _) => throw rootSinkError(o.key, shape, c.nodeId)
+      }
+    }
+
+  /** Starts root sink `s` over the streaming frame `out`. */
+  def start(s: OpSpec, out: DataFrame): StreamingQuery = of(s).mode match {
+    case RootSink(_, st) => st(s, out)
+    case _ => throw new IllegalArgumentException(s"${of(s).key} is not a root sink")
+  }
+}

@@ -1268,7 +1268,7 @@ object CorpusQueries extends QueryPack {
     graft.compile.Compiler.compileJson(s, s"""
       {"source": {"table": "documents"},
        "derive": {"mk": "concat(' zzmarker', lang)",
-                  "mtext": "concat(text, mk, mk, mk)"},
+                  "mtext": "concat(text, mk, mk, mk, mk, mk)"},
        "keep_columns": ["doc_id", "mtext"],
        "predict_model": {"text_col": "mtext", "model_dir": "$mdir/model"},
        "drop": ["mtext"],

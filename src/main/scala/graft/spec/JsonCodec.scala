@@ -77,47 +77,23 @@ object JsonCodec {
 
   // ---- helpers -----------------------------------------------------------
 
-  private def fields(n: JsonNode): Seq[(String, JsonNode)] =
+  private[graft] def fields(n: JsonNode): Seq[(String, JsonNode)] =
     n.fields().asScala.map(e => (e.getKey, e.getValue)).toSeq
 
   private def elems(n: JsonNode): Seq[JsonNode] = n.elements().asScala.toSeq
 
-  /** `checkpoint` scopes a delta fold to the ingest stream's COMMITTED
-    * batches — it only means something under mode "compact"; shared by
-    * the bm25_index and ann_index decoders so the wording cannot
-    * drift. */
-  private def requireCompactOnlyCheckpoint(
-      ctx: String, mode: String, checkpoint: Option[String]): Unit =
-    require(checkpoint.isEmpty || mode == "compact",
-      s"""$ctx: "checkpoint" is a compact-only key (it scopes the """ +
-        "delta fold to the ingest stream's committed batches) — " +
-        s"""remove it, or use mode "compact"""")
-
-  /** `compact_every: N` on an ingest sink — fold the ingest's grown
-    * areas every N batches inside foreachBatch; shared by the three
-    * area-layout ingest decoders wired at the config surface
-    * (near_dup/passage/exact — semantic_ingest exposes compactEvery at
-    * the Streaming API only) and validated once so the wording cannot
-    * drift. */
-  private def ingestCompactEvery(d: JsonNode, ctx: String): Option[Int] = {
-    val ce = opt(d, "compact_every", "compactEvery").map(_.asInt)
-    ce.foreach(n => require(n >= 1,
-      s"$ctx: compact_every must be >= 1, got $n"))
-    ce
-  }
-
-  private def strSeq(n: JsonNode): Seq[String] =
+  private[graft] def strSeq(n: JsonNode): Seq[String] =
     if (n == null) Nil
     else if (n.isTextual) Seq(n.asText)
     else elems(n).map(_.asText)
 
-  private def opt(n: JsonNode, keys: String*): Option[JsonNode] =
+  private[graft] def opt(n: JsonNode, keys: String*): Option[JsonNode] =
     keys.collectFirst { case k if n.has(k) && !n.get(k).isNull => n.get(k) }
 
   /** Required sub-key with a parse-time diagnostic naming the site — a
     * bare `.get` would surface a malformed config as a
     * NoSuchElementException with no hint of where (round-2 advice). */
-  private def req(n: JsonNode, ctx: String, keys: String*): JsonNode =
+  private[graft] def req(n: JsonNode, ctx: String, keys: String*): JsonNode =
     opt(n, keys: _*).getOrElse(throw new IllegalArgumentException(
       s"$ctx requires '${keys.head}' (got: ${n.toString.take(200)})"))
 
@@ -285,876 +261,9 @@ object JsonCodec {
       }
     }
 
-    // Best-copy retention for cluster-output tiers — validated at decode
-    // time: the key only makes sense over clusters, and a silent no-op
-    // on pairs output is the config-language failure mode this codec
-    // exists to prevent.
-    def retentionOf(d: JsonNode, key: String, output: String): Option[RetentionSpec] =
-      opt(d, "retention").map { r =>
-        require(output == "clusters",
-          s"""node $id: $key.retention needs output: "clusters" — """ +
-            s"""best-copy retention has no meaning over "$output" output""")
-        RetentionSpec(
-          orderCol = req(r, s"node $id: $key.retention", "order_col", "orderCol").asText,
-          descending = opt(r, "descending").forall(_.asBoolean(true)))
-      }
-
-    val nd = optN("near_dup", "nearDup").map { d =>
-      val out = opt(d, "output").map(_.asText).map {
-        case s @ ("pairs" | "clusters") => s
-        case other => throw new IllegalArgumentException(
-          s"""node $id: near_dup output must be "pairs" or "clusters" — got "$other"""")
-      }.getOrElse("pairs")
-      NearDupSpec(
-        idCol = req(d, s"node $id: near_dup", "id_col", "idCol").asText,
-        vecCol = req(d, s"node $id: near_dup", "vec_col", "vecCol").asText,
-        threshold = req(d, s"node $id: near_dup", "threshold").asDouble,
-        dim = req(d, s"node $id: near_dup", "dim").asInt,
-        numBits = opt(d, "num_bits", "numBits").map(_.asInt).getOrElse(64),
-        bands = opt(d, "bands").map(_.asInt).getOrElse(8),
-        output = out,
-        retention = retentionOf(d, "near_dup", out))
-    }
-
-    val smd = optN("semantic_dedup", "semanticDedup").map { d =>
-      SemanticDedupSpec(
-        idCol = req(d, s"node $id: semantic_dedup", "id_col", "idCol").asText,
-        vecCol = req(d, s"node $id: semantic_dedup", "vec_col", "vecCol").asText,
-        threshold = req(d, s"node $id: semantic_dedup", "threshold").asDouble,
-        dim = req(d, s"node $id: semantic_dedup", "dim").asInt,
-        nlist = opt(d, "nlist").map(_.asInt).getOrElse(16),
-        refineRounds = opt(d, "refine_rounds", "refineRounds").map(_.asInt).getOrElse(0),
-        exact = opt(d, "exact").exists(_.asBoolean),
-        // HIGH-threshold production regime (τ ≥ 0.9): wide bands prune;
-        // the low-τ near_dup default (2-bit keys) would go quadratic here
-        numBits = opt(d, "num_bits", "numBits").map(_.asInt).getOrElse(64),
-        bands = opt(d, "bands").map(_.asInt).getOrElse(8),
-        output = opt(d, "output").map(_.asText).map {
-          case s @ ("keep" | "labels" | "pairs") => s
-          case other => throw new IllegalArgumentException(
-            s"""node $id: semantic_dedup output must be "keep", "labels" or "pairs" — got "$other"""")
-        }.getOrElse("keep"))
-    }
-
-    val ed = optN("edit_dedup", "editDedup").map { d =>
-      EditDedupSpec(
-        idCol = req(d, s"node $id: edit_dedup", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: edit_dedup", "text_col", "textCol").asText,
-        blockExpr = req(d, s"node $id: edit_dedup", "block_expr", "blockExpr").asText,
-        threshold = opt(d, "threshold").map(_.asDouble).getOrElse(0.8),
-        maxDistance = opt(d, "max_distance", "maxDistance").map(_.asInt),
-        // default-on skew guard; an int pins a user cap, "off" opts out
-        bucketCap = opt(d, "max_bucket_size", "maxBucketSize").map { v =>
-          if (v.isNumber) graft.ops.BucketCap.Max(v.asInt)
-          else v.asText match {
-            case "auto" => graft.ops.BucketCap.Auto
-            case "off"  => graft.ops.BucketCap.Off
-            case other => throw new IllegalArgumentException(
-              s"node $id: edit_dedup.max_bucket_size must be an int, " +
-                s""""auto" or "off" — got "$other"""")
-          }
-        }.getOrElse(graft.ops.BucketCap.Auto))
-    }
-
-    // Perceptual dedup output shape — validated HERE at decode time so a
-    // typo'd shape is a spec error, not a runtime surprise mid-pipeline.
-    def dedupOutput(d: JsonNode, key: String): String =
-      opt(d, "output").map(_.asText).map {
-        case s @ ("pairs" | "clusters") => s
-        case other => throw new IllegalArgumentException(
-          s"""node $id: $key output must be "pairs" or "clusters" — got "$other"""")
-      }.getOrElse("pairs")
-
-    val imd = optN("image_dedup", "imageDedup").map { d =>
-      ImageDedupSpec(
-        idCol = req(d, s"node $id: image_dedup", "id_col", "idCol").asText,
-        payloadCol = req(d, s"node $id: image_dedup", "payload_col", "payloadCol").asText,
-        maxDist = opt(d, "max_dist", "maxDist").map(_.asInt).getOrElse(6),
-        output = dedupOutput(d, "image_dedup"),
-        retention = retentionOf(d, "image_dedup", dedupOutput(d, "image_dedup")))
-    }
-
-    val shd = optN("simhash_dedup", "simhashDedup").map { d =>
-      SimhashDedupSpec(
-        idCol = req(d, s"node $id: simhash_dedup", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: simhash_dedup", "text_col", "textCol").asText,
-        maxDist = opt(d, "max_dist", "maxDist").map(_.asInt).getOrElse(3),
-        output = dedupOutput(d, "simhash_dedup"),
-        retention = retentionOf(d, "simhash_dedup", dedupOutput(d, "simhash_dedup")))
-    }
-
-    val aud = optN("audio_dedup", "audioDedup").map { d =>
-      AudioDedupSpec(
-        idCol = req(d, s"node $id: audio_dedup", "id_col", "idCol").asText,
-        payloadCol = req(d, s"node $id: audio_dedup", "payload_col", "payloadCol").asText,
-        maxDist = opt(d, "max_dist", "maxDist").map(_.asInt).getOrElse(6),
-        output = dedupOutput(d, "audio_dedup"),
-        retention = retentionOf(d, "audio_dedup", dedupOutput(d, "audio_dedup")))
-    }
-
-    val pd = optN("passage_dedup", "passageDedup").map { d =>
-      PassageDedupSpec(
-        idCol = req(d, s"node $id: passage_dedup", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: passage_dedup", "text_col", "textCol").asText,
-        windowTokens = opt(d, "window_tokens", "windowTokens").map(_.asInt).getOrElse(50),
-        output = opt(d, "output").map(_.asText).map {
-          case s @ ("spans" | "strip") => s
-          case other => throw new IllegalArgumentException(
-            s"""node $id: passage_dedup output must be "spans" or "strip" — got "$other"""")
-        }.getOrElse("spans"))
-    }
-
-    val lm = optN("lm_perplexity", "lmPerplexity").map { d =>
-      LmPerplexitySpec(
-        idCol = req(d, s"node $id: lm_perplexity", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: lm_perplexity", "text_col", "textCol").asText,
-        k = opt(d, "k").map(_.asDouble).getOrElse(0.5),
-        keepUnscored = opt(d, "keep_unscored", "keepUnscored")
-          .exists(_.asBoolean(false)),
-        smoothing = opt(d, "smoothing").map(_.asText).map {
-          case s @ ("addk" | "kn") => s
-          case other => throw new IllegalArgumentException(
-            s"""node $id: lm_perplexity smoothing must be "addk" or "kn" — got "$other"""")
-        }.getOrElse("addk"),
-        discount = opt(d, "discount").map(_.asDouble).getOrElse(0.75))
-    }
-
-    val qc = optN("quality_classifier", "qualityClassifier").map { d =>
-      QualityClassifierSpec(
-        idCol = req(d, s"node $id: quality_classifier", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: quality_classifier", "text_col", "textCol").asText,
-        labelCol = req(d, s"node $id: quality_classifier", "label_col", "labelCol").asText,
-        dim = opt(d, "dim").map(_.asInt).getOrElse(1024),
-        epochs = opt(d, "epochs").map(_.asInt).getOrElse(8),
-        lr = opt(d, "lr").map(_.asDouble).getOrElse(0.8),
-        threshold = opt(d, "threshold").map(_.asDouble).getOrElse(0.5))
-    }
-
-    val mcc = optN("multiclass_classifier", "multiclassClassifier").map { d =>
-      MulticlassClassifierSpec(
-        idCol = req(d, s"node $id: multiclass_classifier", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: multiclass_classifier", "text_col", "textCol").asText,
-        labelCol = req(d, s"node $id: multiclass_classifier", "label_col", "labelCol").asText,
-        dim = opt(d, "dim").map(_.asInt).getOrElse(1024),
-        epochs = opt(d, "epochs").map(_.asInt).getOrElse(8),
-        lr = opt(d, "lr").map(_.asDouble).getOrElse(0.8),
-        predCol = opt(d, "pred_col", "predCol").map(_.asText).getOrElse("pred_label"),
-        keepScores = opt(d, "keep_scores", "keepScores").exists(_.asBoolean(false)))
-    }
-
-    val pm = optN("predict_model", "predictModel").map { d =>
-      PredictModelSpec(
-        textCol = req(d, s"node $id: predict_model", "text_col", "textCol").asText,
-        modelDir = req(d, s"node $id: predict_model", "model_dir", "modelDir").asText,
-        predCol = opt(d, "pred_col", "predCol").map(_.asText).getOrElse("pred_label"),
-        keepScores = opt(d, "keep_scores", "keepScores").exists(_.asBoolean(false)))
-    }
-
-    val sm = optN("score_model", "scoreModel").map { d =>
-      ScoreModelSpec(
-        textCol = req(d, s"node $id: score_model", "text_col", "textCol").asText,
-        modelDir = req(d, s"node $id: score_model", "model_dir", "modelDir").asText,
-        scoreCol = opt(d, "score_col", "scoreCol").map(_.asText).getOrElse("score"),
-        predCol = opt(d, "pred_col", "predCol").map(_.asText).getOrElse("pred"),
-        threshold = opt(d, "threshold").map(_.asDouble).getOrElse(0.5))
-    }
-
-    val ba = optN("bpe_apply", "bpeApply").map { d =>
-      val ctx = s"node $id: bpe_apply"
-      val s = BpeApplySpec(
-        textCol = opt(d, "text_col", "textCol").map(_.asText),
-        mergesDir = req(d, ctx, "merges_dir", "mergesDir").asText,
-        withIds = opt(d, "with_ids", "withIds").exists(_.asBoolean(false)),
-        decodeCol = opt(d, "decode_col", "decodeCol").map(_.asText))
-      require(s.textCol.nonEmpty || s.decodeCol.nonEmpty,
-        s"$ctx: need text_col (encode: bpe_tokens/bpe_ids) and/or " +
-          "decode_col (an ids column to decode into bpe_decoded)")
-      require(!(s.withIds && s.textCol.isEmpty),
-        s"$ctx: with_ids encodes text_col — declare text_col, or drop with_ids")
-      s
-    }
-
-    val chk = optN("chunk").map { d =>
-      val ctx = s"node $id: chunk"
-      val cs = ChunkSpec(
-        idCol = req(d, ctx, "id_col", "idCol").asText,
-        size = req(d, ctx, "size").asInt,
-        overlap = opt(d, "overlap").map(_.asInt).getOrElse(0),
-        textCol = opt(d, "text_col", "textCol").map(_.asText),
-        idsCol = opt(d, "ids_col", "idsCol").map(_.asText),
-        sep = opt(d, "sep").map(_.asText))
-      require(cs.size >= 1, s"$ctx: size must be >= 1, got ${cs.size}")
-      require(cs.overlap >= 0 && cs.overlap < cs.size,
-        s"$ctx: need 0 <= overlap < size, got overlap=${cs.overlap} size=${cs.size}")
-      require(cs.textCol.isDefined != cs.idsCol.isDefined,
-        s"$ctx: exactly one of text_col (whitespace-token tier) or " +
-          "ids_col (token-id tier) must be set")
-      cs.sep.foreach { s =>
-        require(s.nonEmpty, s"$ctx: sep must be non-empty")
-        require(cs.textCol.isDefined,
-          s"$ctx: sep (structure-aware segment chunking) needs text_col " +
-            "— token-id arrays carry no separators")
-        require(cs.overlap == 0,
-          s"$ctx: sep excludes overlap — segments pack whole, " +
-            "they never overlap")
-      }
-      cs
-    }
-
-    val ndp = optN("near_dup_probe", "nearDupProbe").map { d =>
-      NearDupProbeSpec(
-        textCol = req(d, s"node $id: near_dup_probe", "text_col", "textCol").asText,
-        indexDir = req(d, s"node $id: near_dup_probe", "index_dir", "indexDir").asText,
-        shingleSize = opt(d, "shingle_size", "shingleSize").map(_.asInt).getOrElse(3),
-        numHashes = opt(d, "num_hashes", "numHashes").map(_.asInt).getOrElse(64),
-        bands = opt(d, "bands").map(_.asInt).getOrElse(16),
-        flagCol = opt(d, "flag_col", "flagCol").map(_.asText).getOrElse("near_dup"),
-        expectedKeys = opt(d, "expected_keys", "expectedKeys").map(_.asLong).getOrElse(1L << 22),
-        fpp = opt(d, "fpp").map(_.asDouble).getOrElse(0.01))
-    }
-
-    val seenProbeSpec = optN("seen_probe", "seenProbe").map { d =>
-      val ctx = s"node $id: seen_probe"
-      val s = SeenProbeSpec(
-        keyCol = req(d, ctx, "key_col", "keyCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        flagCol = opt(d, "flag_col", "flagCol").map(_.asText).getOrElse("seen"),
-        expectedKeys = opt(d, "expected_keys", "expectedKeys").map(_.asLong).getOrElse(1L << 22),
-        fpp = opt(d, "fpp").map(_.asDouble).getOrElse(0.01))
-      require(s.expectedKeys > 0, s"$ctx: expected_keys must be > 0")
-      require(s.fpp > 0 && s.fpp < 1, s"$ctx: fpp must be in (0, 1), got ${s.fpp}")
-      s
-    }
-
-    val seenFilterSpec = optN("seen_filter", "seenFilter").map { d =>
-      val ctx = s"node $id: seen_filter"
-      val s = SeenFilterSpec(
-        keyCol = req(d, ctx, "key_col", "keyCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        mode = opt(d, "mode").map(_.asText).getOrElse("drop"),
-        flagCol = opt(d, "flag_col", "flagCol").map(_.asText).getOrElse("seen"))
-      require(s.mode == "drop" || s.mode == "flag",
-        s"""$ctx: mode must be "drop" or "flag", got "${s.mode}"""")
-      s
-    }
-
-    val bpeSpec = optN("bpe").map { d =>
-      BpeSpec(
-        textCol = req(d, s"node $id: bpe", "text_col", "textCol").asText,
-        numMerges = opt(d, "num_merges", "numMerges").map(_.asInt).getOrElse(16),
-        output = opt(d, "output").map(_.asText).map {
-          case o @ ("merges" | "tokens") => o
-          case other => throw new IllegalArgumentException(
-            s"""node $id: bpe output must be "merges" or "tokens" — got "$other"""")
-        }.getOrElse("merges"))
-    }
-
-    val cms = optN("cms_probe", "cmsProbe").map { d =>
-      val probesNode = req(d, s"node $id: cms_probe", "probes")
-      require(probesNode.isArray && probesNode.size() > 0,
-        s"node $id: cms_probe.probes must be a non-empty ARRAY of keys")
-      CmsProbeSpec(
-        keyCol = req(d, s"node $id: cms_probe", "key_col", "keyCol").asText,
-        probes = (0 until probesNode.size()).map(i => probesNode.get(i).asText),
-        eps = opt(d, "eps").map(_.asDouble).getOrElse(1e-4),
-        confidence = opt(d, "confidence").map(_.asDouble).getOrElse(0.99),
-        seed = opt(d, "seed").map(_.asInt).getOrElse(42))
-    }
-
-    val dsirSpec = optN("dsir").map { d =>
-      val ctx = s"node $id: dsir"
-      val mode = opt(d, "mode").map(_.asText).map {
-        case m @ ("weights" | "select" | "select_threshold") => m
-        case other => throw new IllegalArgumentException(
-          s"""$ctx: mode must be "weights", "select", or """ +
-            s""""select_threshold" — got "$other"""")
-      }.getOrElse("weights")
-      val spec = DsirSpec(
-        targetRef = req(d, ctx, "target_ref", "targetRef").asText,
-        textCol = req(d, ctx, "text_col", "textCol").asText,
-        idCol = opt(d, "id_col", "idCol").map(_.asText).getOrElse(""),
-        buckets = opt(d, "buckets").map(_.asInt).getOrElse(8192),
-        mode = mode,
-        n = opt(d, "n").map(_.asInt).getOrElse(0),
-        seed = opt(d, "seed").map(_.asLong).getOrElse(0L),
-        gumbel = opt(d, "gumbel").forall(_.asBoolean(true)),
-        saveModel = opt(d, "save_model", "saveModel").map(_.asText).getOrElse(""),
-        threshold = opt(d, "threshold").map(_.asDouble),
-        relativeError = opt(d, "relative_error", "relativeError")
-          .map(_.asDouble).getOrElse(1e-4))
-      if (spec.mode == "select") {
-        require(spec.n >= 1, s"$ctx: select mode needs n >= 1")
-        require(spec.idCol.nonEmpty, s"$ctx: select mode needs id_col")
-      }
-      if (spec.mode == "select_threshold") {
-        require(spec.threshold.nonEmpty || spec.n >= 1,
-          s"$ctx: select_threshold mode needs an explicit threshold or n >= 1")
-        require(!spec.gumbel || spec.idCol.nonEmpty,
-          s"$ctx: select_threshold with gumbel noise needs id_col")
-      }
-      spec
-    }
-
-    val prSpec = optN("page_rank", "pageRank").map { d =>
-      val ctx = s"node $id: page_rank"
-      PageRankSpec(
-        srcCol = req(d, ctx, "src_col", "srcCol").asText,
-        dstCol = req(d, ctx, "dst_col", "dstCol").asText,
-        iters = opt(d, "iters").map(_.asInt).getOrElse(3),
-        damping = opt(d, "damping").map(_.asDouble).getOrElse(0.85),
-        tol = opt(d, "tol").map(_.asDouble).getOrElse(0.0))
-    }
-
-    val winnowSpec = optN("winnow").map { d =>
-      val ctx = s"node $id: winnow"
-      WinnowSpec(
-        idCol = req(d, ctx, "id_col", "idCol").asText,
-        textCol = req(d, ctx, "text_col", "textCol").asText,
-        windowTokens = opt(d, "window_tokens", "windowTokens").map(_.asInt).getOrElse(50),
-        winnowWindow = opt(d, "winnow_window", "winnowWindow").map(_.asInt).getOrElse(8),
-        output = opt(d, "output").map(_.asText).map {
-          case o @ ("index" | "pairs") => o
-          case other => throw new IllegalArgumentException(
-            s"""$ctx: output must be "index" or "pairs" — got "$other"""")
-        }.getOrElse("index"),
-        minShared = opt(d, "min_shared", "minShared").map(_.asInt).getOrElse(1))
-    }
-
-    val winnowProbeSpec = optN("winnow_probe", "winnowProbe").map { d =>
-      val ctx = s"node $id: winnow_probe"
-      WinnowProbeSpec(
-        textCol = req(d, ctx, "text_col", "textCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        windowTokens = opt(d, "window_tokens", "windowTokens").map(_.asInt).getOrElse(50),
-        winnowWindow = opt(d, "winnow_window", "winnowWindow").map(_.asInt).getOrElse(8),
-        minShared = opt(d, "min_shared", "minShared").map(_.asInt).getOrElse(2),
-        matchedCol = opt(d, "matched_col", "matchedCol").map(_.asText).getOrElse("matched_fps"),
-        flagCol = opt(d, "flag_col", "flagCol").map(_.asText).getOrElse("near_dup"),
-        expectedKeys = opt(d, "expected_keys", "expectedKeys").map(_.asLong).getOrElse(1L << 22),
-        fpp = opt(d, "fpp").map(_.asDouble).getOrElse(0.01))
-    }
-
-    val wdsSpec = optN("wds_samples", "wdsSamples").map { d =>
-      WdsSamplesSpec(
-        nameCol = req(d, s"node $id: wds_samples", "name_col", "nameCol").asText,
-        dataCol = req(d, s"node $id: wds_samples", "data_col", "dataCol").asText)
-    }
-
-    val collocationsSpec = optN("collocations").map { d =>
-      val ctx = s"node $id: collocations"
-      val s = CollocationsSpec(
-        textCol = req(d, ctx, "text_col", "textCol").asText,
-        minCount = opt(d, "min_count", "minCount").map(_.asInt).getOrElse(5),
-        topK = opt(d, "top_k", "topK").map(_.asInt).getOrElse(100),
-        groupCols = opt(d, "group_cols", "groupCols").map(strSeq).getOrElse(Nil))
-      require(s.minCount >= 1, s"$ctx: min_count must be >= 1, got ${s.minCount}")
-      require(s.topK >= 1, s"$ctx: top_k must be >= 1, got ${s.topK}")
-      s
-    }
-
-    val bm25Spec = optN("bm25").map { d =>
-      val ctx = s"node $id: bm25"
-      Bm25Spec(
-        queriesRef = req(d, ctx, "queries_ref", "queriesRef").asText,
-        idCol = req(d, ctx, "id_col", "idCol").asText,
-        textCol = req(d, ctx, "text_col", "textCol").asText,
-        qidCol = opt(d, "qid_col", "qidCol").map(_.asText).getOrElse("qid"),
-        qtextCol = opt(d, "qtext_col", "qtextCol").map(_.asText).getOrElse("qtext"),
-        k1 = opt(d, "k1").map(_.asDouble).getOrElse(1.2),
-        b = opt(d, "b").map(_.asDouble).getOrElse(0.75),
-        topK = opt(d, "top_k", "topK").map(_.asInt).getOrElse(10),
-        proxWeight = opt(d, "prox_weight", "proxWeight")
-          .map(_.asDouble).getOrElse(0.0))
-    }
-
-    val bm25IndexSpec = optN("bm25_index", "bm25Index").map { d =>
-      val ctx = s"node $id: bm25_index"
-      val mode = opt(d, "mode").map(_.asText).getOrElse("build")
-      require(mode == "build" || mode == "append" || mode == "compact" ||
-          mode == "stats",
-        s"""$ctx: mode must be "build", "append", "compact" or "stats", got "$mode"""")
-      // compact/stats only touch the artifact — frame columns never enter
-      val artifactOnly = mode == "compact" || mode == "stats"
-      if (artifactOnly)
-        Seq("id_col", "idCol", "text_col", "textCol").foreach { k =>
-          require(opt(d, k).isEmpty,
-            s"""$ctx: "$k" has no effect under mode "$mode" (it """ +
-              "touches only the saved artifact) — remove it")
-        }
-      val s = Bm25IndexSpec(
-        idCol = if (artifactOnly) ""
-          else req(d, ctx, "id_col", "idCol").asText,
-        textCol = if (artifactOnly) ""
-          else req(d, ctx, "text_col", "textCol").asText,
-        dir = req(d, ctx, "dir").asText,
-        prox = opt(d, "prox").exists(_.asBoolean(false)),
-        buckets = opt(d, "buckets").map(_.asInt).getOrElse(64),
-        mode = mode,
-        checkpoint = opt(d, "checkpoint").map(_.asText))
-      requireCompactOnlyCheckpoint(ctx, s.mode, s.checkpoint)
-      // append/compact work against the SAVED layout — stated layout
-      // params would silently not re-shard/re-shape; reject by name
-      require(s.mode == "build" ||
-          (opt(d, "prox").isEmpty && opt(d, "buckets").isEmpty),
-        s"""$ctx: prox/buckets have no effect under mode "${s.mode}" """ +
-          "(the saved layout is reused) — remove them, or rebuild with " +
-          """mode "build"""")
-      require(s.buckets >= 1 && s.buckets <= 65536,
-        s"$ctx: buckets must be in [1, 65536], got ${s.buckets}")
-      s
-    }
-
-    val bm25SearchSpec = optN("bm25_search", "bm25Search").map { d =>
-      val ctx = s"node $id: bm25_search"
-      val s = Bm25SearchSpec(
-        qidCol = req(d, ctx, "qid_col", "qidCol").asText,
-        qtextCol = req(d, ctx, "qtext_col", "qtextCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        k1 = opt(d, "k1").map(_.asDouble).getOrElse(1.2),
-        b = opt(d, "b").map(_.asDouble).getOrElse(0.75),
-        topK = opt(d, "top_k", "topK").map(_.asInt).getOrElse(10),
-        proxWeight = opt(d, "prox_weight", "proxWeight")
-          .map(_.asDouble).getOrElse(0.0))
-      require(s.topK >= 1, s"$ctx: top_k must be >= 1, got ${s.topK}")
-      require(s.k1 >= 0 && s.b >= 0 && s.b <= 1,
-        s"$ctx: need k1 >= 0 and b in [0, 1], got k1=${s.k1} b=${s.b}")
-      require(s.proxWeight >= 0,
-        s"$ctx: prox_weight must be >= 0, got ${s.proxWeight}")
-      s
-    }
-
-    val rrfSpec = optN("rrf_fuse", "rrfFuse").map { d =>
-      val ctx = s"node $id: rrf_fuse"
-      val s = RrfFuseSpec(
-        queryCol = req(d, ctx, "query_col", "queryCol").asText,
-        docCol = req(d, ctx, "doc_col", "docCol").asText,
-        rankCol = req(d, ctx, "rank_col", "rankCol").asText,
-        topK = opt(d, "top_k", "topK").map(_.asInt).getOrElse(10),
-        rrfK = opt(d, "rrf_k", "rrfK").map(_.asInt).getOrElse(60),
-        weightCol = opt(d, "weight_col", "weightCol").map(_.asText))
-      require(s.topK >= 1, s"$ctx: top_k must be >= 1, got ${s.topK}")
-      require(s.rrfK >= 0, s"$ctx: rrf_k must be >= 0, got ${s.rrfK}")
-      s
-    }
-
-    val funnelSpec = optN("funnel").map { d =>
-      val ctx = s"node $id: funnel"
-      val stepsNode = req(d, ctx, "steps")
-      require(stepsNode.isArray && stepsNode.size() > 0,
-        s"$ctx: steps must be a non-empty ARRAY of event names")
-      val s = FunnelSpec(
-        keyCol = req(d, ctx, "key_col", "keyCol").asText,
-        tsCol = req(d, ctx, "ts_col", "tsCol").asText,
-        eventCol = req(d, ctx, "event_col", "eventCol").asText,
-        steps = strSeq(stepsNode),
-        window = opt(d, "window").map(_.asText),
-        anchor = opt(d, "anchor").map(_.asText).getOrElse("first"))
-      require(s.steps.distinct.size == s.steps.size,
-        s"$ctx: steps must be distinct, got ${s.steps.mkString(", ")}")
-      require(s.anchor == "first" || s.anchor == "every",
-        s"$ctx: anchor must be 'first' or 'every', got '${s.anchor}'")
-      s
-    }
-
-    val rangeJoinSpec = optN("range_join", "rangeJoin").map { d =>
-      val ctx = s"node $id: range_join"
-      val s = RangeJoinSpec(
-        intervalsRef = req(d, ctx, "intervals_ref", "intervalsRef").asText,
-        pointCol = req(d, ctx, "point_col", "pointCol").asText,
-        loCol = req(d, ctx, "lo_col", "loCol").asText,
-        hiCol = req(d, ctx, "hi_col", "hiCol").asText,
-        bucket = req(d, ctx, "bucket").asDouble,
-        on = opt(d, "on").map(strSeq).getOrElse(Nil),
-        payload = opt(d, "payload").map(strSeq).getOrElse(Nil),
-        how = opt(d, "how").map(_.asText).getOrElse("inner"),
-        inclusiveHi = opt(d, "inclusive_hi", "inclusiveHi")
-          .exists(_.asBoolean(false)),
-        broadcast = opt(d, "broadcast").exists(_.asBoolean(false)),
-        maxBucketsPerInterval = opt(d, "max_buckets_per_interval",
-          "maxBucketsPerInterval").map(_.asInt).getOrElse(1 << 16))
-      require(s.bucket > 0, s"$ctx: bucket must be > 0, got ${s.bucket}")
-      require(s.how == "inner" || s.how == "left",
-        s"$ctx: how must be 'inner' or 'left', got '${s.how}'")
-      require(s.maxBucketsPerInterval >= 1,
-        s"$ctx: max_buckets_per_interval must be >= 1, got ${s.maxBucketsPerInterval}")
-      s
-    }
-
-    val connectedComponentsSpec =
-      optN("connected_components", "connectedComponents").map { d =>
-        val ctx = s"node $id: connected_components"
-        val s = ConnectedComponentsSpec(
-          srcCol = req(d, ctx, "src_col", "srcCol").asText,
-          dstCol = req(d, ctx, "dst_col", "dstCol").asText,
-          maxIter = opt(d, "max_iter", "maxIter").map(_.asInt).getOrElse(20),
-          smallGraphEdges = opt(d, "small_graph_edges", "smallGraphEdges")
-            .map(_.asLong).getOrElse(1L << 20),
-          checkpointDir = opt(d, "checkpoint_dir", "checkpointDir")
-            .map(_.asText))
-        require(s.srcCol != s.dstCol,
-          s"$ctx: src_col and dst_col must differ (self-loops are rows " +
-            "with equal VALUES, not equal columns)")
-        require(s.maxIter >= 1, s"$ctx: max_iter must be >= 1, got ${s.maxIter}")
-        require(s.smallGraphEdges >= 0 && s.smallGraphEdges <= (1L << 24),
-          s"$ctx: small_graph_edges must be in [0, 2^24], got " +
-            s"${s.smallGraphEdges} (the driver-collect safety cap)")
-        s
-      }
-
-    val overlapJoinSpec = optN("overlap_join", "overlapJoin").map { d =>
-      val ctx = s"node $id: overlap_join"
-      val s = OverlapJoinSpec(
-        otherRef = req(d, ctx, "other_ref", "otherRef", "ref").asText,
-        loCol = req(d, ctx, "lo_col", "loCol").asText,
-        hiCol = req(d, ctx, "hi_col", "hiCol").asText,
-        bucket = req(d, ctx, "bucket").asDouble,
-        otherLoCol = opt(d, "other_lo_col", "otherLoCol").map(_.asText),
-        otherHiCol = opt(d, "other_hi_col", "otherHiCol").map(_.asText),
-        on = opt(d, "on").map(strSeq).getOrElse(Nil),
-        payload = opt(d, "payload").map(strSeq).getOrElse(Nil),
-        inclusive = opt(d, "inclusive").exists(_.asBoolean(false)),
-        broadcast = opt(d, "broadcast").exists(_.asBoolean(false)),
-        maxBucketsPerInterval = opt(d, "max_buckets_per_interval",
-          "maxBucketsPerInterval").map(_.asInt).getOrElse(1 << 16),
-        how = opt(d, "how").map(_.asText).getOrElse("inner"))
-      require(s.bucket > 0, s"$ctx: bucket must be > 0, got ${s.bucket}")
-      require(s.maxBucketsPerInterval >= 1,
-        s"$ctx: max_buckets_per_interval must be >= 1, got ${s.maxBucketsPerInterval}")
-      require(s.how == "inner" || s.how == "left",
-        s"""$ctx: how must be "inner" or "left", got '${s.how}'""")
-      s
-    }
-
-    val diffSpec = optN("diff").map { d =>
-      val ctx = s"node $id: diff"
-      val s = DiffSpec(
-        on = strSeq(req(d, ctx, "on")),
-        otherRef = req(d, ctx, "other_ref", "otherRef", "ref").asText,
-        compare = opt(d, "compare").map(strSeq).getOrElse(Nil),
-        statusCol = opt(d, "status_col", "statusCol").map(_.asText)
-          .getOrElse("diff_status"),
-        changedCol = opt(d, "changed_col", "changedCol").map(_.asText)
-          .getOrElse("changed_cols"),
-        includeUnchanged = opt(d, "include_unchanged", "includeUnchanged")
-          .exists(_.asBoolean(false)),
-        carry = opt(d, "carry").map(_.asText).getOrElse("none"))
-      require(s.on.nonEmpty, s"$ctx: 'on' needs at least one key column")
-      require(s.carry == "none" || s.carry == "new",
-        s"""$ctx: carry must be "none" or "new", got '${s.carry}' — the """ +
-          "old side's values are reachable by diffing in the other " +
-          "direction")
-      require(s.statusCol != s.changedCol,
-        s"$ctx: status_col and changed_col must differ")
-      s
-    }
-
-    val applyDiffSpec = optN("apply_diff", "applyDiff").map { d =>
-      val ctx = s"node $id: apply_diff"
-      val s = ApplyDiffSpec(
-        on = strSeq(req(d, ctx, "on")),
-        deltaRef = req(d, ctx, "delta_ref", "deltaRef", "ref").asText,
-        statusCol = opt(d, "status_col", "statusCol").map(_.asText)
-          .getOrElse("diff_status"),
-        changedCol = opt(d, "changed_col", "changedCol").map(_.asText)
-          .getOrElse("changed_cols"))
-      require(s.on.nonEmpty, s"$ctx: 'on' needs at least one key column")
-      require(s.statusCol != s.changedCol,
-        s"$ctx: status_col and changed_col must differ")
-      s
-    }
-
-    val resampleSpec = optN("resample").map { d =>
-      val ctx = s"node $id: resample"
-      val keysNode = req(d, ctx, "key_cols", "keyCols", "keys")
-      require(keysNode.isArray && keysNode.size() > 0,
-        s"$ctx: key_cols must be a non-empty ARRAY of key columns")
-      val s = ResampleSpec(
-        keyCols = strSeq(keysNode),
-        tsCol = req(d, ctx, "ts_col", "tsCol").asText,
-        step = req(d, ctx, "step").asText,
-        aggs = aggList(req(d, ctx, "aggregations", "aggs")),
-        fill = opt(d, "fill").map(_.asText).getOrElse("none"),
-        maxBucketsPerKey = opt(d, "max_buckets_per_key", "maxBucketsPerKey")
-          .map(_.asLong).getOrElse(1L << 20))
-      require(s.aggs.nonEmpty,
-        s"$ctx: aggregations must be a non-empty list")
-      require(Seq("none", "zero", "ffill").contains(s.fill),
-        s"$ctx: fill must be none/zero/ffill, got '${s.fill}'")
-      require(s.maxBucketsPerKey >= 1,
-        s"$ctx: max_buckets_per_key must be >= 1, got ${s.maxBucketsPerKey}")
-      s
-    }
-
-    val approxTopKSpec = optN("approx_top_k", "approxTopK").map { d =>
-      val ctx = s"node $id: approx_top_k"
-      val s = ApproxTopKSpec(
-        keyCol = req(d, ctx, "key_col", "keyCol").asText,
-        k = opt(d, "k").map(_.asInt).getOrElse(10),
-        maxItemsTracked = opt(d, "max_items_tracked", "maxItemsTracked")
-          .map(_.asInt).getOrElse(10000))
-      require(s.k >= 1, s"$ctx: k must be >= 1, got ${s.k}")
-      require(s.maxItemsTracked >= s.k,
-        s"$ctx: max_items_tracked (${s.maxItemsTracked}) must be >= k (${s.k})")
-      s
-    }
-
-    val unpivotSpec = optN("unpivot").map { d =>
-      val ctx = s"node $id: unpivot"
-      val idsNode = req(d, ctx, "ids", "id_cols")
-      require(idsNode.isArray && idsNode.size() > 0,
-        s"$ctx: ids must be a non-empty ARRAY of id columns")
-      val s = UnpivotSpec(
-        ids = strSeq(idsNode),
-        values = opt(d, "values", "value_cols").map(strSeq).getOrElse(Nil),
-        varCol = opt(d, "var_col", "varCol").map(_.asText).getOrElse("variable"),
-        valCol = opt(d, "value_col", "valueCol").map(_.asText).getOrElse("value"))
-      require(s.varCol != s.valCol,
-        s"$ctx: var_col and value_col are both '${s.varCol}'")
-      s
-    }
-
-    val upsampleSpec = optN("upsample").map { d =>
-      val ctx = s"node $id: upsample"
-      UpsampleSpec(
-        factorCol = req(d, ctx, "factor_col", "factorCol").asText,
-        copyCol = opt(d, "copy_col", "copyCol").map(_.asText).getOrElse("copy"))
-    }
-
-    val rankingEvalSpec = optN("ranking_eval", "rankingEval").map { d =>
-      val ctx = s"node $id: ranking_eval"
-      val s = RankingEvalSpec(
-        queryCol = req(d, ctx, "query_col", "queryCol").asText,
-        docCol = req(d, ctx, "doc_col", "docCol").asText,
-        rankCol = req(d, ctx, "rank_col", "rankCol").asText,
-        qrelsRef = req(d, ctx, "qrels_ref", "qrelsRef").asText,
-        k = opt(d, "k").map(_.asInt).getOrElse(10))
-      require(s.k >= 1, s"$ctx: k must be >= 1, got ${s.k}")
-      s
-    }
-
-    val aiSpec = optN("ann_index", "annIndex").map { d =>
-      val ctx = s"node $id: ann_index"
-      val mode = opt(d, "mode").map(_.asText).getOrElse("build")
-      require(mode == "build" || mode == "append" || mode == "stats" ||
-          mode == "compact",
-        s"""$ctx: mode must be "build", "append", "stats" or "compact", got "$mode"""")
-      // stats/compact only touch the artifact — the frame's columns never
-      // enter, so a stated id_col/vec_col is a misunderstanding; reject
-      if (mode == "stats" || mode == "compact")
-        Seq("id_col", "idCol", "vec_col", "vecCol").foreach { k =>
-          require(opt(d, k).isEmpty,
-            s"""$ctx: "$k" has no effect under mode "$mode" (it reads """ +
-              "only the saved artifact) — remove it")
-        }
-      val pqNode = opt(d, "pq")
-      val artifactOnly = mode == "stats" || mode == "compact"
-      val s = AnnIndexSpec(
-        idCol = if (artifactOnly) ""
-          else req(d, ctx, "id_col", "idCol").asText,
-        vecCol = if (artifactOnly) ""
-          else req(d, ctx, "vec_col", "vecCol").asText,
-        dir = req(d, ctx, "dir").asText,
-        nlist = opt(d, "nlist").map(_.asInt).getOrElse(16),
-        refineRounds = opt(d, "refine_rounds", "refineRounds").map(_.asInt).getOrElse(0),
-        mode = mode,
-        pqM = pqNode.map(p => req(p, s"$ctx.pq", "m").asInt),
-        pqK = pqNode.flatMap(p => opt(p, "k")).map(_.asInt).getOrElse(256),
-        pqIters = pqNode.flatMap(p => opt(p, "iters")).map(_.asInt).getOrElse(5),
-        checkpoint = opt(d, "checkpoint").map(_.asText))
-      requireCompactOnlyCheckpoint(ctx, s.mode, s.checkpoint)
-      // append assigns to the SAVED centroids — a stated fit parameter
-      // would silently not refit; reject the contradiction by name. The
-      // same applies to pq: appends encode with the SAVED codebooks.
-      require(s.mode == "build" ||
-          (opt(d, "nlist").isEmpty && opt(d, "refine_rounds", "refineRounds").isEmpty &&
-            pqNode.isEmpty),
-        s"""$ctx: nlist/refine_rounds/pq have no effect under mode "${s.mode}" """ +
-          "(the saved centroids and codebooks are not refit) — remove " +
-          """them, or rebuild with mode "build"""")
-      require(s.nlist >= 1 && s.nlist <= 65536,
-        s"$ctx: nlist must be in [1, 65536], got ${s.nlist}")
-      require(s.refineRounds >= 0 && s.refineRounds <= 64,
-        s"$ctx: refine_rounds must be in [0, 64], got ${s.refineRounds}")
-      s.pqM.foreach { m =>
-        require(m >= 1 && m <= 256, s"$ctx.pq: m must be in [1, 256], got $m")
-        require(s.pqK >= 1 && s.pqK <= 256,
-          s"$ctx.pq: k must be in [1, 256], got ${s.pqK}")
-        require(s.pqIters >= 0 && s.pqIters <= 64,
-          s"$ctx.pq: iters must be in [0, 64], got ${s.pqIters}")
-      }
-      s
-    }
-
-    val asSpec = optN("ann_search", "annSearch").map { d =>
-      val ctx = s"node $id: ann_search"
-      val s = AnnSearchSpec(
-        idCol = req(d, ctx, "id_col", "idCol").asText,
-        vecCol = req(d, ctx, "vec_col", "vecCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        k = opt(d, "k").map(_.asInt).getOrElse(10),
-        nprobe = opt(d, "nprobe").map(_.asInt).getOrElse(4),
-        allowRef = opt(d, "allow_ref", "allowRef").map(_.asText),
-        allowIdCol = opt(d, "allow_id_col", "allowIdCol").map(_.asText)
-          .getOrElse("id"))
-      require(s.k >= 1, s"$ctx: k must be >= 1, got ${s.k}")
-      require(s.nprobe >= 1, s"$ctx: nprobe must be >= 1, got ${s.nprobe}")
-      require(s.idCol != "match_id",
-        s"$ctx: rename the query id column — 'match_id' names the index side")
-      require(s.allowRef.nonEmpty || opt(d, "allow_id_col", "allowIdCol").isEmpty,
-        s"$ctx: allow_id_col has no effect without allow_ref — remove it " +
-          "or name the allow-list def")
-      s
-    }
-
-    val apSpec = optN("ann_probe", "annProbe").map { d =>
-      val ctx = s"node $id: ann_probe"
-      val s = AnnProbeSpec(
-        vecCol = req(d, ctx, "vec_col", "vecCol").asText,
-        indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-        threshold = req(d, ctx, "threshold").asDouble,
-        scoreCol = opt(d, "score_col", "scoreCol").map(_.asText).getOrElse("ann_score"),
-        flagCol = opt(d, "flag_col", "flagCol").map(_.asText).getOrElse("ann_match"))
-      require(s.threshold >= -1.0 && s.threshold <= 1.0,
-        s"$ctx: threshold must be in [-1, 1], got ${s.threshold}")
-      require(s.scoreCol != s.flagCol,
-        s"$ctx: score_col and flag_col must differ, both are '${s.scoreCol}'")
-      s
-    }
-
-    val qfSpec = optN("quantile_filter", "quantileFilter").map { d =>
-      val ctx = s"node $id: quantile_filter"
-      val s = QuantileFilterSpec(
-        col = req(d, ctx, "col").asText,
-        keepN = req(d, ctx, "keep_n", "keepN").asLong,
-        descending = opt(d, "descending").forall(_.asBoolean(true)),
-        relativeError = opt(d, "relative_error", "relativeError")
-          .map(_.asDouble).getOrElse(1e-4))
-      require(s.keepN >= 1, s"$ctx: keep_n must be >= 1, got ${s.keepN}")
-      require(s.relativeError >= 0 && s.relativeError < 1,
-        s"$ctx: relative_error must be in [0, 1), got ${s.relativeError}")
-      s
-    }
-
-    val tpSpec = optN("tar_pack", "tarPack").map { d =>
-      val ctx = s"node $id: tar_pack"
-      TarPackSpec(
-        nameCol = req(d, ctx, "name_col", "nameCol").asText,
-        payloadCol = req(d, ctx, "payload_col", "payloadCol").asText,
-        shards = req(d, ctx, "shards").asInt)
-    }
-
-    val tcSpec = optN("tar_compact", "tarCompact").map { d =>
-      val ctx = s"node $id: tar_compact"
-      TarCompactSpec(
-        tarCol = opt(d, "tar_col", "tarCol").map(_.asText).getOrElse("tar"),
-        shards = req(d, ctx, "shards").asInt,
-        batchCol = opt(d, "batch_col", "batchCol").map(_.asText))
-    }
-
-    val dsirScoreSpec = optN("dsir_score", "dsirScore").map { d =>
-      DsirScoreSpec(
-        modelDir = req(d, s"node $id: dsir_score", "model_dir", "modelDir").asText,
-        textCol = req(d, s"node $id: dsir_score", "text_col", "textCol").asText)
-    }
-
-    val sp = optN("split").map { d =>
-      val bucketsNode = req(d, s"node $id: split", "buckets")
-      require(bucketsNode.isArray && bucketsNode.size() > 0,
-        s"node $id: split.buckets must be a non-empty ARRAY of " +
-          """{"name": ..., "weight": ...} (order defines the boundaries)""")
-      val buckets = (0 until bucketsNode.size()).map { i =>
-        val b = bucketsNode.get(i)
-        (req(b, s"node $id: split.buckets[$i]", "name").asText,
-          req(b, s"node $id: split.buckets[$i]", "weight").asDouble)
-      }
-      SplitSpec(
-        idCol = req(d, s"node $id: split", "id_col", "idCol").asText,
-        buckets = buckets,
-        splitCol = opt(d, "split_col", "splitCol").map(_.asText).getOrElse("split"))
-    }
-
-    val ts = optN("temperature_sample", "temperatureSample").map { d =>
-      TemperatureSampleSpec(
-        groupCol = req(d, s"node $id: temperature_sample", "group_col", "groupCol").asText,
-        idCol = req(d, s"node $id: temperature_sample", "id_col", "idCol").asText,
-        targetFraction =
-          req(d, s"node $id: temperature_sample", "target_fraction", "targetFraction").asDouble,
-        alpha = opt(d, "alpha").map(_.asDouble).getOrElse(0.5))
-    }
-
-    val tbs = optN("token_budget_sample", "tokenBudgetSample").map { d =>
-      val ctx = s"node $id: token_budget_sample"
-      val budgetsNode = opt(d, "budgets")
-      val weightsNode = opt(d, "weights")
-      require(budgetsNode.isDefined != weightsNode.isDefined,
-        s"$ctx: exactly one of budgets (group -> tokens) or weights " +
-          "(+ total_budget) must be given")
-      budgetsNode.foreach(b => require(b.isObject && b.size() > 0,
-        s"$ctx: budgets must be a non-empty OBJECT of group -> token count"))
-      weightsNode.foreach(w => require(w.isObject && w.size() > 0,
-        s"$ctx: weights must be a non-empty OBJECT of group -> weight"))
-      val spec = TokenBudgetSampleSpec(
-        groupCol = req(d, ctx, "group_col", "groupCol").asText,
-        idCol = req(d, ctx, "id_col", "idCol").asText,
-        tokensCol = req(d, ctx, "tokens_col", "tokensCol").asText,
-        budgets = budgetsNode.map(b =>
-          fields(b).map { case (k, v) => (k, v.asLong) }).getOrElse(Seq.empty),
-        weights = weightsNode.map(w =>
-          fields(w).map { case (k, v) => (k, v.asDouble) }).getOrElse(Seq.empty),
-        totalBudget = opt(d, "total_budget", "totalBudget")
-          .map(_.asLong).getOrElse(0L),
-        overshoot = opt(d, "overshoot").forall(_.asBoolean(true)),
-        orderCol = opt(d, "order_col", "orderCol").map(_.asText),
-        descending = opt(d, "descending").forall(_.asBoolean(true)))
-      if (spec.weights.nonEmpty) require(spec.totalBudget >= 1,
-        s"$ctx: weights need a total_budget >= 1 (tokens to split across " +
-          "the mixture)")
-      spec
-    }
-
-    val gs = optN("global_shuffle", "globalShuffle").map { d =>
-      GlobalShuffleSpec(
-        idCol = req(d, s"node $id: global_shuffle", "id_col", "idCol").asText,
-        shards = req(d, s"node $id: global_shuffle", "shards").asInt,
-        seed = opt(d, "seed").map(_.asLong).getOrElse(0L))
-    }
-
-    val he = optN("html_extract", "htmlExtract").map { d =>
-      HtmlExtractSpec(
-        idCol = req(d, s"node $id: html_extract", "id_col", "idCol").asText,
-        htmlCol = req(d, s"node $id: html_extract", "html_col", "htmlCol").asText)
-    }
-
-    val pe = optN("pdf_extract", "pdfExtract").map { d =>
-      PdfExtractSpec(
-        idCol = req(d, s"node $id: pdf_extract", "id_col", "idCol").asText,
-        pdfCol = req(d, s"node $id: pdf_extract", "pdf_col", "pdfCol").asText)
-    }
-
-    val pr = optN("profile").map { d =>
-      val colsNode = req(d, s"node $id: profile", "columns")
-      require(colsNode.isArray && colsNode.size() > 0,
-        s"node $id: profile.columns must be a non-empty ARRAY of column names")
-      ProfileSpec(
-        columns = (0 until colsNode.size()).map(i => colsNode.get(i).asText),
-        approx = opt(d, "approx").exists(_.asBoolean(false)),
-        groupCols = opt(d, "group_cols", "groupCols").map(strSeq).getOrElse(Nil))
-    }
-
-    val bp = optN("boilerplate").map { d =>
-      BoilerplateSpec(
-        idCol = req(d, s"node $id: boilerplate", "id_col", "idCol").asText,
-        textCol = req(d, s"node $id: boilerplate", "text_col", "textCol").asText,
-        maxDocs = req(d, s"node $id: boilerplate", "max_docs", "maxDocs").asLong,
-        sep = opt(d, "sep").map(_.asText).getOrElse("\n"),
-        byHash = opt(d, "by_hash", "byHash").forall(_.asBoolean(true)))
-    }
-
-    val fz = optN("featurize").map { f =>
-      FeaturizeSpec(
-        idCol = req(f, s"node $id: featurize", "id_col", "idCol").asText,
-        payloadCol = req(f, s"node $id: featurize", "payload_col", "payloadCol").asText,
-        decoder = opt(f, "decoder").map(_.asText).getOrElse("media"))
+    // registry operators, decoded in registry order (graft.compile.Operators)
+    val ops = graft.compile.Operators.all.flatMap { o =>
+      optN(o.keys: _*).map(d => o.decode(new OpJson(d, id, o.key)))
     }
 
     val wm = optN("watermark").map { w =>
@@ -1273,62 +382,7 @@ object JsonCodec {
       watermark = wm,
       dedup = dd,
       keepColumns = if (aggregate.isDefined) Nil else keep,
-      nearDup = nd,
-      semanticDedup = smd,
-      editDedup = ed,
-      imageDedup = imd,
-      simhashDedup = shd,
-      audioDedup = aud,
-      passageDedup = pd,
-      lmPerplexity = lm,
-      qualityClassifier = qc,
-      multiclassClassifier = mcc,
-      predictModel = pm,
-      scoreModel = sm,
-      bpe = bpeSpec,
-      bpeApply = ba,
-      chunk = chk,
-      nearDupProbe = ndp,
-      seenProbe = seenProbeSpec,
-      seenFilter = seenFilterSpec,
-      cmsProbe = cms,
-      dsir = dsirSpec,
-      pageRank = prSpec,
-      tarPack = tpSpec,
-      tarCompact = tcSpec,
-      annIndex = aiSpec,
-      annSearch = asSpec,
-      annProbe = apSpec,
-      quantileFilter = qfSpec,
-      wdsSamples = wdsSpec,
-      winnow = winnowSpec,
-      winnowProbe = winnowProbeSpec,
-      bm25 = bm25Spec,
-      bm25Index = bm25IndexSpec,
-      bm25Search = bm25SearchSpec,
-      rrfFuse = rrfSpec,
-      rankingEval = rankingEvalSpec,
-      upsample = upsampleSpec,
-      funnel = funnelSpec,
-      rangeJoin = rangeJoinSpec,
-      overlapJoin = overlapJoinSpec,
-      collocations = collocationsSpec,
-      connectedComponents = connectedComponentsSpec,
-      diff = diffSpec,
-      applyDiff = applyDiffSpec,
-      unpivot = unpivotSpec,
-      approxTopK = approxTopKSpec,
-      resample = resampleSpec,
-      dsirScore = dsirScoreSpec,
-      split = sp,
-      temperatureSample = ts,
-      tokenBudgetSample = tbs,
-      globalShuffle = gs,
-      htmlExtract = he,
-      pdfExtract = pe,
-      profile = pr,
-      boilerplate = bp,
-      featurize = fz,
+      ops = ops,
       aggregate = aggregate,
       rename = rename,
       withColumns = withCols,
@@ -1389,132 +443,6 @@ object JsonCodec {
       orderBy = optN("order_by", "orderBy").map(strSeq).getOrElse(Nil),
       limit = optN("limit").map(_.asInt),
       save = optN("save").map(sink),
-      nearDupIngest = optN("near_dup_ingest", "nearDupIngest").map { d =>
-        val ctx = s"node $id: near_dup_ingest"
-        NearDupIngestSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          textCol = req(d, ctx, "text_col", "textCol").asText,
-          corpusDir = req(d, ctx, "corpus_dir", "corpusDir").asText,
-          indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          shingleSize = opt(d, "shingle_size", "shingleSize").map(_.asInt).getOrElse(3),
-          numHashes = opt(d, "num_hashes", "numHashes").map(_.asInt).getOrElse(64),
-          bands = opt(d, "bands").map(_.asInt).getOrElse(16),
-          threshold = opt(d, "threshold").map(_.asDouble).getOrElse(0.5),
-          compactEvery = ingestCompactEvery(d, s"node $id: near_dup_ingest"))
-      },
-      passageIngest = optN("passage_ingest", "passageIngest").map { d =>
-        val ctx = s"node $id: passage_ingest"
-        PassageIngestSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          textCol = req(d, ctx, "text_col", "textCol").asText,
-          corpusDir = req(d, ctx, "corpus_dir", "corpusDir").asText,
-          indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          windowTokens = opt(d, "window_tokens", "windowTokens").map(_.asInt).getOrElse(50),
-          compactEvery = ingestCompactEvery(d, ctx))
-      },
-      exactIngest = optN("exact_ingest", "exactIngest").map { d =>
-        val ctx = s"node $id: exact_ingest"
-        val s = ExactIngestSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          keyCols = strSeq(req(d, ctx, "key_cols", "keyCols")),
-          corpusDir = req(d, ctx, "corpus_dir", "corpusDir").asText,
-          indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          compactEvery = ingestCompactEvery(d, ctx))
-        require(s.keyCols.nonEmpty, s"$ctx: key_cols must be non-empty")
-        s
-      },
-      ingestCompact = optN("ingest_compact", "ingestCompact").map { d =>
-        val ctx = s"node $id: ingest_compact"
-        val s = IngestCompactSpec(
-          dirs = strSeq(req(d, ctx, "dirs")),
-          checkpoint = opt(d, "checkpoint").map(_.asText))
-        require(s.dirs.nonEmpty, s"$ctx: dirs must be non-empty")
-        s
-      },
-      sketchIngest = optN("sketch_ingest", "sketchIngest").map { d =>
-        val ctx = s"node $id: sketch_ingest"
-        val s = SketchIngestSpec(
-          keyCol = req(d, ctx, "key_col", "keyCol").asText,
-          outDir = req(d, ctx, "out_dir", "outDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          maxItemsTracked = opt(d, "max_items_tracked", "maxItemsTracked")
-            .map(_.asInt).getOrElse(10000),
-          lgK = opt(d, "lg_k", "lgK").map(_.asInt).getOrElse(12),
-          groupCols = opt(d, "group_cols", "groupCols").map(strSeq).getOrElse(Nil))
-        require(s.maxItemsTracked >= 1,
-          s"$ctx: max_items_tracked must be >= 1, got ${s.maxItemsTracked}")
-        require(s.lgK >= 4 && s.lgK <= 21,
-          s"$ctx: lg_k must be in [4, 21], got ${s.lgK}")
-        require(!s.groupCols.contains(s.keyCol),
-          s"$ctx: key_col '${s.keyCol}' cannot also be a group column")
-        s
-      },
-      bm25Ingest = optN("bm25_ingest", "bm25Ingest").map { d =>
-        val ctx = s"node $id: bm25_ingest"
-        val s = Bm25IngestSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          textCol = req(d, ctx, "text_col", "textCol").asText,
-          indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          compactEvery = opt(d, "compact_every", "compactEvery").map(_.asInt))
-        s.compactEvery.foreach(n => require(n >= 1,
-          s"$ctx: compact_every must be >= 1, got $n"))
-        s
-      },
-      annIngest = optN("ann_ingest", "annIngest").map { d =>
-        val ctx = s"node $id: ann_ingest"
-        val s = AnnIngestSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          vecCol = req(d, ctx, "vec_col", "vecCol").asText,
-          indexDir = req(d, ctx, "index_dir", "indexDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          compactEvery = opt(d, "compact_every", "compactEvery").map(_.asInt))
-        s.compactEvery.foreach(n => require(n >= 1,
-          s"$ctx: compact_every must be >= 1, got $n"))
-        s
-      },
-      sequencePack = optN("sequence_pack", "sequencePack").map { d =>
-        val ctx = s"node $id: sequence_pack"
-        val sp = SequencePackSpec(
-          idCol = req(d, ctx, "id_col", "idCol").asText,
-          idsCol = req(d, ctx, "ids_col", "idsCol").asText,
-          seqLen = req(d, ctx, "seq_len", "seqLen").asInt,
-          eosId = opt(d, "eos_id", "eosId").map(_.asInt).getOrElse(0),
-          shards = opt(d, "shards").map(_.asInt).getOrElse(1),
-          dropLast = opt(d, "drop_last", "dropLast").forall(_.asBoolean(true)),
-          mode = opt(d, "mode").map(_.asText).getOrElse("split"),
-          withBounds = opt(d, "with_bounds", "withBounds")
-            .exists(_.asBoolean(false)),
-          padId = opt(d, "pad_id", "padId").map(_.asInt).getOrElse(-1))
-        require(sp.seqLen >= 2, s"$ctx: seq_len must be >= 2")
-        require(sp.mode == "split" || sp.mode == "whole"
-            || sp.mode == "best_fit",
-          s"""$ctx: mode must be "split", "whole" or "best_fit", """ +
-            s"""got "${sp.mode}"""")
-        // best_fit always keeps every (short) window — an explicit
-        // drop_last: false is the only detectable reliance on the key,
-        // and silently honoring the DEFAULT true would be worse: reject
-        // the stated contradiction by name instead of no-opping it.
-        require(!(sp.mode == "best_fit" &&
-            opt(d, "drop_last", "dropLast").exists(!_.asBoolean(true))),
-          s"""$ctx: drop_last has no effect under mode "best_fit" """ +
-            "(best-fit-decreasing keeps every window and pads instead) — " +
-            "remove the key, or use mode \"split\"/\"whole\" to drop tails")
-        sp
-      },
-      tarPackIngest = optN("tar_pack_ingest", "tarPackIngest").map { d =>
-        val ctx = s"node $id: tar_pack_ingest"
-        TarPackIngestSpec(
-          nameCol = req(d, ctx, "name_col", "nameCol").asText,
-          payloadCol = req(d, ctx, "payload_col", "payloadCol").asText,
-          shards = req(d, ctx, "shards").asInt,
-          outDir = req(d, ctx, "out_dir", "outDir").asText,
-          checkpointDir = req(d, ctx, "checkpoint_dir", "checkpointDir").asText,
-          trigger = opt(d, "trigger").map(_.asText))
-      },
       cache = optN("cache").exists(_.asBoolean(false))
     )
     // unknown-key rejection: whatever this parse did not read is a typo
@@ -1528,7 +456,7 @@ object JsonCodec {
     spec
   }
 
-  private def aggList(n: JsonNode): Seq[AggSpec] =
+  private[graft] def aggList(n: JsonNode): Seq[AggSpec] =
     if (n == null) Nil
     else if (n.isArray)
       elems(n).map { a =>
@@ -1644,4 +572,38 @@ object JsonCodec {
     }
     CascadeSpec(src, iters)
   }
+}
+
+/** One operator object `d` under decode: typed readers of its keys (each
+  * key with its aliases), every diagnostic prefixed by `ctx`
+  * ("node <id>: <key>"). */
+final class OpJson private[graft] (d: JsonNode, nodeId: String, key: String) {
+  val ctx = s"node $nodeId: $key"
+  def opt(keys: String*): Option[JsonNode] = JsonCodec.opt(d, keys: _*)
+  def req(keys: String*): JsonNode = JsonCodec.req(d, ctx, keys: _*)
+  def str(keys: String*): String = req(keys: _*).asText
+  def int(keys: String*): Int = req(keys: _*).asInt
+  def long(keys: String*): Long = req(keys: _*).asLong
+  def double(keys: String*): Double = req(keys: _*).asDouble
+  def optStr(keys: String*): Option[String] = opt(keys: _*).map(_.asText)
+  def strOr(default: String, keys: String*): String = optStr(keys: _*).getOrElse(default)
+  def intOr(default: Int, keys: String*): Int = opt(keys: _*).map(_.asInt).getOrElse(default)
+  def longOr(default: Long, keys: String*): Long = opt(keys: _*).map(_.asLong).getOrElse(default)
+  def doubleOr(default: Double, keys: String*): Double =
+    opt(keys: _*).map(_.asDouble).getOrElse(default)
+  def flag(default: Boolean, keys: String*): Boolean =
+    opt(keys: _*).map(_.asBoolean(default)).getOrElse(default)
+  def strs(keys: String*): Seq[String] = opt(keys: _*).map(JsonCodec.strSeq).getOrElse(Nil)
+
+  /** A closed-choice key: absent → `default`; a value outside `allowed`
+    * rejects by name at decode time, never mid-pipeline. */
+  def choice(k: String, default: String, allowed: String*): String =
+    optStr(k).map { v =>
+      if (allowed.contains(v)) v
+      else {
+        val q = allowed.map(a => s""""$a"""")
+        throw new IllegalArgumentException(
+          s"""$ctx $k must be ${q.init.mkString(", ")} or ${q.last} — got "$v"""")
+      }
+    }.getOrElse(default)
 }

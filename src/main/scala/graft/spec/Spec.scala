@@ -15,6 +15,11 @@ package graft.spec
   * node boundaries.
   */
 
+/** A node operator's parsed config — one case class per entry of the
+  * operator registry ([[graft.compile.Operators]]), which owns its key,
+  * decoder, stream mode, column reads and compile step. */
+sealed trait OpSpec
+
 /** A filter predicate. */
 sealed trait FilterSpec
 /** SQL-ish expression string filter (ref: `sparks/optimus.py:14-17`,
@@ -242,7 +247,7 @@ final case class NearDupSpec(
     bands: Int = 8,
     output: String = "pairs",
     retention: Option[RetentionSpec] = None // clusters output only
-)
+) extends OpSpec
 
 /** Best-copy retention for a cluster-output dedup tier: instead of the
   * raw (id, cluster) labels, the node keeps each duplicate class's best
@@ -279,7 +284,7 @@ final case class SemanticDedupSpec(
     numBits: Int = 64,
     bands: Int = 8,
     output: String = "keep"
-)
+) extends OpSpec
 
 /** Edit-distance near-dup pairs (NS; Dedup.blockedCandidatePairs →
   * verifyEditDistancePairs): record-linkage blocking on `blockExpr` (any
@@ -298,7 +303,7 @@ final case class EditDedupSpec(
     threshold: Double = 0.8,
     maxDistance: Option[Int] = None,
     bucketCap: graft.ops.BucketCap = graft.ops.BucketCap.Auto
-)
+) extends OpSpec
 
 /** Corpus-LM perplexity scoring (NS; Corpus.lmPerplexity): self-trained
   * add-k bigram LM, each doc scored by mean negative log-probability.
@@ -314,7 +319,7 @@ final case class LmPerplexitySpec(
     keepUnscored: Boolean = false,
     smoothing: String = "addk", // addk | kn (interpolated Kneser-Ney)
     discount: Double = 0.75 // KN absolute discount
-)
+) extends OpSpec
 
 /** BPE vocabulary training (NS; graft.ops.Bpe): train `numMerges` byte-
   * pair merges on `textCol` over the node's frame. `output = "merges"`
@@ -326,7 +331,7 @@ final case class BpeSpec(
     textCol: String,
     numMerges: Int = 16,
     output: String = "merges"
-)
+) extends OpSpec
 
 /** Count–Min watchlist probe (NS; Relational.cmsProbeCounts): the frame
   * becomes (keyCol, est) — estimated frequencies of the fixed `probes`
@@ -340,7 +345,7 @@ final case class CmsProbeSpec(
     eps: Double = 1e-4,
     confidence: Double = 0.99,
     seed: Int = 42
-)
+) extends OpSpec
 
 /** Trainable quality classifier (NS; Corpus.qualityClassifier):
   * fastText-style logistic model over hashed token buckets, trained on
@@ -355,7 +360,7 @@ final case class QualityClassifierSpec(
     epochs: Int = 8,
     lr: Double = 0.8,
     threshold: Double = 0.5
-)
+) extends OpSpec
 
 /** Trainable MULTICLASS classifier (NS;
   * Corpus.trainMulticlassClassifier + predictMulticlass): one-vs-rest
@@ -372,7 +377,7 @@ final case class MulticlassClassifierSpec(
     lr: Double = 0.8,
     predCol: String = "pred_label",
     keepScores: Boolean = false
-)
+) extends OpSpec
 
 /** Predict with a SAVED multiclass artifact (NS;
   * Corpus.loadMulticlassClassifier + predictMulticlass): models load
@@ -385,7 +390,7 @@ final case class PredictModelSpec(
     modelDir: String,
     predCol: String = "pred_label",
     keepScores: Boolean = false
-)
+) extends OpSpec
 
 /** Score with a SAVED classifier artifact (NS; Corpus.scoreWithModel):
   * loads a [[graft.ops.Corpus.saveTextClassifier]] weight table at
@@ -398,7 +403,7 @@ final case class ScoreModelSpec(
     scoreCol: String = "score",
     predCol: String = "pred",
     threshold: Double = 0.5
-)
+) extends OpSpec
 
 /** Tokenize with a SAVED BPE merge table (NS; Bpe.loadMerges +
   * BpeKernels.bpeTokenize): loads a `bpe` output=merges artifact at
@@ -409,7 +414,7 @@ final case class BpeApplySpec(
     mergesDir: String,
     withIds: Boolean = false, // also add bpe_ids (stable integer ids)
     decodeCol: Option[String] = None // decode side: ids column → bpe_decoded tokens
-)
+) extends OpSpec
 
 /** Sliding-window document chunking (NS; Corpus.chunkByTokens /
   * Corpus.chunkIds): the context-window prep step — each document becomes
@@ -430,7 +435,7 @@ final case class ChunkSpec(
     textCol: Option[String] = None,
     idsCol: Option[String] = None,
     sep: Option[String] = None
-)
+) extends OpSpec
 
 /** Scan-stage near-duplicate PROBE against a persisted MinHash band
   * index (NS; Dedup.nearDupProbeBloom): a Bloom filter over the index's
@@ -448,7 +453,7 @@ final case class NearDupProbeSpec(
     flagCol: String = "near_dup",
     expectedKeys: Long = 1L << 22,
     fpp: Double = 0.01
-)
+) extends OpSpec
 
 /** Deterministic train/val/test split (NS; Corpus.hashSplit): adds
   * `splitCol` naming each row's bucket by portable multiplicative hash of
@@ -459,7 +464,7 @@ final case class SplitSpec(
     idCol: String,
     buckets: Seq[(String, Double)],
     splitCol: String = "split"
-)
+) extends OpSpec
 
 /** Temperature-based mixture resampling (NS; Corpus.temperatureSample):
   * resample so group `groupCol`'s share follows p^alpha renormalized,
@@ -473,7 +478,7 @@ final case class TemperatureSampleSpec(
     idCol: String,
     targetFraction: Double,
     alpha: Double = 0.5
-)
+) extends OpSpec
 
 /** Token-budget mixture sampling (NS; Corpus.tokenBudgetSample): keep
   * docs per group in deterministic hash order until each group's TOKEN
@@ -493,7 +498,7 @@ final case class TokenBudgetSampleSpec(
     overshoot: Boolean = true,
     orderCol: Option[String] = None, // score-ordered selection (quality-first)
     descending: Boolean = true // order_col direction; ignored without it
-)
+) extends OpSpec
 
 /** Deterministic global shuffle + sharding (NS; Corpus.globalShuffle):
   * adds (`shard`, `shuffle_pos`) — an id-keyed, seed-parameterized,
@@ -505,7 +510,7 @@ final case class GlobalShuffleSpec(
     idCol: String,
     shards: Int,
     seed: Long = 0L
-)
+) extends OpSpec
 
 /** DSIR importance weighting / resampling (NS; Corpus.dsirWeights /
   * dsirSelect — Xie et al. 2023): score every row of this node's frame
@@ -531,7 +536,7 @@ final case class DsirSpec(
     // the scan-stage selection path for n beyond the TakeOrdered budget
     threshold: Option[Double] = None,
     relativeError: Double = 1e-4
-)
+) extends OpSpec
 
 /** Winnowed fingerprinting (NS; Dedup.winnowIndex /
   * winnowCandidatePairs — the MOSS algorithm): `output: "index"`
@@ -547,7 +552,7 @@ final case class WinnowSpec(
     winnowWindow: Int = 8,
     output: String = "index", // index | pairs
     minShared: Int = 1
-)
+) extends OpSpec
 
 /** Scan-stage winnow PROBE (NS; Dedup.winnowProbeBloom): a Bloom over
   * a persisted winnowIndexFps table (parquet at `indexDir`) builds at
@@ -567,7 +572,7 @@ final case class WinnowProbeSpec(
     flagCol: String = "near_dup",
     expectedKeys: Long = 1L << 22,
     fpp: Double = 0.01
-)
+) extends OpSpec
 
 /** WebDataset sample grouping (NS; Tar.wdsSamples): the frame's
   * (name, data) member rows become one row per SAMPLE — (sample_key,
@@ -577,7 +582,7 @@ final case class WinnowProbeSpec(
 final case class WdsSamplesSpec(
     nameCol: String,
     dataCol: String
-)
+) extends OpSpec
 
 /** Collocation mining (NS; TextAnalysis.collocations): the frame's
   * `textCol` corpus becomes its top-`topK` adjacent word pairs by
@@ -591,7 +596,7 @@ final case class CollocationsSpec(
     minCount: Int = 5,
     topK: Int = 100,
     groupCols: Seq[String] = Nil // per-group lexicons (e.g. per language)
-)
+) extends OpSpec
 
 /** BM25 top-k retrieval (NS; Retrieval.bm25TopK): rank this node's
   * frame (the corpus) against the query table named by `queriesRef` (a
@@ -609,7 +614,7 @@ final case class Bm25Spec(
     b: Double = 0.75,
     topK: Int = 10,
     proxWeight: Double = 0.0 // > 0: add bigram-adjacency (phrase) scoring
-)
+) extends OpSpec
 
 /** Build/maintain an at-rest BM25 index (NS; Retrieval.saveBm25Index) —
   * the ann_index artifact pattern applied to lexical retrieval
@@ -633,7 +638,7 @@ final case class Bm25IndexSpec(
     // its rows duplicated if folded first). Without it, every landed
     // dir folds: exact for a quiesced stream.
     checkpoint: Option[String] = None
-)
+) extends OpSpec
 
 /** BM25 search against a saved index (NS; Retrieval.bm25SearchIndex):
   * the frame (the QUERY set) becomes (qid_col, <index id_col>, score,
@@ -648,7 +653,7 @@ final case class Bm25SearchSpec(
     b: Double = 0.75,
     topK: Int = 10,
     proxWeight: Double = 0.0
-)
+) extends OpSpec
 
 /** Reciprocal-rank fusion (NS; Retrieval.rrfFuse): the frame — a UNION
   * of ranked lists as (queryCol, docCol, rankCol) rows, typically
@@ -665,7 +670,7 @@ final case class RrfFuseSpec(
     topK: Int = 10,
     rrfK: Int = 60,
     weightCol: Option[String] = None // weighted RRF: w/(k+rank) per row
-)
+) extends OpSpec
 
 /** Ordered funnel analysis (NS; Relational.funnel): per key, step 1
   * anchors at the first `steps(0)` event and step i completes at the
@@ -684,7 +689,7 @@ final case class FunnelSpec(
     steps: Seq[String],
     window: Option[String] = None,
     anchor: String = "first"
-)
+) extends OpSpec
 
 /** Range (point-in-interval) join (NS; Relational.rangeJoin): each frame
   * row's `pointCol` probes the intervals def named by `intervalsRef`
@@ -706,7 +711,7 @@ final case class RangeJoinSpec(
     inclusiveHi: Boolean = false,
     broadcast: Boolean = false,
     maxBucketsPerInterval: Int = 1 << 16
-)
+) extends OpSpec
 
 /** Connected components (NS; Dedup.dedupClusters exposed generically):
   * the node's frame is an EDGE table — each row links `srcCol` to
@@ -726,7 +731,7 @@ final case class ConnectedComponentsSpec(
     maxIter: Int = 20,
     smallGraphEdges: Long = 1L << 20,
     checkpointDir: Option[String] = None
-)
+) extends OpSpec
 
 /** Interval-overlap join (NS; Relational.overlapJoin): each frame row's
   * `[loCol, hiCol)` span pairs with every OVERLAPPING span of the def
@@ -753,7 +758,7 @@ final case class OverlapJoinSpec(
     broadcast: Boolean = false,
     maxBucketsPerInterval: Int = 1 << 16,
     how: String = "inner"
-)
+) extends OpSpec
 
 /** Snapshot diff (NS; Relational.snapshotDiff): the node's frame is the
   * NEW corpus snapshot; `otherRef` names a def holding the OLD one. Rows
@@ -771,7 +776,7 @@ final case class DiffSpec(
     changedCol: String = "changed_cols",
     includeUnchanged: Boolean = false,
     carry: String = "none" // none | new
-)
+) extends OpSpec
 
 /** Apply a snapshot diff (NS; Relational.applyDiff) — the inverse that
   * closes the diff lifecycle: the node's frame is the BASE (old)
@@ -786,7 +791,7 @@ final case class ApplyDiffSpec(
     deltaRef: String,
     statusCol: String = "diff_status",
     changedCol: String = "changed_cols"
-)
+) extends OpSpec
 
 /** Resample / gap-fill (NS; Relational.resample): per key, re-grid an
   * irregular event series onto a regular `step` grid over that key's
@@ -801,7 +806,7 @@ final case class ResampleSpec(
     aggs: Seq[AggSpec],
     fill: String = "none",
     maxBucketsPerKey: Long = 1L << 20
-)
+) extends OpSpec
 
 /** Heavy hitters (NS; Relational.approxTopK): the frame becomes its
   * top-`k` most frequent `keyCol` values (keyCol, count, rn) from ONE
@@ -814,7 +819,7 @@ final case class ApproxTopKSpec(
     keyCol: String,
     k: Int = 10,
     maxItemsTracked: Int = 10000
-)
+) extends OpSpec
 
 /** Unpivot / melt (NS; Relational.unpivot): wide → long, one output row
   * per value column keyed by `ids`, column name in `varCol`, value in
@@ -827,7 +832,7 @@ final case class UnpivotSpec(
     values: Seq[String] = Nil,
     varCol: String = "variable",
     valCol: String = "value"
-)
+) extends OpSpec
 
 /** Per-row upsampling (NS; Corpus.upsample): emit `factorCol` copies of
   * each row tagged 0..factor−1 in `copyCol` — the repeat-k-epochs half
@@ -838,7 +843,7 @@ final case class UnpivotSpec(
 final case class UpsampleSpec(
     factorCol: String,
     copyCol: String = "copy"
-)
+) extends OpSpec
 
 /** Ranking-quality evaluation (NS; Retrieval.rankingEval): the frame (a
   * ranked result table — bm25 / ann_search / rrf_fuse output) joins the
@@ -853,7 +858,7 @@ final case class RankingEvalSpec(
     rankCol: String,
     qrelsRef: String,
     k: Int = 10
-)
+) extends OpSpec
 
 /** Build + persist an at-rest IVF ANN index (NS; Similarity.saveAnnIndex):
   * the frame (the embedding corpus) writes `dir/centroids` (bounded
@@ -881,7 +886,7 @@ final case class AnnIndexSpec(
     // compact-only: the ann_ingest stream's checkpointLocation — folds
     // only COMMITTED batch dirs (see Bm25IndexSpec.checkpoint)
     checkpoint: Option[String] = None
-)
+) extends OpSpec
 
 /** ANN search against a saved index (NS; Similarity.annSearchIndex): the
   * frame (the QUERY set) becomes (id_col, match_id, score, rank) — each
@@ -900,7 +905,7 @@ final case class AnnSearchSpec(
     // allowed subset (post-filtering would silently under-return)
     allowRef: Option[String] = None,
     allowIdCol: String = "id"
-)
+) extends OpSpec
 
 /** Generic quantile-threshold selection (NS; Corpus.quantileFilter):
   * keep the ~`keep_n` best rows by any numeric column — the cut derives
@@ -914,7 +919,7 @@ final case class QuantileFilterSpec(
     keepN: Long,
     descending: Boolean = true,
     relativeError: Double = 1e-4
-)
+) extends OpSpec
 
 /** Scan-stage semantic probe against a saved ANN index (NS;
   * Similarity.annProbeIndex) — the embedding sibling of near_dup_probe /
@@ -930,7 +935,7 @@ final case class AnnProbeSpec(
     threshold: Double,
     scoreCol: String = "ann_score",
     flagCol: String = "ann_match"
-)
+) extends OpSpec
 
 /** WebDataset tar sharding (NS; Tar.tarShards): the frame's (name,
   * payload) rows become per-shard deterministic tar blobs —
@@ -942,7 +947,7 @@ final case class TarPackSpec(
     nameCol: String,
     payloadCol: String,
     shards: Int
-)
+) extends OpSpec
 
 /** Compact a landed shard set (NS; Tar.tarCompact): explode every
   * archive in this node's frame back into members and re-pack to
@@ -954,7 +959,7 @@ final case class TarCompactSpec(
     tarCol: String,
     shards: Int,
     batchCol: Option[String] = None
-)
+) extends OpSpec
 
 /** Damped PageRank over this node's frame read as an edge list (NS;
   * Graph.pageRank): the frame becomes (node, rank) — the host-authority
@@ -967,7 +972,7 @@ final case class PageRankSpec(
     iters: Int = 3,
     damping: Double = 0.85,
     tol: Double = 0.0 // > 0: stop once max |Δrank| < tol (iters = hard cap)
-)
+) extends OpSpec
 
 /** Artifact-loaded DSIR scoring (NS; Corpus.loadDsirModel + dsirScore):
   * the streaming-admissible inference half — the log-ratio table loads
@@ -976,7 +981,7 @@ final case class PageRankSpec(
 final case class DsirScoreSpec(
     modelDir: String,
     textCol: String
-)
+) extends OpSpec
 
 /** Per-column data-quality profile (NS; Relational.profile): the frame
   * becomes one row per profiled column — (col_name, n_rows, n_nulls,
@@ -987,7 +992,7 @@ final case class ProfileSpec(
     columns: Seq[String],
     approx: Boolean = false,
     groupCols: Seq[String] = Nil // per-slice profile (e.g. per source)
-)
+) extends OpSpec
 
 /** HTML text extraction (NS; TextAnalysis.htmlExtract): the frame
   * becomes (idCol, title, body_text, links) — visible text with
@@ -997,7 +1002,7 @@ final case class ProfileSpec(
 final case class HtmlExtractSpec(
     idCol: String,
     htmlCol: String
-)
+) extends OpSpec
 
 /** PDF text extraction (NS; TextAnalysis.pdfExtract): the frame becomes
   * (idCol, version, n_pages, text) — the `application/pdf` sibling of
@@ -1007,7 +1012,7 @@ final case class HtmlExtractSpec(
 final case class PdfExtractSpec(
     idCol: String,
     pdfCol: String
-)
+) extends OpSpec
 
 /** Boilerplate line removal (NS; Corpus.removeBoilerplateLines): drop
   * every line occurring in more than `maxDocs` distinct documents and
@@ -1019,7 +1024,7 @@ final case class BoilerplateSpec(
     maxDocs: Long,
     sep: String = "\n",
     byHash: Boolean = true
-)
+) extends OpSpec
 
 /** Exact deduplication on `keys` (NS; not in the reference).
   * `idCol` set → deterministic winner: the row with the minimum id per key
@@ -1071,7 +1076,7 @@ final case class FeaturizeSpec(
     idCol: String,
     payloadCol: String,
     decoder: String = "media"
-)
+) extends OpSpec
 
 /** Per-key running totals with custom streaming state (NS; config surface
   * of `Streaming.runningTotals` — flatMapGroupsWithState, two longs of
@@ -1128,7 +1133,7 @@ final case class ImageDedupSpec(
     maxDist: Int = 6,
     output: String = "pairs",
     retention: Option[RetentionSpec] = None // clusters output only
-)
+) extends OpSpec
 
 /** Text SimHash near-dup (NS; Dedup.simhashPairs / simhashClusters):
   * 64-bit SimHash over token hashes, pigeonhole-banded Hamming pairs
@@ -1144,7 +1149,7 @@ final case class SimhashDedupSpec(
     maxDist: Int = 3,
     output: String = "pairs",
     retention: Option[RetentionSpec] = None // clusters output only
-)
+) extends OpSpec
 
 /** Exact substring-level dedup (NS; Dedup.duplicatePassageSpans /
   * stripDuplicatePassages): duplicated `window_tokens`-token passages
@@ -1157,7 +1162,7 @@ final case class PassageDedupSpec(
     textCol: String,
     windowTokens: Int = 50,
     output: String = "spans" // or "strip": input + clean_text/dropped_tokens
-)
+) extends OpSpec
 
 /** Perceptual audio dedup (NS; Multimodal.audioNearDupPairs): the frame
   * becomes all clip pairs (idA, idB, dist) whose 64-bit amplitude-
@@ -1170,7 +1175,7 @@ final case class AudioDedupSpec(
     maxDist: Int = 6,
     output: String = "pairs",
     retention: Option[RetentionSpec] = None // clusters output only
-)
+) extends OpSpec
 
 /** Continuous near-dup ingestion (NS; Streaming.nearDupIngest): the
   * STREAMING-ONLY root sink — each micro-batch probes the persisted band
@@ -1193,7 +1198,7 @@ final case class NearDupIngestSpec(
     // compacted dir every N non-empty batches, inside foreachBatch —
     // the unattended small-files defense (see IngestCompactSpec)
     compactEvery: Option[Int] = None
-)
+) extends OpSpec
 
 /** Continuous substring-level dedup ingestion (NS;
   * Streaming.passageIngest): the [[NearDupIngestSpec]] contract at
@@ -1210,7 +1215,7 @@ final case class PassageIngestSpec(
     checkpointDir: String,
     windowTokens: Int = 50,
     compactEvery: Option[Int] = None // see NearDupIngestSpec
-)
+) extends OpSpec
 
 /** Continuous EXACT-dedup ingestion (NS; Streaming.exactIngest): the
   * [[NearDupIngestSpec]] contract at the exact tier — each micro-batch
@@ -1230,7 +1235,7 @@ final case class ExactIngestSpec(
     indexDir: String,
     checkpointDir: String,
     compactEvery: Option[Int] = None // see NearDupIngestSpec
-)
+) extends OpSpec
 
 /** Fold the COMMITTED `batch=<id>` dirs of partition-grown ingest AREAS
   * (the exact/near_dup/passage corpus + index dirs, the semantic classes
@@ -1257,7 +1262,7 @@ final case class ExactIngestSpec(
 final case class IngestCompactSpec(
     dirs: Seq[String],
     checkpoint: Option[String] = None
-)
+) extends OpSpec
 
 /** Continuous sketch-table maintenance (NS; Streaming.sketchIngest):
   * each micro-batch appends one row (per optional `groupCols` value)
@@ -1272,7 +1277,7 @@ final case class SketchIngestSpec(
     maxItemsTracked: Int = 10000,
     lgK: Int = 12,
     groupCols: Seq[String] = Nil
-)
+) extends OpSpec
 
 /** Scan-stage SEEN probe against a persisted key index (NS;
   * Dedup.seenProbeBloom): adds boolean `flagCol` — true when the row's
@@ -1291,7 +1296,7 @@ final case class SeenProbeSpec(
     flagCol: String = "seen",
     expectedKeys: Long = 1L << 22,
     fpp: Double = 0.01
-)
+) extends OpSpec
 
 /** EXACT seen filter against a persisted key index (NS;
   * Dedup.seenFilter): `mode: "drop"` removes rows whose `keyCol` is in
@@ -1307,7 +1312,7 @@ final case class SeenFilterSpec(
     indexDir: String,
     mode: String = "drop", // "drop" (left-anti) | "flag" (adds flagCol)
     flagCol: String = "seen"
-)
+) extends OpSpec
 
 /** Fixed-length training-sequence packing (NS; Pack.sequencePack): the
   * frame becomes `(shard, seq, ids, n_tokens)` — per-shard concatenation
@@ -1324,7 +1329,7 @@ final case class SequencePackSpec(
     mode: String = "split", // "split" (slice the stream) | "whole" (next-fit, docs never split)
     withBounds: Boolean = false, // add doc_starts (position-id reset slots)
     padId: Int = -1 // >= 0: pad short kept windows to seq_len
-)
+) extends OpSpec
 
 /** Continuous WebDataset shard packing (NS; Streaming.shardPackStream):
   * the STREAMING-ONLY root sink of the tokenized-shards product — each
@@ -1340,7 +1345,7 @@ final case class TarPackIngestSpec(
     outDir: String,
     checkpointDir: String,
     trigger: Option[String] = None
-)
+) extends OpSpec
 
 /** Continuous BM25-index maintenance (NS; Streaming.bm25Ingest) — the
   * LEXICAL member of the continuous-ingest family (exact/near-dup/
@@ -1368,7 +1373,7 @@ final case class Bm25IngestSpec(
     // in the delta for a crash replay to overwrite) — unattended
     // streams stop needing an external mode:"compact" cadence
     compactEvery: Option[Int] = None
-)
+) extends OpSpec
 
 /** Continuous ANN-index maintenance (NS; Streaming.annIngest) — the
   * vector sibling of [[Bm25IngestSpec]], completing the
@@ -1388,7 +1393,7 @@ final case class AnnIngestSpec(
     // micro-batches, inside foreachBatch and scoped to pre-current
     // (committed) batches — see Bm25IngestSpec.compactEvery
     compactEvery: Option[Int] = None
-)
+) extends OpSpec
 
 /** One pipeline node = the reference's per-config processing unit:
   * source → filters → keep_columns → aggregate → rename → withColumns →
@@ -1404,62 +1409,7 @@ final case class NodeSpec(
     watermark: Option[WatermarkSpec] = None,
     dedup: Option[DedupSpec] = None,
     keepColumns: Seq[String] = Nil,
-    nearDup: Option[NearDupSpec] = None, // after keep, before aggregate
-    semanticDedup: Option[SemanticDedupSpec] = None, // after keep, before aggregate
-    editDedup: Option[EditDedupSpec] = None, // after keep, before aggregate
-    imageDedup: Option[ImageDedupSpec] = None, // after keep, before aggregate
-    simhashDedup: Option[SimhashDedupSpec] = None, // same slot, text tier
-    audioDedup: Option[AudioDedupSpec] = None, // after keep, before aggregate
-    passageDedup: Option[PassageDedupSpec] = None, // after keep, before aggregate
-    lmPerplexity: Option[LmPerplexitySpec] = None, // after keep, before aggregate
-    qualityClassifier: Option[QualityClassifierSpec] = None, // after keep, before aggregate
-    multiclassClassifier: Option[MulticlassClassifierSpec] = None, // after keep, before aggregate
-    predictModel: Option[PredictModelSpec] = None, // after keep, before aggregate
-    scoreModel: Option[ScoreModelSpec] = None, // after keep, before aggregate
-    bpe: Option[BpeSpec] = None, // after keep, before aggregate
-    bpeApply: Option[BpeApplySpec] = None, // after keep, before aggregate
-    chunk: Option[ChunkSpec] = None, // after bpe_apply (ids tier composes bpe→chunk→pack)
-    nearDupProbe: Option[NearDupProbeSpec] = None, // after keep, before aggregate
-    seenProbe: Option[SeenProbeSpec] = None, // after keep, before aggregate
-    seenFilter: Option[SeenFilterSpec] = None, // after keep, before aggregate
-    cmsProbe: Option[CmsProbeSpec] = None, // after keep, before aggregate
-    dsir: Option[DsirSpec] = None, // after keep, before aggregate
-    pageRank: Option[PageRankSpec] = None, // after keep, before aggregate
-    tarPack: Option[TarPackSpec] = None, // after keep, before aggregate
-    tarCompact: Option[TarCompactSpec] = None, // after keep, before aggregate
-    annIndex: Option[AnnIndexSpec] = None, // after keep, before aggregate
-    annSearch: Option[AnnSearchSpec] = None, // after keep, before aggregate
-    annProbe: Option[AnnProbeSpec] = None, // after keep, before aggregate
-    quantileFilter: Option[QuantileFilterSpec] = None, // after keep, before aggregate
-    wdsSamples: Option[WdsSamplesSpec] = None, // after keep, before aggregate
-    winnow: Option[WinnowSpec] = None, // after keep, before aggregate
-    winnowProbe: Option[WinnowProbeSpec] = None, // after keep, before aggregate
-    bm25: Option[Bm25Spec] = None, // after keep, before aggregate
-    bm25Index: Option[Bm25IndexSpec] = None, // after keep, before aggregate
-    bm25Search: Option[Bm25SearchSpec] = None, // after keep, before aggregate
-    rrfFuse: Option[RrfFuseSpec] = None, // after keep, before aggregate (input: a combine union of ranked lists)
-    rankingEval: Option[RankingEvalSpec] = None, // after keep, before aggregate
-    upsample: Option[UpsampleSpec] = None, // after keep, before aggregate
-    funnel: Option[FunnelSpec] = None, // after keep, before aggregate
-    rangeJoin: Option[RangeJoinSpec] = None, // after keep, before aggregate
-    overlapJoin: Option[OverlapJoinSpec] = None, // after range_join
-    collocations: Option[CollocationsSpec] = None, // after keep, before aggregate
-    connectedComponents: Option[ConnectedComponentsSpec] = None, // after keep
-    diff: Option[DiffSpec] = None, // after keep, before aggregate
-    applyDiff: Option[ApplyDiffSpec] = None, // after diff
-    unpivot: Option[UnpivotSpec] = None, // after keep, before aggregate
-    approxTopK: Option[ApproxTopKSpec] = None, // after keep, before aggregate
-    resample: Option[ResampleSpec] = None, // after keep, before aggregate
-    dsirScore: Option[DsirScoreSpec] = None, // after keep, before aggregate
-    split: Option[SplitSpec] = None, // after keep, before aggregate
-    temperatureSample: Option[TemperatureSampleSpec] = None, // after split
-    tokenBudgetSample: Option[TokenBudgetSampleSpec] = None, // after temperature_sample
-    globalShuffle: Option[GlobalShuffleSpec] = None, // after temperature_sample
-    htmlExtract: Option[HtmlExtractSpec] = None, // after keep, before aggregate
-    pdfExtract: Option[PdfExtractSpec] = None, // after keep, before aggregate
-    profile: Option[ProfileSpec] = None, // after keep, before aggregate
-    boilerplate: Option[BoilerplateSpec] = None, // after keep, before aggregate
-    featurize: Option[FeaturizeSpec] = None, // after keep, before aggregate
+    ops: Seq[OpSpec] = Nil, // registry operators in registry order: transforms after keep, before aggregate; root sinks
     aggregate: Option[AggregateSpec] = None,
     rename: Seq[(String, String)] = Nil,
     withColumns: Seq[(String, String)] = Nil, // name -> Catalyst expr string
@@ -1476,17 +1426,15 @@ final case class NodeSpec(
     orderBy: Seq[String] = Nil, // "col", "col asc", "col desc" [nulls first|last]
     limit: Option[Int] = None,
     save: Option[SinkSpec] = None,
-    nearDupIngest: Option[NearDupIngestSpec] = None, // streaming-only root sink
-    passageIngest: Option[PassageIngestSpec] = None, // streaming-only root sink
-    exactIngest: Option[ExactIngestSpec] = None, // streaming-only root sink
-    sketchIngest: Option[SketchIngestSpec] = None, // streaming-only root sink
-    tarPackIngest: Option[TarPackIngestSpec] = None, // streaming-only root sink
-    bm25Ingest: Option[Bm25IngestSpec] = None, // streaming-only root sink
-    annIngest: Option[AnnIngestSpec] = None, // streaming-only root sink
-    ingestCompact: Option[IngestCompactSpec] = None, // batch-only artifact maintenance
-    sequencePack: Option[SequencePackSpec] = None, // after bpe_apply, before with_columns
     cache: Boolean = false // defs-only: persist() the compiled stage
-)
+) {
+  require(ops.map(_.getClass).distinct.size == ops.size,
+    s"node $id: each operator may appear once, got ${ops.mkString(", ")}")
+
+  /** This node's operator of type `T`, if it has one. */
+  def op[T <: OpSpec](implicit t: scala.reflect.ClassTag[T]): Option[T] =
+    ops.collectFirst { case o: T => o }
+}
 
 /** Iteration×level cascade (ref: `Optimus/optimus.py:40-51`): one source,
   * each iteration applies its levels sequentially — output of level k is

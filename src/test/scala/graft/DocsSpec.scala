@@ -30,4 +30,14 @@ class DocsSpec extends AnyFunSuite {
     assert(failures.isEmpty,
       s"stale cookbook configs:\n${failures.mkString("\n")}")
   }
+
+  test("docs/USAGE.md: every operator registry key has a Node keys row") {
+    val usage = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("docs/USAGE.md")),
+      "UTF-8")
+    val table = usage.split("### Node keys")(1).split("\n### ")(0)
+    val rows = "(?m)^\\| `([a-z_0-9]+)` \\|".r.findAllMatchIn(table).map(_.group(1)).toSet
+    val missing = graft.compile.Operators.all.map(_.key).filterNot(rows)
+    assert(missing.isEmpty, s"registry keys without a Node keys row: ${missing.mkString(", ")}")
+  }
 }

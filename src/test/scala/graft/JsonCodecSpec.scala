@@ -108,7 +108,7 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "embeddings"},
        "near_dup": {"id_col": "vec_id", "vec_col": "embedding",
                     "threshold": 0.8, "dim": 64}}""")
-    val d = n.nearDup.get
+    val d = n.op[NearDupSpec].get
     assert(d.idCol == "vec_id" && d.threshold == 0.8 && d.dim == 64)
     assert(d.numBits == 64 && d.bands == 8) // production defaults
     assert(d.output == "pairs")
@@ -116,7 +116,7 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "embeddings"},
        "near_dup": {"id_col": "a", "vec_col": "v", "threshold": 0.8,
                     "dim": 64, "output": "clusters"}}""")
-      .nearDup.get.output == "clusters")
+      .op[NearDupSpec].get.output == "clusters")
     val e = intercept[IllegalArgumentException](root(
       """{"near_dup": {"id_col": "a", "vec_col": "v", "dim": 64}}"""))
     assert(e.getMessage.contains("threshold"))
@@ -153,7 +153,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val m = root("""
       {"source": {"table": "documents"},
        "multiclass_classifier": {"id_col": "doc_id", "text_col": "text",
-                                 "label_col": "lang"}}""").multiclassClassifier.get
+                                 "label_col": "lang"}}""").op[MulticlassClassifierSpec].get
     assert(m.idCol == "doc_id" && m.textCol == "text" && m.labelCol == "lang")
     assert(m.dim == 1024 && m.epochs == 8 && m.lr == 0.8)
     assert(m.predCol == "pred_label" && !m.keepScores)
@@ -162,7 +162,7 @@ class JsonCodecSpec extends AnyFunSuite {
        "multiclass_classifier": {"id_col": "a", "text_col": "t",
                                  "label_col": "l", "pred_col": "p",
                                  "keep_scores": true}}""")
-      .multiclassClassifier.get.keepScores)
+      .op[MulticlassClassifierSpec].get.keepScores)
     val e = intercept[IllegalArgumentException](root(
       """{"multiclass_classifier": {"id_col": "a", "text_col": "t"}}"""))
     assert(e.getMessage.contains("label_col"))
@@ -171,7 +171,7 @@ class JsonCodecSpec extends AnyFunSuite {
   test("predict_model node key decodes with defaults and names missing fields") {
     val p = root("""
       {"source": {"table": "documents"},
-       "predict_model": {"text_col": "text", "model_dir": "/m"}}""").predictModel.get
+       "predict_model": {"text_col": "text", "model_dir": "/m"}}""").op[PredictModelSpec].get
     assert(p.textCol == "text" && p.modelDir == "/m")
     assert(p.predCol == "pred_label" && !p.keepScores)
     val e = intercept[IllegalArgumentException](root(
@@ -183,7 +183,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val d = root("""
       {"source": {"table": "embeddings"},
        "semantic_dedup": {"id_col": "vec_id", "vec_col": "embedding",
-                          "threshold": 0.9, "dim": 64}}""").semanticDedup.get
+                          "threshold": 0.9, "dim": 64}}""").op[SemanticDedupSpec].get
     assert(d.idCol == "vec_id" && d.vecCol == "embedding")
     assert(d.threshold == 0.9 && d.dim == 64)
     assert(d.nlist == 16 && d.refineRounds == 0 && !d.exact)
@@ -192,7 +192,7 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "embeddings"},
        "semantic_dedup": {"id_col": "a", "vec_col": "v", "threshold": 0.8,
                           "dim": 8, "nlist": 4, "refine_rounds": 2,
-                          "exact": true, "output": "labels"}}""").semanticDedup.get
+                          "exact": true, "output": "labels"}}""").op[SemanticDedupSpec].get
     assert(full.nlist == 4 && full.refineRounds == 2 && full.exact)
     assert(full.output == "labels")
     val e = intercept[IllegalArgumentException](root(
@@ -207,12 +207,12 @@ class JsonCodecSpec extends AnyFunSuite {
   test("global_shuffle node key decodes with defaults and names missing fields") {
     val g = root("""
       {"source": {"table": "documents"},
-       "global_shuffle": {"id_col": "doc_id", "shards": 8}}""").globalShuffle.get
+       "global_shuffle": {"id_col": "doc_id", "shards": 8}}""").op[GlobalShuffleSpec].get
     assert(g.idCol == "doc_id" && g.shards == 8 && g.seed == 0L)
     assert(root("""
       {"source": {"table": "documents"},
        "global_shuffle": {"id_col": "doc_id", "shards": 4, "seed": 99}}""")
-      .globalShuffle.get.seed == 99L)
+      .op[GlobalShuffleSpec].get.seed == 99L)
     val e = intercept[IllegalArgumentException](root(
       """{"global_shuffle": {"id_col": "doc_id"}}"""))
     assert(e.getMessage.contains("shards"))
@@ -223,7 +223,7 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "documents"},
        "edit_dedup": {"id_col": "doc_id", "text_col": "text",
                       "block_expr": "substring(text, 1, 24)"}}""")
-    val d = n.editDedup.get
+    val d = n.op[EditDedupSpec].get
     assert(d.idCol == "doc_id" && d.blockExpr == "substring(text, 1, 24)")
     // hot-bucket cap is default-ON (round-7 advice: uncapped-by-default
     // in-bucket n² is a scale-killer exactly where corpora skew)
@@ -233,14 +233,14 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "documents"},
        "edit_dedup": {"id_col": "doc_id", "text_col": "text",
                       "block_expr": "lower(text)", "threshold": 0.9,
-                      "max_distance": 8, "max_bucket_size": 100}}""").editDedup.get
+                      "max_distance": 8, "max_bucket_size": 100}}""").op[EditDedupSpec].get
     assert(full.maxDistance.contains(8) &&
       full.bucketCap == graft.ops.BucketCap.Max(100))
     val off = root("""
       {"source": {"table": "documents"},
        "edit_dedup": {"id_col": "doc_id", "text_col": "text",
                       "block_expr": "lower(text)",
-                      "max_bucket_size": "off"}}""").editDedup.get
+                      "max_bucket_size": "off"}}""").op[EditDedupSpec].get
     assert(off.bucketCap == graft.ops.BucketCap.Off)
     val bad = intercept[IllegalArgumentException](root("""
       {"source": {"table": "documents"},
@@ -256,17 +256,17 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "image_dedup": {"id_col": "doc_id", "payload_col": "payload"}}""")
-    val d = n.imageDedup.get
+    val d = n.op[ImageDedupSpec].get
     assert(d.idCol == "doc_id" && d.payloadCol == "payload" && d.maxDist == 6)
     assert(d.output == "pairs") // default shape unchanged by the clusters tier
     assert(root("""
       {"source": {"table": "documents"},
        "image_dedup": {"id_col": "a", "payload_col": "p", "max_dist": 10}}""")
-      .imageDedup.get.maxDist == 10)
+      .op[ImageDedupSpec].get.maxDist == 10)
     assert(root("""
       {"source": {"table": "documents"},
        "image_dedup": {"id_col": "a", "payload_col": "p", "output": "clusters"}}""")
-      .imageDedup.get.output == "clusters")
+      .op[ImageDedupSpec].get.output == "clusters")
     val e = intercept[IllegalArgumentException](root(
       """{"image_dedup": {"id_col": "a"}}"""))
     assert(e.getMessage.contains("payload_col"))
@@ -280,14 +280,14 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "simhash_dedup": {"id_col": "doc_id", "text_col": "text"}}""")
-    val d = n.simhashDedup.get
+    val d = n.op[SimhashDedupSpec].get
     assert(d.idCol == "doc_id" && d.textCol == "text" && d.maxDist == 3)
     assert(d.output == "pairs")
     assert(root("""
       {"source": {"table": "documents"},
        "simhash_dedup": {"id_col": "a", "text_col": "t", "max_dist": 6,
                          "output": "clusters"}}""")
-      .simhashDedup.get.output == "clusters")
+      .op[SimhashDedupSpec].get.output == "clusters")
     val e = intercept[IllegalArgumentException](root(
       """{"simhash_dedup": {"id_col": "a"}}"""))
     assert(e.getMessage.contains("text_col"))
@@ -300,10 +300,10 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "lineitem"},
        "profile": {"columns": ["a", "b"]}}""")
-    assert(n.profile.get.columns == Seq("a", "b") && !n.profile.get.approx)
+    assert(n.op[ProfileSpec].get.columns == Seq("a", "b") && !n.op[ProfileSpec].get.approx)
     assert(root("""
       {"source": {"table": "lineitem"},
-       "profile": {"columns": ["a"], "approx": true}}""").profile.get.approx)
+       "profile": {"columns": ["a"], "approx": true}}""").op[ProfileSpec].get.approx)
     val e = intercept[IllegalArgumentException](root(
       """{"profile": {"columns": []}}"""))
     assert(e.getMessage.contains("non-empty"))
@@ -313,7 +313,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "html_extract": {"id_col": "doc_id", "html_col": "html"}}""")
-    val h = n.htmlExtract.get
+    val h = n.op[HtmlExtractSpec].get
     assert(h.idCol == "doc_id" && h.htmlCol == "html")
     val e = intercept[IllegalArgumentException](root(
       """{"html_extract": {"id_col": "doc_id"}}"""))
@@ -323,14 +323,14 @@ class JsonCodecSpec extends AnyFunSuite {
   test("round-11 node keys decode with defaults and name missing fields") {
     val qc = root("""
       {"quality_classifier": {"id_col": "id", "text_col": "t",
-                              "label_col": "y"}}""").qualityClassifier.get
+                              "label_col": "y"}}""").op[QualityClassifierSpec].get
     assert(qc.dim == 1024 && qc.epochs == 8 && qc.threshold == 0.5)
     assert(intercept[IllegalArgumentException](root(
       """{"quality_classifier": {"id_col": "id", "text_col": "t"}}"""))
       .getMessage.contains("label_col"))
 
     val cms = root("""
-      {"cms_probe": {"key_col": "token", "probes": ["a", "b"]}}""").cmsProbe.get
+      {"cms_probe": {"key_col": "token", "probes": ["a", "b"]}}""").op[CmsProbeSpec].get
     assert(cms.eps == 1e-4 && cms.confidence == 0.99 && cms.seed == 42 &&
       cms.probes == Seq("a", "b"))
     assert(intercept[IllegalArgumentException](root(
@@ -340,33 +340,33 @@ class JsonCodecSpec extends AnyFunSuite {
       """{"cms_probe": {"probes": ["a"]}}"""))
       .getMessage.contains("key_col"))
 
-    val bp = root("""{"bpe": {"text_col": "t"}}""").bpe.get
+    val bp = root("""{"bpe": {"text_col": "t"}}""").op[BpeSpec].get
     assert(bp.numMerges == 16 && bp.output == "merges")
     assert(intercept[IllegalArgumentException](root(
       """{"bpe": {}}""")).getMessage.contains("text_col"))
 
     val pe = root("""
-      {"pdf_extract": {"id_col": "id", "pdf_col": "p"}}""").pdfExtract.get
+      {"pdf_extract": {"id_col": "id", "pdf_col": "p"}}""").op[PdfExtractSpec].get
     assert(pe.idCol == "id" && pe.pdfCol == "p")
   }
 
   test("artifact-inference node keys decode with defaults and name missing fields") {
     val sm = root("""
-      {"score_model": {"text_col": "t", "model_dir": "/tmp/m"}}""").scoreModel.get
+      {"score_model": {"text_col": "t", "model_dir": "/tmp/m"}}""").op[ScoreModelSpec].get
     assert(sm.scoreCol == "score" && sm.predCol == "pred" && sm.threshold == 0.5)
     assert(intercept[IllegalArgumentException](root(
       """{"score_model": {"text_col": "t"}}"""))
       .getMessage.contains("model_dir"))
 
     val ba = root("""
-      {"bpe_apply": {"text_col": "t", "merges_dir": "/tmp/b"}}""").bpeApply.get
+      {"bpe_apply": {"text_col": "t", "merges_dir": "/tmp/b"}}""").op[BpeApplySpec].get
     assert(ba.textCol.contains("t") && ba.mergesDir == "/tmp/b")
     assert(intercept[IllegalArgumentException](root(
       """{"bpe_apply": {"merges_dir": "/tmp/b"}}"""))
       .getMessage.contains("text_col"))
 
     val np = root("""
-      {"near_dup_probe": {"text_col": "t", "index_dir": "/tmp/i"}}""").nearDupProbe.get
+      {"near_dup_probe": {"text_col": "t", "index_dir": "/tmp/i"}}""").op[NearDupProbeSpec].get
     assert(np.shingleSize == 3 && np.numHashes == 64 && np.bands == 16 &&
       np.flagCol == "near_dup" && np.expectedKeys == (1L << 22) && np.fpp == 0.01)
     assert(intercept[IllegalArgumentException](root(
@@ -385,14 +385,14 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "documents"},
        "temperature_sample": {"group_col": "lang", "id_col": "doc_id",
                               "target_fraction": 0.3}}""")
-    val t = n.temperatureSample.get
+    val t = n.op[TemperatureSampleSpec].get
     assert(t.groupCol == "lang" && t.idCol == "doc_id")
     assert(t.targetFraction == 0.3 && t.alpha == 0.5)
     assert(root("""
       {"source": {"table": "documents"},
        "temperature_sample": {"group_col": "g", "id_col": "id",
                               "target_fraction": 0.1, "alpha": 1.0}}""")
-      .temperatureSample.get.alpha == 1.0)
+      .op[TemperatureSampleSpec].get.alpha == 1.0)
     val e = intercept[IllegalArgumentException](root(
       """{"temperature_sample": {"group_col": "g", "id_col": "id"}}"""))
     assert(e.getMessage.contains("target_fraction"))
@@ -402,14 +402,14 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "passage_dedup": {"id_col": "doc_id", "text_col": "text"}}""")
-    val d = n.passageDedup.get
+    val d = n.op[PassageDedupSpec].get
     assert(d.idCol == "doc_id" && d.textCol == "text")
     assert(d.windowTokens == 50 && d.output == "spans")
     assert(root("""
       {"source": {"table": "documents"},
        "passage_dedup": {"id_col": "a", "text_col": "t",
                          "window_tokens": 12, "output": "strip"}}""")
-      .passageDedup.get.output == "strip")
+      .op[PassageDedupSpec].get.output == "strip")
     val e = intercept[IllegalArgumentException](root(
       """{"passage_dedup": {"id_col": "a"}}"""))
     assert(e.getMessage.contains("text_col"))
@@ -422,7 +422,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "audio_dedup": {"id_col": "doc_id", "payload_col": "payload"}}""")
-    val d = n.audioDedup.get
+    val d = n.op[AudioDedupSpec].get
     assert(d.idCol == "doc_id" && d.payloadCol == "payload" && d.maxDist == 6)
     val e = intercept[IllegalArgumentException](root(
       """{"audio_dedup": {"payload_col": "p"}}"""))
@@ -435,7 +435,7 @@ class JsonCodecSpec extends AnyFunSuite {
        "near_dup_ingest": {"id_col": "doc_id", "text_col": "text",
                            "corpus_dir": "/tmp/c", "index_dir": "/tmp/i",
                            "checkpoint_dir": "/tmp/k"}}""")
-    val d = n.nearDupIngest.get
+    val d = n.op[NearDupIngestSpec].get
     assert(d.idCol == "doc_id" && d.corpusDir == "/tmp/c" && d.indexDir == "/tmp/i")
     assert(d.shingleSize == 3 && d.numHashes == 64 && d.bands == 16 && d.threshold == 0.5)
     val full = root("""
@@ -444,7 +444,7 @@ class JsonCodecSpec extends AnyFunSuite {
                            "corpus_dir": "/tmp/c", "index_dir": "/tmp/i",
                            "checkpoint_dir": "/tmp/k", "shingle_size": 2,
                            "num_hashes": 32, "bands": 8, "threshold": 0.7}}""")
-      .nearDupIngest.get
+      .op[NearDupIngestSpec].get
     assert(full.shingleSize == 2 && full.numHashes == 32 &&
       full.bands == 8 && full.threshold == 0.7)
     val e = intercept[IllegalArgumentException](root("""
@@ -457,13 +457,13 @@ class JsonCodecSpec extends AnyFunSuite {
     val n = root("""
       {"source": {"table": "documents"},
        "lm_perplexity": {"id_col": "doc_id", "text_col": "text"}}""")
-    val d = n.lmPerplexity.get
+    val d = n.op[LmPerplexitySpec].get
     assert(d.idCol == "doc_id" && d.textCol == "text" && d.k == 0.5)
     assert(!d.keepUnscored, "drop-absent is the default policy")
     val full = root("""
       {"source": {"table": "documents"},
        "lm_perplexity": {"id_col": "a", "text_col": "t", "k": 1.0,
-                         "keep_unscored": true}}""").lmPerplexity.get
+                         "keep_unscored": true}}""").op[LmPerplexitySpec].get
     assert(full.k == 1.0 && full.keepUnscored)
     val e = intercept[IllegalArgumentException](root(
       """{"lm_perplexity": {"id_col": "a"}}"""))
@@ -476,7 +476,7 @@ class JsonCodecSpec extends AnyFunSuite {
        "split": {"id_col": "doc_id",
                  "buckets": [{"name": "train", "weight": 0.9},
                              {"name": "test", "weight": 0.1}]}}""")
-    val d = n.split.get
+    val d = n.op[SplitSpec].get
     assert(d.idCol == "doc_id" && d.splitCol == "split")
     assert(d.buckets == Seq("train" -> 0.9, "test" -> 0.1), "order must be preserved")
     val e = intercept[IllegalArgumentException](root("""
@@ -488,7 +488,7 @@ class JsonCodecSpec extends AnyFunSuite {
     // dsir: defaults + select-mode requirements
     val d = root("""
       {"source": {"table": "documents"},
-       "dsir": {"target_ref": "tgt", "text_col": "text"}}""").dsir.get
+       "dsir": {"target_ref": "tgt", "text_col": "text"}}""").op[DsirSpec].get
     assert(d.buckets == 8192 && d.mode == "weights" && d.gumbel && d.seed == 0L)
     val e1 = intercept[IllegalArgumentException](root("""
       {"dsir": {"target_ref": "t", "text_col": "x", "mode": "select"}}"""))
@@ -499,14 +499,14 @@ class JsonCodecSpec extends AnyFunSuite {
     // page_rank defaults
     val p = root("""
       {"source": {"table": "e"},
-       "page_rank": {"src_col": "s", "dst_col": "d"}}""").pageRank.get
+       "page_rank": {"src_col": "s", "dst_col": "d"}}""").op[PageRankSpec].get
     assert(p.iters == 3 && p.damping == 0.85 && p.tol == 0.0)
     // token_budget_sample: exactly-one-of budgets|weights, defaults, errors
     val tb = root("""
       {"source": {"table": "d"},
        "token_budget_sample": {"group_col": "g", "id_col": "i",
          "tokens_col": "t", "budgets": {"en": 100, "de": 50}}}""")
-      .tokenBudgetSample.get
+      .op[TokenBudgetSampleSpec].get
     assert(tb.budgets == Seq("en" -> 100L, "de" -> 50L) && tb.overshoot
       && tb.weights.isEmpty && tb.orderCol.isEmpty && tb.descending)
     assert(root("""
@@ -514,12 +514,12 @@ class JsonCodecSpec extends AnyFunSuite {
        "token_budget_sample": {"group_col": "g", "id_col": "i",
          "tokens_col": "t", "budgets": {"en": 1},
          "order_col": "score", "descending": false}}""")
-      .tokenBudgetSample.get.orderCol.contains("score"))
+      .op[TokenBudgetSampleSpec].get.orderCol.contains("score"))
     val tw = root("""
       {"source": {"table": "d"},
        "token_budget_sample": {"group_col": "g", "id_col": "i",
          "tokens_col": "t", "weights": {"en": 0.5, "de": 0.5},
-         "total_budget": 1000, "overshoot": false}}""").tokenBudgetSample.get
+         "total_budget": 1000, "overshoot": false}}""").op[TokenBudgetSampleSpec].get
     assert(tw.weights == Seq("en" -> 0.5, "de" -> 0.5)
       && tw.totalBudget == 1000L && !tw.overshoot)
     val eTb = intercept[IllegalArgumentException](root("""
@@ -537,19 +537,19 @@ class JsonCodecSpec extends AnyFunSuite {
     val sq = root("""
       {"source": {"table": "d"},
        "sequence_pack": {"id_col": "i", "ids_col": "x", "seq_len": 2048}}""")
-      .sequencePack.get
+      .op[SequencePackSpec].get
     assert(sq.eosId == 0 && sq.shards == 1 && sq.dropLast && sq.seqLen == 2048)
     assert(sq.mode == "split" && !sq.withBounds && sq.padId == -1)
     val sqW = root("""
       {"source": {"table": "d"},
        "sequence_pack": {"id_col": "i", "ids_col": "x", "seq_len": 2048,
          "mode": "whole", "with_bounds": true, "pad_id": 0}}""")
-      .sequencePack.get
+      .op[SequencePackSpec].get
     assert(sqW.mode == "whole" && sqW.withBounds && sqW.padId == 0)
     assert(root("""
       {"source": {"table": "d"},
        "sequence_pack": {"id_col": "i", "ids_col": "x", "seq_len": 8,
-         "mode": "best_fit"}}""").sequencePack.get.mode == "best_fit")
+         "mode": "best_fit"}}""").op[SequencePackSpec].get.mode == "best_fit")
     val eMode = intercept[IllegalArgumentException](root("""
       {"sequence_pack": {"id_col": "i", "ids_col": "x", "seq_len": 8,
         "mode": "bestfit"}}"""))
@@ -561,18 +561,18 @@ class JsonCodecSpec extends AnyFunSuite {
       {"sequence_pack": {"id_col": "i", "ids_col": "x"}}"""))
     val pt = root("""
       {"source": {"table": "e"},
-       "page_rank": {"src_col": "s", "dst_col": "d", "tol": 1e-6}}""").pageRank.get
+       "page_rank": {"src_col": "s", "dst_col": "d", "tol": 1e-6}}""").op[PageRankSpec].get
     assert(pt.tol == 1e-6)
     // chunk: defaults + exactly-one-tier + bounds errors
     val ck = root("""
       {"source": {"table": "d"},
        "chunk": {"id_col": "doc_id", "ids_col": "bpe_ids", "size": 512}}""")
-      .chunk.get
+      .op[ChunkSpec].get
     assert(ck.overlap == 0 && ck.idsCol.contains("bpe_ids") && ck.textCol.isEmpty)
     val ckT = root("""
       {"source": {"table": "d"},
        "chunk": {"id_col": "doc_id", "text_col": "text", "size": 256,
-         "overlap": 64}}""").chunk.get
+         "overlap": 64}}""").op[ChunkSpec].get
     assert(ckT.textCol.contains("text") && ckT.overlap == 64)
     val eCk = intercept[IllegalArgumentException](root("""
       {"chunk": {"id_col": "i", "text_col": "t", "ids_col": "x", "size": 8}}"""))
@@ -587,7 +587,7 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(root("""
       {"source": {"table": "d"},
        "chunk": {"id_col": "i", "text_col": "t", "size": 256,
-         "sep": "\n\n"}}""").chunk.get.sep.contains("\n\n"))
+         "sep": "\n\n"}}""").op[ChunkSpec].get.sep.contains("\n\n"))
     val eCk4 = intercept[IllegalArgumentException](root("""
       {"chunk": {"id_col": "i", "ids_col": "x", "size": 8, "sep": "|"}}"""))
     assert(eCk4.getMessage.contains("needs text_col"))
@@ -618,14 +618,14 @@ class JsonCodecSpec extends AnyFunSuite {
     // tar_pack requires shards
     val t = root("""
       {"source": {"table": "m"},
-       "tar_pack": {"name_col": "n", "payload_col": "p", "shards": 8}}""").tarPack.get
+       "tar_pack": {"name_col": "n", "payload_col": "p", "shards": 8}}""").op[TarPackSpec].get
     assert(t.shards == 8)
     intercept[IllegalArgumentException](root("""
       {"tar_pack": {"name_col": "n", "payload_col": "p"}}"""))
     // bm25 defaults
     val b = root("""
       {"source": {"table": "documents"},
-       "bm25": {"queries_ref": "q", "id_col": "doc_id", "text_col": "text"}}""").bm25.get
+       "bm25": {"queries_ref": "q", "id_col": "doc_id", "text_col": "text"}}""").op[Bm25Spec].get
     assert(b.k1 == 1.2 && b.b == 0.75 && b.topK == 10 &&
       b.qidCol == "qid" && b.qtextCol == "qtext")
     // dsir_score requires model_dir
@@ -634,7 +634,7 @@ class JsonCodecSpec extends AnyFunSuite {
     // winnow defaults + named output error
     val wn = root("""
       {"source": {"table": "documents"},
-       "winnow": {"id_col": "doc_id", "text_col": "text"}}""").winnow.get
+       "winnow": {"id_col": "doc_id", "text_col": "text"}}""").op[WinnowSpec].get
     assert(wn.windowTokens == 50 && wn.winnowWindow == 8 &&
       wn.output == "index" && wn.minShared == 1)
     val e4 = intercept[IllegalArgumentException](root("""
@@ -651,7 +651,7 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(root("""
       {"source": {"table": "documents"},
        "lm_perplexity": {"id_col": "a", "text_col": "t"}}""")
-      .lmPerplexity.get.smoothing == "addk")
+      .op[LmPerplexitySpec].get.smoothing == "addk")
     // unknown-key rejection still covers the new blocks
     val e3 = intercept[IllegalArgumentException](root("""
       {"source": {"table": "documents"},
@@ -678,24 +678,24 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "documents"},
        "simhash_dedup": {"id_col": "a", "text_col": "t", "output": "clusters",
                          "retention": {"order_col": "score"}}}""")
-      .simhashDedup.get.retention.get
+      .op[SimhashDedupSpec].get.retention.get
     assert(r.orderCol == "score" && r.descending) // descending defaults true
     assert(root("""
       {"source": {"table": "e"},
        "near_dup": {"id_col": "a", "vec_col": "v", "threshold": 0.9, "dim": 8,
                     "output": "clusters",
                     "retention": {"order_col": "q", "descending": false}}}""")
-      .nearDup.get.retention.exists(x => x.orderCol == "q" && !x.descending))
+      .op[NearDupSpec].get.retention.exists(x => x.orderCol == "q" && !x.descending))
     assert(root("""
       {"source": {"table": "d"},
        "image_dedup": {"id_col": "a", "payload_col": "p", "output": "clusters",
                        "retention": {"order_col": "sharp"}}}""")
-      .imageDedup.get.retention.exists(_.orderCol == "sharp"))
+      .op[ImageDedupSpec].get.retention.exists(_.orderCol == "sharp"))
     assert(root("""
       {"source": {"table": "d"},
        "audio_dedup": {"id_col": "a", "payload_col": "p", "output": "clusters",
                        "retention": {"order_col": "snr"}}}""")
-      .audioDedup.get.retention.exists(_.orderCol == "snr"))
+      .op[AudioDedupSpec].get.retention.exists(_.orderCol == "snr"))
     // pairs output (explicit or by default) has no best row to retain
     val e = intercept[IllegalArgumentException](root("""
       {"simhash_dedup": {"id_col": "a", "text_col": "t",
@@ -714,12 +714,12 @@ class JsonCodecSpec extends AnyFunSuite {
   test("tar_compact node key decodes with defaults and named errors") {
     val t = root("""
       {"source": {"path": "/x"},
-       "tar_compact": {"shards": 4}}""").tarCompact.get
+       "tar_compact": {"shards": 4}}""").op[TarCompactSpec].get
     assert(t.tarCol == "tar" && t.shards == 4 && t.batchCol.isEmpty)
     val t2 = root("""
       {"source": {"path": "/x"},
        "tar_compact": {"tar_col": "blob", "shards": 2, "batch_col": "batch_id"}}""")
-      .tarCompact.get
+      .op[TarCompactSpec].get
     assert(t2.tarCol == "blob" && t2.batchCol.contains("batch_id"))
     val e = intercept[IllegalArgumentException](root(
       """{"tar_compact": {"tar_col": "tar"}}"""))
@@ -730,18 +730,18 @@ class JsonCodecSpec extends AnyFunSuite {
     val ai = root("""
       {"source": {"table": "e"},
        "ann_index": {"id_col": "vid", "vec_col": "emb", "dir": "/idx"}}""")
-      .annIndex.get
+      .op[AnnIndexSpec].get
     assert(ai.nlist == 16 && ai.refineRounds == 0 && ai.dir == "/idx")
     val as = root("""
       {"source": {"table": "q"},
        "ann_search": {"id_col": "qid", "vec_col": "emb",
                       "index_dir": "/idx", "k": 3, "nprobe": 16}}""")
-      .annSearch.get
+      .op[AnnSearchSpec].get
     assert(as.k == 3 && as.nprobe == 16 && as.indexDir == "/idx")
     assert(root("""
       {"source": {"table": "q"},
        "ann_search": {"id_col": "qid", "vec_col": "emb", "index_dir": "/i"}}""")
-      .annSearch.exists(x => x.k == 10 && x.nprobe == 4))
+      .op[AnnSearchSpec].exists(x => x.k == 10 && x.nprobe == 4))
     val e = intercept[IllegalArgumentException](root(
       """{"ann_index": {"id_col": "a", "vec_col": "v"}}"""))
     assert(e.getMessage.contains("dir"))
@@ -758,7 +758,7 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(root("""
       {"source": {"table": "e"},
        "ann_index": {"id_col": "a", "vec_col": "v", "dir": "/i",
-                     "mode": "append"}}""").annIndex.get.mode == "append")
+                     "mode": "append"}}""").op[AnnIndexSpec].get.mode == "append")
     val e5 = intercept[IllegalArgumentException](root(
       """{"ann_index": {"id_col": "a", "vec_col": "v", "dir": "/i",
           "mode": "append", "nlist": 8}}"""))
@@ -771,7 +771,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val ap = root("""
       {"source": {"table": "d"},
        "ann_probe": {"vec_col": "emb", "index_dir": "/i", "threshold": 0.8}}""")
-      .annProbe.get
+      .op[AnnProbeSpec].get
     assert(ap.scoreCol == "ann_score" && ap.flagCol == "ann_match")
     val e7 = intercept[IllegalArgumentException](root(
       """{"ann_probe": {"vec_col": "v", "index_dir": "/i", "threshold": 2.0}}"""))
@@ -788,13 +788,13 @@ class JsonCodecSpec extends AnyFunSuite {
     val qf = root("""
       {"source": {"table": "d"},
        "quantile_filter": {"col": "score", "keep_n": 1000000}}""")
-      .quantileFilter.get
+      .op[QuantileFilterSpec].get
     assert(qf.col == "score" && qf.keepN == 1000000L)
     assert(qf.descending && qf.relativeError == 1e-4)
     val asc = root("""
       {"source": {"table": "d"},
        "quantile_filter": {"col": "nll", "keep_n": 5, "descending": false,
-                           "relative_error": 0}}""").quantileFilter.get
+                           "relative_error": 0}}""").op[QuantileFilterSpec].get
     assert(!asc.descending && asc.relativeError == 0.0)
     val e = intercept[IllegalArgumentException](root(
       """{"quantile_filter": {"col": "s"}}"""))
@@ -819,12 +819,12 @@ class JsonCodecSpec extends AnyFunSuite {
   test("funnel node key decodes with defaults and named errors") {
     val fu = root("""
       {"funnel": {"key_col": "user_id", "ts_col": "ts", "event_col": "event_type",
-                  "steps": ["view", "click", "purchase"]}}""").funnel.get
+                  "steps": ["view", "click", "purchase"]}}""").op[FunnelSpec].get
     assert(fu.keyCol == "user_id" && fu.steps == Seq("view", "click", "purchase"))
     assert(fu.window.isEmpty)
     val fw = root("""
       {"funnel": {"key_col": "u", "ts_col": "t", "event_col": "e",
-                  "steps": ["a", "b"], "window": "2 hours"}}""").funnel.get
+                  "steps": ["a", "b"], "window": "2 hours"}}""").op[FunnelSpec].get
     assert(fw.window.contains("2 hours"))
     assert(intercept[IllegalArgumentException](root("""
       {"funnel": {"key_col": "u", "ts_col": "t", "event_col": "e",
@@ -841,7 +841,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val rj = root("""
       {"range_join": {"intervals_ref": "bands", "point_col": "x",
                       "lo_col": "lo", "hi_col": "hi", "bucket": 10}}""")
-      .rangeJoin.get
+      .op[RangeJoinSpec].get
     assert(rj.intervalsRef == "bands" && rj.pointCol == "x" &&
       rj.bucket == 10.0 && rj.on.isEmpty && rj.payload.isEmpty &&
       rj.how == "inner" && !rj.inclusiveHi && !rj.broadcast &&
@@ -851,7 +851,7 @@ class JsonCodecSpec extends AnyFunSuite {
                       "lo_col": "l", "hi_col": "h", "bucket": 0.5,
                       "on": ["k"], "payload": ["tag"], "how": "left",
                       "inclusive_hi": true, "broadcast": true,
-                      "max_buckets_per_interval": 128}}""").rangeJoin.get
+                      "max_buckets_per_interval": 128}}""").op[RangeJoinSpec].get
     assert(rj2.on == Seq("k") && rj2.payload == Seq("tag") &&
       rj2.how == "left" && rj2.inclusiveHi && rj2.broadcast &&
       rj2.maxBucketsPerInterval == 128)
@@ -872,7 +872,7 @@ class JsonCodecSpec extends AnyFunSuite {
   test("overlap_join node key decodes with defaults and named errors") {
     val oj = root("""
       {"overlap_join": {"other_ref": "outages", "lo_col": "lo",
-                        "hi_col": "hi", "bucket": 3600}}""").overlapJoin.get
+                        "hi_col": "hi", "bucket": 3600}}""").op[OverlapJoinSpec].get
     assert(oj.otherRef == "outages" && oj.loCol == "lo" && oj.hiCol == "hi" &&
       oj.bucket == 3600.0 && oj.otherLoCol.isEmpty && oj.otherHiCol.isEmpty &&
       oj.on.isEmpty && oj.payload.isEmpty && !oj.inclusive && !oj.broadcast &&
@@ -883,7 +883,7 @@ class JsonCodecSpec extends AnyFunSuite {
                         "other_hi_col": "oh", "on": ["k"],
                         "payload": ["tag", "ol", "oh"], "inclusive": true,
                         "broadcast": true, "how": "left",
-                        "max_buckets_per_interval": 64}}""").overlapJoin.get
+                        "max_buckets_per_interval": 64}}""").op[OverlapJoinSpec].get
     assert(oj2.otherRef == "o" && oj2.otherLoCol.contains("ol") &&
       oj2.otherHiCol.contains("oh") && oj2.on == Seq("k") &&
       oj2.payload == Seq("tag", "ol", "oh") && oj2.inclusive &&
@@ -904,16 +904,16 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("collocations node key decodes with defaults and named errors") {
-    val c = root("""{"collocations": {"text_col": "text"}}""").collocations.get
+    val c = root("""{"collocations": {"text_col": "text"}}""").op[CollocationsSpec].get
     assert(c.textCol == "text" && c.minCount == 5 && c.topK == 100)
     val c2 = root("""
       {"collocations": {"text_col": "body", "min_count": 2,
                         "top_k": 25, "group_cols": ["lang"]}}""")
-      .collocations.get
+      .op[CollocationsSpec].get
     assert(c2.textCol == "body" && c2.minCount == 2 && c2.topK == 25 &&
       c2.groupCols == Seq("lang"))
     assert(root("""{"collocations": {"text_col": "t"}}""")
-      .collocations.get.groupCols.isEmpty)
+      .op[CollocationsSpec].get.groupCols.isEmpty)
     assert(intercept[IllegalArgumentException](root("""
       {"collocations": {"text_col": "t", "min_count": 0}}"""))
       .getMessage.contains("min_count"))
@@ -928,14 +928,14 @@ class JsonCodecSpec extends AnyFunSuite {
   test("connected_components node key decodes with defaults and named errors") {
     val cc = root("""
       {"connected_components": {"src_col": "a", "dst_col": "b"}}""")
-      .connectedComponents.get
+      .op[ConnectedComponentsSpec].get
     assert(cc.srcCol == "a" && cc.dstCol == "b" && cc.maxIter == 20 &&
       cc.smallGraphEdges == (1L << 20) && cc.checkpointDir.isEmpty)
     val cc2 = root("""
       {"connected_components": {"src_col": "s", "dst_col": "d",
                                 "max_iter": 5, "small_graph_edges": 0,
                                 "checkpoint_dir": "/tmp/ck"}}""")
-      .connectedComponents.get
+      .op[ConnectedComponentsSpec].get
     assert(cc2.maxIter == 5 && cc2.smallGraphEdges == 0L &&
       cc2.checkpointDir.contains("/tmp/ck"))
     assert(intercept[IllegalArgumentException](root("""
@@ -956,7 +956,7 @@ class JsonCodecSpec extends AnyFunSuite {
 
   test("diff node key decodes with defaults and named errors") {
     val d = root("""
-      {"diff": {"on": ["doc_id"], "ref": "old"}}""").diff.get
+      {"diff": {"on": ["doc_id"], "ref": "old"}}""").op[DiffSpec].get
     assert(d.on == Seq("doc_id") && d.otherRef == "old" &&
       d.compare.isEmpty && d.statusCol == "diff_status" &&
       d.changedCol == "changed_cols" && !d.includeUnchanged &&
@@ -965,7 +965,7 @@ class JsonCodecSpec extends AnyFunSuite {
       {"diff": {"on": ["k1", "k2"], "other_ref": "prev",
                 "compare": ["text"], "status_col": "st",
                 "changed_col": "ch", "include_unchanged": true,
-                "carry": "new"}}""").diff.get
+                "carry": "new"}}""").op[DiffSpec].get
     assert(d2.on == Seq("k1", "k2") && d2.otherRef == "prev" &&
       d2.compare == Seq("text") && d2.statusCol == "st" &&
       d2.changedCol == "ch" && d2.includeUnchanged && d2.carry == "new")
@@ -984,13 +984,13 @@ class JsonCodecSpec extends AnyFunSuite {
   test("sketch_ingest node key decodes with defaults and named errors") {
     val sk = root("""
       {"sketch_ingest": {"key_col": "domain", "out_dir": "/sk",
-                         "checkpoint_dir": "/ck"}}""").sketchIngest.get
+                         "checkpoint_dir": "/ck"}}""").op[SketchIngestSpec].get
     assert(sk.keyCol == "domain" && sk.outDir == "/sk" &&
       sk.maxItemsTracked == 10000 && sk.lgK == 12 && sk.groupCols.isEmpty)
     val sk2 = root("""
       {"sketch_ingest": {"key_col": "d", "out_dir": "/sk",
                          "checkpoint_dir": "/ck", "max_items_tracked": 256,
-                         "lg_k": 14, "group_cols": ["lang"]}}""").sketchIngest.get
+                         "lg_k": 14, "group_cols": ["lang"]}}""").op[SketchIngestSpec].get
     assert(sk2.maxItemsTracked == 256 && sk2.lgK == 14 &&
       sk2.groupCols == Seq("lang"))
     assert(intercept[IllegalArgumentException](root("""
@@ -1011,14 +1011,14 @@ class JsonCodecSpec extends AnyFunSuite {
       {"resample": {"key_cols": ["user_id"], "ts_col": "ts",
                     "step": "6 hours",
                     "aggregations": [{"col": "*", "func": "count",
-                                      "new_name": "n"}]}}""").resample.get
+                                      "new_name": "n"}]}}""").op[ResampleSpec].get
     assert(rs.keyCols == Seq("user_id") && rs.tsCol == "ts" &&
       rs.step == "6 hours" && rs.fill == "none" &&
       rs.maxBucketsPerKey == (1L << 20) && rs.aggs.head.func == "count")
     val rs2 = root("""
       {"resample": {"keys": ["k"], "ts_col": "t", "step": "1 day",
                     "aggs": [{"col": "v", "func": "max"}],
-                    "fill": "ffill", "max_buckets_per_key": 100}}""").resample.get
+                    "fill": "ffill", "max_buckets_per_key": 100}}""").op[ResampleSpec].get
     assert(rs2.fill == "ffill" && rs2.maxBucketsPerKey == 100)
     assert(intercept[IllegalArgumentException](root("""
       {"resample": {"key_cols": [], "ts_col": "t", "step": "1 day",
@@ -1036,11 +1036,11 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("approx_top_k node key decodes with defaults and named errors") {
-    val tk = root("""{"approx_top_k": {"key_col": "domain"}}""").approxTopK.get
+    val tk = root("""{"approx_top_k": {"key_col": "domain"}}""").op[ApproxTopKSpec].get
     assert(tk.keyCol == "domain" && tk.k == 10 && tk.maxItemsTracked == 10000)
     val tk2 = root("""
       {"approx_top_k": {"key_col": "k", "k": 25,
-                        "max_items_tracked": 65536}}""").approxTopK.get
+                        "max_items_tracked": 65536}}""").op[ApproxTopKSpec].get
     assert(tk2.k == 25 && tk2.maxItemsTracked == 65536)
     assert(intercept[IllegalArgumentException](root(
       """{"approx_top_k": {"key_col": "k", "k": 0}}"""))
@@ -1086,12 +1086,12 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("unpivot node key decodes with defaults and named errors") {
-    val u = root("""{"unpivot": {"ids": ["k"]}}""").unpivot.get
+    val u = root("""{"unpivot": {"ids": ["k"]}}""").op[UnpivotSpec].get
     assert(u.ids == Seq("k") && u.values.isEmpty &&
       u.varCol == "variable" && u.valCol == "value")
     val u2 = root("""
       {"unpivot": {"ids": ["k", "j"], "values": ["a", "b"],
-                   "var_col": "m", "value_col": "v"}}""").unpivot.get
+                   "var_col": "m", "value_col": "v"}}""").op[UnpivotSpec].get
     assert(u2.ids == Seq("k", "j") && u2.values == Seq("a", "b") &&
       u2.varCol == "m" && u2.valCol == "v")
     assert(intercept[IllegalArgumentException](root(
@@ -1102,21 +1102,21 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("upsample / ranking_eval node keys decode with defaults and named errors") {
-    val up = root("""{"upsample": {"factor_col": "f"}}""").upsample.get
+    val up = root("""{"upsample": {"factor_col": "f"}}""").op[UpsampleSpec].get
     assert(up.factorCol == "f" && up.copyCol == "copy")
     val up2 = root(
-      """{"upsample": {"factor_col": "f", "copy_col": "epoch"}}""").upsample.get
+      """{"upsample": {"factor_col": "f", "copy_col": "epoch"}}""").op[UpsampleSpec].get
     assert(up2.copyCol == "epoch")
     assert(intercept[IllegalArgumentException](root("""{"upsample": {}}"""))
       .getMessage.contains("factor_col"))
 
     val re = root("""
       {"ranking_eval": {"query_col": "q", "doc_col": "d", "rank_col": "r",
-                        "qrels_ref": "judgments"}}""").rankingEval.get
+                        "qrels_ref": "judgments"}}""").op[RankingEvalSpec].get
     assert(re.queryCol == "q" && re.qrelsRef == "judgments" && re.k == 10)
     val re2 = root("""
       {"ranking_eval": {"query_col": "q", "doc_col": "d", "rank_col": "r",
-                        "qrels_ref": "j", "k": 5}}""").rankingEval.get
+                        "qrels_ref": "j", "k": 5}}""").op[RankingEvalSpec].get
     assert(re2.k == 5)
     assert(intercept[IllegalArgumentException](root("""
       {"ranking_eval": {"query_col": "q", "doc_col": "d", "rank_col": "r"}}"""))
@@ -1130,12 +1130,12 @@ class JsonCodecSpec extends AnyFunSuite {
   test("rrf_fuse node key decodes with defaults and named errors") {
     val rf = root("""
       {"rrf_fuse": {"query_col": "q", "doc_col": "d", "rank_col": "r"}}""")
-      .rrfFuse.get
+      .op[RrfFuseSpec].get
     assert(rf.queryCol == "q" && rf.docCol == "d" && rf.rankCol == "r")
     assert(rf.topK == 10 && rf.rrfK == 60)
     val rf2 = root("""
       {"rrf_fuse": {"query_col": "q", "doc_col": "d", "rank_col": "r",
-                    "top_k": 5, "rrf_k": 0}}""").rrfFuse.get
+                    "top_k": 5, "rrf_k": 0}}""").op[RrfFuseSpec].get
     assert(rf2.topK == 5 && rf2.rrfK == 0)
     assert(intercept[IllegalArgumentException](root(
       """{"rrf_fuse": {"query_col": "q", "doc_col": "d"}}"""))
@@ -1151,13 +1151,13 @@ class JsonCodecSpec extends AnyFunSuite {
   test("seen_probe / seen_filter / exact_ingest node keys decode with defaults and named errors") {
     val sp = root("""
       {"source": {"table": "d"},
-       "seen_probe": {"key_col": "fp", "index_dir": "/idx"}}""").seenProbe.get
+       "seen_probe": {"key_col": "fp", "index_dir": "/idx"}}""").op[SeenProbeSpec].get
     assert(sp.keyCol == "fp" && sp.indexDir == "/idx")
     assert(sp.flagCol == "seen" && sp.expectedKeys == (1L << 22) && sp.fpp == 0.01)
     val sp2 = root("""
       {"seen_probe": {"key_col": "url", "index_dir": "/i",
                       "flag_col": "fetched", "expected_keys": 1024,
-                      "fpp": 0.001}}""").seenProbe.get
+                      "fpp": 0.001}}""").op[SeenProbeSpec].get
     assert(sp2.flagCol == "fetched" && sp2.expectedKeys == 1024L && sp2.fpp == 0.001)
     assert(intercept[IllegalArgumentException](root(
       """{"seen_probe": {"key_col": "k"}}""")).getMessage.contains("index_dir"))
@@ -1166,11 +1166,11 @@ class JsonCodecSpec extends AnyFunSuite {
       .getMessage.contains("fpp"))
 
     val sf = root("""
-      {"seen_filter": {"key_col": "fp", "index_dir": "/idx"}}""").seenFilter.get
+      {"seen_filter": {"key_col": "fp", "index_dir": "/idx"}}""").op[SeenFilterSpec].get
     assert(sf.mode == "drop" && sf.flagCol == "seen")
     val sf2 = root("""
       {"seen_filter": {"key_col": "fp", "index_dir": "/idx",
-                       "mode": "flag", "flag_col": "dup"}}""").seenFilter.get
+                       "mode": "flag", "flag_col": "dup"}}""").op[SeenFilterSpec].get
     assert(sf2.mode == "flag" && sf2.flagCol == "dup")
     assert(intercept[IllegalArgumentException](root(
       """{"seen_filter": {"key_col": "k", "index_dir": "/i", "mode": "purge"}}"""))
@@ -1179,7 +1179,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val ei = root("""
       {"exact_ingest": {"id_col": "doc_id", "key_cols": ["fp"],
                         "corpus_dir": "/c", "index_dir": "/i",
-                        "checkpoint_dir": "/k"}}""").exactIngest.get
+                        "checkpoint_dir": "/k"}}""").op[ExactIngestSpec].get
     assert(ei.idCol == "doc_id" && ei.keyCols == Seq("fp"))
     assert(ei.corpusDir == "/c" && ei.indexDir == "/i" && ei.checkpointDir == "/k")
     assert(ei.compactEvery.isEmpty)
@@ -1196,7 +1196,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val eic = root("""
       {"exact_ingest": {"id_col": "d", "key_cols": ["fp"],
         "corpus_dir": "/c", "index_dir": "/i", "checkpoint_dir": "/k",
-        "compact_every": 3}}""").exactIngest.get
+        "compact_every": 3}}""").op[ExactIngestSpec].get
     assert(eic.compactEvery.contains(3))
     assert(intercept[IllegalArgumentException](root(
       """{"exact_ingest": {"id_col": "d", "key_cols": ["fp"],
@@ -1205,18 +1205,18 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(root("""
       {"near_dup_ingest": {"id_col": "d", "text_col": "t",
         "corpus_dir": "/c", "index_dir": "/i", "checkpoint_dir": "/k",
-        "compact_every": 2}}""").nearDupIngest.get.compactEvery.contains(2))
+        "compact_every": 2}}""").op[NearDupIngestSpec].get.compactEvery.contains(2))
     assert(root("""
       {"passage_ingest": {"id_col": "d", "text_col": "t",
         "corpus_dir": "/c", "index_dir": "/i", "checkpoint_dir": "/k",
-        "compact_every": 4}}""").passageIngest.get.compactEvery.contains(4))
+        "compact_every": 4}}""").op[PassageIngestSpec].get.compactEvery.contains(4))
 
     val ic = root("""
       {"ingest_compact": {"dirs": ["/c", "/i"], "checkpoint": "/k"}}""")
-      .ingestCompact.get
+      .op[IngestCompactSpec].get
     assert(ic.dirs == Seq("/c", "/i") && ic.checkpoint.contains("/k"))
     assert(root("""{"ingest_compact": {"dirs": "/c"}}""")
-      .ingestCompact.get.dirs == Seq("/c"), "a single dir may be a string")
+      .op[IngestCompactSpec].get.dirs == Seq("/c"), "a single dir may be a string")
     assert(intercept[IllegalArgumentException](root(
       """{"ingest_compact": {"dirs": []}}"""))
       .getMessage.contains("dirs"))
@@ -1227,7 +1227,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val bi = root("""
       {"bm25_ingest": {"id_col": "doc_id", "text_col": "text",
                        "index_dir": "/i", "checkpoint_dir": "/k"}}""")
-      .bm25Ingest.get
+      .op[Bm25IngestSpec].get
     assert(bi.idCol == "doc_id" && bi.textCol == "text" &&
       bi.indexDir == "/i" && bi.checkpointDir == "/k")
     assert(intercept[IllegalArgumentException](root(
@@ -1240,7 +1240,7 @@ class JsonCodecSpec extends AnyFunSuite {
     val ai = root("""
       {"ann_ingest": {"id_col": "vec_id", "vec_col": "embedding",
                       "index_dir": "/i", "checkpoint_dir": "/k"}}""")
-      .annIngest.get
+      .op[AnnIngestSpec].get
     assert(ai.idCol == "vec_id" && ai.vecCol == "embedding" &&
       ai.indexDir == "/i" && ai.checkpointDir == "/k")
     assert(intercept[IllegalArgumentException](root(
@@ -1260,6 +1260,6 @@ class JsonCodecSpec extends AnyFunSuite {
       {"source": {"table": "d"},
        "sequence_pack": {"id_col": "i", "ids_col": "x", "seq_len": 8,
          "mode": "best_fit", "drop_last": true}}""")
-      .sequencePack.get.mode == "best_fit")
+      .op[SequencePackSpec].get.mode == "best_fit")
   }
 }

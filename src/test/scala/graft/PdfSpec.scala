@@ -231,7 +231,7 @@ class PdfSpec extends SparkSpec {
     val spec = graft.spec.JsonCodec.parseNode("""
       {"id": "p",
        "pdf_extract": {"id_col": "doc_id", "pdf_col": "pdf"}}""")
-    assert(spec.pdfExtract.contains(graft.spec.PdfExtractSpec("doc_id", "pdf")))
+    assert(spec.op[graft.spec.PdfExtractSpec].contains(graft.spec.PdfExtractSpec("doc_id", "pdf")))
     val err = intercept[IllegalArgumentException] {
       graft.spec.JsonCodec.parseNode("""{"pdf_extract": {"id_col": "doc_id"}}""")
     }
