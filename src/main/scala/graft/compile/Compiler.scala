@@ -179,18 +179,30 @@ object Compiler {
     wanted.filterNot(have.contains).map(c => s"node ${node.id}: unknown column '$c' (have: ${have.mkString(", ")})")
   }
 
+  /** Each table / path / sql source of one compile, read — and analyzed —
+    * once: every node and def over the same source shares the frame (a
+    * temp view already hands every read the same plan), and
+    * [[validatePipeline]]'s second tier compiles over its first tier's
+    * reads. */
+  private final class Sources(val spark: SparkSession) {
+    private val read = scala.collection.mutable.HashMap.empty[SourceSpec, DataFrame]
+    def apply(s: SourceSpec): DataFrame = read.getOrElseUpdate(s, readSource(spark, s))
+  }
+
   /** Whole-pipeline validation without running a job (SURVEY §1.3: the
     * reference surfaces schema errors lazily at execution; we resolve them
     * up front). Two tiers: a friendly per-node unknown-column check against
     * each concrete source's schema, then a full Catalyst analysis of the
     * composed plan (compilation is lazy — no data is read beyond parquet
-    * footers). Returns error strings; empty = valid. */
+    * footers, and `cache: true` defs are NOT persisted). Returns error
+    * strings; empty = valid. */
   def validatePipeline(spark: SparkSession, spec: PipelineSpec): Seq[String] = {
+    val sources = new Sources(spark)
     def walk(node: NodeSpec): Seq[String] = {
       // ref sources resolve only inside compile — the analyzer pass below
       // still covers their column references
       val own = node.source.toSeq.filter(_.ref.isEmpty).flatMap { s =>
-        try validate(readSource(spark, s), node)
+        try validate(sources(s), node)
         catch { case e: Throwable => Seq(s"node ${node.id}: source unreadable: ${e.getMessage}") }
       }
       own ++ node.combine.toSeq.flatMap(_.nodes.flatMap(walk)) ++
@@ -203,13 +215,13 @@ object Compiler {
         // only level 1 sees the raw source schema; later levels are
         // checked by the analyzer below
         c.iterations.flatMap(_.levels.headOption.toSeq.flatMap { l =>
-          try validate(readSource(spark, c.source), l)
+          try validate(sources(c.source), l)
           catch { case e: Throwable => Seq(s"cascade source unreadable: ${e.getMessage}") }
         })
     }
     if (friendly.nonEmpty) friendly
     else
-      try { compile(spark, spec, executeSinks = false); Nil }
+      try { build(sources, spec, None, executeSinks = false, persistDefs = false); Nil }
       catch { case e: Throwable => Seq(e.getMessage) }
   }
 
@@ -217,7 +229,11 @@ object Compiler {
     * (used by tests and the streaming compiler, which passes a streaming
     * DataFrame through the same batch-authored spec). */
   def compile(spark: SparkSession, spec: PipelineSpec, input: Option[DataFrame] = None,
-      executeSinks: Boolean = true): DataFrame = {
+      executeSinks: Boolean = true): DataFrame =
+    build(new Sources(spark), spec, input, executeSinks, persistDefs = true)
+
+  private def build(sources: Sources, spec: PipelineSpec, input: Option[DataFrame],
+      executeSinks: Boolean, persistDefs: Boolean): DataFrame = {
     val opCaches = scala.collection.mutable.ListBuffer[DataFrame]()
     val result = operatorCacheCollector.withValue(Some(opCaches))(spec match {
       case TreePipeline(root, defs, tee) =>
@@ -239,8 +255,10 @@ object Compiler {
           "cache is a defs-only key — name the stage in defs and ref it")
         val cachedDefs = Vector.newBuilder[DataFrame]
         val refs = defs.foldLeft(Map.empty[String, DataFrame]) { (acc, d) =>
-          val df = compileNode(spark, d, None, executeSinks = false, refs = acc)
-          acc + (d.id -> (if (d.cache) { val p = df.persist(); cachedDefs += p; p } else df))
+          val df = buildNode(sources, d, None, executeSinks = false, streaming = false, acc).frame
+          // validation builds the plan only: a persisted def would pin
+          // cache-manager state nobody releases
+          acc + (d.id -> (if (d.cache && persistDefs) { val p = df.persist(); cachedDefs += p; p } else df))
         }
         // side-output trees: compiled for their sinks (in declaration
         // order, before the root result returns), discarded afterwards.
@@ -264,12 +282,13 @@ object Compiler {
             }
         }
         tee.foreach { t =>
-          compileNode(spark, t, None, executeSinks, refs = refs)
+          buildNode(sources, t, None, executeSinks, streaming = false, refs).frame
         }
-        val result = compileNode(spark, root, input, executeSinks, refs = refs)
+        val result =
+          buildNode(sources, root, input.map(Spine(_)), executeSinks, streaming = false, refs).frame
         trackPersisted(result, cachedDefs.result())
         result
-      case CascadePipeline(c) => compileCascade(spark, c, executeSinks)
+      case CascadePipeline(c) => compileCascade(sources, c, executeSinks)
     })
     trackPersisted(result, opCaches.toSeq)
     result
@@ -286,10 +305,24 @@ object Compiler {
     * on a source column still reaches the scan — Catalyst pushes it below
     * the derive projection. Note the reference quirk kept intentionally:
     * the parent aggregates BEFORE joining children, so joins run on
-    * aggregated-parent × aggregated-child (SURVEY §3 EP2 step 6). */
+    * aggregated-parent × aggregated-child (SURVEY §3 EP2 step 6).
+    *
+    * The steps stack on one [[Spine]], analyzed once where a frame is
+    * needed: the end of a def, tee or root tree, a prefixed child (its
+    * column names), a cascade iteration. A step that needs a DataFrame
+    * (watermark, dedup, the registry operators, expect_report, drop, the
+    * asof / interval / salted joins, compact, running totals, top_k)
+    * analyzes before it. */
   def compileNode(spark: SparkSession, node: NodeSpec, input: Option[DataFrame] = None,
       executeSinks: Boolean = true, streaming: Boolean = false,
-      refs: Map[String, DataFrame] = Map.empty): DataFrame = {
+      refs: Map[String, DataFrame] = Map.empty): DataFrame =
+    buildNode(new Sources(spark), node, input.map(Spine(_)), executeSinks, streaming, refs).frame
+
+  /** The node's steps stacked on `input` (else on its source): the
+    * caller analyzes the returned spine where it needs a frame. */
+  private def buildNode(sources: Sources, node: NodeSpec, input: Option[Spine],
+      executeSinks: Boolean, streaming: Boolean, refs: Map[String, DataFrame]): Spine = {
+    val spark = sources.spark
     if (node.combine.isDefined && node.source.isDefined)
       throw new IllegalArgumentException(
         s"node ${node.id}: source and combine are mutually exclusive")
@@ -298,9 +331,9 @@ object Compiler {
     // stream node, both invalid by construction
     Operators.rejectRootSinks(node)
     val opCtx = new Operators.Ctx(spark, node.id, streaming, refs)
-    var df = input.getOrElse(node.combine match {
+    val s = input.getOrElse(Spine(node.combine match {
       case Some(c) =>
-        val parts = c.nodes.map(n => compileNode(spark, n, None, executeSinks, streaming, refs))
+        val parts = c.nodes.map(n => buildNode(sources, n, None, executeSinks, streaming, refs).frame)
         if (parts.isEmpty)
           throw new IllegalArgumentException(s"node ${node.id}: combine needs nodes")
         c.op match {
@@ -326,9 +359,9 @@ object Compiler {
             // streaming compile — the identical spec stays batch-runnable
             // for the oracle.
             if (streaming && src.stream) readStreamSource(spark, src)
-            else readSource(spark, src)
+            else sources(src)
         }
-    })
+    }))
 
     node.derive.foreach { case (c, e) =>
       // Scale audit, not a rejection: Spark's [currentRow,
@@ -343,14 +376,14 @@ object Compiler {
           "FOLLOWING aggregate window frame — O(partition²) per key in " +
           "Spark; reverse the ORDER BY and use ROWS BETWEEN UNBOUNDED " +
           "PRECEDING AND CURRENT ROW instead (see docs/USAGE.md)")
-      df = df.withColumn(c, expr(e))
     }
+    s.withColumns(node.derive.map { case (c, e) => c -> expr(e) })
 
     // After derive (the watermark column may be derived), before any
     // stateful op. No-op on batch frames.
-    node.watermark.foreach(w => df = df.withWatermark(w.col, w.delay))
+    node.watermark.foreach(w => s.through(_.withWatermark(w.col, w.delay)))
 
-    node.filters.foreach(f => df = df.filter(filterColumn(f)))
+    node.filters.foreach(f => s.filter(filterColumn(f)))
 
     // Dedup after filters (dropping rows first shrinks the dedup shuffle),
     // before projection/aggregation so min_by can carry all columns.
@@ -361,17 +394,17 @@ object Compiler {
       if (d.countCol.nonEmpty)
         opCtx.requireBatch("dedup (count_col)", "a class-size aggregate",
           "drop count_col (streaming state dedup cannot count a class)")
-      def winner(): DataFrame = (d.idCol, d.orderCol) match {
-        case (Some(id), Some(oc)) =>
-          opCtx.requireBatch("dedup (order_col)", "a score-ranked aggregate",
-            "drop order_col (streams keep the first arrival per key)")
-          graft.ops.Dedup.exactDedupBest(df, d.keys, id, oc, d.descending,
-            d.countCol)
-        case (Some(id), None) =>
-          graft.ops.Dedup.exactDedup(df, d.keys, id, d.countCol)
-        case _ => df.dropDuplicates(d.keys)
-      }
-      df =
+      s.through { df =>
+        def winner(): DataFrame = (d.idCol, d.orderCol) match {
+          case (Some(id), Some(oc)) =>
+            opCtx.requireBatch("dedup (order_col)", "a score-ranked aggregate",
+              "drop order_col (streams keep the first arrival per key)")
+            graft.ops.Dedup.exactDedupBest(df, d.keys, id, oc, d.descending,
+              d.countCol)
+          case (Some(id), None) =>
+            graft.ops.Dedup.exactDedup(df, d.keys, id, d.countCol)
+          case _ => df.dropDuplicates(d.keys)
+        }
         if (d.withinWatermark) {
           if (node.watermark.isEmpty)
             throw new IllegalArgumentException(
@@ -390,25 +423,25 @@ object Compiler {
           if (df.isStreaming) df.dropDuplicatesWithinWatermark(d.keys)
           else winner()
         } else winner()
+      }
     }
 
-    if (node.keepColumns.nonEmpty)
-      df = df.select(node.keepColumns.map(col): _*)
+    if (node.keepColumns.nonEmpty) s.select(node.keepColumns.map(col))
 
     // the registry operators (near_dup … featurize), in registry order
-    df = Operators.transform(node, opCtx, df)
+    if (node.ops.nonEmpty) s.through(Operators.transform(node, opCtx, _))
 
-    node.aggregate.foreach(a => df = applyAggregate(df, a))
+    node.aggregate.foreach(aggregate(s, _))
 
-    node.rename.foreach { case (o, n) => df = df.withColumnRenamed(o, n) }
+    s.rename(node.rename)
 
-    node.withColumns.foreach { case (c, e) => df = df.withColumn(c, expr(e)) }
+    s.withColumns(node.withColumns.map { case (c, e) => c -> expr(e) })
 
     // post_filters: the curation slot — unlike `filters` (pre-operator),
     // these see every operator/with_columns output (score, near_dup,
     // n_bpe, …), so one config can score-then-drop. Plain row filters:
     // batch AND streaming admissible.
-    node.postFilters.foreach(f => df = df.filter(filterColumn(f)))
+    node.postFilters.foreach(f => s.filter(filterColumn(f)))
 
     // expect: row-level data contracts (the CHECK-constraint shape every
     // lakehouse engine uses): each rule compiles to a filter that is
@@ -429,7 +462,7 @@ object Compiler {
     // NULLs says so explicitly: `score IS NULL OR score > 0`.
     // Documented in USAGE.md's `expect` row; tested in CompilerSpec.
     node.expect.foreach { case (name, e) =>
-      df = df.filter(when(expr(e), lit(true)).otherwise(raise_error(
+      s.filter(when(expr(e), lit(true)).otherwise(raise_error(
         lit(s"expectation '$name' violated: $e"))))
     }
 
@@ -450,26 +483,26 @@ object Compiler {
         "declare expect_report on the streaming ROOT instead — it becomes " +
           "the per-batch contract monitor (batch_id-stamped scorecard " +
           "rows appended to the path sink)")
-      df = graft.ops.Relational.expectReport(df, node.expectReport,
-        node.expectReportGroups)
+      s.through(graft.ops.Relational.expectReport(_, node.expectReport,
+        node.expectReportGroups))
     }
 
-    if (node.drop.nonEmpty) {
+    if (node.drop.nonEmpty) s.through { df =>
       // DataFrame.drop silently ignores unknown names — a typo'd drop would
       // leave the column in the sink with no diagnostic; fail loud instead
       val missing = node.drop.filterNot(df.columns.contains)
       if (missing.nonEmpty)
         throw new IllegalArgumentException(
           s"node ${node.id}: drop references unknown columns: ${missing.mkString(", ")}")
-      df = df.drop(node.drop: _*)
+      df.drop(node.drop: _*)
     }
 
     node.bitemporal.foreach { b =>
-      df = df.withColumn(b.fromCol, lit(b.validFrom)).withColumn(b.toCol, lit(b.validTo))
+      s.withColumns(Seq(b.fromCol -> lit(b.validFrom), b.toCol -> lit(b.validTo)))
     }
 
     node.children.foreach { ch =>
-      var childDf = compileNode(spark, ch.node, None, executeSinks, streaming, refs)
+      val child = buildNode(sources, ch.node, None, executeSinks, streaming, refs)
       // Join-strategy hint on the child side ("broadcast", "merge",
       // "shuffle_hash", ...). Catalyst resolves it to the matching physical
       // strategy; unknown hint names would be silently ignored by Spark, so
@@ -479,15 +512,14 @@ object Compiler {
         if (!known.contains(h))
           throw new IllegalArgumentException(
             s"node ${node.id}: unknown join hint '$h' (one of: ${known.mkString(", ")})")
-        childDf = childDf.hint(h)
+        child.hint(h)
       }
       if (ch.prefix) {
         val linkSet = ch.join.link.toSet
-        childDf.columns.filterNot(linkSet.contains).foreach { c =>
-          childDf = childDf.withColumnRenamed(c, s"${ch.node.id}_$c")
-        }
+        child.rename(child.frame.columns.toSeq.filterNot(linkSet.contains)
+          .map(c => c -> s"${ch.node.id}_$c"))
       }
-      df = ch.join match {
+      ch.join match {
         case j if j.how == "asof" =>
           val (lts, rts0) = (j.leftTs, j.rightTs) match {
             case (Some(l), Some(r)) => (l, r)
@@ -497,9 +529,10 @@ object Compiler {
           // prefix namespacing above renamed every non-link child column,
           // including the as-of timestamp — follow it
           val rts = if (ch.prefix && !j.link.contains(rts0)) s"${ch.node.id}_$rts0" else rts0
-          val payload = childDf.columns.filterNot(c => j.link.contains(c) || c == rts)
-          graft.ops.Relational.asofJoin(df, childDf, j.link, lts, rts,
-            payload.toSeq, direction = j.direction, tolerance = j.tolerance)
+          val right = child.frame
+          val payload = right.columns.filterNot(c => j.link.contains(c) || c == rts)
+          s.through(graft.ops.Relational.asofJoin(_, right, j.link, lts, rts,
+            payload.toSeq, direction = j.direction, tolerance = j.tolerance))
         case j if j.how == "interval" =>
           // Lookback/interval join (config surface of Streaming.intervalJoin):
           // right rows within [left_ts − lookback, left_ts] per link key. On
@@ -520,7 +553,8 @@ object Compiler {
               s"node ${node.id}: interval join needs both left_delay and " +
                 "right_delay, or neither")
           }
-          graft.streaming.Streaming.intervalJoin(df, childDf, j.link, lts, rts, lb, wm)
+          s.through(graft.streaming.Streaming.intervalJoin(_, child.frame, j.link,
+            lts, rts, lb, wm))
         case j if j.salt.isDefined =>
           // Skew-salted equi-join (Relational.saltedJoin): parent = the
           // large/skewed side, child = the replicated side — the same
@@ -533,13 +567,13 @@ object Compiler {
             s"node ${node.id}: join.salt and a join hint are mutually " +
               "exclusive — salting rewrites the join keys; let Catalyst " +
               "pick the strategy for the salted shuffle")
-          graft.ops.Relational.saltedJoin(
-            df, childDf, j.link, j.salt.get, j.how)
+          s.through(graft.ops.Relational.saltedJoin(
+            _, child.frame, j.link, j.salt.get, j.how))
         case j =>
           j.onExpr match {
-            case Some(cond)              => df.join(childDf, expr(cond), j.how)
-            case None if j.link.nonEmpty => df.join(childDf, j.link, j.how)
-            case None if j.how == "cross" => df.crossJoin(childDf)
+            case Some(cond)               => s.join(child, j.how, Nil, Some(expr(cond)))
+            case None if j.link.nonEmpty  => s.join(child, j.how, j.link, None)
+            case None if j.how == "cross" => s.join(child, j.how, Nil, None)
             case None =>
               // A link-less, expr-less child used to fall through to a
               // silent crossJoin — so a typo'd join key ("onn" instead of
@@ -558,47 +592,47 @@ object Compiler {
       if (c.versionOrder.isEmpty) throw new IllegalArgumentException(
         s"node ${node.id}: compact needs version_order (recency first, " +
           "e.g. [\"ts desc\", \"seq desc\"])")
-      if (df.isStreaming) {
-        // rank windows don't compile to a streaming plan — the streaming
-        // spelling of the same snapshot is a max_by aggregation
-        // (Streaming.latestPerKey, one state row per key). max_by's
-        // struct comparison is lexicographic-ascending, so it expresses
-        // exactly the all-DESC version orders ("latest wins"); reject
-        // mixed directions instead of silently mis-ordering.
-        val versionCols = c.versionOrder.map { s =>
-          val parts = s.trim.split("\\s+").toSeq
-          // a bare column defaults to ASC in the batch path (sortColumn),
-          // which would pick the OLDEST row while max_by picks the
-          // LATEST — same JSON, divergent snapshots. Demand an explicit
-          // 'desc'. Likewise 'nulls first': batch would rank null
-          // versions first, but max_by's struct comparison ranks nulls
-          // last — reject rather than silently diverge.
-          if (!parts.tail.exists(_.equalsIgnoreCase("desc")))
-            throw new IllegalArgumentException(
-              s"node ${node.id}: streaming compact needs all-DESC " +
-                s"version_order with explicit desc on every entry " +
-                s"(latest wins; bare columns default asc in batch), got '$s'")
-          if (parts.tail.exists(_.equalsIgnoreCase("first")))
-            throw new IllegalArgumentException(
-              s"node ${node.id}: streaming compact cannot honor 'nulls " +
-                s"first' (max_by ranks nulls last), got '$s'")
-          parts.head
-        }
-        val originalOrder = df.columns.toSeq
-        val payload = originalOrder.filterNot(c.keys.contains)
-        df = graft.streaming.Streaming.latestPerKey(
-          df, c.keys, versionCols, payload)
-        // latestPerKey emits keys ++ payload; restore the node's input
-        // column order so batch and stream compiles of one spec agree
-        // on schema, not just values
-        df = df.select(originalOrder.map(col): _*)
-        // tombstone filter on the emitted latest row (update-mode
-        // semantics: the sink must upsert by key — see latestPerKey doc)
-        c.deleteWhen.foreach(d => df = df.filter(!coalesce(expr(d), lit(false))))
-      } else {
-        df = graft.ops.Relational.compactChangelog(
-          df, c.keys, c.versionOrder.map(sortColumn),
-          c.deleteWhen.map(expr).getOrElse(lit(false)))
+      s.through { df =>
+        if (df.isStreaming) {
+          // rank windows don't compile to a streaming plan — the streaming
+          // spelling of the same snapshot is a max_by aggregation
+          // (Streaming.latestPerKey, one state row per key). max_by's
+          // struct comparison is lexicographic-ascending, so it expresses
+          // exactly the all-DESC version orders ("latest wins"); reject
+          // mixed directions instead of silently mis-ordering.
+          val versionCols = c.versionOrder.map { o =>
+            val parts = o.trim.split("\\s+").toSeq
+            // a bare column defaults to ASC in the batch path (sortColumn),
+            // which would pick the OLDEST row while max_by picks the
+            // LATEST — same JSON, divergent snapshots. Demand an explicit
+            // 'desc'. Likewise 'nulls first': batch would rank null
+            // versions first, but max_by's struct comparison ranks nulls
+            // last — reject rather than silently diverge.
+            if (!parts.tail.exists(_.equalsIgnoreCase("desc")))
+              throw new IllegalArgumentException(
+                s"node ${node.id}: streaming compact needs all-DESC " +
+                  s"version_order with explicit desc on every entry " +
+                  s"(latest wins; bare columns default asc in batch), got '$o'")
+            if (parts.tail.exists(_.equalsIgnoreCase("first")))
+              throw new IllegalArgumentException(
+                s"node ${node.id}: streaming compact cannot honor 'nulls " +
+                  s"first' (max_by ranks nulls last), got '$o'")
+            parts.head
+          }
+          val originalOrder = df.columns.toSeq
+          val payload = originalOrder.filterNot(c.keys.contains)
+          // latestPerKey emits keys ++ payload; restore the node's input
+          // column order so batch and stream compiles of one spec agree
+          // on schema, not just values
+          val latest = graft.streaming.Streaming.latestPerKey(
+            df, c.keys, versionCols, payload).select(originalOrder.map(col): _*)
+          // tombstone filter on the emitted latest row (update-mode
+          // semantics: the sink must upsert by key — see latestPerKey doc)
+          c.deleteWhen.fold(latest)(d => latest.filter(!coalesce(expr(d), lit(false))))
+        } else
+          graft.ops.Relational.compactChangelog(
+            df, c.keys, c.versionOrder.map(sortColumn),
+            c.deleteWhen.map(expr).getOrElse(lit(false)))
       }
     }
 
@@ -608,19 +642,19 @@ object Compiler {
     // longs of state per key, and the batch compile of one spec equals
     // the window formulation exactly (StreamingSpec).
     node.runningTotals.foreach { r =>
-      df = graft.streaming.Streaming.runningTotals(
-        df, r.keyCol, r.seqCol, r.tsCol, r.valueCol)
+      s.through(graft.streaming.Streaming.runningTotals(
+        _, r.keyCol, r.seqCol, r.tsCol, r.valueCol))
     }
 
     node.topK.foreach { t =>
-      df = graft.ops.Relational.topKPerGroup(
-        df, t.partitionBy, t.orderBy.map(sortColumn), t.k, t.rankCol)
+      s.through(graft.ops.Relational.topKPerGroup(
+        _, t.partitionBy, t.orderBy.map(sortColumn), t.k, t.rankCol))
     }
 
-    if (node.orderBy.nonEmpty) df = df.orderBy(node.orderBy.map(sortColumn): _*)
-    node.limit.foreach(l => df = df.limit(l))
-    if (executeSinks) node.save.foreach(s => writeSink(df, s, s"node ${node.id}"))
-    df
+    if (node.orderBy.nonEmpty) s.orderBy(node.orderBy.map(sortColumn))
+    node.limit.foreach(s.limit)
+    if (executeSinks) node.save.foreach(sv => writeSink(s.frame, sv, s"node ${node.id}"))
+    s
   }
 
   /** Batch sink execution, shared by node and cascade saves. A sink with
@@ -682,15 +716,18 @@ object Compiler {
   /** Iteration×level cascade (`Optimus/optimus.py:40-51`): the source is
     * read once and each iteration's levels chain lazily — output of level k
     * is the input of level k+1. Returns the last iteration's result. */
-  def compileCascade(spark: SparkSession, c: CascadeSpec,
-      executeSinks: Boolean = true): DataFrame = {
-    val src = readSource(spark, c.source)
+  private def compileCascade(sources: Sources, c: CascadeSpec,
+      executeSinks: Boolean): DataFrame = {
+    val src = sources(c.source)
     // One source feeding >1 iteration: each iteration restarts from `src`.
     // Spark re-uses the scan via plan-level reuse; no .cache() needed for
     // parquet (and caching 100 TB would be wrong).
     val results = c.iterations.map { it =>
-      var df = src
-      it.levels.foreach(l => df = compileNode(spark, l, Some(df), executeSinks))
+      // the levels stack on one spine: an iteration is analyzed once,
+      // plus once per level whose save runs
+      val df = it.levels.foldLeft(Spine(src)) { (in, l) =>
+        buildNode(sources, l, Some(in), executeSinks, streaming = false, Map.empty)
+      }.frame
       if (executeSinks) it.save.foreach(s => writeSink(df, s, s"iteration ${it.id}"))
       df
     }
@@ -730,9 +767,9 @@ object Compiler {
               "outlives the compile and the pin would never release; " +
               "materialize the def to parquet and source it by path instead")
         }
-        val refs = defs.foldLeft(Map.empty[String, org.apache.spark.sql.DataFrame]) {
-          (acc, d) => acc + (d.id ->
-            compileNode(spark, d, None, executeSinks = false, refs = acc))
+        val sources = new Sources(spark)
+        val refs = defs.foldLeft(Map.empty[String, DataFrame]) { (acc, d) =>
+          acc + (d.id -> buildNode(sources, d, None, executeSinks = false, streaming = false, acc).frame)
         }
         if (tee.nonEmpty) throw new IllegalArgumentException(
           "tee is batch-only — a streaming query has exactly ONE sink; " +
@@ -759,11 +796,11 @@ object Compiler {
             "ONE; declare one per stream")
         // the root profile is the per-batch drift monitor, not a transform
         val profile = root.op[ProfileSpec]
-        val out = compileNode(spark,
+        val out = buildNode(sources,
           root.copy(ops = root.ops.filterNot(o => sinks.contains(o) || profile.contains(o)),
             expectReport = Nil, expectReportGroups = Nil),
-          Some(readStreamSource(spark, src)),
-          executeSinks = false, streaming = true, refs = refs)
+          Some(Spine(readStreamSource(spark, src))),
+          executeSinks = false, streaming = true, refs).frame
         // The two per-batch MONITOR sinks (profile = drift stats,
         // expect_report = contract scorecard) share the same plumbing:
         // root-only, path sink, batch_id-stamped appends. A stream has
@@ -1072,7 +1109,13 @@ object Compiler {
   }
 
   def applyAggregate(df: DataFrame, a: AggregateSpec): DataFrame = {
-    a.salt.filter(_ > 1).foreach { buckets =>
+    val s = Spine(df)
+    aggregate(s, a)
+    s.frame
+  }
+
+  private def aggregate(s: Spine, a: AggregateSpec): Unit = a.salt.filter(_ > 1) match {
+    case Some(buckets) =>
       // Salted two-phase aggregation: strictly for decomposable functions
       // on a plain groupBy (phase-2 merge semantics exist only for those).
       if (a.mode != "groupBy" || a.keep.nonEmpty || a.groupBy.isEmpty || a.pivot.nonEmpty)
@@ -1084,38 +1127,32 @@ object Compiler {
         (g.col, g.func,
           g.newName.getOrElse(s"${g.func}_${if (g.col == "*") "all" else g.col}"))
       }
-      return graft.ops.Relational.saltedAggregate(df, a.groupBy, aggs3, buckets)
-    }
-    // keep_columns that aren't group keys: reference selects them verbatim
-    // post-agg (`Optimus/optimus.py:31`) which is invalid under ANSI —
-    // resolve to any_value(c) (SURVEY §2.1 P2).
-    val keepExprs = a.keep.filterNot(a.groupBy.contains)
-      .map(c => any_value(col(c), lit(true)).as(c))
-    val aggExprs = a.aggs.map(aggColumn) ++ keepExprs
-    if (a.groupBy.isEmpty && a.mode == "groupBy") {
-      df.agg(aggExprs.head, aggExprs.tail: _*)
-    } else {
-      val keys = a.groupBy.map(col)
-      val grouped = a.mode match {
-        case "rollup" => df.rollup(keys: _*)
-        case "cube"   => df.cube(keys: _*)
-        case "grouping_sets" | "groupingSets" =>
-          // Arbitrary GROUPING SETS ((a),(b,c),()): `sets` lists the
-          // subsets; `groupBy` stays the full output column list.
-          df.groupingSets(a.sets.map(_.map(col)), keys: _*)
-        case _        => df.groupBy(keys: _*)
-      }
+      s.through(graft.ops.Relational.saltedAggregate(_, a.groupBy, aggs3, buckets))
+    case None =>
+      // keep_columns that aren't group keys: reference selects them verbatim
+      // post-agg (`Optimus/optimus.py:31`) which is invalid under ANSI —
+      // resolve to any_value(c) (SURVEY §2.1 P2).
+      val keepExprs = a.keep.filterNot(a.groupBy.contains)
+        .map(c => any_value(col(c), lit(true)).as(c))
+      val aggExprs = a.aggs.map(aggColumn) ++ keepExprs
+      if (aggExprs.isEmpty)
+        throw new IllegalArgumentException(
+          "aggregate needs at least one aggregation (or a keep column outside group_by)")
       a.pivot match {
-        case Some(p) =>
+        // a global aggregate (no group keys, plain mode) has no pivot
+        case Some(p) if a.groupBy.nonEmpty || a.mode != "groupBy" =>
           if (a.mode != "groupBy")
             throw new IllegalArgumentException("pivot requires plain groupBy mode")
           if (p.values.isEmpty)
             throw new IllegalArgumentException(
               "pivot needs explicit values (an implicit pivot costs a distinct pass)")
-          grouped.pivot(p.col, p.values.map(anyOf)).agg(aggExprs.head, aggExprs.tail: _*)
-        case None => grouped.agg(aggExprs.head, aggExprs.tail: _*)
+          s.through(_.groupBy(a.groupBy.map(col): _*).pivot(p.col, p.values.map(anyOf))
+            .agg(aggExprs.head, aggExprs.tail: _*))
+        case _ =>
+          // Arbitrary GROUPING SETS ((a),(b,c),()): `sets` lists the
+          // subsets; `groupBy` stays the full output column list.
+          s.aggregate(a.mode, a.groupBy.map(col), a.sets.map(_.map(col)), aggExprs)
       }
-    }
   }
 
   /** "col", "col asc", "col desc", with optional "nulls first"/"nulls

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters so graft
   * can expose custom Catalyst expressions (e.g. graft.functions.VectorDot)
@@ -17,6 +18,15 @@ object GraftColumnBridge {
     * columnnodeexpression"). */
   def expressionEager(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** The analyzed logical plan behind a DataFrame. */
+  def plan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** A DataFrame over `plan` — `Dataset.ofRows`, one analyzer run, the
+    * same call every classic Dataset transformation ends in. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Truncate a DataFrame's LOGICAL lineage to a leaf while keeping the
     * (replayable) physical RDD chain: re-wrap its InternalRow RDD as a

@@ -1035,4 +1035,140 @@ class CompilerSpec extends SparkSpec {
       .agg(expr("hll_sketch_estimate(hll_union_agg(h))").as("nd")).head.getLong(0)
     assert(nd == 5L, s"HLL union estimate must be exact at this cardinality, got $nd")
   }
+
+  // ---- one analysis per node: the lazy spine keeps per-call semantics ----
+
+  /** Same columns in the same order, same rows, and the same optimized
+    * plan as `want`, the frame built one DataFrame call per step. */
+  private def sameAsCalls(out: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(out.columns.toSeq == want.columns.toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+      want.collect().map(_.toString).sorted.toSeq)
+    assert(out.queryExecution.optimizedPlan.sameResult(want.queryExecution.optimizedPlan),
+      s"optimized plans differ:\n${out.queryExecution.optimizedPlan}\nvs\n" +
+        want.queryExecution.optimizedPlan)
+  }
+
+  test("spine: a derive entry that reads an earlier entry sees its value") {
+    import org.apache.spark.sql.functions.expr
+    df.createOrReplaceTempView("spine_t")
+    // v replaces in place and w reads the new v; id2 is independent; z
+    // reads two earlier entries
+    val out = Compiler.compileJson(spark, """
+      {"source": {"table": "spine_t"},
+       "derive": {"v": "v + 1", "w": "v * 2", "id2": "id * 10", "z": "id2 + w"}}""")
+    val want = spark.table("spine_t").withColumn("v", expr("v + 1"))
+      .withColumn("w", expr("v * 2")).withColumn("id2", expr("id * 10"))
+      .withColumn("z", expr("id2 + w"))
+    sameAsCalls(out, want)
+    assert(out.filter("id = 1").head().getAs[Double]("z") == 32.0)
+  }
+
+  test("spine: two generator derive entries in one node") {
+    import org.apache.spark.sql.functions.expr
+    Seq((1, Seq(1, 2), Seq("a", "b", "c"))).toDF("id", "xs", "ys")
+      .createOrReplaceTempView("spine_g")
+    // one Project may hold only one generator; each call got its own
+    val out = Compiler.compileJson(spark, """
+      {"source": {"table": "spine_g"},
+       "derive": {"n": "id + 1", "x": "explode(xs)", "y": "explode(ys)", "m": "n * x"}}""")
+    val want = spark.table("spine_g").withColumn("n", expr("id + 1"))
+      .withColumn("x", expr("explode(xs)")).withColumn("y", expr("explode(ys)"))
+      .withColumn("m", expr("n * x"))
+    sameAsCalls(out, want)
+    assert(out.count() == 6)
+  }
+
+  test("spine: a rename chain applies in listed order") {
+    df.createOrReplaceTempView("spine_r")
+    val out = Compiler.compileJson(spark, """
+      {"source": {"table": "spine_r"}, "rename": {"k": "x", "x": "y", "v": "value"}}""")
+    val want = spark.table("spine_r").withColumnRenamed("k", "x")
+      .withColumnRenamed("x", "y").withColumnRenamed("v", "value")
+    sameAsCalls(out, want)
+    assert(out.columns.toSeq == Seq("y", "id", "value", "tag"))
+  }
+
+  test("spine: one def under two prefixed children of one parent") {
+    import org.apache.spark.sql.functions.sum
+    df.createOrReplaceTempView("spine_d")
+    // the generated stratum-2 shape: one def referenced by two sibling
+    // children, so the second join's right side repeats the first's
+    // attributes and the analyzer must re-instance it
+    val out = Compiler.compileJson(spark, """
+      {"defs": [{"id": "agg", "source": {"table": "spine_d"},
+                 "group_by": ["k"],
+                 "aggregations": [{"col": "v", "func": "sum", "new_name": "sv"}]}],
+       "id": "root", "source": {"table": "spine_d"}, "keep_columns": ["k", "id"],
+       "children": [
+         {"id": "c1", "source": {"ref": "agg"},
+          "join": {"on": ["k"], "how": "left"}, "prefix": true},
+         {"id": "c2", "source": {"ref": "agg"}, "filters": ["sv > 20"],
+          "join": {"on": ["k"], "how": "left"}, "prefix": true}]}""")
+    val t = spark.table("spine_d")
+    val agg = t.groupBy("k").agg(sum("v").as("sv"))
+    def prefixed(d: org.apache.spark.sql.DataFrame, id: String) =
+      d.columns.filterNot(_ == "k").foldLeft(d)((x, c) => x.withColumnRenamed(c, s"${id}_$c"))
+    val want = t.select("k", "id")
+      .join(prefixed(agg, "c1"), Seq("k"), "left")
+      .join(prefixed(agg.filter("sv > 20"), "c2"), Seq("k"), "left")
+    sameAsCalls(out, want)
+    assert(out.columns.toSeq == Seq("k", "id", "c1_sv", "c2_sv"))
+  }
+
+  test("spine: an analysis error inside a derive surfaces from validatePipeline") {
+    df.createOrReplaceTempView("spine_e")
+    val spec = JsonCodec.parse("""
+      {"source": {"table": "spine_e"},
+       "derive": {"w": "v + no_such_col"}, "keep_columns": ["k", "w"]}""")
+    val errs = Compiler.validatePipeline(spark, spec)
+    assert(errs.size == 1 && errs.head.contains("UNRESOLVED_COLUMN") &&
+      errs.head.contains("no_such_col"), errs)
+    val e = intercept[org.apache.spark.sql.AnalysisException](Compiler.compile(spark, spec))
+    assert(e.getCondition.startsWith("UNRESOLVED_COLUMN"), e.getCondition)
+  }
+
+  test("validatePipeline builds cache: true defs without persisting them") {
+    df.createOrReplaceTempView("spine_c")
+    spark.catalog.clearCache()
+    Compiler.releaseAllCaches()
+    val spec = JsonCodec.parse("""
+      {"defs": [{"id": "tot", "cache": true, "source": {"table": "spine_c"},
+                 "group_by": ["k"],
+                 "aggregations": [{"col": "v", "func": "sum", "new_name": "sv"}]}],
+       "id": "r", "source": {"ref": "tot"}, "order_by": ["k asc"]}""")
+    assert(Compiler.validatePipeline(spark, spec).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "validation must not persist a cache: true def")
+    // compile still persists it, and releaseCache frees it
+    val out = Compiler.compile(spark, spec)
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    Compiler.releaseCache(out)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("compile cost: a 15-node config is analyzed about once per node") {
+    // perf/stratum2_seed1.json is the stratum-2 config perfbench/gen.py
+    // draws for seed 1 (15 nodes; one def referenced by six children), read
+    // over the sf0.001 views. When every DataFrame call re-ran the
+    // analyzer, validatePipeline + compile of it took 74,994 rule runs
+    // (38,334 + 36,660); analyzing each node once must stay under a fifth.
+    Tables.registerViews(spark, sf)
+    val spec = JsonCodec.parse(
+      scala.io.Source.fromResource("perf/stratum2_seed1.json").mkString)
+    def ruleRuns(): Long = {
+      val before = org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns
+      assert(Compiler.validatePipeline(spark, spec).isEmpty)
+      Compiler.compile(spark, spec)
+      org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns - before
+    }
+    try {
+      // the counter is JVM-wide: the lower of two runs drops any rule run
+      // a concurrent query added
+      val runs = math.min(ruleRuns(), ruleRuns())
+      assert(runs <= 74994 / 5,
+        s"validatePipeline + compile took $runs rule runs (budget ${74994 / 5})")
+    } finally Compiler.releaseAllCaches()
+  }
 }
