@@ -31,5 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // scaladoc). Operator-optimization batch: co-operates with
     // ColumnPruning in the same fixed point.
     ext.injectOptimizerRule(_ => PullExpensiveProjectAboveSort)
+    // a root's order_by + limit is taken before its left-joined children
+    // instead of after joining every parent row (see the rule's scaladoc)
+    ext.injectOptimizerRule(_ => PushTopKBelowLeftOuterJoin)
   }
 }

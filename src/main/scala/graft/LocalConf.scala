@@ -34,7 +34,7 @@ object LocalConf {
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "true")
     // The production extension entry point (functions + the
-    // sort-sampling optimizer rule) — local sessions run the same
+    // optimizer rules) — local sessions run the same
     // posture a `--conf spark.sql.extensions=graft.GraftExtensions`
     // deployment does. Registry.registerAll stays idempotent with it.
     .config("spark.sql.extensions", classOf[GraftExtensions].getName)

@@ -97,6 +97,16 @@ object JsonCodec {
     opt(n, keys: _*).getOrElse(throw new IllegalArgumentException(
       s"$ctx requires '${keys.head}' (got: ${n.toString.take(200)})"))
 
+  /** A JSON integer in [0, Int.MaxValue], or a named error: Jackson's
+    * `asInt` would read "ten" as 0, true as 1, 10.9 as 10 and wrap
+    * 3000000000 to a negative. */
+  private[graft] def nonNegInt(n: JsonNode, site: String): Int = {
+    if (!(n.isIntegralNumber && n.canConvertToInt && n.asInt >= 0))
+      throw new IllegalArgumentException(
+        s"$site must be an integer >= 0 (got: ${n.toString.take(200)})")
+    n.asInt
+  }
+
   def jvalue(n: JsonNode): JValue =
     if (n == null || n.isNull) JNull
     else if (n.isTextual) JStr(n.asText)
@@ -437,11 +447,11 @@ object JsonCodec {
         TopKSpec(
           partitionBy = opt(t, "partition_by", "partitionBy").map(strSeq).getOrElse(Nil),
           orderBy = opt(t, "order_by", "orderBy").map(strSeq).getOrElse(Nil),
-          k = req(t, s"node $id: top_k", "k").asInt,
+          k = nonNegInt(req(t, s"node $id: top_k", "k"), s"node $id: top_k.k"),
           rankCol = opt(t, "rank_col", "rankCol").map(_.asText).getOrElse("rn"))
       },
       orderBy = optN("order_by", "orderBy").map(strSeq).getOrElse(Nil),
-      limit = optN("limit").map(_.asInt),
+      limit = optN("limit").map(nonNegInt(_, s"node $id: limit")),
       save = optN("save").map(sink),
       cache = optN("cache").exists(_.asBoolean(false))
     )

@@ -1171,4 +1171,35 @@ class CompilerSpec extends SparkSpec {
         s"validatePipeline + compile took $runs rule runs (budget ${74994 / 5})")
     } finally Compiler.releaseAllCaches()
   }
+
+  test("top-k below link joins: the stratum-2 root takes its limit before its left-joined children") {
+    // the root is orders ⟕ c2 ⟕ c24 (each a prefixed customer subtree)
+    // ending in order_by o_orderkey desc + limit 34
+    import PushTopKBelowLeftOuterJoinSpec._
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join}
+    Tables.registerViews(spark, sf)
+    val spec = JsonCodec.parse(
+      scala.io.Source.fromResource("perf/stratum2_seed1.json").mkString)
+    try {
+      val out = Compiler.compile(spark, spec)
+      val plan = out.queryExecution.optimizedPlan
+      assert(plan.isInstanceOf[GlobalLimit], plan.treeString)
+      val rootJoin = plan.collectFirst { case j: Join => j }.get
+      assert(rootJoin.joinType == LeftOuter)
+      // one limit below the root's joins, on the orders side: no join under it
+      val inner = rootJoin.collect { case g: GlobalLimit => g }
+      assert(inner.size == 1 && inner.head.collectFirst { case j: Join => j }.isEmpty,
+        plan.treeString)
+      val rows = out.collect().toSeq
+      assert(rows.size == 34)
+      assert(root(out.queryExecution.executedPlan)
+        .isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec])
+      withoutRule(spark) {
+        val plain = Compiler.compile(spark, spec)
+        assert(pushed(plain) == 0)
+        assert(plain.collect().toSeq == rows)
+      }
+    } finally Compiler.releaseAllCaches()
+  }
 }

@@ -103,6 +103,21 @@ class JsonCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("limit and top_k.k must be JSON integers in [0, Int.MaxValue]") {
+    assert(root("""{"id": "n1", "limit": 0}""").limit.contains(0))
+    assert(root("""{"id": "n1", "limit": 2147483647}""").limit.contains(Int.MaxValue))
+    assert(root("""{"id": "n1", "top_k": {"k": 5}}""").topK.map(_.k).contains(5))
+    // Jackson's asInt read "ten" as 0, true as 1, 10.9 as 10 and
+    // 3000000000 as -1294967296
+    for (bad <- Seq("\"ten\"", "true", "10.9", "10.0", "3000000000", "-1", "[3]")) {
+      val e = intercept[IllegalArgumentException](root(s"""{"id": "n1", "limit": $bad}"""))
+      assert(e.getMessage.contains("node n1: limit must be an integer >= 0"), e.getMessage)
+      val k = intercept[IllegalArgumentException](
+        root(s"""{"id": "n1", "top_k": {"order_by": ["v"], "k": $bad}}"""))
+      assert(k.getMessage.contains("node n1: top_k.k must be an integer >= 0"), k.getMessage)
+    }
+  }
+
   test("near_dup node key decodes with production-regime defaults") {
     val n = root("""
       {"source": {"table": "embeddings"},
