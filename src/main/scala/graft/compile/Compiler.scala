@@ -51,7 +51,7 @@ object Compiler {
       override def initialValue() = scala.collection.mutable.ListBuffer[String]()
     }
 
-  private def warn(msg: String): Unit = {
+  private[compile] def warn(msg: String): Unit = {
     log.warn(msg)
     val b = threadWarnings.get()
     // bounded: a long-lived driver compiling warning-producing specs in
@@ -89,9 +89,7 @@ object Compiler {
   /** Does ANY node in this subtree (the node, its combine legs, its
     * children) carry cache: true? Shared by the batch and streaming defs
     * guards — a nested cache must be rejected identically in both. */
-  private def anyCached(n: NodeSpec): Boolean =
-    n.cache || n.combine.exists(_.nodes.exists(anyCached)) ||
-      n.children.exists(c => anyCached(c.node))
+  private def anyCached(n: NodeSpec): Boolean = n.cache || n.inputs.exists(anyCached)
 
   private def trackPersisted(result: DataFrame, cached: Seq[DataFrame]): Unit =
     if (cached.nonEmpty) persistedByResult.synchronized {
@@ -160,23 +158,12 @@ object Compiler {
   def validate(df: DataFrame, node: NodeSpec): Seq[String] = {
     // derive-created columns (and the dedup count_col) exist by the time
     // keep/aggregate run; their own expression references are checked by
-    // the analyzer tier of validatePipeline
-    val have = df.columns.toSet ++ node.derive.map(_._1) ++
-      node.dedup.flatMap(_.countCol)
-    val wanted =
-      node.keepColumns ++
-        node.aggregate.toSeq.flatMap(a =>
-          a.groupBy ++ a.keep ++ a.sets.flatten ++ a.pivot.map(_.col) ++
-            a.aggs.filterNot(_.col == "*").map(_.col)) ++
-        node.filters.collect { case ColFilter(c, _, _, _) => c } ++
-        node.watermark.map(_.col) ++
-        node.dedup.toSeq.flatMap(d => d.keys ++ d.idCol ++ d.orderCol) ++
-        Operators.reads(node)
-    // compact/running_totals/top_k run AFTER children (joins may add or
-    // prefix columns), so their references are checked by the analyzer
-    // tier, not here — a source-schema check would false-positive on
-    // joined columns.
-    wanted.filterNot(have.contains).map(c => s"node ${node.id}: unknown column '$c' (have: ${have.mkString(", ")})")
+    // the analyzer tier of validatePipeline. Steps after the children
+    // (compact, running_totals, top_k, …) read joined or prefixed columns,
+    // so the analyzer tier checks them, not this source-schema one.
+    val have = df.columns.toSet ++ Operators.adds(node)
+    Operators.reads(node).filterNot(have.contains)
+      .map(c => s"node ${node.id}: unknown column '$c' (have: ${have.mkString(", ")})")
   }
 
   /** Each table / path / sql source of one compile, read — and analyzed —
@@ -205,8 +192,7 @@ object Compiler {
         try validate(sources(s), node)
         catch { case e: Throwable => Seq(s"node ${node.id}: source unreadable: ${e.getMessage}") }
       }
-      own ++ node.combine.toSeq.flatMap(_.nodes.flatMap(walk)) ++
-        node.children.flatMap(c => walk(c.node))
+      own ++ node.inputs.flatMap(walk)
     }
     val friendly = spec match {
       case TreePipeline(root, defs, tee) =>
@@ -245,8 +231,7 @@ object Compiler {
         defs.foreach { d =>
           if (d.save.isDefined) throw new IllegalArgumentException(
             s"def ${d.id}: defs are definitions — sinks live on the root tree")
-          if (d.combine.exists(_.nodes.exists(anyCached)) ||
-              d.children.exists(c => anyCached(c.node)))
+          if (d.inputs.exists(anyCached))
             throw new IllegalArgumentException(
               s"def ${d.id}: cache applies to the def itself — " +
                 "hoist the nested stage into its own def")
@@ -297,364 +282,64 @@ object Compiler {
   def compileJson(spark: SparkSession, json: String): DataFrame =
     compile(spark, JsonCodec.parse(json))
 
-  /** Node pipeline order mirrors the reference's interpreter
-    * (`pandas/optimus.py:7-40`): derive → filters → keep_columns →
-    * aggregate → rename → withColumns → bitemporal → children joins →
-    * orderBy/limit. `derive` runs FIRST so filters may reference derived
-    * columns (documented in USAGE.md and admitted by `validate`); a filter
-    * on a source column still reaches the scan — Catalyst pushes it below
-    * the derive projection. Note the reference quirk kept intentionally:
-    * the parent aggregates BEFORE joining children, so joins run on
-    * aggregated-parent × aggregated-child (SURVEY §3 EP2 step 6).
-    *
-    * The steps stack on one [[Spine]], analyzed once where a frame is
-    * needed: the end of a def, tee or root tree, a prefixed child (its
-    * column names), a cascade iteration. A step that needs a DataFrame
-    * (watermark, dedup, the registry operators, expect_report, drop, the
-    * asof / interval / salted joins, compact, running totals, top_k)
-    * analyzes before it. */
+  /** One node compiled over `input` (else its source): its steps apply in
+    * the order of the step table, [[Operators]] — which mirrors the
+    * reference's interpreter (`pandas/optimus.py:7-40`) — and stack on one
+    * [[Spine]], analyzed once where a frame is needed: the end of a def,
+    * tee or root tree, a prefixed child (its column names), a cascade
+    * iteration, or a step that needs a DataFrame. */
   def compileNode(spark: SparkSession, node: NodeSpec, input: Option[DataFrame] = None,
       executeSinks: Boolean = true, streaming: Boolean = false,
       refs: Map[String, DataFrame] = Map.empty): DataFrame =
     buildNode(new Sources(spark), node, input.map(Spine(_)), executeSinks, streaming, refs).frame
 
-  /** The node's steps stacked on `input` (else on its source): the
-    * caller analyzes the returned spine where it needs a frame. */
+  /** The node's steps stacked on `input` (else on its source or combine):
+    * the caller analyzes the returned spine where it needs a frame. */
   private def buildNode(sources: Sources, node: NodeSpec, input: Option[Spine],
       executeSinks: Boolean, streaming: Boolean, refs: Map[String, DataFrame]): Spine = {
-    val spark = sources.spark
     if (node.combine.isDefined && node.source.isDefined)
       throw new IllegalArgumentException(
         s"node ${node.id}: source and combine are mutually exclusive")
-    // compileStream starts a root sink itself and strips it before the
-    // node walk — one reaching here is a batch compile or a non-root
-    // stream node, both invalid by construction
     Operators.rejectRootSinks(node)
-    val opCtx = new Operators.Ctx(spark, node.id, streaming, refs)
-    val s = input.getOrElse(Spine(node.combine match {
-      case Some(c) =>
-        val parts = c.nodes.map(n => buildNode(sources, n, None, executeSinks, streaming, refs).frame)
-        if (parts.isEmpty)
-          throw new IllegalArgumentException(s"node ${node.id}: combine needs nodes")
-        c.op match {
-          case "union" | "union_all" => parts.reduce(_.unionByName(_))
-          case "union_distinct"      => parts.reduce(_.unionByName(_)).distinct()
-          case "intersect"           => parts.reduce(_.intersect(_))
-          case "except"              => parts.reduce(_.except(_))
-          case other => throw new IllegalArgumentException(
-            s"node ${node.id}: unknown combine op '$other' " +
-              "(one of: union, union_distinct, intersect, except)")
-        }
-      case None =>
-        val src = node.source.getOrElse(
-          throw new IllegalArgumentException(s"node ${node.id}: no source and no input DataFrame"))
-        src.ref match {
-          // A ref IS a compiled def's frame — shared, not re-inlined.
-          case Some(r) => refs.getOrElse(r, throw new IllegalArgumentException(
-            s"node ${node.id}: unknown ref '$r'" +
-              (if (refs.isEmpty) " — declare it under top-level defs"
-               else s" (defined: ${refs.keys.mkString(", ")})")))
-          case None =>
-            // `stream: true` sources become readStreams ONLY under a
-            // streaming compile — the identical spec stays batch-runnable
-            // for the oracle.
-            if (streaming && src.stream) readStreamSource(spark, src)
-            else sources(src)
-        }
-    }))
-
-    node.derive.foreach { case (c, e) =>
-      // Scale audit, not a rejection: Spark's [currentRow,
-      // unboundedFollowing] aggregate frame re-scans the partition
-      // remainder per output row — O(n²) on a hot key. Every engine
-      // operator avoids it (as-of forward/nearest and funnel "every"
-      // use the reversed running frame); a config window expression can
-      // reintroduce it, so warn by name with the fix (docs/USAGE.md
-      // "Window-frame scale note").
-      if (hasQuadraticFrame(e))
-        warn(s"node ${node.id}: derive '$c' uses an UNBOUNDED " +
-          "FOLLOWING aggregate window frame — O(partition²) per key in " +
-          "Spark; reverse the ORDER BY and use ROWS BETWEEN UNBOUNDED " +
-          "PRECEDING AND CURRENT ROW instead (see docs/USAGE.md)")
-    }
-    s.withColumns(node.derive.map { case (c, e) => c -> expr(e) })
-
-    // After derive (the watermark column may be derived), before any
-    // stateful op. No-op on batch frames.
-    node.watermark.foreach(w => s.through(_.withWatermark(w.col, w.delay)))
-
-    node.filters.foreach(f => s.filter(filterColumn(f)))
-
-    // Dedup after filters (dropping rows first shrinks the dedup shuffle),
-    // before projection/aggregation so min_by can carry all columns.
-    node.dedup.foreach { d =>
-      // one deterministic winner per key: best score (order_col set),
-      // else min id (id_col set), else plain dropDuplicates; count_col
-      // rides the winner aggregate with the duplicate-class size
-      if (d.countCol.nonEmpty)
-        opCtx.requireBatch("dedup (count_col)", "a class-size aggregate",
-          "drop count_col (streaming state dedup cannot count a class)")
-      s.through { df =>
-        def winner(): DataFrame = (d.idCol, d.orderCol) match {
-          case (Some(id), Some(oc)) =>
-            opCtx.requireBatch("dedup (order_col)", "a score-ranked aggregate",
-              "drop order_col (streams keep the first arrival per key)")
-            graft.ops.Dedup.exactDedupBest(df, d.keys, id, oc, d.descending,
-              d.countCol)
-          case (Some(id), None) =>
-            graft.ops.Dedup.exactDedup(df, d.keys, id, d.countCol)
-          case _ => df.dropDuplicates(d.keys)
-        }
-        if (d.withinWatermark) {
-          if (node.watermark.isEmpty)
-            throw new IllegalArgumentException(
-              s"node ${node.id}: dedup.within_watermark requires a node watermark")
-          if (d.idCol.nonEmpty && df.isStreaming)
-            // streaming state dedup keeps the FIRST arrival per key — a
-            // min-id winner isn't expressible there; refusing beats
-            // silently returning arrival-order winners
-            throw new IllegalArgumentException(
-              s"node ${node.id}: dedup.id_col is not supported with " +
-                "within_watermark on streams (state keeps the first arrival)")
-          // Batch compile of the same spec: the input is finite, so the
-          // watermark horizon covers all of it — plain (or min-id/best-
-          // score) dedup is the exact batch semantics (and Spark rejects
-          // dropDuplicatesWithinWatermark on batch frames outright).
-          if (df.isStreaming) df.dropDuplicatesWithinWatermark(d.keys)
-          else winner()
-        } else winner()
-      }
-    }
-
-    if (node.keepColumns.nonEmpty) s.select(node.keepColumns.map(col))
-
-    // the registry operators (near_dup … featurize), in registry order
-    if (node.ops.nonEmpty) s.through(Operators.transform(node, opCtx, _))
-
-    node.aggregate.foreach(aggregate(s, _))
-
-    s.rename(node.rename)
-
-    s.withColumns(node.withColumns.map { case (c, e) => c -> expr(e) })
-
-    // post_filters: the curation slot — unlike `filters` (pre-operator),
-    // these see every operator/with_columns output (score, near_dup,
-    // n_bpe, …), so one config can score-then-drop. Plain row filters:
-    // batch AND streaming admissible.
-    node.postFilters.foreach(f => s.filter(filterColumn(f)))
-
-    // expect: row-level data contracts (the CHECK-constraint shape every
-    // lakehouse engine uses): each rule compiles to a filter that is
-    // TRUE for passing rows and raise_error for violations — the check
-    // rides the scan/projection stages (zero extra passes over 100 TB;
-    // batch AND streaming admissible), unlike an action-based validator
-    // which would double-scan. A violation fails the job loudly with
-    // the rule name. Plan-dependence caveat (documented in USAGE):
-    // Catalyst may evaluate a pushed-down contract on rows a later join
-    // would have dropped — express join-dependent contracts on the
-    // parent node after its children.
-    //
-    // NULL semantics — STRICTER than SQL CHECK, deliberately: a rule
-    // that evaluates to NULL (e.g. `score > 0` on a NULL score) is a
-    // VIOLATION, not a pass. SQL CHECK's pass-on-UNKNOWN is the wrong
-    // default for a data contract — the rows it silently waves through
-    // are exactly the damaged ones. A contract that should tolerate
-    // NULLs says so explicitly: `score IS NULL OR score > 0`.
-    // Documented in USAGE.md's `expect` row; tested in CompilerSpec.
-    node.expect.foreach { case (name, e) =>
-      s.filter(when(expr(e), lit(true)).otherwise(raise_error(
-        lit(s"expectation '$name' violated: $e"))))
-    }
-
-    // expect_report: the AUDIT twin of `expect` — instead of failing on
-    // the first violation, the frame becomes one row per rule with its
-    // violation count: (rule, n_violations, n_rows). Same deliberate
-    // NULL-is-violation semantics (violation ⇔ NOT coalesce(rule, false)
-    // — the fail mode's contrapositive), so the two modes always agree
-    // on WHICH rows are bad. ONE map-side-combined aggregate pass over
-    // the frame, then a rules-sized in-row explode — no per-rule scans.
-    // Batch-only by name (a global aggregate has no append-mode plan).
-    if (node.expectReportGroups.nonEmpty && node.expectReport.isEmpty)
-      throw new IllegalArgumentException(
-        s"node ${node.id}: expect_report has group_cols but no rules — " +
-          "declare at least one rule_name: \"expr\" entry")
-    if (node.expectReport.nonEmpty) {
-      opCtx.requireBatch("expect_report", "a global violation-count aggregate",
-        "declare expect_report on the streaming ROOT instead — it becomes " +
-          "the per-batch contract monitor (batch_id-stamped scorecard " +
-          "rows appended to the path sink)")
-      s.through(graft.ops.Relational.expectReport(_, node.expectReport,
-        node.expectReportGroups))
-    }
-
-    if (node.drop.nonEmpty) s.through { df =>
-      // DataFrame.drop silently ignores unknown names — a typo'd drop would
-      // leave the column in the sink with no diagnostic; fail loud instead
-      val missing = node.drop.filterNot(df.columns.contains)
-      if (missing.nonEmpty)
-        throw new IllegalArgumentException(
-          s"node ${node.id}: drop references unknown columns: ${missing.mkString(", ")}")
-      df.drop(node.drop: _*)
-    }
-
-    node.bitemporal.foreach { b =>
-      s.withColumns(Seq(b.fromCol -> lit(b.validFrom), b.toCol -> lit(b.validTo)))
-    }
-
-    node.children.foreach { ch =>
-      val child = buildNode(sources, ch.node, None, executeSinks, streaming, refs)
-      // Join-strategy hint on the child side ("broadcast", "merge",
-      // "shuffle_hash", ...). Catalyst resolves it to the matching physical
-      // strategy; unknown hint names would be silently ignored by Spark, so
-      // reject them here.
-      ch.hint.foreach { h =>
-        val known = Set("broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl")
-        if (!known.contains(h))
-          throw new IllegalArgumentException(
-            s"node ${node.id}: unknown join hint '$h' (one of: ${known.mkString(", ")})")
-        child.hint(h)
-      }
-      if (ch.prefix) {
-        val linkSet = ch.join.link.toSet
-        child.rename(child.frame.columns.toSeq.filterNot(linkSet.contains)
-          .map(c => c -> s"${ch.node.id}_$c"))
-      }
-      ch.join match {
-        case j if j.how == "asof" =>
-          val (lts, rts0) = (j.leftTs, j.rightTs) match {
-            case (Some(l), Some(r)) => (l, r)
-            case _ => throw new IllegalArgumentException(
-              s"node ${node.id}: asof join requires left_ts and right_ts")
-          }
-          // prefix namespacing above renamed every non-link child column,
-          // including the as-of timestamp — follow it
-          val rts = if (ch.prefix && !j.link.contains(rts0)) s"${ch.node.id}_$rts0" else rts0
-          val right = child.frame
-          val payload = right.columns.filterNot(c => j.link.contains(c) || c == rts)
-          s.through(graft.ops.Relational.asofJoin(_, right, j.link, lts, rts,
-            payload.toSeq, direction = j.direction, tolerance = j.tolerance))
-        case j if j.how == "interval" =>
-          // Lookback/interval join (config surface of Streaming.intervalJoin):
-          // right rows within [left_ts − lookback, left_ts] per link key. On
-          // a streaming compile with a `stream: true` child this is a
-          // stream-stream join; the delays become the two state-eviction
-          // watermarks. Batch compiles run the identical equi-join + range
-          // filter (the oracle path).
-          val (lts, rts0, lb) = (j.leftTs, j.rightTs, j.lookback) match {
-            case (Some(l), Some(r), Some(b)) => (l, r, b)
-            case _ => throw new IllegalArgumentException(
-              s"node ${node.id}: interval join requires left_ts, right_ts and lookback")
-          }
-          val rts = if (ch.prefix && !j.link.contains(rts0)) s"${ch.node.id}_$rts0" else rts0
-          val wm = (j.leftDelay, j.rightDelay) match {
-            case (Some(l), Some(r)) => Some((l, r))
-            case (None, None)       => None
-            case _ => throw new IllegalArgumentException(
-              s"node ${node.id}: interval join needs both left_delay and " +
-                "right_delay, or neither")
-          }
-          s.through(graft.streaming.Streaming.intervalJoin(_, child.frame, j.link,
-            lts, rts, lb, wm))
-        case j if j.salt.isDefined =>
-          // Skew-salted equi-join (Relational.saltedJoin): parent = the
-          // large/skewed side, child = the replicated side — the same
-          // parent-fact / child-dimension orientation every other join in
-          // the tree uses. A broadcast hint alongside salt is contradictory
-          // (a broadcastable child never needs salting; the other hints
-          // would pin the strategy Spark should pick for the salted keys),
-          // so the combination is rejected by name.
-          if (ch.hint.isDefined) throw new IllegalArgumentException(
-            s"node ${node.id}: join.salt and a join hint are mutually " +
-              "exclusive — salting rewrites the join keys; let Catalyst " +
-              "pick the strategy for the salted shuffle")
-          s.through(graft.ops.Relational.saltedJoin(
-            _, child.frame, j.link, j.salt.get, j.how))
-        case j =>
-          j.onExpr match {
-            case Some(cond)               => s.join(child, j.how, Nil, Some(expr(cond)))
-            case None if j.link.nonEmpty  => s.join(child, j.how, j.link, None)
-            case None if j.how == "cross" => s.join(child, j.how, Nil, None)
-            case None =>
-              // A link-less, expr-less child used to fall through to a
-              // silent crossJoin — so a typo'd join key ("onn" instead of
-              // "on") became an n×m cartesian, the worst possible plan at
-              // scale. Cartesians must now be asked for by name.
-              throw new IllegalArgumentException(
-                s"node ${node.id}: child '${ch.node.id}' has no join 'on' " +
-                  "keys and no 'on_expr'; a cartesian product must be " +
-                  "explicit — set join.how to \"cross\" (check the join " +
-                  "spec for a misspelled 'on' key)")
-          }
-      }
-    }
-
-    node.compact.foreach { c =>
-      if (c.versionOrder.isEmpty) throw new IllegalArgumentException(
-        s"node ${node.id}: compact needs version_order (recency first, " +
-          "e.g. [\"ts desc\", \"seq desc\"])")
-      s.through { df =>
-        if (df.isStreaming) {
-          // rank windows don't compile to a streaming plan — the streaming
-          // spelling of the same snapshot is a max_by aggregation
-          // (Streaming.latestPerKey, one state row per key). max_by's
-          // struct comparison is lexicographic-ascending, so it expresses
-          // exactly the all-DESC version orders ("latest wins"); reject
-          // mixed directions instead of silently mis-ordering.
-          val versionCols = c.versionOrder.map { o =>
-            val parts = o.trim.split("\\s+").toSeq
-            // a bare column defaults to ASC in the batch path (sortColumn),
-            // which would pick the OLDEST row while max_by picks the
-            // LATEST — same JSON, divergent snapshots. Demand an explicit
-            // 'desc'. Likewise 'nulls first': batch would rank null
-            // versions first, but max_by's struct comparison ranks nulls
-            // last — reject rather than silently diverge.
-            if (!parts.tail.exists(_.equalsIgnoreCase("desc")))
-              throw new IllegalArgumentException(
-                s"node ${node.id}: streaming compact needs all-DESC " +
-                  s"version_order with explicit desc on every entry " +
-                  s"(latest wins; bare columns default asc in batch), got '$o'")
-            if (parts.tail.exists(_.equalsIgnoreCase("first")))
-              throw new IllegalArgumentException(
-                s"node ${node.id}: streaming compact cannot honor 'nulls " +
-                  s"first' (max_by ranks nulls last), got '$o'")
-            parts.head
-          }
-          val originalOrder = df.columns.toSeq
-          val payload = originalOrder.filterNot(c.keys.contains)
-          // latestPerKey emits keys ++ payload; restore the node's input
-          // column order so batch and stream compiles of one spec agree
-          // on schema, not just values
-          val latest = graft.streaming.Streaming.latestPerKey(
-            df, c.keys, versionCols, payload).select(originalOrder.map(col): _*)
-          // tombstone filter on the emitted latest row (update-mode
-          // semantics: the sink must upsert by key — see latestPerKey doc)
-          c.deleteWhen.fold(latest)(d => latest.filter(!coalesce(expr(d), lit(false))))
-        } else
-          graft.ops.Relational.compactChangelog(
-            df, c.keys, c.versionOrder.map(sortColumn),
-            c.deleteWhen.map(expr).getOrElse(lit(false)))
-      }
-    }
-
-    // Running totals after compact (totals over the compacted snapshot,
-    // if both are set), before topK/orderBy. The same node key streams:
-    // flatMapGroupsWithState compiles under readStream inputs with two
-    // longs of state per key, and the batch compile of one spec equals
-    // the window formulation exactly (StreamingSpec).
-    node.runningTotals.foreach { r =>
-      s.through(graft.streaming.Streaming.runningTotals(
-        _, r.keyCol, r.seqCol, r.tsCol, r.valueCol))
-    }
-
-    node.topK.foreach { t =>
-      s.through(graft.ops.Relational.topKPerGroup(
-        _, t.partitionBy, t.orderBy.map(sortColumn), t.k, t.rankCol))
-    }
-
-    if (node.orderBy.nonEmpty) s.orderBy(node.orderBy.map(sortColumn))
-    node.limit.foreach(s.limit)
+    val s = input.getOrElse(Spine(nodeInput(sources, node, executeSinks, streaming, refs)))
+    Operators.build(new Operators.Ctx(sources.spark, node, streaming, refs,
+      buildNode(sources, _, None, executeSinks, streaming, refs)), s)
     if (executeSinks) node.save.foreach(sv => writeSink(s.frame, sv, s"node ${node.id}"))
     s
+  }
+
+  /** The node's `combine` over full pipelines, else its source. */
+  private def nodeInput(sources: Sources, node: NodeSpec, executeSinks: Boolean,
+      streaming: Boolean, refs: Map[String, DataFrame]): DataFrame = node.combine match {
+    case Some(c) =>
+      val parts = c.nodes.map(n => buildNode(sources, n, None, executeSinks, streaming, refs).frame)
+      if (parts.isEmpty)
+        throw new IllegalArgumentException(s"node ${node.id}: combine needs nodes")
+      c.op match {
+        case "union" | "union_all" => parts.reduce(_.unionByName(_))
+        case "union_distinct"      => parts.reduce(_.unionByName(_)).distinct()
+        case "intersect"           => parts.reduce(_.intersect(_))
+        case "except"              => parts.reduce(_.except(_))
+        case other => throw new IllegalArgumentException(
+          s"node ${node.id}: unknown combine op '$other' " +
+            "(one of: union, union_distinct, intersect, except)")
+      }
+    case None =>
+      val src = node.source.getOrElse(
+        throw new IllegalArgumentException(s"node ${node.id}: no source and no input DataFrame"))
+      src.ref match {
+        // A ref IS a compiled def's frame — shared, not re-inlined.
+        case Some(r) => refs.getOrElse(r, throw new IllegalArgumentException(
+          s"node ${node.id}: unknown ref '$r'" +
+            (if (refs.isEmpty) " — declare it under top-level defs"
+             else s" (defined: ${refs.keys.mkString(", ")})")))
+        case None =>
+          // `stream: true` sources become readStreams ONLY under a
+          // streaming compile — the identical spec stays batch-runnable
+          // for the oracle.
+          if (streaming && src.stream) readStreamSource(sources.spark, src)
+          else sources(src)
+      }
   }
 
   /** Batch sink execution, shared by node and cascade saves. A sink with
@@ -786,19 +471,18 @@ object Compiler {
             warn(s"node ${n.id}: 'save' is IGNORED under a streaming " +
               "compile (only the root sink becomes the writeStream); drop " +
               "it or run this node as its own stream")
-          (n.children.map(_.node) ++ n.combine.toSeq.flatMap(_.nodes))
-            .foreach(warnIgnored(_, isRoot = false))
+          n.inputs.foreach(warnIgnored(_, isRoot = false))
         }
         warnIgnored(root, isRoot = true)
         val sinks = Operators.rootSinks(root)
         if (sinks.size > 1) throw new IllegalArgumentException(
           s"${Operators.rootSinkKeys} are each a root sink — a stream has " +
             "ONE; declare one per stream")
-        // the root profile is the per-batch drift monitor, not a transform
-        val profile = root.op[ProfileSpec]
+        // the root profile and expect_report are the per-batch monitors,
+        // not transforms
+        val monitors = root.ops.collect { case m @ (_: ProfileSpec | _: ExpectReportSpec) => m }
         val out = buildNode(sources,
-          root.copy(ops = root.ops.filterNot(o => sinks.contains(o) || profile.contains(o)),
-            expectReport = Nil, expectReportGroups = Nil),
+          root.copy(ops = root.ops.filterNot(o => sinks.contains(o) || monitors.contains(o))),
           Some(Spine(readStreamSource(spark, src))),
           executeSinks = false, streaming = true, refs).frame
         // The two per-batch MONITOR sinks (profile = drift stats,
@@ -819,60 +503,48 @@ object Compiler {
                 "parquet/csv path sink, not memory/console")
           sink
         }
-        if (profile.isDefined && root.expectReport.nonEmpty)
-          throw new IllegalArgumentException(
-            "profile and expect_report are both per-batch monitor sinks — " +
-              "a stream has ONE; run two streams over the same source")
-        // the strip above hides the root's expect_report fields from
-        // compileNode's guards — re-assert the two that would otherwise
-        // silently no-op or die mid-stream: groups need rules, and group
-        // columns must exist on the frame the monitor will observe
-        if (root.expectReportGroups.nonEmpty && root.expectReport.isEmpty)
-          throw new IllegalArgumentException(
-            "expect_report has group_cols but no rules — declare at least " +
-              "one rule_name: \"expr\" entry")
-        root.expectReportGroups.filterNot(out.columns.contains) match {
-          case Nil => ()
-          case miss => throw new IllegalArgumentException(
-            s"expect_report: group column(s) not on the streaming frame: " +
-              s"${miss.mkString(", ")} (have: ${out.columns.mkString(", ")})")
-        }
-        // Root profile: the per-batch drift monitor — each micro-batch's
-        // q149 aggregate appends (batch_id-stamped) to the save sink.
-        if (profile.isDefined) {
-          val pr = profile.get
-          // same posture as expect_report above: a typo'd column must
-          // fail HERE by name, not inside the first micro-batch
-          (pr.columns ++ pr.groupCols).filterNot(out.columns.contains) match {
+        // the columns a monitor reads must be on the frame it observes: a
+        // typo'd one fails HERE by name, not inside the first micro-batch
+        def onFrame(what: String, cols: Seq[String]): Unit =
+          cols.filterNot(out.columns.contains) match {
             case Nil => ()
             case miss => throw new IllegalArgumentException(
-              s"profile: column(s) not on the streaming frame: " +
+              s"$what not on the streaming frame: " +
                 s"${miss.mkString(", ")} (have: ${out.columns.mkString(", ")})")
           }
-          graft.streaming.Streaming.profileStream(
-            out, pr.columns, pr.approx, monitorSink("profile"), pr.groupCols)
-        } else if (root.expectReport.nonEmpty) {
+        monitors match {
+          case Seq(_, _) =>
+            throw new IllegalArgumentException(
+              "profile and expect_report are both per-batch monitor sinks — " +
+                "a stream has ONE; run two streams over the same source")
+          // Root profile: the per-batch drift monitor — each micro-batch's
+          // q149 aggregate appends (batch_id-stamped) to the save sink.
+          case Seq(pr: ProfileSpec) =>
+            onFrame("profile: column(s)", pr.columns ++ pr.groupCols)
+            graft.streaming.Streaming.profileStream(
+              out, pr.columns, pr.approx, monitorSink("profile"), pr.groupCols)
           // Root expect_report: the per-batch contract scorecard.
-          graft.streaming.Streaming.expectReportStream(
-            out, root.expectReport, root.expectReportGroups,
-            monitorSink("expect_report"))
-        } else {
-          // The ingest ROOT SINKS: at most one is present (rejected in
-          // pairs above); its foreachBatch IS the sink, so a root `save`
-          // beside it would silently lose one of the two — reject loudly.
-          sinks match {
-            case Seq(ingest) =>
-              if (root.save.isDefined)
-                throw new IllegalArgumentException(
-                  s"${Operators.of(ingest).key} replaces the root save sink — " +
-                    "declare one or the other")
-              Operators.start(ingest, out)
-            case _ =>
-              val sink = root.save.getOrElse(
-                throw new IllegalArgumentException(
-                  "streaming pipeline needs a root save sink"))
-              startStreamSink(out, sink)
-          }
+          case Seq(r: ExpectReportSpec) =>
+            onFrame("expect_report: group column(s)", r.groupCols)
+            graft.streaming.Streaming.expectReportStream(
+              out, r.rules, r.groupCols, monitorSink("expect_report"))
+          case _ =>
+            // The ingest ROOT SINKS: at most one is present (rejected in
+            // pairs above); its foreachBatch IS the sink, so a root `save`
+            // beside it would silently lose one of the two — reject loudly.
+            sinks match {
+              case Seq(ingest) =>
+                if (root.save.isDefined)
+                  throw new IllegalArgumentException(
+                    s"${Operators.of(ingest).key} replaces the root save sink — " +
+                      "declare one or the other")
+                Operators.start(ingest, out)
+              case _ =>
+                val sink = root.save.getOrElse(
+                  throw new IllegalArgumentException(
+                    "streaming pipeline needs a root save sink"))
+                startStreamSink(out, sink)
+            }
         }
       case _: CascadePipeline =>
         throw new IllegalArgumentException("cascade pipelines are batch-only")
@@ -1114,7 +786,7 @@ object Compiler {
     s.frame
   }
 
-  private def aggregate(s: Spine, a: AggregateSpec): Unit = a.salt.filter(_ > 1) match {
+  private[compile] def aggregate(s: Spine, a: AggregateSpec): Unit = a.salt.filter(_ > 1) match {
     case Some(buckets) =>
       // Salted two-phase aggregation: strictly for decomposable functions
       // on a plain groupBy (phase-2 merge semantics exist only for those).

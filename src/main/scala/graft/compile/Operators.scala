@@ -2,45 +2,55 @@ package graft.compile
 
 import graft.ops._
 import graft.spec._
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import scala.reflect.ClassTag
 
-/** The node-operator registry: ONE entry per operator key, owning its
+/** The step table: ONE entry per node key — the core steps (filters,
+  * aggregate, children joins, order_by, …) and the operators — owning its
   * JSON key and aliases, its decoder, its mode (batch + stream,
-  * batch-only, or streaming root sink), the frame columns it reads (the
-  * friendly tier of [[Compiler.validate]]) and its compile step — or
-  * sink starter. `JsonCodec` decodes, and `Compiler` validates, applies
-  * and starts, by walking this table; neither names an operator.
+  * batch-only, or streaming root sink), the frame columns it reads and
+  * adds (the friendly tier of [[Compiler.validate]]) and its step over the
+  * node's [[Spine]] — or sink starter. `JsonCodec` decodes, and
+  * `Compiler` validates, builds and starts, by walking this table;
+  * neither names a step.
   *
-  * Entry order IS the application order: a node's operators run in
-  * registry order whatever their JSON order (transforms between
-  * keep_columns and aggregate; root sinks last).
+  * Entry order IS the application order: a node's steps run in table
+  * order whatever their JSON order — derive → watermark → filters →
+  * dedup → keep_columns → the operators → aggregate → rename →
+  * with_columns → post_filters → expect → expect_report → drop →
+  * bitemporal → children → compact → running_totals → top_k → order_by →
+  * limit; the root sinks last.
   */
 object Operators {
 
-  /** How an operator runs. */
+  /** How an entry runs. */
   sealed trait Mode
-  /** A frame transform. `batchOnly` is the text after the key in the
-    * named rejection a streaming compile raises (None: streamable). */
+  /** A step over the node's spine. `batchOnly` is the text after the key
+    * in the named rejection a streaming compile raises (None:
+    * streamable). */
   final case class Transform(batchOnly: Option[String],
-      step: (OpSpec, Ctx, DataFrame) => DataFrame) extends Mode
+      step: (OpSpec, Ctx, Spine) => Unit) extends Mode
   /** A streaming root sink: its foreachBatch replaces the root `save`;
     * batch compiles reject it by name, pointing at `batchShape`. */
   final case class RootSink(batchShape: String,
       start: (OpSpec, DataFrame) => StreamingQuery) extends Mode
 
-  /** One registry entry: the JSON `key` (+ `aliases`), the spec class
-    * it decodes to, its mode, and the frame columns it reads. */
+  /** One table entry: the JSON `key` (+ `aliases`), the spec class it
+    * decodes to, its mode, how it reads its spec off a node, and the
+    * frame columns it reads and adds. */
   final case class Op(key: String, aliases: Seq[String], cls: Class[_],
-      mode: Mode, decode: OpJson => OpSpec, reads: OpSpec => Seq[String]) {
-    def keys: Seq[String] = key +: aliases
-  }
+      mode: Mode, read: NodeJson => Option[OpSpec], reads: OpSpec => Seq[String],
+      adds: OpSpec => Seq[String])
 
-  /** What a step sees besides its spec and input frame. */
-  final class Ctx(val spark: SparkSession, val nodeId: String,
-      val streaming: Boolean, val refs: Map[String, DataFrame]) {
+  /** What a step sees besides its spec and the spine: the node, and
+    * `child`, which builds a child node's spine. */
+  final class Ctx(val spark: SparkSession, val node: NodeSpec,
+      val streaming: Boolean, val refs: Map[String, DataFrame],
+      private[compile] val child: NodeSpec => Spine) {
+    def nodeId: String = node.id
     private[compile] def batchOnly(key: String, detail: String): Unit =
       if (streaming) throw new IllegalArgumentException(s"node $nodeId: $key $detail")
     def requireBatch(key: String, reason: String = DefaultReason,
@@ -63,19 +73,33 @@ object Operators {
   private def runs(reason: String = DefaultReason, hint: String = DefaultHint): String =
     s"runs $reason — batch-only; $hint"
 
+  /** Decodes the value of the first of `keys` a node has (None: no step). */
+  private def keyRead[S](keys: Seq[String], decode: OpJson => Option[S]): NodeJson => Option[S] =
+    n => n.opt(keys: _*).flatMap(d => decode(new OpJson(d, n, keys.head)))
+
+  /** A step over the node's spine, decoded off its own key. */
+  private def step[S <: OpSpec](key: String, aliases: String*)(
+      decode: OpJson => Option[S], reads: S => Seq[String] = (_: S) => Nil,
+      adds: S => Seq[String] = (_: S) => Nil, batchOnly: Option[String] = None)(
+      f: (S, Ctx, Spine) => Unit)(implicit t: ClassTag[S]): Op =
+    Op(key, aliases, t.runtimeClass,
+      Transform(batchOnly, (s, c, sp) => f(s.asInstanceOf[S], c, sp)),
+      keyRead(key +: aliases, decode), s => reads(s.asInstanceOf[S]), s => adds(s.asInstanceOf[S]))
+
+  /** A DataFrame operator: its body runs on the spine's analyzed frame. */
   private def op[S <: OpSpec](key: String, aliases: String*)(
       decode: OpJson => S, reads: S => Seq[String] = (_: S) => Nil,
-      batchOnly: Option[String] = None)(step: (S, Ctx, DataFrame) => DataFrame)(
+      batchOnly: Option[String] = None)(f: (S, Ctx, DataFrame) => DataFrame)(
       implicit t: ClassTag[S]): Op =
-    Op(key, aliases, t.runtimeClass,
-      Transform(batchOnly, (s, c, df) => step(s.asInstanceOf[S], c, df)),
-      decode, s => reads(s.asInstanceOf[S]))
+    step[S](key, aliases: _*)(j => Some(decode(j)), reads, batchOnly = batchOnly)(
+      (s, c, sp) => sp.through(f(s, c, _)))
 
   private def sink[S <: OpSpec](key: String, alias: String, batchShape: String)(
       decode: OpJson => S)(start: (S, DataFrame) => StreamingQuery)(
       implicit t: ClassTag[S]): Op =
     Op(key, Seq(alias), t.runtimeClass,
-      RootSink(batchShape, (s, df) => start(s.asInstanceOf[S], df)), decode, _ => Nil)
+      RootSink(batchShape, (s, df) => start(s.asInstanceOf[S], df)),
+      keyRead(Seq(key, alias), j => Some(decode(j))), _ => Nil, _ => Nil)
 
   // ---- decode helpers ----------------------------------------------------
 
@@ -108,9 +132,176 @@ object Operators {
   /** `compact_every: N` on an ingest sink — fold the ingest's grown areas
     * every N batches inside foreachBatch. */
   private def ingestCompactEvery(j: OpJson): Option[Int] = {
-    val ce = j.opt("compact_every", "compactEvery").map(_.asInt)
+    val ce = j.optInt("compact_every", "compactEvery")
     ce.foreach(n => require(n >= 1, s"${j.ctx}: compact_every must be >= 1, got $n"))
     ce
+  }
+
+  /** An empty list, map or rule set decodes to no step. */
+  private def some[T](xs: Seq[T]): Option[Seq[T]] = if (xs.isEmpty) None else Some(xs)
+
+  /** `{name: "expr", ...}` in listed order. */
+  private def exprs(j: OpJson): Seq[(String, String)] =
+    JsonCodec.fields(j.json).map { case (c, e) => c -> e.asText }
+
+  /** filters / post_filters: one predicate or an array of them, each an
+    * "expr string" or `{col, op, value, null_safe}`. */
+  private def filterItems(j: OpJson): Seq[FilterSpec] =
+    (if (j.json.isArray) JsonCodec.elems(j.json) else Seq(j.json)).map {
+      case t if t.isTextual => ExprFilter(t.asText)
+      case o =>
+        ColFilter(
+          col = JsonCodec.req(o, s"node ${j.nodeId}: filter", "col", "filter_col", "column").asText,
+          op = JsonCodec.opt(o, "op", "filter_op").map(_.asText).getOrElse("=="),
+          value = JsonCodec.jvalue(JsonCodec.opt(o, "value", "filter_value").orNull),
+          nullSafe = JsonCodec.opt(o, "null_safe", "nullSafe").exists(_.asBoolean(false)))
+    }
+
+  /** expect / expect_report rules: name -> a non-empty expression. */
+  private def rules(j: OpJson, entries: Seq[(String, JsonNode)]): Seq[(String, String)] =
+    entries.map { case (name, e) =>
+      require(e.isTextual && e.asText.nonEmpty,
+        s"${j.ctx} rule '$name' must map to a non-empty expression string")
+      name -> e.asText
+    }
+
+  private def dedup(j: OpJson): DedupSpec =
+    if (j.json.isArray || j.json.isTextual) DedupSpec(keys = JsonCodec.strSeq(j.json))
+    else {
+      val ds = DedupSpec(
+        keys = j.strs("keys", "on"),
+        idCol = j.optStr("id_col", "idCol"),
+        withinWatermark = j.flag(false, "within_watermark", "withinWatermark"),
+        orderCol = j.optStr("order_col", "orderCol"),
+        descending = j.flag(true, "descending"),
+        countCol = j.optStr("count_col", "countCol"))
+      require(ds.orderCol.isEmpty || ds.idCol.nonEmpty,
+        s"${j.ctx}.order_col needs id_col for the tie-break — " +
+          "a score-only winner is nondeterministic on tied scores")
+      require(ds.countCol.isEmpty || ds.idCol.nonEmpty,
+        s"${j.ctx}.count_col needs id_col — class size is " +
+          "aggregated alongside the deterministic winner")
+      ds
+    }
+
+  /** Whether the node decodes an aggregate: then its keep_columns fold
+    * into the aggregate. */
+  private def aggregates(n: NodeJson): Boolean =
+    n.opt("aggregate", "aggregation")
+      .fold(n.json.has("group_by") || n.json.has("aggregations"))(_.isObject)
+
+  /** The `aggregate` object: canonical `{group_by, aggregations,
+    * keep_columns?, mode?, sets?, salt?, pivot?}`, or the hotrod spelling
+    * `{col: "func" | {function, filter, new_name}}` with a sibling
+    * `group_by` on the node. */
+  private def aggregateObject(j: OpJson): Option[AggregateSpec] = j.json match {
+    case a if a.isObject && (a.has("group_by") || a.has("aggregations")) =>
+      Some(AggregateSpec(
+        groupBy = j.strs("group_by", "groupBy"),
+        aggs = JsonCodec.aggList(j.opt("aggregations", "aggs").orNull),
+        keep = j.strs("keep_columns", "keep"),
+        mode = j.optStr("mode").getOrElse(
+          if (a.has("sets") || a.has("grouping_sets")) "grouping_sets" else "groupBy"),
+        sets = j.opt("sets", "grouping_sets").toSeq
+          .flatMap(ss => JsonCodec.elems(ss).map(JsonCodec.strSeq)),
+        salt = j.optInt("salt"),
+        pivot = j.opt("pivot").map(p =>
+          PivotSpec(
+            col = JsonCodec.req(p, s"${j.ctx}.pivot", "col", "column").asText,
+            values = JsonCodec.opt(p, "values").toSeq.flatMap(JsonCodec.elems)
+              .map(JsonCodec.jvalue)))))
+    case a if a.isObject =>
+      val aggs = JsonCodec.fields(a).map {
+        case (c, v) if v.isTextual => AggSpec(c, v.asText)
+        case (c, v) =>
+          AggSpec(c,
+            JsonCodec.opt(v, "function", "func").map(_.asText).getOrElse("sum"),
+            newName = JsonCodec.opt(v, "new_name", "as").map(_.asText),
+            filter = JsonCodec.opt(v, "filter").map(_.asText))
+      }
+      Some(AggregateSpec(
+        groupBy = j.node.opt("group_by").map(JsonCodec.strSeq).getOrElse(Nil), aggs = aggs))
+    case _ => None
+  }
+
+  /** The optimus.py flat spelling: group_by / aggregations /
+    * keep_columns directly on the node. */
+  private def flatAggregate(n: NodeJson): AggregateSpec =
+    AggregateSpec(
+      groupBy = n.opt("group_by").map(JsonCodec.strSeq).getOrElse(Nil),
+      aggs = JsonCodec.aggList(n.opt("aggregations").orNull),
+      keep = n.opt("keep_columns", "keep").map(JsonCodec.strSeq).getOrElse(Nil))
+
+  /** One `children` entry: a full node plus its join back to the parent. */
+  private def child(id: String, c: JsonNode): ChildSpec = {
+    def opt(n: JsonNode, keys: String*) = JsonCodec.opt(n, keys: _*)
+    val join = opt(c, "join")
+    def inJoin(keys: String*) = join.flatMap(opt(_, keys: _*))
+    def joinStr(keys: String*) = inJoin(keys: _*).map(_.asText)
+    val link = opt(c, "link").orElse(inJoin("on")).map(JsonCodec.strSeq).getOrElse(Nil)
+    val how = joinStr("how").orElse(opt(c, "how").map(_.asText)).getOrElse("left")
+    val onExpr = joinStr("on_expr", "onExpr").orElse(opt(c, "on_expr").map(_.asText))
+    val leftTs = joinStr("left_ts", "leftTs")
+    val rightTs = joinStr("right_ts", "rightTs")
+    val lookback = joinStr("lookback")
+    val leftDelay = joinStr("left_delay", "leftDelay")
+    val rightDelay = joinStr("right_delay", "rightDelay")
+    // the join object's own keys get the same typo protection as node
+    // keys — "tolerence" silently no-opping is the failure mode the
+    // whole codec exists to prevent
+    join.foreach { j =>
+      val known = Set("on", "how", "on_expr", "onExpr", "left_ts",
+        "leftTs", "right_ts", "rightTs", "lookback", "left_delay",
+        "leftDelay", "right_delay", "rightDelay", "direction",
+        "tolerance", "hint", "join_hint", "salt", "skew_salt")
+      val unk = JsonCodec.fields(j).map(_._1).filterNot(known.contains)
+      require(unk.isEmpty,
+        s"node $id: unknown join key(s): ${unk.mkString(", ")} " +
+          s"(known: ${known.toSeq.sorted.mkString(", ")})")
+    }
+    val direction = joinStr("direction").getOrElse("backward")
+    require(Seq("backward", "forward", "nearest").contains(direction),
+      s"node $id: join.direction must be backward/forward/nearest, " +
+        s"got '$direction'")
+    val tolerance = joinStr("tolerance")
+    require((direction == "backward" && tolerance.isEmpty) || how == "asof",
+      s"node $id: join.direction/tolerance apply only to how='asof', " +
+        s"got how='$how'")
+    // Skew-salted join (config surface of Relational.saltedJoin): the
+    // parent side gets a content-derived salt, the child replicates
+    // once per salt value, the join runs on (link, salt). Guards live
+    // HERE so a bad combination fails at decode, not mid-plan: the
+    // replication is only semantics-preserving for inner/left equi
+    // joins, and salt ≤ 1 means "you didn't want this".
+    val salt = inJoin("salt", "skew_salt").map(JsonCodec.int(_, s"node $id: join.salt"))
+    salt.foreach { n =>
+      require(n > 1,
+        s"node $id: join.salt must be > 1 (got $n) — 1 bucket is a " +
+          "plain join; drop the key instead")
+      require(how == "inner" || how == "left",
+        s"node $id: join.salt preserves semantics only for " +
+          s"how='inner'/'left' (the child side is replicated ${n}×, " +
+          s"so an unmatched child row under '$how' would surface $n " +
+          "times)")
+      require(onExpr.isEmpty,
+        s"node $id: join.salt needs equi 'on' keys; it cannot salt an " +
+          "on_expr condition")
+      require(link.nonEmpty,
+        s"node $id: join.salt needs equi 'on' keys (none given)")
+    }
+    ChildSpec(
+      node = JsonCodec.node(c, defaultId = id + "_child",
+        // the child object carries its join wiring next to node keys
+        extraAllowed = Set("join", "link", "how", "on_expr", "onExpr",
+          "prefix", "hint", "join_hint")),
+      join = JoinSpec(link, how, onExpr, leftTs, rightTs, lookback,
+        leftDelay, rightDelay, direction, tolerance, salt),
+      prefix = opt(c, "prefix").exists(_.asBoolean(false)),
+      // hint is accepted at the child level and inside the join object
+      // (both natural spellings; the latter was silently dropped before
+      // the join-key whitelist exposed it)
+      hint = opt(c, "hint", "join_hint").map(_.asText)
+        .orElse(joinStr("hint", "join_hint")))
   }
 
   // ---- step helpers ------------------------------------------------------
@@ -144,9 +335,232 @@ object Operators {
       keep.fold(labels)(r => retainBest(c, input, labels, idCol, r))
     } else pairs
 
-  // ---- the registry ------------------------------------------------------
+  /** Joins child `ch` into the node's spine `s`. */
+  private def joinChild(c: Ctx, s: Spine, ch: ChildSpec): Unit = {
+    val child = c.child(ch.node)
+    // Join-strategy hint on the child side ("broadcast", "merge",
+    // "shuffle_hash", ...). Catalyst resolves it to the matching physical
+    // strategy; unknown hint names would be silently ignored by Spark, so
+    // reject them here.
+    ch.hint.foreach { h =>
+      val known = Set("broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl")
+      if (!known.contains(h))
+        throw new IllegalArgumentException(
+          s"node ${c.nodeId}: unknown join hint '$h' (one of: ${known.mkString(", ")})")
+      child.hint(h)
+    }
+    if (ch.prefix) {
+      val linkSet = ch.join.link.toSet
+      child.rename(child.frame.columns.toSeq.filterNot(linkSet.contains)
+        .map(n => n -> s"${ch.node.id}_$n"))
+    }
+    ch.join match {
+      case j if j.how == "asof" =>
+        val (lts, rts0) = (j.leftTs, j.rightTs) match {
+          case (Some(l), Some(r)) => (l, r)
+          case _ => throw new IllegalArgumentException(
+            s"node ${c.nodeId}: asof join requires left_ts and right_ts")
+        }
+        // prefix namespacing above renamed every non-link child column,
+        // including the as-of timestamp — follow it
+        val rts = if (ch.prefix && !j.link.contains(rts0)) s"${ch.node.id}_$rts0" else rts0
+        val right = child.frame
+        val payload = right.columns.filterNot(n => j.link.contains(n) || n == rts)
+        s.through(Relational.asofJoin(_, right, j.link, lts, rts,
+          payload.toSeq, direction = j.direction, tolerance = j.tolerance))
+      case j if j.how == "interval" =>
+        // Lookback/interval join (config surface of Streaming.intervalJoin):
+        // right rows within [left_ts − lookback, left_ts] per link key. On
+        // a streaming compile with a `stream: true` child this is a
+        // stream-stream join; the delays become the two state-eviction
+        // watermarks. Batch compiles run the identical equi-join + range
+        // filter (the oracle path).
+        val (lts, rts0, lb) = (j.leftTs, j.rightTs, j.lookback) match {
+          case (Some(l), Some(r), Some(b)) => (l, r, b)
+          case _ => throw new IllegalArgumentException(
+            s"node ${c.nodeId}: interval join requires left_ts, right_ts and lookback")
+        }
+        val rts = if (ch.prefix && !j.link.contains(rts0)) s"${ch.node.id}_$rts0" else rts0
+        val wm = (j.leftDelay, j.rightDelay) match {
+          case (Some(l), Some(r)) => Some((l, r))
+          case (None, None)       => None
+          case _ => throw new IllegalArgumentException(
+            s"node ${c.nodeId}: interval join needs both left_delay and " +
+              "right_delay, or neither")
+        }
+        s.through(graft.streaming.Streaming.intervalJoin(_, child.frame, j.link,
+          lts, rts, lb, wm))
+      case j if j.salt.isDefined =>
+        // Skew-salted equi-join (Relational.saltedJoin): parent = the
+        // large/skewed side, child = the replicated side — the same
+        // parent-fact / child-dimension orientation every other join in
+        // the tree uses. A broadcast hint alongside salt is contradictory
+        // (a broadcastable child never needs salting; the other hints
+        // would pin the strategy Spark should pick for the salted keys),
+        // so the combination is rejected by name.
+        if (ch.hint.isDefined) throw new IllegalArgumentException(
+          s"node ${c.nodeId}: join.salt and a join hint are mutually " +
+            "exclusive — salting rewrites the join keys; let Catalyst " +
+            "pick the strategy for the salted shuffle")
+        s.through(Relational.saltedJoin(_, child.frame, j.link, j.salt.get, j.how))
+      case j =>
+        j.onExpr match {
+          case Some(cond)               => s.join(child, j.how, Nil, Some(expr(cond)))
+          case None if j.link.nonEmpty  => s.join(child, j.how, j.link, None)
+          case None if j.how == "cross" => s.join(child, j.how, Nil, None)
+          case None =>
+            // A link-less, expr-less child used to fall through to a
+            // silent crossJoin — so a typo'd join key ("onn" instead of
+            // "on") became an n×m cartesian, the worst possible plan at
+            // scale. Cartesians must now be asked for by name.
+            throw new IllegalArgumentException(
+              s"node ${c.nodeId}: child '${ch.node.id}' has no join 'on' " +
+                "keys and no 'on_expr'; a cartesian product must be " +
+                "explicit — set join.how to \"cross\" (check the join " +
+                "spec for a misspelled 'on' key)")
+        }
+    }
+  }
+
+  /** Changelog compaction of `df`: the latest version per key, tombstones
+    * dropped. */
+  private def compact(c: Ctx, k: CompactSpec, df: DataFrame): DataFrame =
+    if (df.isStreaming) {
+      // rank windows don't compile to a streaming plan — the streaming
+      // spelling of the same snapshot is a max_by aggregation
+      // (Streaming.latestPerKey, one state row per key). max_by's
+      // struct comparison is lexicographic-ascending, so it expresses
+      // exactly the all-DESC version orders ("latest wins"); reject
+      // mixed directions instead of silently mis-ordering.
+      val versionCols = k.versionOrder.map { o =>
+        val parts = o.trim.split("\\s+").toSeq
+        // a bare column defaults to ASC in the batch path (sortColumn),
+        // which would pick the OLDEST row while max_by picks the
+        // LATEST — same JSON, divergent snapshots. Demand an explicit
+        // 'desc'. Likewise 'nulls first': batch would rank null
+        // versions first, but max_by's struct comparison ranks nulls
+        // last — reject rather than silently diverge.
+        if (!parts.tail.exists(_.equalsIgnoreCase("desc")))
+          throw new IllegalArgumentException(
+            s"node ${c.nodeId}: streaming compact needs all-DESC " +
+              s"version_order with explicit desc on every entry " +
+              s"(latest wins; bare columns default asc in batch), got '$o'")
+        if (parts.tail.exists(_.equalsIgnoreCase("first")))
+          throw new IllegalArgumentException(
+            s"node ${c.nodeId}: streaming compact cannot honor 'nulls " +
+              s"first' (max_by ranks nulls last), got '$o'")
+        parts.head
+      }
+      val originalOrder = df.columns.toSeq
+      val payload = originalOrder.filterNot(k.keys.contains)
+      // latestPerKey emits keys ++ payload; restore the node's input
+      // column order so batch and stream compiles of one spec agree
+      // on schema, not just values
+      val latest = graft.streaming.Streaming.latestPerKey(
+        df, k.keys, versionCols, payload).select(originalOrder.map(col): _*)
+      // tombstone filter on the emitted latest row (update-mode
+      // semantics: the sink must upsert by key — see latestPerKey doc)
+      k.deleteWhen.fold(latest)(d => latest.filter(!coalesce(expr(d), lit(false))))
+    } else
+      Relational.compactChangelog(
+        df, k.keys, k.versionOrder.map(Compiler.sortColumn),
+        k.deleteWhen.map(expr).getOrElse(lit(false)))
+
+  // ---- the table ---------------------------------------------------------
 
   val all: Seq[Op] = Seq(
+    // derive = computed columns applied FIRST, so filters, keep_columns
+    // and the aggregate may use them (with_columns applies after the
+    // aggregate); a filter on a source column still reaches the scan —
+    // Catalyst pushes it below the derive projection
+    step[DeriveSpec]("derive")(
+      decode = j => some(exprs(j)).map(DeriveSpec),
+      adds = _.cols.map(_._1)) { (d, c, s) =>
+      d.cols.foreach { case (name, e) =>
+        // Scale audit, not a rejection: Spark's [currentRow,
+        // unboundedFollowing] aggregate frame re-scans the partition
+        // remainder per output row — O(n²) on a hot key. Every engine
+        // operator avoids it (as-of forward/nearest and funnel "every"
+        // use the reversed running frame); a config window expression
+        // can reintroduce it, so warn by name with the fix
+        // (docs/USAGE.md "Window-frame scale note").
+        if (Compiler.hasQuadraticFrame(e))
+          Compiler.warn(s"node ${c.nodeId}: derive '$name' uses an UNBOUNDED " +
+            "FOLLOWING aggregate window frame — O(partition²) per key in " +
+            "Spark; reverse the ORDER BY and use ROWS BETWEEN UNBOUNDED " +
+            "PRECEDING AND CURRENT ROW instead (see docs/USAGE.md)")
+      }
+      s.withColumns(d.cols.map { case (name, e) => name -> expr(e) })
+    },
+
+    // After derive (the watermark column may be derived), before any
+    // stateful op. No-op on batch frames.
+    step[WatermarkSpec]("watermark")(
+      decode = j => Some(WatermarkSpec(
+        col = j.str("col", "column"), delay = j.str("delay", "threshold"))),
+      reads = w => Seq(w.col)) { (w, _, s) =>
+      s.through(_.withWatermark(w.col, w.delay))
+    },
+
+    step[FiltersSpec]("filters", "filter")(
+      decode = j => some(filterItems(j)).map(FiltersSpec),
+      reads = _.filters.collect { case ColFilter(c, _, _, _) => c }) { (f, _, s) =>
+      f.filters.foreach(x => s.filter(Compiler.filterColumn(x)))
+    },
+
+    // Dedup after filters (dropping rows first shrinks the dedup shuffle),
+    // before projection/aggregation so min_by can carry all columns.
+    step[DedupSpec]("dedup", "drop_duplicates")(
+      decode = j => Some(dedup(j)),
+      reads = d => d.keys ++ d.idCol ++ d.orderCol,
+      adds = _.countCol.toSeq) { (d, c, s) =>
+      // one deterministic winner per key: best score (order_col set),
+      // else min id (id_col set), else plain dropDuplicates; count_col
+      // rides the winner aggregate with the duplicate-class size
+      if (d.countCol.nonEmpty)
+        c.requireBatch("dedup (count_col)", "a class-size aggregate",
+          "drop count_col (streaming state dedup cannot count a class)")
+      s.through { df =>
+        def winner(): DataFrame = (d.idCol, d.orderCol) match {
+          case (Some(id), Some(oc)) =>
+            c.requireBatch("dedup (order_col)", "a score-ranked aggregate",
+              "drop order_col (streams keep the first arrival per key)")
+            Dedup.exactDedupBest(df, d.keys, id, oc, d.descending, d.countCol)
+          case (Some(id), None) => Dedup.exactDedup(df, d.keys, id, d.countCol)
+          case _ => df.dropDuplicates(d.keys)
+        }
+        if (d.withinWatermark) {
+          if (c.node.op[WatermarkSpec].isEmpty)
+            throw new IllegalArgumentException(
+              s"node ${c.nodeId}: dedup.within_watermark requires a node watermark")
+          if (d.idCol.nonEmpty && df.isStreaming)
+            // streaming state dedup keeps the FIRST arrival per key — a
+            // min-id winner isn't expressible there; refusing beats
+            // silently returning arrival-order winners
+            throw new IllegalArgumentException(
+              s"node ${c.nodeId}: dedup.id_col is not supported with " +
+                "within_watermark on streams (state keeps the first arrival)")
+          // Batch compile of the same spec: the input is finite, so the
+          // watermark horizon covers all of it — plain (or min-id/best-
+          // score) dedup is the exact batch semantics (and Spark rejects
+          // dropDuplicatesWithinWatermark on batch frames outright).
+          if (df.isStreaming) df.dropDuplicatesWithinWatermark(d.keys)
+          else winner()
+        } else winner()
+      }
+    },
+
+    // the pre-aggregation projection; beside an aggregate it folds into
+    // the aggregate's keep columns instead
+    step[KeepColumnsSpec]("keep_columns", "keep")(
+      decode = j => some(JsonCodec.strSeq(j.json)).filterNot(_ => aggregates(j.node))
+        .map(KeepColumnsSpec),
+      reads = _.cols) { (k, _, s) =>
+      s.select(k.cols.map(col))
+    },
+
+    // ---- the operators ----
+
     // Embedding near-dup pairs: the frame becomes (idA, idB, score).
     // Pure plan composition (banded signatures + equi-join — no
     // actions); "clusters" runs connected components over the verified
@@ -168,12 +582,8 @@ object Operators {
       (d, c, df) =>
         val pairs = Similarity.cosineNearDupPairsBanded(
           df, d.idCol, d.vecCol, d.threshold, d.dim, d.numBits, d.bands)
-        if (d.output != "clusters") pairs
-        else {
-          c.requireBatch("near_dup (clusters)")
-          val labels = Dedup.dedupClusters(pairs)
-          d.retention.fold(labels)(r => retainBest(c, df, labels, d.idCol, r))
-        }
+        pairsOrClusters(c, "near_dup", df, d.idCol, d.output, d.retention)(pairs)(
+          Dedup.dedupClusters(pairs))
     },
 
     // Semantic dedup: centroid training collects bounded metadata at
@@ -209,10 +619,10 @@ object Operators {
         textCol = j.str("text_col", "textCol"),
         blockExpr = j.str("block_expr", "blockExpr"),
         threshold = j.doubleOr(0.8, "threshold"),
-        maxDistance = j.opt("max_distance", "maxDistance").map(_.asInt),
+        maxDistance = j.optInt("max_distance", "maxDistance"),
         // default-on skew guard; an int pins a user cap, "off" opts out
         bucketCap = j.opt("max_bucket_size", "maxBucketSize").map { v =>
-          if (v.isNumber) BucketCap.Max(v.asInt)
+          if (v.isNumber) BucketCap.Max(JsonCodec.int(v, s"${j.ctx}.max_bucket_size"))
           else v.asText match {
             case "auto" => BucketCap.Auto
             case "off"  => BucketCap.Off
@@ -1092,9 +1502,11 @@ object Operators {
           nlist = j.intOr(16, "nlist"),
           refineRounds = j.intOr(0, "refine_rounds", "refineRounds"),
           mode = mode,
-          pqM = pq.map(p => JsonCodec.req(p, s"$ctx.pq", "m").asInt),
-          pqK = pq.flatMap(p => JsonCodec.opt(p, "k")).map(_.asInt).getOrElse(256),
-          pqIters = pq.flatMap(p => JsonCodec.opt(p, "iters")).map(_.asInt).getOrElse(5),
+          pqM = pq.map(p => JsonCodec.int(JsonCodec.req(p, s"$ctx.pq", "m"), s"$ctx.pq.m")),
+          pqK = pq.flatMap(p => JsonCodec.opt(p, "k"))
+            .map(JsonCodec.int(_, s"$ctx.pq.k")).getOrElse(256),
+          pqIters = pq.flatMap(p => JsonCodec.opt(p, "iters"))
+            .map(JsonCodec.int(_, s"$ctx.pq.iters")).getOrElse(5),
           checkpoint = j.optStr("checkpoint"))
         requireCompactOnlyCheckpoint(ctx, s.mode, s.checkpoint)
         // append assigns to the SAVED centroids — a stated fit parameter
@@ -1437,7 +1849,8 @@ object Operators {
           idCol = j.str("id_col", "idCol"),
           tokensCol = j.str("tokens_col", "tokensCol"),
           budgets = budgets.map(b =>
-            JsonCodec.fields(b).map { case (k, v) => (k, v.asLong) }).getOrElse(Seq.empty),
+            JsonCodec.fields(b).map { case (k, v) =>
+              (k, JsonCodec.long(v, s"$ctx.budgets.$k")) }).getOrElse(Seq.empty),
           weights = weights.map(w =>
             JsonCodec.fields(w).map { case (k, v) => (k, v.asDouble) }).getOrElse(Seq.empty),
           totalBudget = j.longOr(0L, "total_budget", "totalBudget"),
@@ -1508,6 +1921,174 @@ object Operators {
         .select(col("media_id"), col("meta.format").as("format"),
           col("meta.width").as("width"), col("meta.height").as("height"),
           col("meta.n_bytes").as("n_bytes"), col("features"))
+    },
+
+    // ---- after the operators ----
+
+    // Note the reference quirk kept intentionally: the parent aggregates
+    // BEFORE joining children, so joins run on aggregated-parent ×
+    // aggregated-child (SURVEY §3 EP2 step 6).
+    step[AggregateSpec]("aggregate", "aggregation")(
+      decode = aggregateObject,
+      reads = a => a.groupBy ++ a.keep ++ a.sets.flatten ++ a.pivot.map(_.col) ++
+        a.aggs.filterNot(_.col == "*").map(_.col)) { (a, _, s) =>
+      Compiler.aggregate(s, a)
+    }.copy(read = n =>
+      if (n.opt("aggregate", "aggregation").isEmpty && aggregates(n)) Some(flatAggregate(n))
+      else keyRead(Seq("aggregate", "aggregation"), aggregateObject)(n)),
+
+    step[RenameSpec]("rename")(decode = j => some(exprs(j)).map(RenameSpec)) { (r, _, s) =>
+      s.rename(r.pairs)
+    },
+
+    step[WithColumnsSpec]("with_columns", "withColumns")(
+      decode = j => some(exprs(j)).map(WithColumnsSpec)) { (w, _, s) =>
+      s.withColumns(w.cols.map { case (c, e) => c -> expr(e) })
+    },
+
+    // post_filters: the curation slot — unlike `filters` (pre-operator),
+    // these see every operator/with_columns output (score, near_dup,
+    // n_bpe, …), so one config can score-then-drop. Plain row filters:
+    // batch AND streaming admissible.
+    step[PostFiltersSpec]("post_filters", "postFilters")(
+      decode = j => some(filterItems(j)).map(PostFiltersSpec)) { (f, _, s) =>
+      f.filters.foreach(x => s.filter(Compiler.filterColumn(x)))
+    },
+
+    // expect: row-level data contracts (the CHECK-constraint shape every
+    // lakehouse engine uses): each rule compiles to a filter that is
+    // TRUE for passing rows and raise_error for violations — the check
+    // rides the scan/projection stages (zero extra passes over 100 TB;
+    // batch AND streaming admissible), unlike an action-based validator
+    // which would double-scan. A violation fails the job loudly with
+    // the rule name. Plan-dependence caveat (documented in USAGE):
+    // Catalyst may evaluate a pushed-down contract on rows a later join
+    // would have dropped — express join-dependent contracts on the
+    // parent node after its children.
+    //
+    // NULL semantics — STRICTER than SQL CHECK, deliberately: a rule
+    // that evaluates to NULL (e.g. `score > 0` on a NULL score) is a
+    // VIOLATION, not a pass. SQL CHECK's pass-on-UNKNOWN is the wrong
+    // default for a data contract — the rows it silently waves through
+    // are exactly the damaged ones. A contract that should tolerate
+    // NULLs says so explicitly: `score IS NULL OR score > 0`.
+    // Documented in USAGE.md's `expect` row; tested in CompilerSpec.
+    step[ExpectSpec]("expect")(
+      decode = j => some(rules(j, JsonCodec.fields(j.json))).map(ExpectSpec)) { (x, _, s) =>
+      x.rules.foreach { case (name, e) =>
+        s.filter(when(expr(e), lit(true)).otherwise(raise_error(
+          lit(s"expectation '$name' violated: $e"))))
+      }
+    },
+
+    // expect_report: the AUDIT twin of `expect` — instead of failing on
+    // the first violation, the frame becomes one row per rule with its
+    // violation count: (rule, n_violations, n_rows). Same deliberate
+    // NULL-is-violation semantics (violation ⇔ NOT coalesce(rule, false)
+    // — the fail mode's contrapositive), so the two modes always agree
+    // on WHICH rows are bad. ONE map-side-combined aggregate pass over
+    // the frame, then a rules-sized in-row explode — no per-rule scans.
+    // Batch-only by name (a global aggregate has no append-mode plan);
+    // on a streaming ROOT compileStream runs it as the per-batch monitor.
+    // "group_cols" is RESERVED (a rule cannot take that name): per-slice
+    // scorecards — counts per group value.
+    step[ExpectReportSpec]("expect_report", "expectReport")(
+      decode = j => {
+        val (gs, rs) = JsonCodec.fields(j.json)
+          .partition(f => f._1 == "group_cols" || f._1 == "groupCols")
+        val rls = rules(j, rs)
+        val groups = gs.map { case (k, v) =>
+          require(v.isArray, s"${j.ctx}.$k must be an ARRAY of columns")
+          JsonCodec.strSeq(v)
+        }
+        require(groups.size <= 1, s"${j.ctx}: give group_cols OR groupCols, not both")
+        if (groups.flatten.nonEmpty && rls.isEmpty)
+          throw new IllegalArgumentException(
+            s"${j.ctx} has group_cols but no rules — declare at least one " +
+              "rule_name: \"expr\" entry")
+        some(rls).map(ExpectReportSpec(_, groups.flatten))
+      },
+      batchOnly = Some(runs("a global violation-count aggregate",
+        "declare expect_report on the streaming ROOT instead — it becomes " +
+          "the per-batch contract monitor (batch_id-stamped scorecard " +
+          "rows appended to the path sink)"))) { (r, _, s) =>
+      s.through(Relational.expectReport(_, r.rules, r.groupCols))
+    },
+
+    step[DropSpec]("drop")(decode = j => some(JsonCodec.strSeq(j.json)).map(DropSpec)) {
+      (d, c, s) =>
+        s.through { df =>
+          // DataFrame.drop silently ignores unknown names — a typo'd drop
+          // would leave the column in the sink with no diagnostic; fail
+          // loud instead
+          val missing = d.cols.filterNot(df.columns.contains)
+          if (missing.nonEmpty)
+            throw new IllegalArgumentException(
+              s"node ${c.nodeId}: drop references unknown columns: ${missing.mkString(", ")}")
+          df.drop(d.cols: _*)
+        }
+    },
+
+    step[BitemporalSpec]("bitemporal")(
+      decode = j => Some(
+        if (j.json.isBoolean) BitemporalSpec()
+        else BitemporalSpec(
+          validFrom = j.strOr("2024-01-01", "valid_from"),
+          validTo = j.strOr("9999-12-31", "valid_to"),
+          fromCol = j.strOr("valid_from", "from_col", "fromCol"),
+          toCol = j.strOr("valid_to", "to_col", "toCol")))) { (b, _, s) =>
+      s.withColumns(Seq(b.fromCol -> lit(b.validFrom), b.toCol -> lit(b.validTo)))
+    },
+
+    step[ChildrenSpec]("children")(
+      decode = j => some(JsonCodec.elems(j.json).map(child(j.nodeId, _))).map(ChildrenSpec)) {
+      (cs, c, s) => cs.children.foreach(joinChild(c, s, _))
+    },
+
+    step[CompactSpec]("compact")(
+      decode = j => Some(CompactSpec(
+        keys = JsonCodec.strSeq(j.req("keys")),
+        versionOrder = j.strs("version_order", "versionOrder"),
+        deleteWhen = j.optStr("delete_when", "deleteWhen")))) { (k, c, s) =>
+      if (k.versionOrder.isEmpty) throw new IllegalArgumentException(
+        s"node ${c.nodeId}: compact needs version_order (recency first, " +
+          "e.g. [\"ts desc\", \"seq desc\"])")
+      s.through(compact(c, k, _))
+    },
+
+    // Running totals after compact (totals over the compacted snapshot,
+    // if both are set), before top_k/order_by. The same node key streams:
+    // flatMapGroupsWithState compiles under readStream inputs with two
+    // longs of state per key, and the batch compile of one spec equals
+    // the window formulation exactly (StreamingSpec).
+    step[RunningTotalsSpec]("running_totals", "runningTotals")(
+      decode = j => Some(RunningTotalsSpec(
+        keyCol = j.str("key_col", "keyCol"),
+        seqCol = j.str("seq_col", "seqCol"),
+        tsCol = j.str("ts_col", "tsCol"),
+        valueCol = j.str("value_col", "valueCol")))) { (r, _, s) =>
+      s.through(graft.streaming.Streaming.runningTotals(
+        _, r.keyCol, r.seqCol, r.tsCol, r.valueCol))
+    },
+
+    step[TopKSpec]("top_k", "topK")(
+      decode = j => Some(TopKSpec(
+        partitionBy = j.strs("partition_by", "partitionBy"),
+        orderBy = j.strs("order_by", "orderBy"),
+        k = JsonCodec.nonNegInt(j.req("k"), s"${j.ctx}.k"),
+        rankCol = j.strOr("rn", "rank_col", "rankCol")))) { (t, _, s) =>
+      s.through(Relational.topKPerGroup(
+        _, t.partitionBy, t.orderBy.map(Compiler.sortColumn), t.k, t.rankCol))
+    },
+
+    step[OrderBySpec]("order_by", "orderBy")(
+      decode = j => some(JsonCodec.strSeq(j.json)).map(OrderBySpec)) { (o, _, s) =>
+      s.orderBy(o.cols.map(Compiler.sortColumn))
+    },
+
+    step[LimitSpec]("limit")(
+      decode = j => Some(LimitSpec(JsonCodec.nonNegInt(j.json, j.ctx)))) { (l, _, s) =>
+      s.limit(l.n)
     },
 
     // ---- streaming root sinks (continuous ingestion; each foreachBatch
@@ -1626,9 +2207,17 @@ object Operators {
 
   def inOrder(ops: Seq[OpSpec]): Seq[OpSpec] = ops.sortBy(s => index(s.getClass))
 
-  /** The frame columns a node's operators read (the friendly tier). */
+  /** A node's steps, decoded in table order. */
+  def decode(n: NodeJson): Seq[OpSpec] = all.flatMap(_.read(n))
+
+  /** The frame columns a node's steps read (the friendly tier). */
   def reads(node: NodeSpec): Seq[String] =
     inOrder(node.ops).flatMap(s => of(s).reads(s))
+
+  /** The columns a node's steps add before the steps that read them
+    * (derive, dedup's count_col). */
+  def adds(node: NodeSpec): Seq[String] =
+    inOrder(node.ops).flatMap(s => of(s).adds(s))
 
   /** The node's root sinks, in registry order. */
   def rootSinks(node: NodeSpec): Seq[OpSpec] =
@@ -1656,14 +2245,14 @@ object Operators {
         "compile with compileStreamJson and declare it on the root node " +
         s"(for the batch shape, $batchShape)")
 
-  /** Applies the node's transforms to `df` in registry order. */
-  def transform(node: NodeSpec, c: Ctx, df: DataFrame): DataFrame =
-    inOrder(node.ops).foldLeft(df) { (in, s) =>
-      val o = of(s)
+  /** Stacks `c.node`'s steps on `s`, in table order. */
+  def build(c: Ctx, s: Spine): Unit =
+    inOrder(c.node.ops).foreach { spec =>
+      val o = of(spec)
       o.mode match {
         case Transform(batchOnly, step) =>
           batchOnly.foreach(c.batchOnly(o.key, _))
-          step(s, c, in)
+          step(spec, c, s)
         case RootSink(shape, _) => throw rootSinkError(o.key, shape, c.nodeId)
       }
     }

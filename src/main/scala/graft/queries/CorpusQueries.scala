@@ -1213,9 +1213,10 @@ object CorpusQueries extends QueryPack {
     // train on the id % 5 = 0 slice (5 classes × per-class aggregate
     // passes is the cost driver — the slice keeps it bounded while the
     // marker keeps every class represented), predict EVERY row: the
-    // train→generalize shape, and held-out rows still gate exactly
+    // train→generalize shape, and held-out rows still gate exactly (the
+    // trainer persists its own featurized input)
     val models = Corpus.trainMulticlassClassifier(
-      base.filter(col("doc_id") % 5 === 0).persist(),
+      base.filter(col("doc_id") % 5 === 0),
       "doc_id", "mtext", "lang", dim = 512, epochs = 1)
     Corpus.predictMulticlass(base, "mtext", models)
       .select("doc_id", "pred_label")
@@ -1260,7 +1261,7 @@ object CorpusQueries extends QueryPack {
       .withColumn("mtext", concat(col("text"),
         marker, marker, marker, marker, marker))
     val models = Corpus.trainMulticlassClassifier(
-      base.filter(col("doc_id") % 5 === 0).persist(),
+      base.filter(col("doc_id") % 5 === 0),
       "doc_id", "mtext", "lang", dim = 512, epochs = 1)
     val mdir = java.nio.file.Files.createTempDirectory("graft-q182").toString
     Corpus.saveMulticlassClassifier(s, models, s"$mdir/model")

@@ -80,7 +80,7 @@ object JsonCodec {
   private[graft] def fields(n: JsonNode): Seq[(String, JsonNode)] =
     n.fields().asScala.map(e => (e.getKey, e.getValue)).toSeq
 
-  private def elems(n: JsonNode): Seq[JsonNode] = n.elements().asScala.toSeq
+  private[graft] def elems(n: JsonNode): Seq[JsonNode] = n.elements().asScala.toSeq
 
   private[graft] def strSeq(n: JsonNode): Seq[String] =
     if (n == null) Nil
@@ -97,15 +97,22 @@ object JsonCodec {
     opt(n, keys: _*).getOrElse(throw new IllegalArgumentException(
       s"$ctx requires '${keys.head}' (got: ${n.toString.take(200)})"))
 
-  /** A JSON integer in [0, Int.MaxValue], or a named error: Jackson's
+  /** A JSON integer that fits an Int, or a named error: Jackson's
     * `asInt` would read "ten" as 0, true as 1, 10.9 as 10 and wrap
-    * 3000000000 to a negative. */
-  private[graft] def nonNegInt(n: JsonNode, site: String): Int = {
-    if (!(n.isIntegralNumber && n.canConvertToInt && n.asInt >= 0))
-      throw new IllegalArgumentException(
-        s"$site must be an integer >= 0 (got: ${n.toString.take(200)})")
-    n.asInt
-  }
+    * 3000000000 to a negative. Range checks stay with each key. */
+  private[graft] def int(n: JsonNode, site: String): Int =
+    integer(n, s"$site must be an integer", n.canConvertToInt).asInt
+
+  private[graft] def long(n: JsonNode, site: String): Long =
+    integer(n, s"$site must be an integer", n.canConvertToLong).asLong
+
+  /** A JSON integer in [0, Int.MaxValue], or a named error. */
+  private[graft] def nonNegInt(n: JsonNode, site: String): Int =
+    integer(n, s"$site must be an integer >= 0", n.canConvertToInt && n.asInt >= 0).asInt
+
+  private def integer(n: JsonNode, error: String, fits: => Boolean): JsonNode =
+    if (n.isIntegralNumber && fits) n
+    else throw new IllegalArgumentException(s"$error (got: ${n.toString.take(200)})")
 
   def jvalue(n: JsonNode): JValue =
     if (n == null || n.isNull) JNull
@@ -118,17 +125,14 @@ object JsonCodec {
 
   // ---- node --------------------------------------------------------------
 
-  private[spec] def node(n: JsonNode, defaultId: String,
+  /** One node: its id, input (`source` or `combine`), its steps — decoded
+    * by the step table ([[graft.compile.Operators]]) — and its `save`. */
+  private[graft] def node(n: JsonNode, defaultId: String,
       extraAllowed: Set[String] = Set.empty): NodeSpec = {
-    // Every node-level key access routes through optN/reqN so the set of
-    // KNOWN keys is recorded mechanically; unknown keys fail loudly at
-    // parse time — a typo'd operator key ("semantic_dedpu") silently
-    // no-opping is the worst possible config-language failure mode.
-    val accessed = scala.collection.mutable.HashSet.empty[String]
-    def optN(keys: String*): Option[JsonNode] = { accessed ++= keys; opt(n, keys: _*) }
-    val id = optN("id", "unique_id").map(_.asText).getOrElse(defaultId)
+    val j = new NodeJson(n, defaultId)
+    val id = j.id
 
-    val source = optN("source", "data_path").map { s =>
+    val source = j.opt("source", "data_path").map { s =>
       if (s.isTextual) {
         val p = s.asText
         val fmt =
@@ -157,308 +161,25 @@ object JsonCodec {
       }
     }
 
-    def filterItems(f: JsonNode): Seq[FilterSpec] = {
-        val items = if (f.isArray) elems(f) else Seq(f)
-        items.map {
-          case t if t.isTextual => ExprFilter(t.asText)
-          case o =>
-            ColFilter(
-              col = req(o, s"node $id: filter", "col", "filter_col", "column").asText,
-              op = opt(o, "op", "filter_op").map(_.asText).getOrElse("=="),
-              value = jvalue(opt(o, "value", "filter_value").orNull),
-              nullSafe =
-                opt(o, "null_safe", "nullSafe").exists(_.asBoolean(false))
-            )
-        }
-    }
-
-    val filters: Seq[FilterSpec] =
-      optN("filters", "filter").toSeq.flatMap(filterItems)
-    // post_filters run AFTER the operator keys + with_columns, so they can
-    // reference computed outputs (score, near_dup, n_bpe, …)
-    val postFilters: Seq[FilterSpec] =
-      optN("post_filters", "postFilters").toSeq.flatMap(filterItems)
-
-    val keep = optN("keep_columns", "keep").map(strSeq).getOrElse(Nil)
-
-    // Aggregation: canonical {"group_by":[...], "aggregations":[{col,func,
-    // new_name,filter}]} or any of the reference spellings.
-    val aggNode = optN("aggregate", "aggregation")
-    val aggregate: Option[AggregateSpec] = aggNode match {
-      case Some(a) if a.isObject && (a.has("group_by") || a.has("aggregations")) =>
-        Some(
-          AggregateSpec(
-            groupBy = opt(a, "group_by", "groupBy").map(strSeq).getOrElse(Nil),
-            aggs = aggList(opt(a, "aggregations", "aggs").orNull),
-            keep = opt(a, "keep_columns", "keep").map(strSeq).getOrElse(Nil),
-            mode = opt(a, "mode").map(_.asText)
-              .getOrElse(if (a.has("sets") || a.has("grouping_sets")) "grouping_sets" else "groupBy"),
-            sets = opt(a, "sets", "grouping_sets").toSeq
-              .flatMap(ss => elems(ss).map(strSeq)),
-            salt = opt(a, "salt").map(_.asInt),
-            pivot = opt(a, "pivot").map(p =>
-              PivotSpec(
-                col = req(p, s"node $id: aggregate.pivot", "col", "column").asText,
-                values = opt(p, "values").toSeq.flatMap(elems).map(jvalue)))
-          )
-        )
-      case Some(a) if a.isObject =>
-        // hotrod spelling: "aggregate": {col: "func" | {"filter","function"}}
-        // with sibling "group_by"/"link" keys on the node.
-        val aggs = fields(a).map {
-          case (c, v) if v.isTextual => AggSpec(c, v.asText)
-          case (c, v) =>
-            AggSpec(
-              c,
-              opt(v, "function", "func").map(_.asText).getOrElse("sum"),
-              newName = opt(v, "new_name", "as").map(_.asText),
-              filter = opt(v, "filter").map(_.asText)
-            )
-        }
-        Some(
-          AggregateSpec(
-            groupBy = optN("group_by").map(strSeq).getOrElse(Nil),
-            aggs = aggs
-          )
-        )
-      case None if n.has("group_by") || n.has("aggregations") =>
-        // optimus.py flat spelling: group_by/keep_columns/aggregations
-        // directly on the node
-        Some(
-          AggregateSpec(
-            groupBy = optN("group_by").map(strSeq).getOrElse(Nil),
-            aggs = aggList(optN("aggregations").orNull),
-            keep = keep
-          )
-        )
-      case _ => None
-    }
-
-    val rename: Seq[(String, String)] = optN("rename").toSeq.flatMap(r =>
-      fields(r).map { case (o2, n2) => o2 -> n2.asText }
-    )
-
-    val withCols: Seq[(String, String)] =
-      optN("with_columns", "withColumns").toSeq.flatMap(w =>
-        fields(w).map { case (c, e) => c -> e.asText }
-      )
-
-    // derive = computed columns applied BEFORE keep/aggregate (usable as
-    // group keys / agg inputs); with_columns applies after aggregation
-    val derive: Seq[(String, String)] =
-      optN("derive").toSeq.flatMap(w =>
-        fields(w).map { case (c, e) => c -> e.asText }
-      )
-
-    val dd = optN("dedup", "drop_duplicates").map { d =>
-      if (d.isArray || d.isTextual) DedupSpec(keys = strSeq(d))
-      else {
-        val ds = DedupSpec(
-          keys = opt(d, "keys", "on").map(strSeq).getOrElse(Nil),
-          idCol = opt(d, "id_col", "idCol").map(_.asText),
-          withinWatermark =
-            opt(d, "within_watermark", "withinWatermark").exists(_.asBoolean(false)),
-          orderCol = opt(d, "order_col", "orderCol").map(_.asText),
-          descending = opt(d, "descending").forall(_.asBoolean(true)),
-          countCol = opt(d, "count_col", "countCol").map(_.asText))
-        require(ds.orderCol.isEmpty || ds.idCol.nonEmpty,
-          s"node $id: dedup.order_col needs id_col for the tie-break — " +
-            "a score-only winner is nondeterministic on tied scores")
-        require(ds.countCol.isEmpty || ds.idCol.nonEmpty,
-          s"node $id: dedup.count_col needs id_col — class size is " +
-            "aggregated alongside the deterministic winner")
-        ds
-      }
-    }
-
-    // registry operators, decoded in registry order (graft.compile.Operators)
-    val ops = graft.compile.Operators.all.flatMap { o =>
-      optN(o.keys: _*).map(d => o.decode(new OpJson(d, id, o.key)))
-    }
-
-    val wm = optN("watermark").map { w =>
-      WatermarkSpec(
-        col = req(w, s"node $id: watermark", "col", "column").asText,
-        delay = req(w, s"node $id: watermark", "delay", "threshold").asText)
-    }
-
-    val bt = optN("bitemporal").map { b =>
-      if (b.isBoolean) BitemporalSpec()
-      else
-        BitemporalSpec(
-          validFrom =
-            opt(b, "valid_from").map(_.asText).getOrElse("2024-01-01"),
-          validTo = opt(b, "valid_to").map(_.asText).getOrElse("9999-12-31"),
-          fromCol = opt(b, "from_col", "fromCol").map(_.asText).getOrElse("valid_from"),
-          toCol = opt(b, "to_col", "toCol").map(_.asText).getOrElse("valid_to")
-        )
-    }
-
-    val children: Seq[ChildSpec] = optN("children").toSeq.flatMap(elems).map {
-      c =>
-        val link = opt(c, "link")
-          .map(strSeq)
-          .orElse(opt(c, "join").flatMap(j => opt(j, "on").map(strSeq)))
-          .getOrElse(Nil)
-        val how = opt(c, "join")
-          .flatMap(j => opt(j, "how").map(_.asText))
-          .orElse(opt(c, "how").map(_.asText))
-          .getOrElse("left")
-        val onExpr = opt(c, "join")
-          .flatMap(j => opt(j, "on_expr", "onExpr").map(_.asText))
-          .orElse(opt(c, "on_expr").map(_.asText))
-        val leftTs = opt(c, "join").flatMap(j => opt(j, "left_ts", "leftTs").map(_.asText))
-        val rightTs = opt(c, "join").flatMap(j => opt(j, "right_ts", "rightTs").map(_.asText))
-        val lookback = opt(c, "join").flatMap(j => opt(j, "lookback").map(_.asText))
-        val leftDelay = opt(c, "join").flatMap(j => opt(j, "left_delay", "leftDelay").map(_.asText))
-        val rightDelay = opt(c, "join").flatMap(j => opt(j, "right_delay", "rightDelay").map(_.asText))
-        // the join object's own keys get the same typo protection as node
-        // keys — "tolerence" silently no-opping is the failure mode the
-        // whole codec exists to prevent
-        opt(c, "join").foreach { j =>
-          val known = Set("on", "how", "on_expr", "onExpr", "left_ts",
-            "leftTs", "right_ts", "rightTs", "lookback", "left_delay",
-            "leftDelay", "right_delay", "rightDelay", "direction",
-            "tolerance", "hint", "join_hint", "salt", "skew_salt")
-          val unk = fields(j).map(_._1).filterNot(known.contains)
-          require(unk.isEmpty,
-            s"node $id: unknown join key(s): ${unk.mkString(", ")} " +
-              s"(known: ${known.toSeq.sorted.mkString(", ")})")
-        }
-        val direction = opt(c, "join")
-          .flatMap(j => opt(j, "direction").map(_.asText)).getOrElse("backward")
-        require(Seq("backward", "forward", "nearest").contains(direction),
-          s"node $id: join.direction must be backward/forward/nearest, " +
-            s"got '$direction'")
-        val tolerance = opt(c, "join").flatMap(j => opt(j, "tolerance").map(_.asText))
-        require((direction == "backward" && tolerance.isEmpty) || how == "asof",
-          s"node $id: join.direction/tolerance apply only to how='asof', " +
-            s"got how='$how'")
-        // Skew-salted join (config surface of Relational.saltedJoin): the
-        // parent side gets a content-derived salt, the child replicates
-        // once per salt value, the join runs on (link, salt). Guards live
-        // HERE so a bad combination fails at decode, not mid-plan: the
-        // replication is only semantics-preserving for inner/left equi
-        // joins, and salt ≤ 1 means "you didn't want this".
-        val salt = opt(c, "join")
-          .flatMap(j => opt(j, "salt", "skew_salt").map(_.asInt))
-        salt.foreach { n =>
-          require(n > 1,
-            s"node $id: join.salt must be > 1 (got $n) — 1 bucket is a " +
-              "plain join; drop the key instead")
-          require(how == "inner" || how == "left",
-            s"node $id: join.salt preserves semantics only for " +
-              s"how='inner'/'left' (the child side is replicated ${n}×, " +
-              s"so an unmatched child row under '$how' would surface $n " +
-              "times)")
-          require(onExpr.isEmpty,
-            s"node $id: join.salt needs equi 'on' keys; it cannot salt an " +
-              "on_expr condition")
-          require(link.nonEmpty,
-            s"node $id: join.salt needs equi 'on' keys (none given)")
-        }
-        ChildSpec(
-          node = node(c, defaultId = id + "_child",
-            // the child object carries its join wiring next to node keys
-            extraAllowed = Set("join", "link", "how", "on_expr", "onExpr",
-              "prefix", "hint", "join_hint")),
-          join = JoinSpec(link, how, onExpr, leftTs, rightTs, lookback,
-            leftDelay, rightDelay, direction, tolerance, salt),
-          prefix = opt(c, "prefix").exists(_.asBoolean(false)),
-          // hint is accepted at the child level and inside the join object
-          // (both natural spellings; the latter was silently dropped before
-          // the join-key whitelist exposed it)
-          hint = opt(c, "hint", "join_hint").map(_.asText)
-            .orElse(opt(c, "join").flatMap(j =>
-              opt(j, "hint", "join_hint").map(_.asText)))
-        )
-    }
-
-    val combine = optN("combine").map { c =>
+    val combine = j.opt("combine").map { c =>
       CombineSpec(
         op = opt(c, "op").map(_.asText).getOrElse("union"),
         nodes = opt(c, "nodes").toSeq.flatMap(elems).zipWithIndex
           .map { case (cn, i) => node(cn, s"${id}_part$i") })
     }
 
-    val expectReportNode = optN("expect_report", "expectReport")
-
     val spec = NodeSpec(
       id = id,
       source = source,
       combine = combine,
-      filters = filters,
-      derive = derive,
-      watermark = wm,
-      dedup = dd,
-      keepColumns = if (aggregate.isDefined) Nil else keep,
-      ops = ops,
-      aggregate = aggregate,
-      rename = rename,
-      withColumns = withCols,
-      postFilters = postFilters,
-      expect = optN("expect").toSeq.flatMap(w =>
-        fields(w).map { case (name, e) =>
-          require(e.isTextual && e.asText.nonEmpty,
-            s"node $id: expect rule '$name' must map to a non-empty " +
-              "expression string")
-          name -> e.asText
-        }),
-      // "group_cols" is RESERVED inside expect_report (a rule cannot take
-      // that name): per-slice scorecards — counts per group value
-      expectReport = expectReportNode.toSeq.flatMap(w =>
-        fields(w).filterNot(f => f._1 == "group_cols" || f._1 == "groupCols")
-          .map { case (name, e) =>
-          require(e.isTextual && e.asText.nonEmpty,
-            s"node $id: expect_report rule '$name' must map to a " +
-              "non-empty expression string")
-          name -> e.asText
-        }),
-      expectReportGroups = expectReportNode.toSeq
-        .flatMap { w =>
-          val gs = fields(w).collect {
-            case (k @ ("group_cols" | "groupCols"), v) =>
-              require(v.isArray,
-                s"node $id: expect_report.$k must be an ARRAY of columns")
-              strSeq(v)
-          }
-          require(gs.size <= 1,
-            s"node $id: expect_report: give group_cols OR groupCols, not both")
-          gs.flatten
-        },
-      drop = optN("drop").map(strSeq).getOrElse(Nil),
-      bitemporal = bt,
-      children = children,
-      compact = optN("compact").map { c =>
-        CompactSpec(
-          keys = strSeq(req(c, s"node $id: compact", "keys")),
-          versionOrder =
-            opt(c, "version_order", "versionOrder").map(strSeq).getOrElse(Nil),
-          deleteWhen = opt(c, "delete_when", "deleteWhen").map(_.asText))
-      },
-      runningTotals = optN("running_totals", "runningTotals").map { r =>
-        RunningTotalsSpec(
-          keyCol = req(r, s"node $id: running_totals", "key_col", "keyCol").asText,
-          seqCol = req(r, s"node $id: running_totals", "seq_col", "seqCol").asText,
-          tsCol = req(r, s"node $id: running_totals", "ts_col", "tsCol").asText,
-          valueCol = req(r, s"node $id: running_totals", "value_col", "valueCol").asText)
-      },
-      topK = optN("top_k", "topK").map { t =>
-        TopKSpec(
-          partitionBy = opt(t, "partition_by", "partitionBy").map(strSeq).getOrElse(Nil),
-          orderBy = opt(t, "order_by", "orderBy").map(strSeq).getOrElse(Nil),
-          k = nonNegInt(req(t, s"node $id: top_k", "k"), s"node $id: top_k.k"),
-          rankCol = opt(t, "rank_col", "rankCol").map(_.asText).getOrElse("rn"))
-      },
-      orderBy = optN("order_by", "orderBy").map(strSeq).getOrElse(Nil),
-      limit = optN("limit").map(nonNegInt(_, s"node $id: limit")),
-      save = optN("save").map(sink),
-      cache = optN("cache").exists(_.asBoolean(false))
+      ops = graft.compile.Operators.decode(j),
+      save = j.opt("save").map(sink(_, s"node $id: save")),
+      cache = j.opt("cache").exists(_.asBoolean(false))
     )
     // unknown-key rejection: whatever this parse did not read is a typo
     // or an unsupported key — failing here beats a silent no-op operator
     val unknown = fields(n).map(_._1)
-      .filterNot(k => accessed.contains(k) || extraAllowed.contains(k))
+      .filterNot(k => j.accessed.contains(k) || extraAllowed.contains(k))
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"node $id: unknown key(s): ${unknown.mkString(", ")} — " +
@@ -496,7 +217,8 @@ object JsonCodec {
           )
       }
 
-  private def sink(s: JsonNode): SinkSpec =
+  /** A sink; `ctx` ("node <id>: save") names its integer keys' errors. */
+  private def sink(s: JsonNode, ctx: String): SinkSpec =
     if (s.isTextual) SinkSpec(path = s.asText)
     else {
       val format = opt(s, "format").map(_.asText).getOrElse("parquet")
@@ -511,14 +233,15 @@ object JsonCodec {
           Some(SinkLayoutSpec(
             partitionBy = opt(s, "partition_by", "partitionBy").map(strSeq).getOrElse(Nil),
             bucketBy = opt(s, "bucket_by", "bucketBy").map(strSeq).getOrElse(Nil),
-            buckets = opt(s, "buckets").map(_.asInt).getOrElse(0),
+            buckets = opt(s, "buckets").map(int(_, s"$ctx.buckets")).getOrElse(0),
             sortBy = opt(s, "sort_by", "sortBy").map(strSeq).getOrElse(Nil),
             rangeBy = opt(s, "range_by", "rangeBy").map(strSeq).getOrElse(Nil),
-            ranges = opt(s, "ranges").map(_.asInt).getOrElse(0),
+            ranges = opt(s, "ranges").map(int(_, s"$ctx.ranges")).getOrElse(0),
             zorderBy = opt(s, "zorder_by", "zorderBy").map(strSeq).getOrElse(Nil),
-            zorderBits = opt(s, "zorder_bits", "zorderBits").map(_.asInt).getOrElse(4),
-            maxRecordsPerFile =
-              opt(s, "max_records_per_file", "maxRecordsPerFile").map(_.asLong).getOrElse(0L)))
+            zorderBits = opt(s, "zorder_bits", "zorderBits")
+              .map(int(_, s"$ctx.zorder_bits")).getOrElse(4),
+            maxRecordsPerFile = opt(s, "max_records_per_file", "maxRecordsPerFile")
+              .map(long(_, s"$ctx.max_records_per_file")).getOrElse(0L)))
         else None
       // only the KNOWN file formats hard-require a path — option-driven
       // sinks (kafka, jdbc, memory, console, ...) are legitimately
@@ -578,27 +301,40 @@ object JsonCodec {
             .filter(_._1.startsWith("level"))
             .map { case (k, l) => node(l, s"${id}_$k") }
       }
-      IterationSpec(id, levels, opt(it, "save").map(sink))
+      IterationSpec(id, levels, opt(it, "save").map(sink(_, s"iteration $id: save")))
     }
     CascadeSpec(src, iters)
   }
 }
 
-/** One operator object `d` under decode: typed readers of its keys (each
-  * key with its aliases), every diagnostic prefixed by `ctx`
-  * ("node <id>: <key>"). */
-final class OpJson private[graft] (d: JsonNode, nodeId: String, key: String) {
+/** One node object under decode: its keys are read through [[opt]], which
+  * records them, so whatever no reader asked for is an unknown key. */
+final class NodeJson private[graft] (val json: JsonNode, defaultId: String) {
+  private[spec] val accessed = scala.collection.mutable.HashSet.empty[String]
+  def opt(keys: String*): Option[JsonNode] = { accessed ++= keys; JsonCodec.opt(json, keys: _*) }
+  val id: String = opt("id", "unique_id").map(_.asText).getOrElse(defaultId)
+}
+
+/** One operator object `json` of `node` under decode: typed readers of
+  * its keys (each key with its aliases), every diagnostic prefixed by
+  * `ctx` ("node <id>: <key>"). Integers are strict: a JSON integer that fits
+  * the type, else an error naming `ctx.<key>`. */
+final class OpJson private[graft] (val json: JsonNode, val node: NodeJson, key: String) {
+  def nodeId: String = node.id
   val ctx = s"node $nodeId: $key"
-  def opt(keys: String*): Option[JsonNode] = JsonCodec.opt(d, keys: _*)
-  def req(keys: String*): JsonNode = JsonCodec.req(d, ctx, keys: _*)
+  def opt(keys: String*): Option[JsonNode] = JsonCodec.opt(json, keys: _*)
+  def req(keys: String*): JsonNode = JsonCodec.req(json, ctx, keys: _*)
   def str(keys: String*): String = req(keys: _*).asText
-  def int(keys: String*): Int = req(keys: _*).asInt
-  def long(keys: String*): Long = req(keys: _*).asLong
+  def int(keys: String*): Int = JsonCodec.int(req(keys: _*), s"$ctx.${keys.head}")
+  def long(keys: String*): Long = JsonCodec.long(req(keys: _*), s"$ctx.${keys.head}")
   def double(keys: String*): Double = req(keys: _*).asDouble
   def optStr(keys: String*): Option[String] = opt(keys: _*).map(_.asText)
   def strOr(default: String, keys: String*): String = optStr(keys: _*).getOrElse(default)
-  def intOr(default: Int, keys: String*): Int = opt(keys: _*).map(_.asInt).getOrElse(default)
-  def longOr(default: Long, keys: String*): Long = opt(keys: _*).map(_.asLong).getOrElse(default)
+  def optInt(keys: String*): Option[Int] =
+    opt(keys: _*).map(JsonCodec.int(_, s"$ctx.${keys.head}"))
+  def intOr(default: Int, keys: String*): Int = optInt(keys: _*).getOrElse(default)
+  def longOr(default: Long, keys: String*): Long =
+    opt(keys: _*).map(JsonCodec.long(_, s"$ctx.${keys.head}")).getOrElse(default)
   def doubleOr(default: Double, keys: String*): Double =
     opt(keys: _*).map(_.asDouble).getOrElse(default)
   def flag(default: Boolean, keys: String*): Boolean =

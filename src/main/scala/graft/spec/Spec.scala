@@ -89,7 +89,7 @@ final case class AggregateSpec(
     sets: Seq[Seq[String]] = Nil,
     salt: Option[Int] = None,
     pivot: Option[PivotSpec] = None
-)
+) extends OpSpec
 
 /** How a child node joins back into its parent (ref: `join{on, how}` at
   * `pandas/optimus.py:61-66`, `link` at `Optimus/hotrod.py:97-100`).
@@ -137,7 +137,7 @@ final case class TopKSpec(
     orderBy: Seq[String],
     k: Int,
     rankCol: String = "rn"
-)
+) extends OpSpec
 
 /** Set-operation input (NS): the node's input is `op` applied across the
   * child `nodes` (each a full pipeline) instead of a single source.
@@ -222,7 +222,7 @@ final case class SinkLayoutSpec(
   * `derive`, so the watermark column may itself be derived (e.g. a
   * timestamp decoded from raw nanos). A no-op in batch compiles — which is
   * exactly what lets one spec serve both engines. */
-final case class WatermarkSpec(col: String, delay: String)
+final case class WatermarkSpec(col: String, delay: String) extends OpSpec
 
 /** Embedding near-duplicate pair detection (NS; not in the reference):
   * the node's frame becomes (idA, idB, score) — all pairs with cosine ≥
@@ -1049,7 +1049,7 @@ final case class DedupSpec(
     orderCol: Option[String] = None,
     descending: Boolean = true,
     countCol: Option[String] = None
-)
+) extends OpSpec
 
 /** Changelog/CDC compaction to a point-in-time snapshot (NS; not in the
   * reference): latest `versionOrder` row per `keys` wins; a key whose
@@ -1061,7 +1061,7 @@ final case class CompactSpec(
     keys: Seq[String],
     versionOrder: Seq[String], // sort specs, recency first (e.g. "ts desc")
     deleteWhen: Option[String] = None
-)
+) extends OpSpec
 
 /** Multimodal featurize (NS; config surface of `Multimodal.featurize` +
   * `asMediaParsed`): the frame becomes (media_id, format, width, height,
@@ -1091,7 +1091,7 @@ final case class RunningTotalsSpec(
     seqCol: String,
     tsCol: String,
     valueCol: String
-)
+) extends OpSpec
 
 /** Literal column stamp, e.g. bitemporal validity interval
   * (ref: `Optimus/soundwave.py:76-78` valid_from/valid_to). */
@@ -1100,7 +1100,7 @@ final case class BitemporalSpec(
     validTo: String = "9999-12-31",
     fromCol: String = "valid_from",
     toCol: String = "valid_to"
-)
+) extends OpSpec
 
 /** A child node: its own full NodeSpec plus the join back to the parent.
   * `prefix`: namespace the child's non-link output columns as
@@ -1395,36 +1395,32 @@ final case class AnnIngestSpec(
     compactEvery: Option[Int] = None
 ) extends OpSpec
 
-/** One pipeline node = the reference's per-config processing unit:
-  * source → filters → keep_columns → aggregate → rename → withColumns →
-  * bitemporal → join children → orderBy → save.
+// The node steps that carry a plain list or map (their keys, decoders and
+// semantics live in the step table, graft.compile.Operators).
+final case class FiltersSpec(filters: Seq[FilterSpec]) extends OpSpec
+final case class DeriveSpec(cols: Seq[(String, String)]) extends OpSpec // name -> expr
+final case class KeepColumnsSpec(cols: Seq[String]) extends OpSpec
+final case class RenameSpec(pairs: Seq[(String, String)]) extends OpSpec // old -> new
+final case class WithColumnsSpec(cols: Seq[(String, String)]) extends OpSpec // name -> expr
+final case class PostFiltersSpec(filters: Seq[FilterSpec]) extends OpSpec
+final case class ExpectSpec(rules: Seq[(String, String)]) extends OpSpec // name -> expr
+final case class ExpectReportSpec(rules: Seq[(String, String)],
+    groupCols: Seq[String] = Nil) extends OpSpec
+final case class DropSpec(cols: Seq[String]) extends OpSpec
+final case class ChildrenSpec(children: Seq[ChildSpec]) extends OpSpec
+final case class OrderBySpec(cols: Seq[String]) extends OpSpec // "col [asc|desc] [nulls first|last]"
+final case class LimitSpec(n: Int) extends OpSpec
+
+/** One pipeline node = the reference's per-config processing unit: a
+  * source (or a `combine` of nodes), its steps `ops` — applied in the
+  * order of the step table ([[graft.compile.Operators]]) — and a `save`.
   * Children recurse to arbitrary depth (ref grandchildren:
   * `Optimus/hotrod.py:103-110`). */
 final case class NodeSpec(
     id: String,
     source: Option[SourceSpec] = None,
     combine: Option[CombineSpec] = None,
-    filters: Seq[FilterSpec] = Nil,
-    derive: Seq[(String, String)] = Nil, // pre-agg computed columns (name -> expr)
-    watermark: Option[WatermarkSpec] = None,
-    dedup: Option[DedupSpec] = None,
-    keepColumns: Seq[String] = Nil,
-    ops: Seq[OpSpec] = Nil, // registry operators in registry order: transforms after keep, before aggregate; root sinks
-    aggregate: Option[AggregateSpec] = None,
-    rename: Seq[(String, String)] = Nil,
-    withColumns: Seq[(String, String)] = Nil, // name -> Catalyst expr string
-    postFilters: Seq[FilterSpec] = Nil, // after with_columns: filter on operator/derived outputs (score, near_dup, n_bpe, …)
-    expect: Seq[(String, String)] = Nil, // after post_filters: row-level data contracts — a violating row fails the job by rule name (scan-stage, streaming-admissible)
-    expectReport: Seq[(String, String)] = Nil, // after expect: the AUDIT twin — frame becomes (rule, n_violations, n_rows), one aggregate pass, same NULL-is-violation semantics; batch-only
-    expectReportGroups: Seq[String] = Nil, // expect_report."group_cols": per-slice scorecard — output gains the group columns
-    drop: Seq[String] = Nil, // post-agg column drop (e.g. a struct group key already flattened)
-    bitemporal: Option[BitemporalSpec] = None,
-    children: Seq[ChildSpec] = Nil,
-    compact: Option[CompactSpec] = None, // after children, before topK
-    runningTotals: Option[RunningTotalsSpec] = None, // after compact, before topK
-    topK: Option[TopKSpec] = None, // after children, before orderBy
-    orderBy: Seq[String] = Nil, // "col", "col asc", "col desc" [nulls first|last]
-    limit: Option[Int] = None,
+    ops: Seq[OpSpec] = Nil,
     save: Option[SinkSpec] = None,
     cache: Boolean = false // defs-only: persist() the compiled stage
 ) {
@@ -1434,6 +1430,10 @@ final case class NodeSpec(
   /** This node's operator of type `T`, if it has one. */
   def op[T <: OpSpec](implicit t: scala.reflect.ClassTag[T]): Option[T] =
     ops.collectFirst { case o: T => o }
+
+  /** The nodes this node reads: its combine legs, then its children. */
+  def inputs: Seq[NodeSpec] =
+    combine.toSeq.flatMap(_.nodes) ++ op[ChildrenSpec].toSeq.flatMap(_.children.map(_.node))
 }
 
 /** Iteration×level cascade (ref: `Optimus/optimus.py:40-51`): one source,

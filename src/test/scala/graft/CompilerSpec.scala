@@ -600,8 +600,8 @@ class CompilerSpec extends SparkSpec {
        "source": {"table": "t"}}""")
     spec match {
       case CascadePipeline(c) =>
-        assert(c.iterations.head.levels.head.aggregate.get.aggs.head.newName.contains("sum_column4"))
-        assert(c.iterations.head.levels.head.filters.head ==
+        assert(c.iterations.head.levels.head.op[AggregateSpec].get.aggs.head.newName.contains("sum_column4"))
+        assert(c.iterations.head.levels.head.op[FiltersSpec].get.filters.head ==
           ColFilter("column5", ">", JInt(100)))
       case other => fail(s"expected cascade, got $other")
     }
@@ -647,17 +647,17 @@ class CompilerSpec extends SparkSpec {
 
   test("validate reports unknown columns up front") {
     val errs = Compiler.validate(df, NodeSpec(
-      id = "n", keepColumns = Seq("nope"),
-      aggregate = Some(AggregateSpec(Seq("k"), Seq(AggSpec("missing", "sum"))))))
+      id = "n", ops = Seq(KeepColumnsSpec(Seq("nope")),
+      AggregateSpec(Seq("k"), Seq(AggSpec("missing", "sum"))))))
     assert(errs.size == 2)
     assert(errs.forall(_.contains("unknown column")))
 
     // the round-2 keys are covered by the friendly tier too
     val errs2 = Compiler.validate(df, NodeSpec(
-      id = "n2",
-      watermark = Some(WatermarkSpec("no_ts", "1 hour")),
-      dedup = Some(DedupSpec(Seq("no_key"), Some("no_id"))),
-      aggregate = Some(AggregateSpec(Seq("k"), Seq(AggSpec("v", "sum")),
+      id = "n2", ops = Seq(
+      WatermarkSpec("no_ts", "1 hour"),
+      DedupSpec(Seq("no_key"), Some("no_id")),
+      AggregateSpec(Seq("k"), Seq(AggSpec("v", "sum")),
         sets = Seq(Seq("ghost")), pivot = Some(PivotSpec("no_piv", Seq(JStr("x"))))))))
     assert(Seq("no_ts", "no_key", "no_id", "ghost", "no_piv")
       .forall(c => errs2.exists(_.contains(c))), errs2.mkString("; "))

@@ -24,7 +24,7 @@ class JsonCodecSpec extends AnyFunSuite {
          "pivot": {"col": "p", "values": ["x", 1]},
          "aggregations": [
            {"col": "v", "func": "percentile", "percentage": 0.9, "new_name": "p90"}]}}""")
-    val a = n.aggregate.get
+    val a = n.op[AggregateSpec].get
     assert(a.mode == "grouping_sets") // implied by sets
     assert(a.sets == Seq(Seq("a"), Seq()))
     assert(a.salt.contains(8))
@@ -39,13 +39,13 @@ class JsonCodecSpec extends AnyFunSuite {
        "dedup": {"keys": ["k"], "id_col": "id", "within_watermark": true},
        "top_k": {"partition_by": ["k"], "order_by": ["v desc"], "k": 3, "rank_col": "r"},
        "drop": ["helper"]}""")
-    assert(n.watermark.contains(WatermarkSpec("ts", "10 minutes")))
-    assert(n.dedup.contains(DedupSpec(Seq("k"), Some("id"), withinWatermark = true)))
-    assert(n.topK.contains(TopKSpec(Seq("k"), Seq("v desc"), 3, "r")))
-    assert(n.drop == Seq("helper"))
+    assert(n.op[WatermarkSpec].contains(WatermarkSpec("ts", "10 minutes")))
+    assert(n.op[DedupSpec].contains(DedupSpec(Seq("k"), Some("id"), withinWatermark = true)))
+    assert(n.op[TopKSpec].contains(TopKSpec(Seq("k"), Seq("v desc"), 3, "r")))
+    assert(n.op[DropSpec].map(_.cols).contains(Seq("helper")))
     // shorthand: bare key list
     assert(root("""{"source": {"table": "t"}, "dedup": ["a", "b"]}""")
-      .dedup.contains(DedupSpec(Seq("a", "b"))))
+      .op[DedupSpec].contains(DedupSpec(Seq("a", "b"))))
   }
 
   test("child join: hint, on_expr, asof timestamps decode") {
@@ -56,7 +56,7 @@ class JsonCodecSpec extends AnyFunSuite {
           "source": {"table": "u"},
           "join": {"how": "asof", "on": ["k"],
                    "left_ts": "lt", "right_ts": "rt", "on_expr": "a < b"}}]}""")
-    val ch = n.children.head
+    val ch = n.op[ChildrenSpec].get.children.head
     assert(ch.hint.contains("broadcast") && ch.prefix)
     assert(ch.join == JoinSpec(Seq("k"), "asof", Some("a < b"), Some("lt"), Some("rt")))
   }
@@ -104,9 +104,9 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("limit and top_k.k must be JSON integers in [0, Int.MaxValue]") {
-    assert(root("""{"id": "n1", "limit": 0}""").limit.contains(0))
-    assert(root("""{"id": "n1", "limit": 2147483647}""").limit.contains(Int.MaxValue))
-    assert(root("""{"id": "n1", "top_k": {"k": 5}}""").topK.map(_.k).contains(5))
+    assert(root("""{"id": "n1", "limit": 0}""").op[LimitSpec].map(_.n).contains(0))
+    assert(root("""{"id": "n1", "limit": 2147483647}""").op[LimitSpec].map(_.n).contains(Int.MaxValue))
+    assert(root("""{"id": "n1", "top_k": {"k": 5}}""").op[TopKSpec].map(_.k).contains(5))
     // Jackson's asInt read "ten" as 0, true as 1, 10.9 as 10 and
     // 3000000000 as -1294967296
     for (bad <- Seq("\"ten\"", "true", "10.9", "10.0", "3000000000", "-1", "[3]")) {
@@ -116,6 +116,33 @@ class JsonCodecSpec extends AnyFunSuite {
         root(s"""{"id": "n1", "top_k": {"order_by": ["v"], "k": $bad}}"""))
       assert(k.getMessage.contains("node n1: top_k.k must be an integer >= 0"), k.getMessage)
     }
+  }
+
+  test("every integer key is strict: a JSON integer that fits, else a named error") {
+    // Jackson's asInt read "eight" as 0 (an unsalted aggregate), 64.9 as
+    // 64 and true as 1
+    val nd = """"near_dup": {"id_col": "id", "vec_col": "v", "threshold": 0.9"""
+    for ((json, site) <- Seq(
+        """{"aggregate": {"group_by": ["k"], "aggregations": [{"col": "v"}],
+            "salt": "eight"}}""" -> "node root: aggregate.salt",
+        s"""{$nd, "dim": 64.9}}""" -> "node root: near_dup.dim",
+        s"""{$nd, "dim": 64, "bands": true}}""" -> "node root: near_dup.bands",
+        """{"children": [{"id": "c", "source": {"table": "u"},
+            "join": {"on": ["k"], "salt": 4.5}}]}""" -> "node root: join.salt",
+        """{"save": {"path": "/o", "range_by": ["k"], "ranges": "4"}}""" -> "node root: save.ranges",
+        """{"bm25_ingest": {"id_col": "id", "text_col": "t", "index_dir": "/i",
+            "checkpoint_dir": "/k", "compact_every": 1.5}}""" -> "node root: bm25_ingest.compact_every",
+        """{"ann_index": {"id_col": "id", "vec_col": "v", "dir": "/d",
+            "pq": {"m": 4, "k": 3000000000}}}""" -> "node root: ann_index.pq.k")) {
+      val e = intercept[IllegalArgumentException](root(json))
+      assert(e.getMessage.contains(s"$site must be an integer"), e.getMessage)
+    }
+    // integers that fit still decode, and each key keeps its range check
+    assert(root("""{"aggregate": {"group_by": ["k"], "aggregations": [{"col": "v"}],
+      "salt": 8}}""").op[AggregateSpec].get.salt.contains(8))
+    val e = intercept[IllegalArgumentException](root("""{"children": [{"id": "c",
+      "source": {"table": "u"}, "join": {"on": ["k"], "salt": 1}}]}"""))
+    assert(e.getMessage.contains("join.salt must be > 1"), e.getMessage)
   }
 
   test("near_dup node key decodes with production-regime defaults") {
@@ -391,7 +418,7 @@ class JsonCodecSpec extends AnyFunSuite {
     // post_filters share the filter item grammar (expr string or col/op)
     val pf = root("""
       {"post_filters": ["pred and not near_dup",
-                        {"col": "score", "op": ">", "value": 0.5}]}""").postFilters
+                        {"col": "score", "op": ">", "value": 0.5}]}""").op[PostFiltersSpec].get.filters
     assert(pf.length == 2)
   }
 
@@ -614,19 +641,19 @@ class JsonCodecSpec extends AnyFunSuite {
     val db = root("""
       {"source": {"table": "t"},
        "dedup": {"keys": ["k"], "id_col": "id", "order_col": "score",
-         "descending": false}}""").dedup.get
+         "descending": false}}""").op[DedupSpec].get
     assert(db.orderCol.contains("score") && !db.descending)
     assert(root("""
       {"source": {"table": "t"},
        "dedup": {"keys": ["k"], "id_col": "id", "order_col": "score"}}""")
-      .dedup.get.descending)
+      .op[DedupSpec].get.descending)
     val eDb = intercept[IllegalArgumentException](root("""
       {"dedup": {"keys": ["k"], "order_col": "score"}}"""))
     assert(eDb.getMessage.contains("order_col needs id_col"))
     assert(root("""
       {"source": {"table": "t"},
        "dedup": {"keys": ["k"], "id_col": "id", "count_col": "dup_count"}}""")
-      .dedup.get.countCol.contains("dup_count"))
+      .op[DedupSpec].get.countCol.contains("dup_count"))
     val eDc = intercept[IllegalArgumentException](root("""
       {"dedup": {"keys": ["k"], "count_col": "n"}}"""))
     assert(eDc.getMessage.contains("count_col needs id_col"))
@@ -682,7 +709,7 @@ class JsonCodecSpec extends AnyFunSuite {
           "join": {"on": ["k"], "how": "interval", "left_ts": "lt",
                    "right_ts": "rt", "lookback": "1 HOUR",
                    "left_delay": "5 minutes", "right_delay": "7 minutes"}}]}""")
-    val ch = n.children.head
+    val ch = n.op[ChildrenSpec].get.children.head
     assert(ch.join.how == "interval" && ch.join.lookback.contains("1 HOUR"))
     assert(ch.join.leftDelay.contains("5 minutes") && ch.join.rightDelay.contains("7 minutes"))
     assert(ch.node.source.exists(_.stream))
@@ -824,9 +851,9 @@ class JsonCodecSpec extends AnyFunSuite {
 
   test("expect node key decodes as ordered (name, expr) rules; empty expr rejected") {
     val ex = root("""
-      {"expect": {"a_rule": "x > 0", "b_rule": "y IS NOT NULL"}}""").expect
+      {"expect": {"a_rule": "x > 0", "b_rule": "y IS NOT NULL"}}""").op[ExpectSpec].get.rules
     assert(ex == Seq("a_rule" -> "x > 0", "b_rule" -> "y IS NOT NULL"))
-    assert(root("""{"source": {"table": "t"}}""").expect.isEmpty)
+    assert(root("""{"source": {"table": "t"}}""").op[ExpectSpec].isEmpty)
     assert(intercept[IllegalArgumentException](root(
       """{"expect": {"bad": ""}}""")).getMessage.contains("bad"))
   }
@@ -1073,13 +1100,13 @@ class JsonCodecSpec extends AnyFunSuite {
       {"children": [{"id": "c", "source": {"table": "t"},
         "join": {"how": "asof", "on": ["k"], "left_ts": "t1",
                  "right_ts": "t2", "direction": "forward",
-                 "tolerance": "INTERVAL '2 hours'"}}]}""").children.head
+                 "tolerance": "INTERVAL '2 hours'"}}]}""").op[ChildrenSpec].get.children.head
     assert(ch.join.direction == "forward" &&
       ch.join.tolerance.contains("INTERVAL '2 hours'"))
     // defaults
     val ch0 = root("""
       {"children": [{"id": "c", "source": {"table": "t"},
-        "join": {"how": "left", "on": ["k"]}}]}""").children.head
+        "join": {"how": "left", "on": ["k"]}}]}""").op[ChildrenSpec].get.children.head
     assert(ch0.join.direction == "backward" && ch0.join.tolerance.isEmpty)
     assert(intercept[IllegalArgumentException](root("""
       {"children": [{"id": "c", "source": {"table": "t"},

@@ -1,11 +1,12 @@
 package graft
 
 import graft.compile.{Compiler, Operators}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The operator registry's own contract, driven off the registry: every
-  * streaming root sink rejects a batch compile by name, every batch-only
-  * transform rejects a streaming compile by name, and a node's operators
-  * apply in registry order whatever their JSON order. */
+/** The step table's own contract, driven off the table: every streaming
+  * root sink rejects a batch compile by name, every batch-only step
+  * rejects a streaming compile by name, and a node's steps apply in table
+  * order whatever their JSON order. */
 class OperatorsSpec extends SparkSpec {
 
   /** A decodable config for each mode-guarded entry — the coverage
@@ -55,7 +56,8 @@ class OperatorsSpec extends SparkSpec {
     "bm25_ingest" -> """{"id_col": "doc_id", "text_col": "text", "index_dir": "/i",
                          "checkpoint_dir": "/k"}""",
     "ann_ingest" -> """{"id_col": "doc_id", "vec_col": "embedding", "index_dir": "/i",
-                        "checkpoint_dir": "/k"}"""
+                        "checkpoint_dir": "/k"}""",
+    "expect_report" -> """{"positive_id": "doc_id > 0"}"""
   )
 
   test("operator registry: modes reject by name; operators apply in registry order") {
@@ -93,21 +95,41 @@ class OperatorsSpec extends SparkSpec {
       }
     }
 
-    // Neither JSON key order nor NodeSpec.ops order reorders operators:
-    // every spelling plans the registry's upsample → split → global_shuffle
+    // Neither JSON key order nor NodeSpec.ops order reorders the steps:
+    // every spelling plans the table's derive → filters → keep_columns →
+    // upsample → split → global_shuffle → rename → with_columns →
+    // post_filters → drop → order_by → limit
     val ops = Seq(
+      """"derive": {"f": "2"}""",
+      """"filters": ["f > 1"]""",
+      """"keep_columns": ["doc_id", "text", "f"]""",
       """"upsample": {"factor_col": "f"}""",
       """"split": {"id_col": "doc_id", "buckets": [{"name": "a", "weight": 0.5},
                                                   {"name": "b", "weight": 0.5}]}""",
-      """"global_shuffle": {"id_col": "doc_id", "shards": 2}""")
+      """"global_shuffle": {"id_col": "doc_id", "shards": 2}""",
+      """"rename": {"text": "body"}""",
+      """"with_columns": {"n": "length(body)"}""",
+      """"post_filters": ["n > 0"]""",
+      """"drop": ["f"]""",
+      """"order_by": ["n desc", "doc_id", "copy"]""",
+      """"limit": 3""")
     def spec(keys: Seq[String]) = graft.spec.JsonCodec.parse(
-      s"""{"source": {"path": "$inDir"}, "derive": {"f": "2"}, ${keys.mkString(", ")}}""")
+      s"""{"source": {"path": "$inDir"}, ${keys.mkString(", ")}}""")
+    def analyzed(p: graft.spec.PipelineSpec) = Compiler.compile(spark, p).queryExecution.analyzed
     def plan(p: graft.spec.PipelineSpec): String =
-      Compiler.compile(spark, p).queryExecution.analyzed.toString
-        .replaceAll("#\\d+L?", "#")
+      analyzed(p).toString.replaceAll("#\\d+L?", "#")
     val forward = plan(spec(ops))
     assert(plan(spec(ops.reverse)) == forward)
     val graft.spec.TreePipeline(root, _, _) = spec(ops)
     assert(plan(graft.spec.TreePipeline(root.copy(ops = root.ops.reverse))) == forward)
+    // the core steps pin both ends of the (linear) plan: rename →
+    // with_columns → post_filters → drop → order_by → limit on top,
+    // derive → filters → keep_columns at the bottom
+    def chain(p: LogicalPlan): List[String] =
+      p.nodeName :: p.children.headOption.toList.flatMap(chain)
+    val names = chain(analyzed(spec(ops)))
+    assert(names.take(7) == Seq("GlobalLimit", "LocalLimit", "Sort", "Project", "Filter",
+      "Project", "Project"), names)
+    assert(names.takeRight(4) == Seq("Project", "Filter", "Project", "LogicalRelation"), names)
   }
 }

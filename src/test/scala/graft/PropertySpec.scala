@@ -57,7 +57,7 @@ class PropertySpec extends SparkSpec {
     forAll(rowsGen) { rows =>
       val df = rows.toDF("k", "id", "v")
       val out = Compiler.compileNode(spark,
-        NodeSpec(id = "n", rename = Seq("k" -> "key", "v" -> "value")),
+        NodeSpec(id = "n", ops = Seq(RenameSpec(Seq("k" -> "key", "v" -> "value")))),
         input = Some(df))
       assert(out.columns.toSeq == Seq("key", "id", "value"))
       assert(out.count() == rows.size)
@@ -73,9 +73,9 @@ class PropertySpec extends SparkSpec {
       val out = Compiler.compile(spark, CascadePipeline(CascadeSpec(
         SourceSpec(table = Some("prop_src")),
         Seq(IterationSpec("i", Seq(
-          NodeSpec(id = "l1", aggregate = Some(
+          NodeSpec(id = "l1", ops = Seq(
             AggregateSpec(Seq("k"), Seq(AggSpec("v", "sum", Some("sv")))))),
-          NodeSpec(id = "l2", aggregate = Some(
+          NodeSpec(id = "l2", ops = Seq(
             AggregateSpec(Nil, Seq(AggSpec("sv", "sum", Some("total")))))))))
       )))
       val total = out.collect().head.getDouble(0)
