@@ -595,13 +595,11 @@ object Compiler {
       case _ => throw new IllegalArgumentException(s"source needs table or path: $s")
     }
 
-  /** Start a `writeStream` for a sink spec. Defaults are deliberately
-    * conservative: no trigger key = continuous micro-batches;
-    * "available_now"/"once" = drain what exists then stop (backfill /
-    * catch-up runs); an interval = Trigger.ProcessingTime. */
+  /** Start a `writeStream` for a sink spec. No trigger key = continuous
+    * micro-batches; otherwise the one stream-sink trigger parser
+    * ([[graft.streaming.Streaming.trigger]]). */
   def startStreamSink(df: DataFrame,
       s: SinkSpec): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
     s.layout.foreach { l =>
       // hive partitioning streams fine (each micro-batch lands in its
       // partition directories); the other three need a global pass —
@@ -617,11 +615,7 @@ object Compiler {
       .foreach(p => w = w.partitionBy(p: _*))
     s.outputMode.foreach(m => w = w.outputMode(m))
     s.checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    s.trigger.foreach {
-      case "available_now" | "availableNow" | "once" =>
-        w = w.trigger(Trigger.AvailableNow())
-      case interval => w = w.trigger(Trigger.ProcessingTime(interval))
-    }
+    s.trigger.foreach(t => w = w.trigger(graft.streaming.Streaming.trigger("save", t)))
     s.format match {
       case "memory" =>
         w.format("memory").queryName(s.queryName.getOrElse("graft_stream")).start()

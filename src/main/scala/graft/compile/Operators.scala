@@ -221,7 +221,9 @@ object Operators {
       }
       Some(AggregateSpec(
         groupBy = j.node.opt("group_by").map(JsonCodec.strSeq).getOrElse(Nil), aggs = aggs))
-    case _ => None
+    case a => throw new IllegalArgumentException(
+      s"${j.ctx} must be an object ({group_by, aggregations} or " +
+        s"{col: function}), got: $a")
   }
 
   /** The optimus.py flat spelling: group_by / aggregations /
@@ -2030,9 +2032,10 @@ object Operators {
     },
 
     step[BitemporalSpec]("bitemporal")(
-      decode = j => Some(
-        if (j.json.isBoolean) BitemporalSpec()
-        else BitemporalSpec(
+      // `true` stamps the defaults; `false` is no step
+      decode = j =>
+        if (j.json.isBoolean) Some(BitemporalSpec()).filter(_ => j.json.asBoolean)
+        else Some(BitemporalSpec(
           validFrom = j.strOr("2024-01-01", "valid_from"),
           validTo = j.strOr("9999-12-31", "valid_to"),
           fromCol = j.strOr("valid_from", "from_col", "fromCol"),

@@ -171,7 +171,8 @@ final case class SourceSpec(
   *
   * The streaming fields make the same spec a `writeStream` target under
   * `Compiler.compileStream` (batch/stream symmetry — SURVEY §3):
-  * `trigger` ∈ {"available_now", "once", "<interval>" e.g. "10 seconds"},
+  * `trigger` ∈ {"available_now", "once", "<interval>" e.g. "10 seconds"}
+  * (anything else fails by name: `save: trigger '…' is neither …`),
   * `outputMode` ∈ {append, update, complete}, `checkpoint` is the fault-
   * tolerance dir (REQUIRED for production streams — exactly-once resumes
   * hang off it), `queryName` names memory-sink tables. All four are
@@ -1195,8 +1196,9 @@ final case class NearDupIngestSpec(
     bands: Int = 16,
     threshold: Double = 0.5,
     // fold the corpus/index areas' committed batch= dirs into one
-    // compacted dir every N non-empty batches, inside foreachBatch —
-    // the unattended small-files defense (see IngestCompactSpec)
+    // compacted dir every N batches, inside foreachBatch — empty
+    // batches count too (each lands its batch= dirs); the unattended
+    // small-files defense (see IngestCompactSpec)
     compactEvery: Option[Int] = None
 ) extends OpSpec
 
@@ -1366,7 +1368,8 @@ final case class Bm25IngestSpec(
     textCol: String,
     indexDir: String,
     checkpointDir: String,
-    // fold the delta areas into the base every N micro-batches, INSIDE
+    // fold the delta areas into the base every N non-empty micro-batches
+    // (an empty batch lands no delta, so it does not count), INSIDE
     // foreachBatch (serialized with the batch, so the fold can never
     // race a landing delta) and scoped to batches BEFORE the current
     // one (everything earlier is committed; the in-flight batch stays

@@ -1,9 +1,13 @@
 package graft.streaming
 
+import graft.ops.Artifacts
 import graft.spec.AggSpec
 import graft.compile.Compiler
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 
 /** Streaming operators (north-star; `events` is the stream fixture).
   *
@@ -22,94 +26,129 @@ object Streaming {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The ONE in-stream fold retry contract, shared by every
-    * `compact_every` cadence (bm25/ann/area ingests): a TRANSIENT fold
-    * failure is caught and logged — the batch's own data is already
-    * durably written, so the stream continues and the fold retries at
-    * the next batch (the caller keeps its cadence counter un-reset
-    * exactly when this returns false). */
-  private def attemptInStreamFold(
-      name: String, batchId: Long)(fold: => Unit): Boolean =
-    try { fold; true }
-    catch { case scala.util.control.NonFatal(e) =>
-      log.warn(s"$name: in-stream fold at batch $batchId failed " +
-        s"(stream continues; retrying next batch): ${e.getMessage}")
-      false
-    }
+  /** One compactable artifact of an ingest: the directory its fold log
+    * lands under, the heal of a crashed fold of it, and its fold of the
+    * committed batches through a batch id (returns the dirs retired). */
+  private final case class Foldable(
+      dir: String, heal: SparkSession => Unit, fold: (SparkSession, Long) => Int)
 
-  /** Shared `compact_every` plumbing for the AREA-layout ingests
-    * (exact/near_dup/passage/semantic — one `batch=` dir per
-    * micro-batch under each area, no separate base): validates the
-    * cadence, heals any crashed area fold at DECLARATION (the
-    * bm25Ingest posture — a restart must never read through half-staged
-    * state), and returns the per-batch hook that counts micro-batches
-    * (EVERY batch, empty or not — a no-op attempt on an all-empty run
-    * is one lease + listing, and `minDirs` skips the rewrite) and folds
-    * every `compactEvery` of them via
-    * [[graft.ops.Artifacts.foldBatchArea]], scoped to `batchId - 1`
-    * (committed by definition of the current batch running — the
-    * in-flight batch stays for a crash replay to overwrite). The fold
-    * runs INSIDE foreachBatch — serialized with the batch's own writes
-    * and probes, so it can never race them. A transient fold failure
-    * is caught (the batch's data is already durable): the stream
-    * continues and the fold retries at the next batch. minDirs=2 keeps
-    * the cadence from rewriting a single already-folded dir for
-    * nothing. */
-  private final class AreaFoldHooks(
-      name: String, compactEvery: Option[Int], areas: Seq[String]) {
-    private var batchesSinceFold = 0
-    private var healPending = false
-    /** Run at the START of every micro-batch, BEFORE the dedup probes:
-      * a fold failure CAUGHT mid-commit-phase (tmp→out rename failing
-      * after the max-id source staged into underscore-invisible
-      * `_fold_old`) leaves committed history unreadable, and healing it
-      * only inside the NEXT fold attempt — at the END of the next
-      * foreachBatch — would let that batch's probe read an area missing
-      * committed rows and admit duplicate keys PERMANENTLY (r21: the
-      * r20 ADVICE's non-benign failure direction). Cheap when clean:
-      * healCrashedAreaFold is a few fs.exists probes, and this runs
-      * only after a caught failure. */
-    def beforeBatch(s: org.apache.spark.sql.SparkSession): Unit =
-      if (healPending) {
-        areas.foreach(a =>
-          try graft.ops.Artifacts.healCrashedAreaFold(s, a)
-          catch { case scala.util.control.NonFatal(e) =>
-            log.warn(s"$name: pre-batch heal of $a failed (will retry " +
-              s"next batch): ${e.getMessage}") })
-        healPending = false
+  /** The area-layout ingests' artifacts (exact/near_dup/passage/semantic
+    * — one `batch=` dir per micro-batch under each area, no separate
+    * base), folded via [[graft.ops.Artifacts.foldBatchArea]]. minDirs=2
+    * keeps the cadence from rewriting a single already-folded dir for
+    * nothing; strict=false keeps one stray file from crash-looping the
+    * unattended stream (log-and-skip). */
+  private def areas(dirs: String*): Seq[Foldable] = dirs.map(a => Foldable(a,
+    Artifacts.healCrashedAreaFold(_, a),
+    (s, through) => Artifacts.foldBatchArea(s, a, Some(through), strict = false, minDirs = 2)))
+
+  /** The ONE `trigger` parser of every stream sink: "available_now" /
+    * "once" drains what exists then stops (backfill / catch-up runs); an
+    * interval is Trigger.ProcessingTime, validated HERE so a typo'd
+    * trigger ("availablenow", "10 secods") is a named spec error at
+    * declaration, not a raw Spark interval-parse failure at stream start. */
+  private[graft] def trigger(name: String, t: String): Trigger = t match {
+    case "available_now" | "availableNow" | "once" => Trigger.AvailableNow()
+    case interval =>
+      try Trigger.ProcessingTime(interval)
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"$name: trigger '$interval' is neither " +
+            """"available_now"/"once" nor a valid interval """ +
+            s"""(e.g. "10 seconds"): ${e.getMessage}""")
       }
-    def afterBatch(
-        s: org.apache.spark.sql.SparkSession, batchId: Long): Unit = {
-      batchesSinceFold += 1
-      if (batchId > 0 && compactEvery.exists(batchesSinceFold >= _)) {
-        val ok = attemptInStreamFold(name, batchId) {
-          areas.foreach { a =>
-            val retired = graft.ops.Artifacts.foldBatchArea(
-              s, a, Some(batchId - 1), strict = false, minDirs = 2)
-            // the cadence's production signal: a log line AND a
-            // queryable _fold_log row per area (ops can verify the
-            // cadence fires without driver logs)
-            if (retired > 0) {
-              log.info(s"$name: in-stream fold at batch $batchId folded " +
-                s"$retired dirs (through ${batchId - 1}) under $a")
-              graft.ops.Artifacts.appendFoldLog(
-                s, a, batchId, batchId - 1, retired)
+  }
+
+  /** The landed history under `dir` minus a replayed batch's own crashed
+    * write (`own` is its `batch=` partition value — otherwise the replay
+    * would dedup the batch against its own previous output and emit
+    * nothing); None before the first write. Each directory is checked
+    * INDEPENDENTLY: an ingest's writes are not atomic, so a crash
+    * between them must not wedge the restart (a replayed batch sees
+    * corpus-but-no-index and would otherwise throw on the missing path
+    * forever). */
+  private def history(s: SparkSession, dir: String, own: Any): Option[DataFrame] = {
+    val fs = FileSystem.get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
+    val p = new Path(dir)
+    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
+      Some(s.read.parquet(dir).filter(col("batch") =!= own))
+    else None
+  }
+
+  /** The ONE micro-batch lifecycle of every streaming sink (ingests and
+    * monitors). The sink supplies its per-batch `body` — which returns
+    * whether it landed a `batch=` dir — and, when it compacts, the
+    * artifacts it grows; the lifecycle owns everything around them:
+    *
+    *   - the writer: checkpoint and [[trigger]];
+    *   - a heal of every artifact at DECLARATION — a restart must never
+    *     read through half-staged state;
+    *   - the `compact_every` cadence: every N landed batches, fold each
+    *     artifact INSIDE foreachBatch — serialized with the batch's own
+    *     writes and probes, so it can never race them — scoped to
+    *     `batchId - 1` (committed by definition of the current batch
+    *     running; the in-flight batch stays for a crash replay to
+    *     overwrite — folding it would duplicate its rows once the replay
+    *     re-lands them). Each fold that retires dirs logs a line AND a
+    *     queryable `_fold_log` row (ops can verify the cadence fires
+    *     without driver logs). A restart resets the counter — a fold is
+    *     at most delayed, never lost;
+    *   - a TRANSIENT fold failure is caught and logged (the batch's data
+    *     is already durable): the stream continues, the counter stays
+    *     un-reset so the fold retries at the next batch, and the
+    *     artifacts heal at the START of that batch, before its probes. A
+    *     failure caught mid-commit-phase (tmp→out rename failing after
+    *     the max-id source staged into underscore-invisible `_fold_old`)
+    *     leaves committed history unreadable; healing it only inside the
+    *     next fold attempt — at the END of the next batch — would let
+    *     that batch's probe read history missing committed rows and
+    *     admit duplicate keys PERMANENTLY (r21). Cheap when clean: a few
+    *     fs.exists probes, and only after a caught failure. */
+  private def microBatches(
+      incoming: DataFrame, name: String, checkpoint: Option[String],
+      trigger: Option[String] = None, compactEvery: Option[Int] = None,
+      foldables: Seq[Foldable] = Nil)(
+      body: (DataFrame, Long) => Boolean): StreamingQuery = {
+    compactEvery.foreach(n => require(n >= 1,
+      s"$name: compact_every must be >= 1, got $n"))
+    foldables.foreach(_.heal(incoming.sparkSession))
+    var w = incoming.writeStream
+    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
+    trigger.foreach(t => w = w.trigger(Streaming.trigger(name, t)))
+    var batchesSinceFold = 0
+    var healPending = false
+    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
+        if (healPending) {
+          foldables.foreach(f =>
+            try f.heal(s)
+            catch { case NonFatal(e) =>
+              log.warn(s"$name: pre-batch heal of ${f.dir} failed (will " +
+                s"retry next batch): ${e.getMessage}") })
+          healPending = false
+        }
+        if (body(batch, batchId)) {
+          batchesSinceFold += 1
+          if (batchId > 0 && compactEvery.exists(batchesSinceFold >= _)) {
+            try {
+              foldables.foreach { f =>
+                val retired = f.fold(s, batchId - 1)
+                if (retired > 0) {
+                  log.info(s"$name: in-stream fold at batch $batchId folded " +
+                    s"$retired dirs (through ${batchId - 1}) under ${f.dir}")
+                  Artifacts.appendFoldLog(s, f.dir, batchId, batchId - 1, retired)
+                }
+              }
+              batchesSinceFold = 0
+            } catch { case NonFatal(e) =>
+              log.warn(s"$name: in-stream fold at batch $batchId failed " +
+                s"(stream continues; retrying next batch): ${e.getMessage}")
+              healPending = true
             }
           }
         }
-        if (ok) batchesSinceFold = 0
-        else healPending = true // heal BEFORE the next batch's probes
       }
-    }
-  }
-
-  private def areaFoldCadence(
-      name: String, spark: org.apache.spark.sql.SparkSession,
-      compactEvery: Option[Int], areas: Seq[String]): AreaFoldHooks = {
-    compactEvery.foreach(n => require(n >= 1,
-      s"$name: compact_every must be >= 1, got $n"))
-    areas.foreach(a => graft.ops.Artifacts.healCrashedAreaFold(spark, a))
-    new AreaFoldHooks(name, compactEvery, areas)
+      .start()
   }
 
   private def applyAggs(
@@ -330,41 +369,19 @@ object Streaming {
       bands: Int = 16,
       threshold: Double = 0.5,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold = areaFoldCadence("near_dup_ingest", incoming.sparkSession,
-      compactEvery, Seq(corpusDir, indexDir))
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  ): StreamingQuery =
+    microBatches(incoming, "near_dup_ingest", Some(checkpointDir),
+        compactEvery = compactEvery, foldables = areas(corpusDir, indexDir)) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        fold.beforeBatch(s) // heal a failed prior fold BEFORE the probe
-        // each directory checked INDEPENDENTLY: the two writes below are
-        // not atomic, so a crash between them must not wedge the restart
-        // (replayed batch sees corpus-but-no-index and would otherwise
-        // throw on the missing path forever)
-        def seeded(dir: String): Boolean = {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-          fs.exists(new org.apache.hadoop.fs.Path(dir)) &&
-            fs.listStatus(new org.apache.hadoop.fs.Path(dir)).nonEmpty
-        }
         // first batch: empty index/corpus with the right schemas, derived
-        // from the batch itself (limit(0) keeps this type-generic).
-        // `batch != batchId` excludes a replayed batch's OWN crashed
-        // write (the batch= partition column comes from the directory
-        // layout) — otherwise the replay would dedup the batch against
-        // its own previous output and emit nothing
-        val index =
-          if (seeded(indexDir))
-            s.read.parquet(indexDir).filter(col("batch") =!= batchId)
-              .select(col(idCol), col("band"), col("band_key"))
-          else graft.ops.Dedup.minhashBandIndex(
-            batch.limit(0), idCol, textCol, shingleSize, numHashes, bands)
-        val corpus =
-          if (seeded(corpusDir))
-            s.read.parquet(corpusDir).filter(col("batch") =!= batchId)
-              .select(batch.columns.map(col): _*)
-          else batch.limit(0)
+        // from the batch itself (limit(0) keeps this type-generic)
+        val index = history(s, indexDir, batchId)
+          .map(_.select(col(idCol), col("band"), col("band_key")))
+          .getOrElse(graft.ops.Dedup.minhashBandIndex(
+            batch.limit(0), idCol, textCol, shingleSize, numHashes, bands))
+        val corpus = history(s, corpusDir, batchId)
+          .map(_.select(batch.columns.map(col): _*)).getOrElse(batch.limit(0))
         val kept = graft.ops.Dedup.nearDupAgainstCorpus(
           batch, index, corpus, idCol, textCol,
           shingleSize, numHashes, bands, threshold).persist()
@@ -374,10 +391,8 @@ object Streaming {
               kept, idCol, textCol, shingleSize, numHashes, bands)
             .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
         } finally kept.unpersist()
-        fold.afterBatch(s, batchId)
-      }
-      .start()
-  }
+        true
+    }
 
   /** Continuous SUBSTRING-level dedup ingestion — [[nearDupIngest]]'s
     * pattern at passage granularity: each micro-batch strips token spans
@@ -402,25 +417,14 @@ object Streaming {
       checkpointDir: String,
       windowTokens: Int = 50,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold = areaFoldCadence("passage_ingest", incoming.sparkSession,
-      compactEvery, Seq(corpusDir, indexDir))
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        fold.beforeBatch(s) // heal a failed prior fold BEFORE the probe
-        def seeded(dir: String): Boolean = {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-          fs.exists(new org.apache.hadoop.fs.Path(dir)) &&
-            fs.listStatus(new org.apache.hadoop.fs.Path(dir)).nonEmpty
-        }
-        val index =
-          if (seeded(indexDir))
-            s.read.parquet(indexDir).filter(col("batch") =!= batchId).select("fp")
-          else graft.ops.Dedup.passageWindowIndex(
-            batch.limit(0), idCol, textCol, windowTokens)
+  ): StreamingQuery =
+    microBatches(incoming, "passage_ingest", Some(checkpointDir),
+        compactEvery = compactEvery, foldables = areas(corpusDir, indexDir)) {
+      (batch, batchId) =>
+        val index = history(batch.sparkSession, indexDir, batchId)
+          .map(_.select("fp"))
+          .getOrElse(graft.ops.Dedup.passageWindowIndex(
+            batch.limit(0), idCol, textCol, windowTokens))
         val cleaned = graft.ops.Dedup.stripPassagesAgainstCorpus(
             batch, index, idCol, textCol, windowTokens)
           .filter(length(col("clean_text")) > 0) // full duplicates drop
@@ -432,10 +436,8 @@ object Streaming {
           graft.ops.Dedup.passageWindowIndex(cleaned, idCol, textCol, windowTokens)
             .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
         } finally cleaned.unpersist()
-        fold.afterBatch(s, batchId)
-      }
-      .start()
-  }
+        true
+    }
 
   /** Continuous EXACT-dedup ingestion — [[nearDupIngest]]'s pattern at
     * the exact tier, the cheapest and most common member of the
@@ -469,26 +471,13 @@ object Streaming {
       indexDir: String,
       checkpointDir: String,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     require(keyCols.nonEmpty, "exactIngest: key_cols must be non-empty")
-    val fold = areaFoldCadence("exact_ingest", incoming.sparkSession,
-      compactEvery, Seq(corpusDir, indexDir))
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        fold.beforeBatch(s) // heal a failed prior fold BEFORE the probe
-        def seeded(dir: String): Boolean = {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-          fs.exists(new org.apache.hadoop.fs.Path(dir)) &&
-            fs.listStatus(new org.apache.hadoop.fs.Path(dir)).nonEmpty
-        }
-        val index =
-          if (seeded(indexDir))
-            s.read.parquet(indexDir).filter(col("batch") =!= batchId)
-              .select(keyCols.map(col): _*)
-          else batch.limit(0).select(keyCols.map(col): _*)
+    microBatches(incoming, "exact_ingest", Some(checkpointDir),
+        compactEvery = compactEvery, foldables = areas(corpusDir, indexDir)) {
+      (batch, batchId) =>
+        val index = history(batch.sparkSession, indexDir, batchId)
+          .getOrElse(batch.limit(0)).select(keyCols.map(col): _*)
         val kept = graft.ops.Dedup.dedupAgainstCorpus(
             batch, index, keyCols, idCol)
           .select(batch.columns.map(col): _*) // restore input column order
@@ -498,9 +487,8 @@ object Streaming {
           kept.select(keyCols.map(col): _*).distinct()
             .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
         } finally kept.unpersist()
-        fold.afterBatch(s, batchId)
-      }
-      .start()
+        true
+    }
   }
 
   /** Continuous SKETCH-TABLE maintenance — the streaming sibling of the
@@ -532,16 +520,15 @@ object Streaming {
       maxItemsTracked: Int = 10000,
       lgK: Int = 12,
       groupCols: Seq[String] = Nil
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     require(maxItemsTracked >= 1,
       s"sketchIngest: max_items_tracked must be >= 1, got $maxItemsTracked")
     require(lgK >= 4 && lgK <= 21,
       s"sketchIngest: lg_k must be in [4, 21], got $lgK")
     require(!groupCols.contains(keyCol),
       s"sketchIngest: key_col '$keyCol' cannot also be a group column")
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(incoming, "sketch_ingest", Some(checkpointDir)) {
+      (batch, batchId) =>
         val keyed = batch.filter(col(keyCol).isNotNull)
         val aggs = Seq(
           expr(s"approx_top_k_accumulate(`$keyCol`, $maxItemsTracked)")
@@ -553,8 +540,8 @@ object Streaming {
             keyed.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
           else keyed.agg(aggs.head, aggs.tail: _*)
         rows.write.mode("overwrite").parquet(s"$outDir/batch=b$batchId")
-      }
-      .start()
+        true
+    }
   }
 
   /** Continuous BM25-INDEX maintenance — the LEXICAL member of the
@@ -590,9 +577,7 @@ object Streaming {
       indexDir: String,
       checkpointDir: String,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    compactEvery.foreach(n => require(n >= 1,
-      s"bm25_ingest: compact_every must be >= 1, got $n"))
+  ): StreamingQuery = {
     // fail at DECLARATION, not inside the first micro-batch: the stats
     // row is the seed contract
     val st0 =
@@ -604,16 +589,6 @@ object Streaming {
     val buckets = st0.getAs[Int]("buckets")
     val prox = st0.getAs[Boolean]("prox")
     val statsIdCol = st0.getAs[String]("id_col")
-    // Heal any crashed fold BEFORE the first batch: staged dirs under a
-    // leftover *_inc.old are invisible to readers, so a restart's cold
-    // stats re-derive through that state would undercount the corpus
-    // permanently (the counters never learn about docs a later fold's
-    // recovery moves into the base).
-    Seq(("dl", "dl_inc"), ("postings", "postings_inc"),
-        ("postings2", "postings2_inc")).foreach { case (b, i) =>
-      graft.ops.Artifacts.healCrashedFold(
-        incoming.sparkSession, s"$indexDir/$b", s"$indexDir/$i")
-    }
     // The BASE dl sums are cached across micro-batches: re-aggregating
     // the full doc-shaped dl per batch would make ingest cost O(corpus)
     // per micro-batch. Re-read exactly when the delta area is absent at
@@ -639,12 +614,34 @@ object Streaming {
     // aggregate is exact) or when incWasThere flips false (a compact
     // just folded the delta; dl_inc then holds only this batch).
     var deltaStats: Option[(Long, Long)] = None
-    // compact_every cadence: non-empty batches since the last in-stream
-    // fold (restart resets it — a fold is at most delayed, never lost)
-    var batchesSinceFold = 0
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // The heal (at declaration, and before the next batch after a caught
+    // fold failure): staged dirs under a leftover *_inc.old are invisible
+    // to readers, so a cold stats re-derive through that state would
+    // undercount the corpus permanently (the counters never learn about
+    // docs a later fold's recovery moves into the base).
+    //
+    // The fold (compact_every, non-empty batches): totals are invariant
+    // under it (rows move delta → base), but a fold that crashes and
+    // later heals is not — so it invalidates BOTH stats caches, and the
+    // next batch re-derives from disk (one aggregate per fold, amortized
+    // by the cadence), keeping the stats row exact unconditionally.
+    // defragWhenEmpty=false: a sibling area with nothing foldable (e.g.
+    // postings_inc after zero-token batches) must not trigger an
+    // O(corpus) base rewrite per cadence.
+    val index = Foldable(indexDir,
+      s => Seq(("dl", "dl_inc"), ("postings", "postings_inc"),
+          ("postings2", "postings2_inc")).foreach { case (b, i) =>
+        graft.ops.Artifacts.healCrashedFold(s, s"$indexDir/$b", s"$indexDir/$i")
+      },
+      (s, through) => {
+        baseStats = None
+        deltaStats = None
+        graft.ops.Retrieval.compactBm25Index(s, indexDir, Some(through),
+          defragWhenEmpty = false, strict = false)
+      })
+    microBatches(incoming, "bm25_ingest", Some(checkpointDir),
+        compactEvery = compactEvery, foldables = Seq(index)) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         val incWasThere =
           graft.ops.Artifacts.incHasData(s, s"$indexDir/dl_inc")
@@ -678,17 +675,6 @@ object Streaming {
                   .write.mode("overwrite").partitionBy("bucket")
                   .parquet(s"$indexDir/postings2_inc/batch=$batchId")
             }
-            // a TRANSIENT fold failure (exception, not process death —
-            // a crash restarts the stream and the declaration-time heal
-            // covers it) can leave a half-staged delta mid-stream; heal
-            // before any cold re-derive so the totals never read
-            // through staged-invisible dirs (no-op when no $inc.old)
-            if (!incWasThere || baseStats.isEmpty || deltaStats.isEmpty)
-              Seq(("dl", "dl_inc"), ("postings", "postings_inc"),
-                  ("postings2", "postings2_inc")).foreach { case (b, i) =>
-                graft.ops.Artifacts.healCrashedFold(
-                  s, s"$indexDir/$b", s"$indexDir/$i")
-              }
             if (!incWasThere || baseStats.isEmpty)
               baseStats = Some(aggDl(s, s"$indexDir/dl"))
             val (bn, bsum) = baseStats.get
@@ -705,51 +691,10 @@ object Streaming {
             deltaStats = Some((in_, isum))
             graft.ops.Retrieval.writeBm25StatsRow(s, indexDir,
               bn + in_, bsum + isum, buckets, prox, statsIdCol)
-            // compact_every: fold the delta INSIDE foreachBatch —
-            // serialized with the batch, so the fold can never race a
-            // landing delta — scoped to batches BEFORE this one (all
-            // committed by definition of this batch running; the
-            // current batch stays in the delta for a crash replay to
-            // overwrite — folding an uncommitted batch would duplicate
-            // its rows once the replay re-lands it). Totals are
-            // invariant under the fold (rows move delta → base), so
-            // the running counters and the just-written stats row stay
-            // exact; the base dl cache re-derives lazily if the NEXT
-            // batch sees the delta area gone.
-            batchesSinceFold += 1
-            if (batchId > 0 && compactEvery.exists(batchesSinceFold >= _)) {
-              // defragWhenEmpty=false: a sibling area with nothing
-              // foldable (e.g. postings_inc after zero-token batches)
-              // must not trigger an O(corpus) base rewrite per cadence.
-              // strict=false: one stray file in a delta area must not
-              // crash-loop the unattended stream (log-and-skip).
-              // Transient failures retry next batch (attemptInStreamFold).
-              val ok = attemptInStreamFold("bm25_ingest", batchId) {
-                val retired = graft.ops.Retrieval.compactBm25Index(s, indexDir,
-                  Some(batchId - 1), defragWhenEmpty = false, strict = false)
-                if (retired > 0) {
-                  log.info(s"bm25_ingest: in-stream fold at batch $batchId " +
-                    s"folded $retired delta dirs (through ${batchId - 1})")
-                  graft.ops.Artifacts.appendFoldLog(
-                    s, indexDir, batchId, batchId - 1, retired)
-                }
-              }
-              if (ok) batchesSinceFold = 0
-              // invalidate BOTH stats caches: a fold moves rows
-              // delta → base, and while the cumulative totals are
-              // fold-invariant on the happy path, a fold that crashes
-              // and later heals is not — re-deriving from disk at the
-              // next batch (one aggregate per fold, amortized by the
-              // cadence) keeps the stats row exact unconditionally.
-              // (Also on a CAUGHT fold failure: a half-staged delta is
-              // healed by the cold path before the re-derive.)
-              baseStats = None
-              deltaStats = None
-            }
           }
+          nRows > 0
         } finally { toks.unpersist(); () }
-      }
-      .start()
+    }
   }
 
   /** Continuous ANN-INDEX maintenance — the VECTOR sibling of
@@ -776,10 +721,8 @@ object Streaming {
       indexDir: String,
       checkpointDir: String,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.ops.Similarity
-    compactEvery.foreach(n => require(n >= 1,
-      s"ann_ingest: compact_every must be >= 1, got $n"))
     // fail at DECLARATION, not inside the first micro-batch
     val spark0 = incoming.sparkSession
     val cents =
@@ -791,46 +734,25 @@ object Streaming {
     val isPq = spark0.read.parquet(s"$indexDir/index").schema
       .fieldNames.contains("codes")
     val cbs = if (isPq) Similarity.loadCodebooks(spark0, indexDir) else Nil
-    // heal any crashed fold before the first batch (see bm25Ingest)
-    graft.ops.Artifacts.healCrashedFold(spark0,
-      s"$indexDir/index", s"$indexDir/index_inc")
-    // compact_every cadence — see bm25Ingest (same crash-safe scoping)
-    var batchesSinceFold = 0
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an all-empty micro-batch must write NOTHING: an empty
-        // partitioned write leaves a fileless batch dir (readers treat
-        // those as absent, but junk dirs should not accumulate)
-        if (!batch.isEmpty) {
-          Similarity.encodeIndexRows(batch, idCol, vecCol, cents,
-              if (isPq) Some(cbs) else None)
-            .write.mode("overwrite").partitionBy("list")
-            .parquet(s"$indexDir/index_inc/batch=$batchId")
-          // fold INSIDE foreachBatch, scoped to pre-current (committed)
-          // batches — the in-flight one stays for a crash replay. A
-          // transient fold failure is caught: the batch's data is
-          // already durably written, so the stream continues and the
-          // fold retries at the next batch (see bm25Ingest).
-          batchesSinceFold += 1
-          if (batchId > 0 && compactEvery.exists(batchesSinceFold >= _)) {
-            val ok = attemptInStreamFold("ann_ingest", batchId) {
-              val retired = Similarity.compactAnnIndex(batch.sparkSession,
-                indexDir, Some(batchId - 1), defragWhenEmpty = false,
-                strict = false)
-              if (retired > 0) {
-                log.info(s"ann_ingest: in-stream fold at batch $batchId " +
-                  s"folded $retired delta dirs (through ${batchId - 1})")
-                graft.ops.Artifacts.appendFoldLog(batch.sparkSession,
-                  indexDir, batchId, batchId - 1, retired)
-              }
-            }
-            if (ok) batchesSinceFold = 0
-          }
-        }
-        ()
+    // the heal and the fold of the index_inc delta (see bm25Ingest)
+    val index = Foldable(indexDir,
+      Artifacts.healCrashedFold(_, s"$indexDir/index", s"$indexDir/index_inc"),
+      (s, through) => Similarity.compactAnnIndex(s, indexDir, Some(through),
+        defragWhenEmpty = false, strict = false))
+    microBatches(incoming, "ann_ingest", Some(checkpointDir),
+        compactEvery = compactEvery, foldables = Seq(index)) { (batch, batchId) =>
+      // an all-empty micro-batch must write NOTHING: an empty
+      // partitioned write leaves a fileless batch dir (readers treat
+      // those as absent, but junk dirs should not accumulate)
+      if (batch.isEmpty) false
+      else {
+        Similarity.encodeIndexRows(batch, idCol, vecCol, cents,
+            if (isPq) Some(cbs) else None)
+          .write.mode("overwrite").partitionBy("list")
+          .parquet(s"$indexDir/index_inc/batch=$batchId")
+        true
       }
-      .start()
+    }
   }
 
   /** Continuous SEMANTIC dedup ingestion — the embedding sibling of
@@ -863,22 +785,20 @@ object Streaming {
       numBits: Int = 64,
       bands: Int = 8,
       compactEvery: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery =
     // the classes area is b-dialect (batch=seed + batch=b<id>); the fold
     // parses both dialects and names its output in the area's own
-    val fold = areaFoldCadence("semantic_ingest", incoming.sparkSession,
-      compactEvery, Seq(corpusDir, s"$indexDir/classes"))
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    microBatches(incoming, "semantic_ingest", Some(checkpointDir),
+        compactEvery = compactEvery,
+        foldables = areas(corpusDir, s"$indexDir/classes")) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        fold.beforeBatch(s) // heal a failed prior fold BEFORE the probe
         val cents = graft.ops.Similarity.loadSemanticCentroids(s, indexDir)
         // stream batches write under batch=b<N> next to batch=seed; the
-        // partition column is therefore string-typed and a replayed
-        // batch excludes its own crashed write by value
-        val classes = s.read.parquet(s"$indexDir/classes")
-          .filter(col("batch") =!= s"b$batchId")
+        // partition column is therefore string-typed
+        val classes = history(s, s"$indexDir/classes", s"b$batchId")
+          .getOrElse(throw new IllegalArgumentException(
+            s"semantic_ingest: no semantic index classes under $indexDir"))
           .select("cluster", "vec", "rep", "sig")
         // collect the dedup's internal persists locally and release them
         // with the batch: routing them to the global operator-cache sweep
@@ -896,10 +816,8 @@ object Streaming {
           kept.unpersist()
           internals.foreach(_.unpersist(blocking = false))
         }
-        fold.afterBatch(s, batchId)
-      }
-      .start()
-  }
+        true
+    }
 
   /** Per-batch data profile — the ingest-side drift monitor: every
     * micro-batch runs the SAME single-pass stats aggregate the batch
@@ -927,34 +845,25 @@ object Streaming {
       rules: Seq[(String, String)],
       groupCols: Seq[String],
       sink: graft.spec.SinkSpec
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    monitorStream(incoming, sink)(
+  ): StreamingQuery =
+    monitorStream(incoming, "expect_report", sink)(
       graft.ops.Relational.expectReport(_, rules, groupCols))
 
   /** Shared per-batch MONITOR plumbing ([[profileStream]] /
     * [[expectReportStream]]): each micro-batch maps through `batchFn`,
     * gains batch_id, and appends ONE file to the path sink — the two
     * monitors stay behaviorally identical by construction. */
-  private def monitorStream(incoming: DataFrame, sink: graft.spec.SinkSpec)(
-      batchFn: DataFrame => DataFrame
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    var w = incoming.writeStream
-    sink.checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    sink.trigger.foreach {
-      case "available_now" | "availableNow" | "once" =>
-        w = w.trigger(Trigger.AvailableNow())
-      case interval => w = w.trigger(Trigger.ProcessingTime(interval))
+  private def monitorStream(
+      incoming: DataFrame, name: String, sink: graft.spec.SinkSpec)(
+      batchFn: DataFrame => DataFrame): StreamingQuery =
+    microBatches(incoming, name, sink.checkpoint, sink.trigger) { (batch, batchId) =>
+      batchFn(batch)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1)
+        .write.mode("append").options(sink.options)
+        .format(sink.format).save(sink.path)
+      true
     }
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchFn(batch)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("append").options(sink.options)
-          .format(sink.format).save(sink.path)
-      }
-      .start()
-  }
 
   def profileStream(
       incoming: DataFrame,
@@ -962,8 +871,8 @@ object Streaming {
       approx: Boolean,
       sink: graft.spec.SinkSpec,
       groupCols: Seq[String] = Nil
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    monitorStream(incoming, sink)(
+  ): StreamingQuery =
+    monitorStream(incoming, "profile", sink)(
       graft.ops.Relational.profile(_, columns, approx, groupCols))
 
   /** Per-micro-batch WebDataset shard packing — the streaming half of
@@ -997,32 +906,14 @@ object Streaming {
       outDir: String,
       checkpointDir: String,
       trigger: Option[String] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    var w = incoming.writeStream.option("checkpointLocation", checkpointDir)
-    trigger.foreach {
-      case "available_now" | "availableNow" | "once" =>
-        w = w.trigger(Trigger.AvailableNow())
-      case interval =>
-        // Validate the interval HERE so a typo'd trigger ("availablenow",
-        // "10 secods") is a named spec error at declaration, not a raw
-        // Spark interval-parse failure at stream start.
-        val t = try Trigger.ProcessingTime(interval)
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(
-            s"shardPackStream: trigger '$interval' is neither " +
-              """"available_now"/"once" nor a valid interval """ +
-              s"""(e.g. "10 seconds"): ${e.getMessage}""")
-        }
-        w = w.trigger(t)
-    }
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
+  ): StreamingQuery =
+    microBatches(incoming, "shardPackStream", Some(checkpointDir), trigger) {
+      (batch, batchId) =>
         graft.ops.Tar.tarShards(batch, nameCol, payloadCol, shards)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outDir/batch=b$batchId")
-      }
-      .start()
-  }
+        true
+    }
 
   /** Session windows: groups rows of one key whose gaps are < `gap`;
     * window = [first event, last event + gap). Streaming state is one

@@ -32,6 +32,21 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(a.aggs.head == AggSpec("v", "percentile", Some("p90"), None, Some(0.9)))
   }
 
+  test("aggregate: anything but an object fails by name") {
+    for (agg <- Seq("""[{"col": "v"}]""", "\"sum\"", "3")) {
+      val e = intercept[IllegalArgumentException](
+        root(s"""{"id": "n1", "source": {"table": "t"}, "aggregate": $agg}"""))
+      assert(e.getMessage.contains("node n1: aggregate must be an object"), e.getMessage)
+    }
+  }
+
+  test("bitemporal: false is no step, true stamps the defaults") {
+    assert(root("""{"source": {"table": "t"}, "bitemporal": false}""")
+      .op[BitemporalSpec].isEmpty)
+    assert(root("""{"source": {"table": "t"}, "bitemporal": true}""")
+      .op[BitemporalSpec].contains(BitemporalSpec()))
+  }
+
   test("watermark, dedup, top_k, drop decode") {
     val n = root("""
       {"source": {"table": "t"},

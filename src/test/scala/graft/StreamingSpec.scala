@@ -2683,4 +2683,104 @@ class StreamingSpec extends SparkSpec {
     assert(ok.columns.toSeq ==
       Seq("doc_id", "span_start", "span_end", "dup_windows"))
   }
+
+  /** An area ingest's corpus after two micro-batches land; with `crash`,
+    * the last batch's `commits` entry is then deleted, so a restart
+    * replays that batch over its own landed `batch=` dirs. `start` gets
+    * the MemoryStream frame and a fresh base dir (checkpoint at
+    * `$base/ckpt`, corpus at `$base/corpus`). */
+  private def replayedCorpus[A: org.apache.spark.sql.Encoder](
+      batches: Seq[Seq[A]], crash: Boolean, seed: String => Unit = _ => ())(
+      start: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Set[Seq[Any]] = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    seed(base)
+    val mem = MemoryStream[A]
+    var q = start(mem.toDF, base)
+    try {
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      if (crash) {
+        q.stop()
+        val last = batches.size - 1
+        Seq(s"$last", s".$last.crc").foreach(f => java.nio.file.Files.deleteIfExists(
+          java.nio.file.Paths.get(s"$base/ckpt/commits/$f")))
+        q = start(mem.toDF, base)
+        q.processAllAvailable()
+        assert(new java.io.File(s"$base/ckpt/commits/$last").exists,
+          "the restart must replay the uncommitted batch")
+      }
+    } finally q.stop()
+    spark.read.parquet(s"$base/corpus").collect().map(_.toSeq).toSet
+  }
+
+  /** The replay must equal the run without the crash; the second batch
+    * admits something, so a replay that probed its own landed write
+    * (and dropped its docs as duplicates of themselves) would differ. */
+  private def assertReplaySafe[A: org.apache.spark.sql.Encoder](
+      name: String, batches: Seq[Seq[A]], seed: String => Unit = _ => ())(
+      start: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val clean = replayedCorpus(batches, crash = false, seed)(start)
+    assert(clean.exists(_.last.toString.stripPrefix("b") == "1"),
+      s"$name: the second batch must admit a doc: $clean")
+    val replayed = replayedCorpus(batches, crash = true, seed)(start)
+    assert(replayed == clean,
+      s"$name: a replayed batch must not dedup against its own crashed write")
+  }
+
+  test("area ingests: a replayed batch excludes its own crashed write (exact, near_dup, passage, semantic)") {
+    import spark.implicits._
+    val tA = "alpha beta gamma delta epsilon zeta eta theta"
+    val tB = "one two three four five six seven eight nine ten"
+    val tC = "completely fresh unrelated content words here indeed"
+    val texts = Seq(Seq((1L, tA), (2L, tB)), Seq((3L, tA), (4L, tC)))
+    assertReplaySafe("exact_ingest", texts) { (in, base) =>
+      Streaming.exactIngest(in.toDF("doc_id", "text"), "doc_id", Seq("text"),
+        s"$base/corpus", s"$base/index", s"$base/ckpt")
+    }
+    assertReplaySafe("near_dup_ingest", texts) { (in, base) =>
+      Streaming.nearDupIngest(in.toDF("doc_id", "text"), "doc_id", "text",
+        s"$base/corpus", s"$base/index", s"$base/ckpt", shingleSize = 2)
+    }
+    assertReplaySafe("passage_ingest", texts) { (in, base) =>
+      Streaming.passageIngest(in.toDF("doc_id", "text"), "doc_id", "text",
+        s"$base/corpus", s"$base/index", s"$base/ckpt", windowTokens = 3)
+    }
+    def v(p: Int): Seq[Double] = (0 until 8).map(d => if (d == p) 1.0 else 0.0)
+    assertReplaySafe("semantic_ingest",
+        Seq(Seq((10L, v(2))), Seq((20L, v(3)), (21L, v(2)))),
+        seed = base => graft.ops.Similarity.saveSemanticIndex(spark,
+          Seq((0L, v(0)), (1L, v(1))).toDF("vec_id", "emb"),
+          "vec_id", "emb", dim = 8, path = s"$base/idx", nlist = 2)) { (in, base) =>
+      Streaming.semanticIngest(in.toDF("vec_id", "emb"), "vec_id", "emb",
+        threshold = 0.9, dim = 8, s"$base/corpus", s"$base/idx", s"$base/ckpt")
+    }
+  }
+
+  test("a bad trigger fails by name on every stream sink") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val base = java.nio.file.Files.createTempDirectory("graft_trigger").toString
+    def err(keys: String): String = intercept[IllegalArgumentException](
+      graft.compile.Compiler.compileStreamJson(spark, s"""
+        {"id": "t", "source": {"format": "parquet", "path": "$eventsDir"}, $keys}"""))
+      .getMessage
+    val named = """trigger 'availablenow' is neither "available_now"/"once" """ +
+      "nor a valid interval"
+    val save = err("""
+      "save": {"format": "memory", "query_name": "bad_trigger",
+               "trigger": "availablenow"}""")
+    assert(save.contains(s"save: $named"), save)
+    val profile = err(s"""
+      "profile": {"columns": ["value"]},
+      "save": {"format": "parquet", "path": "$base/p", "checkpoint": "$base/pk",
+               "trigger": "availablenow"}""")
+    assert(profile.contains(s"profile: $named"), profile)
+    val tarPack = err(s"""
+      "derive": {"n": "cast(user_id AS STRING)", "d": "cast(event_type AS BINARY)"},
+      "tar_pack_ingest": {"name_col": "n", "payload_col": "d", "shards": 2,
+        "out_dir": "$base/o", "checkpoint_dir": "$base/k", "trigger": "availablenow"}""")
+    assert(tarPack.contains(s"shardPackStream: $named"), tarPack)
+  }
 }
